@@ -18,13 +18,7 @@ package graft
 private[graft] object Par {
 
   def run2[A, B](a: => A, b: => B): (A, B) = {
-    // initialized to a failure sentinel, not null (r20 advice): if the
-    // spawned thread dies before the lambda's own catch can run (a
-    // thread-start-time VM error), the join still observes a real
-    // Throwable instead of surfacing an opaque MatchError on null
-    @volatile var rb: Either[Throwable, B] =
-      Left(new IllegalStateException(
-        "Par.run2: spawned thread terminated before producing a result"))
+    @volatile var rb: Either[Throwable, B] = null
     val t = new Thread(() => rb = try Right(b) catch {
       case e: Throwable => Left(e)
     })
@@ -33,6 +27,11 @@ private[graft] object Par {
       try Right(a)
       catch { case e: Throwable => Left(e) }
       finally t.join()
+    // still null only if the spawned thread died before the lambda's own
+    // catch could run (a thread-start-time VM error): surface a real
+    // Throwable, not an opaque MatchError (built only on that path)
+    if (rb == null) rb = Left(new IllegalStateException(
+      "Par.run2: spawned thread terminated before producing a result"))
     (ra, rb) match {
       case (Right(x), Right(y)) => (x, y)
       case (Left(e), Left(e2)) => e.addSuppressed(e2); throw e

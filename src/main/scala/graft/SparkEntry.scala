@@ -2326,9 +2326,8 @@ object SparkEntry {
     // stream (157 MB at 100×) to drop a handful of ids. Hash-building
     // the id list leaves the text stream unsorted; below the gate the
     // planner's broadcast regime stays.
-    val contaminatedSide =
-      if (Dedup.smallPlan(base, 8L << 20)) contaminated
-      else contaminated.hint("shuffle_hash")
+    val contaminatedSide = ScalePolicy.joinSide(
+      ScalePolicy.isSmall(base, ScalePolicy.SmallCorpusBytes))(contaminated)
     nearDeduped.join(contaminatedSide, Seq("doc_id"), "left_anti")
       .select(col("doc_id"),
         TextFunctions.wsTokenCount(col("text")).cast("bigint").as("n_tokens"))

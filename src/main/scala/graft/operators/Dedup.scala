@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
+import graft.ScalePolicy
+import graft.ScalePolicy.{isSmall, joinSide}
 import graft.functions.{MinHash, SimHash, TextFunctions}
 
 /** Deduplication operators for training-data pipelines.
@@ -215,10 +218,8 @@ object Dedup {
     * layouts all fall through to [[fanOut]]'s behavior. */
   private[graft] def fanOutDense(df: DataFrame, key: Column): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // below ~4 MB of estimated input the kernels finish faster than the
-    // exchange they'd be spread by (measured: +0.27 s on the sf0.1
-    // quantized top-k) — tiny corpora keep their exchange-free plan
-    if (smallPlan(df, 4L << 20)) return df
+    // tiny inputs keep their exchange-free plan (ScalePolicy.DenseFanOutBytes)
+    if (isSmall(df, ScalePolicy.DenseFanOutBytes)) return df
     if (df.queryExecution.toRdd.getNumPartitions < parts)
       return df.repartition(parts, key)
     import org.apache.spark.sql.catalyst.plans.logical._
@@ -240,7 +241,7 @@ object Dedup {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRowGroups.size() finally r.close()
       }.sum
-      catch { case _: Throwable => parts } // unreadable footer: assume fine
+      catch { case NonFatal(_) => parts } // unreadable footer: assume fine
     if (rowGroups >= parts) df else df.repartition(parts, key)
   }
 
@@ -304,12 +305,10 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucket: Int = 500,
       maxEqualGroup: Int = 2000,
-      smallCorpusBytes: Long = 8L << 20,
       sampleShift: Int = 0
   ): DataFrame =
     minhashCandidates(docs, idCol, textCol, shingleK, numHashes, bands,
-      threshold, maxBucket, maxEqualGroup, smallCorpusBytes, sampleShift,
-      withDigest = false)._1
+      threshold, maxBucket, maxEqualGroup, sampleShift, withDigest = false)._1
 
   /** [[minhashPairs]] + exact verification FUSED over one corpus scan:
     * the signature checkpoint additionally carries each doc's 32-byte
@@ -332,23 +331,21 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucket: Int = 500,
       maxEqualGroup: Int = 2000,
-      smallCorpusBytes: Long = 8L << 20,
       sampleShift: Int = 0
   ): DataFrame = {
     val (cand, digests) = minhashCandidates(docs, idCol, textCol, shingleK,
-      numHashes, bands, threshold, maxBucket, maxEqualGroup,
-      smallCorpusBytes, sampleShift, withDigest = true)
+      numHashes, bands, threshold, maxBucket, maxEqualGroup, sampleShift,
+      withDigest = true)
     val digs = digests.get
     // SHUFFLE_HASH on the digest sides (r20, guide §3.1), gated on the
-    // same zero-job small-corpus estimate the candidate machinery uses:
-    // below the gate the digests broadcast (optimal, unchanged); above
-    // it the digest frame is corpus-row-count × ~40 B — per-partition
+    // same small-corpus regime the candidate machinery uses: below the
+    // gate the digests broadcast (optimal, unchanged); above it the
+    // digest frame is corpus-row-count × ~40 B — per-partition
     // hash-buildable at any scale — while the unhinted planner
     // sort-merge-joined at 100×, sorting the candidate stream twice
     // (once per digest side)
-    val small = smallPlan(
-      docs.select(col(idCol), col(textCol)), smallCorpusBytes)
-    def side(d: DataFrame) = if (small) d else d.hint("shuffle_hash")
+    val side = joinSide(isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
     val a = side(digs.select(col("id").as("id_a"), col("__dig").as("__dig_a")))
     val b = side(digs.select(col("id").as("id_b"), col("__dig").as("__dig_b")))
     cand.join(a, "id_a").join(b, "id_b")
@@ -366,15 +363,14 @@ object Dedup {
       threshold: Double,
       maxBucket: Int,
       maxEqualGroup: Int,
-      smallCorpusBytes: Long,
       sampleShift: Int,
       withDigest: Boolean
   ): (DataFrame, Option[DataFrame]) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // Small-corpus fast path (optimizer-estimated input mass at or below
-    // `smallCorpusBytes`; zero jobs to decide): skip the signature
-    // materialization job, the heavy-group probe action, and the salted
+    // Small-corpus fast path (ScalePolicy.SmallCorpusBytes; zero jobs to
+    // decide): skip the signature materialization job, the heavy-group
+    // probe action, and the salted
     // assembly — at this size a degenerate equal-signature group is
     // bounded by the corpus itself, so the buffers those guard are small
     // by construction, and the whole operator collapses to ONE action
@@ -382,9 +378,8 @@ object Dedup {
     // the salted path only engages past `maxEqualGroup`, and a
     // gate-small corpus cannot hold a group the machinery would have
     // treated differently unless maxEqualGroup was lowered for tests).
-    // `smallCorpusBytes = 0` forces the scale machinery.
-    val small = smallPlan(
-      docs.select(col(idCol), col(textCol)), smallCorpusBytes)
+    val small = isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
 
     // Test inputs arrive in few fat splits (one parquet file → one
     // partition); fanOut spreads the CPU-heavy signature stage across the
@@ -506,36 +501,6 @@ object Dedup {
     (out, digests)
   }
 
-  /** Distinct-key collapse of a `(k, id)` frame with the degenerate-group
-    * guard (shared by the sketch deduppers and, via
-    * `Similarity.collapseByVector`, the embedding family — `xxhash64`
-    * normalizes -0.0/NaN exactly as `groupBy` keys do, so the probe and
-    * the grouping always agree on group membership). Returns (entries
-    * `(k, ids)` for downstream banding, equal-key pairs
-    * `(k, id_a, id_b)` — the group-internal candidate edges, carrying the
-    * key so callers can score the pair — and the total row count, read
-    * from the probe so callers needing corpus size pay no extra job).
-    *
-    * Common corpora (probe over `xxhash64(k)` finds no group past
-    * `maxEqualGroup`) keep the original single-aggregation plan with
-    * exact all-pairs semantics. A heavier group aggregates per
-    * `(k, salt)` — no `collect_list` buffer holds a whole degenerate
-    * group — emits per-salt stars chained through the group minimum (a
-    * spanning tree: n-1 edges, same connectivity the whole-list star
-    * fallback provided), and enters downstream band buckets as ONE
-    * representative-id entry. Hash-collision misroutes re-assemble
-    * exactly, bounded by `maxEqualGroup`. */
-  /** Optimizer-estimated input size of a frame's plan — the zero-job
-    * size signal the small-corpus gates key on (file-size-derived for
-    * parquet scans, deterministic for a given corpus; no action runs). */
-  private[operators] def planBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** True when the plan's estimated input mass is at or below
-    * `limitBytes` (0 disables the gate — callers force the scale path). */
-  private[graft] def smallPlan(df: DataFrame, limitBytes: Long): Boolean =
-    limitBytes > 0 && planBytes(df) <= BigInt(limitBytes)
-
   private def allPairsOf(byKey: DataFrame): DataFrame = byKey
     .filter(size(col("ids")) >= 2)
     .select(col("k"), explode(idPairs(col("ids"))).as("p"))
@@ -576,6 +541,25 @@ object Dedup {
     (byKey, pairs)
   }
 
+  /** Distinct-key collapse of a `(k, id)` frame with the degenerate-group
+    * guard (shared by the sketch deduppers and, via
+    * `Similarity.collapseByVector`, the embedding family — `xxhash64`
+    * normalizes -0.0/NaN exactly as `groupBy` keys do, so the probe and
+    * the grouping always agree on group membership). Returns (entries
+    * `(k, ids)` for downstream banding, equal-key pairs
+    * `(k, id_a, id_b)` — the group-internal candidate edges, carrying the
+    * key so callers can score the pair — and the total row count, read
+    * from the probe so callers needing corpus size pay no extra job).
+    *
+    * Common corpora (probe over `xxhash64(k)` finds no group past
+    * `maxEqualGroup`) keep the original single-aggregation plan with
+    * exact all-pairs semantics. A heavier group aggregates per
+    * `(k, salt)` — no `collect_list` buffer holds a whole degenerate
+    * group — emits per-salt stars chained through the group minimum (a
+    * spanning tree: n-1 edges, same connectivity the whole-list star
+    * fallback provided), and enters downstream band buckets as ONE
+    * representative-id entry. Hash-collision misroutes re-assemble
+    * exactly, bounded by `maxEqualGroup`. */
   private[operators] def collapseByKey(
       keyed: DataFrame,
       maxEqualGroup: Int,
@@ -670,11 +654,10 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 6,
       maxBucket: Int = 500,
-      maxEqualGroup: Int = 2000,
-      smallCorpusBytes: Long = 8L << 20
+      maxEqualGroup: Int = 2000
   ): DataFrame =
     simhashCandidates(docs, idCol, textCol, maxHamming, maxBucket,
-      maxEqualGroup, smallCorpusBytes, withDigest = false)._1
+      maxEqualGroup, withDigest = false)._1
 
   /** [[simhashPairs]] + exact verification FUSED over one corpus scan —
     * the SimHash sibling of [[minhashPairsVerified]]: the sketch
@@ -690,19 +673,17 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 6,
       maxBucket: Int = 500,
-      maxEqualGroup: Int = 2000,
-      smallCorpusBytes: Long = 8L << 20
+      maxEqualGroup: Int = 2000
   ): DataFrame = {
     val (cand, digests) = simhashCandidates(docs, idCol, textCol, maxHamming,
-      maxBucket, maxEqualGroup, smallCorpusBytes, withDigest = true)
+      maxBucket, maxEqualGroup, withDigest = true)
     val digs = digests.get
     // SHUFFLE_HASH on the digest sides above the small-corpus gate —
     // same rationale and gate as [[minhashPairsVerified]] (broadcast
     // stays optimal below the gate; the unhinted plan sorted the
     // candidate stream twice at 100×)
-    val small = smallPlan(
-      docs.select(col(idCol), col(textCol)), smallCorpusBytes)
-    def side(d: DataFrame) = if (small) d else d.hint("shuffle_hash")
+    val side = joinSide(isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
     val a = side(digs.select(col("id").as("id_a"), col("__dig").as("__dig_a")))
     val b = side(digs.select(col("id").as("id_b"), col("__dig").as("__dig_b")))
     cand.join(a, "id_a").join(b, "id_b")
@@ -717,13 +698,12 @@ object Dedup {
       maxHamming: Int,
       maxBucket: Int,
       maxEqualGroup: Int,
-      smallCorpusBytes: Long,
       withDigest: Boolean
   ): (DataFrame, Option[DataFrame]) = {
     // same zero-job small-corpus gate as [[minhashPairs]]: one action,
     // no sketch materialization job, no probe, exact all-pairs collapse
-    val small = smallPlan(
-      docs.select(col(idCol), col(textCol)), smallCorpusBytes)
+    val small = isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
     // Sketch with the native one-pass expression (provably equal to the
     // composed SimHash.simhash(wsTokens(..)) — see SimHash64Spec).
     // materialized once for the same reason as minhashPairs' signatures:
@@ -843,27 +823,25 @@ object Dedup {
     * materialization before the verification join can start), worth
     * paying only when the corpus is big enough that text-bearing joins
     * would dominate — so the digest path is auto-gated on the
-    * optimizer's estimated corpus mass (`digestMinBytes`, zero jobs to
-    * decide — the same stats signal as [[minhashPairs]]'
-    * `smallCorpusBytes`): below it the lazy byte-comparison plan runs
-    * instead, whose pair side broadcasts at that size and whose corpus
-    * text never shuffles. A 10⁴-doc corpus keeps sub-second
-    * verification; a 10⁶-doc one keeps the digest win (measured ~2.4 s
-    * off the 100× minhash minimum). `digestMinBytes = 0` forces the
-    * digest path. */
+    * optimizer's estimated corpus mass (`ScalePolicy.SmallCorpusBytes`,
+    * zero jobs to decide — the same gate as [[minhashPairs]]' small-corpus
+    * regime): at or below it the lazy byte-comparison plan runs instead,
+    * whose pair side broadcasts at that size and whose corpus text never
+    * shuffles. A 10⁴-doc corpus keeps sub-second verification; a
+    * 10⁶-doc one keeps the digest win (measured ~2.4 s off the 100×
+    * minhash minimum). */
   def verifyPairsExact(
       pairs: DataFrame,
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      byteExact: Boolean = false,
-      digestMinBytes: Long = 8L << 20): DataFrame = {
+      byteExact: Boolean = false): DataFrame = {
     // digests materialize ONCE (id + 32 bytes per doc — ~40 MB per 10⁶
     // docs): both join sides read the materialized blocks, so the text
     // scan and the SHA pass run once, not per side. byteExact keeps the
     // lazy double-scan — materializing full text would defeat the point.
-    val lazyBytes = byteExact ||
-      smallPlan(docs.select(col(idCol), col(textCol)), digestMinBytes)
+    val lazyBytes = byteExact || isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
     val keyed =
       if (lazyBytes) docs.select(col(idCol).as("__vid"), col(textCol).as("__k"))
       else materializeOnce(docs.select(col(idCol).as("__vid"),
@@ -872,7 +850,7 @@ object Dedup {
     // [[minhashPairsVerified]] — the keyed side is corpus-row-count-
     // bounded 32-byte digests, the pair stream stays unsorted; the
     // gate-small lazy-text path keeps the planner's broadcast
-    def side(d: DataFrame) = if (lazyBytes) d else d.hint("shuffle_hash")
+    val side = joinSide(lazyBytes)
     val a = side(keyed.select(col("__vid").as("id_a"), col("__k").as("__k_a")))
     val b = side(keyed.select(col("__vid").as("id_b"), col("__k").as("__k_b")))
     pairs.join(a, "id_a").join(b, "id_b")
@@ -900,10 +878,8 @@ object Dedup {
       pairs: DataFrame,
       maxIters: Int = 10,
       reliableCheckpoint: Boolean = false,
-      failOnNonConvergence: Boolean = false,
-      smallGraphLimit: Long = 1000000L): DataFrame = {
-    val (labels, stats) =
-      componentsWithStats(pairs, maxIters, reliableCheckpoint, smallGraphLimit)
+      failOnNonConvergence: Boolean = false): DataFrame = {
+    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
     enforceConvergence(stats, maxIters, failOnNonConvergence)
     labels
   }
@@ -931,9 +907,9 @@ object Dedup {
   /** [[components]] plus its [[ComponentsStats]]; never warns or throws —
     * the caller owns the non-convergence policy.
     *
-    * Scale-adaptive: an edge list at or below `smallGraphLimit` rows
-    * (after direction doubling) with long/int/string ids is solved
-    * EXACTLY on the driver — union-find over the already-materialized
+    * Scale-adaptive: an edge list at or below
+    * `ScalePolicy.DriverGraphEdges` rows (after direction doubling) with
+    * long/int/string ids is solved EXACTLY on the driver — union-find over the already-materialized
     * edges, the same bounded-collect pattern as the IVF centroid pulls.
     * A dedup run's pair graph is almost always tiny next to its corpus
     * (the duplicates ARE the graph), so the common case pays one collect
@@ -941,14 +917,13 @@ object Dedup {
     * iteration cap to under-merge long chains, and reports
     * `iterations = 0, converged = true`. Graphs past the limit (or with
     * exotic id types) run the distributed label-propagation loop
-    * unchanged — pass `smallGraphLimit = 0` to force it. String minima
-    * use unsigned UTF-8 byte order, matching Spark's `min`/`least` on
-    * strings, so the driver labels are bit-identical to the loop's. */
+    * unchanged. String minima use unsigned UTF-8 byte order, matching
+    * Spark's `min`/`least` on strings, so the driver labels are
+    * bit-identical to the loop's. */
   def componentsWithStats(
       pairs: DataFrame,
       maxIters: Int = 10,
-      reliableCheckpoint: Boolean = false,
-      smallGraphLimit: Long = 1000000L): (DataFrame, ComponentsStats) = {
+      reliableCheckpoint: Boolean = false): (DataFrame, ComponentsStats) = {
     def materialize(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint(eager = true)
       else df.localCheckpoint(true)
@@ -966,8 +941,7 @@ object Dedup {
            org.apache.spark.sql.types.StringType => true
       case _ => false
     }
-    if (driverSolvable && smallGraphLimit > 0 &&
-        edges.count() <= smallGraphLimit)
+    if (driverSolvable && ScalePolicy.driverGraph(edges))
       return (driverComponents(edges, idType), ComponentsStats(0, converged = true))
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -1260,14 +1234,7 @@ object Dedup {
       reliableCheckpoint: Boolean = false,
       failOnNonConvergence: Boolean = false,
       persistInput: Boolean = false,
-      maxIters: Int = 10,
-      smallGraphLimit: Long = 1000000L,
-      // gate for the verified exact-only branch's digest shortcut (r21):
-      // estimated input mass at or below this keeps the byte-exact
-      // (h, content) grouping; above it content equality is the 32-byte
-      // SHA-256 digest and text never shuffles. 0 forces the digest path
-      // (tests); Long.MaxValue forces byte-exact.
-      verifyDigestMinBytes: Long = 1L << 20
+      maxIters: Int = 10
   ): (DataFrame, ComponentsStats) = {
     val in =
       if (persistInput)
@@ -1310,22 +1277,20 @@ object Dedup {
         val uniq = array_distinct(ids)
         explode(slice(uniq, lit(2), size(uniq) - 1))
       }
-      // zero-job scale gate for the VERIFIED branch (r21, verdict #4):
-      // 1 MB like dropSharedSpans', deliberately below the family's 8 MB
-      // default because this operator's input is often a DERIVED frame
-      // (pipeline_curate's post-window near-dedup input) whose stats
-      // under-report. Below the gate the byte-exact (h, content)
-      // grouping stays — broadcast-regime plans, text verified byte for
-      // byte. Above it content equality is decided by the 32-byte
-      // SHA-256 digest — the SAME stand-in [[verifyPairsExact]] and
+      // zero-job scale gate for the VERIFIED branch (r21, verdict #4;
+      // ScalePolicy.DigestBytes, below the family's small-corpus gate
+      // for the reason given there). Below the gate the byte-exact
+      // (h, content) grouping stays — broadcast-regime plans, text
+      // verified byte for byte. Above it content equality is decided by
+      // the 32-byte SHA-256 digest — the SAME stand-in [[verifyPairsExact]] and
       // [[minhashPairsVerified]] already use at scale — so the corpus
       // text never rides a shuffle at all: the grouping exchanges
       // (id, 32 B) rows where exactGroups' direct path shuffled full
       // text for every colliding row (at dedup_drop's 20× tier EVERY
       // row collides — the whole corpus text was exchanged, the
       // driver-flagged 2.1× regression).
-      val smallVerify = smallPlan(
-        in.select(col(idCol), col(textCol)), verifyDigestMinBytes)
+      val smallVerify = isSmall(
+        in.select(col(idCol), col(textCol)), ScalePolicy.DigestBytes)
       val losers =
         if (verifyExact && smallVerify)
           exactGroups(in.filter(eligible), col(idCol), col(textCol))
@@ -1384,8 +1349,7 @@ object Dedup {
           bands, threshold)
       else minhashPairs(in, idCol, textCol, shingleK, numHashes,
         bands, threshold)
-    val (labels, stats) =
-      componentsWithStats(pairs, maxIters, reliableCheckpoint, smallGraphLimit)
+    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
     enforceConvergence(stats, maxIters, failOnNonConvergence)
     val losers = labels
       .filter(col("id") =!= col("label"))
@@ -1439,8 +1403,7 @@ object Dedup {
       verifyExact: Boolean = false,
       reliableCheckpoint: Boolean = false,
       failOnNonConvergence: Boolean = false,
-      maxIters: Int = 10,
-      smallGraphLimit: Long = 1000000L
+      maxIters: Int = 10
   ): (DataFrame, ComponentsStats) = {
     val exactOnly = threshold * numHashes > numHashes - 1
     if (exactOnly) {
@@ -1485,9 +1448,8 @@ object Dedup {
       // SHUFFLE_HASH above the family's small-corpus gate: the best/
       // winner sides are dup-class-sized — per-partition hash-buildable
       // at any scale — while tiny corpora keep the planner's broadcast
-      val small = smallPlan(
-        docs.select(col(idCol), col(textCol)), 8L << 20)
-      def side(d: DataFrame) = if (small) d else d.hint("shuffle_hash")
+      val side = joinSide(isSmall(
+        docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
       val best = members.groupBy("__k")
         .agg(max(col("__s")).as("__best"), count(lit(1)).as("__n"))
         .filter(col("__n") >= 2)
@@ -1506,8 +1468,7 @@ object Dedup {
           bands, threshold)
       else minhashPairs(docs, idCol, textCol, shingleK, numHashes,
         bands, threshold)
-    val (labels, stats) =
-      componentsWithStats(pairs, maxIters, reliableCheckpoint, smallGraphLimit)
+    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
     enforceConvergence(stats, maxIters, failOnNonConvergence)
     // members of dup components only (every labeled id sits in a ≥2
     // component); null-score members rank below all scored members
@@ -1595,16 +1556,14 @@ object Dedup {
     // [[dropSharedSpans]]' losers join — the shared-key side is
     // distinct-span-sized, and the unhinted plan either broadcasts it
     // whole (single-threaded build) or sorts the span stream for a
-    // sort-merge join at scale. GATED on the same 1 MB small-corpus
-    // estimate as dropSharedSpans (r20 advice: this was the one r20 site
-    // hinted unconditionally) — tiny spec/smoke corpora keep the
-    // planner's free broadcast instead of paying a shuffle.
-    val smallCorpus = smallPlan(
-      docs.select(col(idCol), col(textCol)), 1L << 20)
-    def atScale(d: DataFrame): DataFrame =
-      if (smallCorpus) d else d.hint("shuffle_hash")
+    // sort-merge join at scale. GATED on the same 1 MB estimate as
+    // dropSharedSpans (ScalePolicy.DigestBytes; r20 advice: this was the
+    // one r20 site hinted unconditionally) — tiny spec/smoke corpora keep
+    // the planner's free broadcast instead of paying a shuffle.
+    val side = joinSide(isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.DigestBytes))
     spans
-      .join(atScale(sharedKeys.withColumn("__shared", lit(1L))),
+      .join(side(sharedKeys.withColumn("__shared", lit(1L))),
         Seq("__k"), "left")
       .groupBy(idCol)
       .agg(
@@ -1783,29 +1742,20 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 8,
-      // 1 MB, deliberately BELOW the dedup family's 8 MB small-corpus
-      // default: the estimate is parquet-compressed scan bytes, and the
-      // rebuild-join hints were measured to win from ~250 KB of
-      // compressed text up (sf0.1 2.05 → 1.84 s, 20× [5.0 MB estimate]
-      // 10.3 → 5.9 s) — only the genuinely tiny spec/smoke corpora keep
-      // the broadcast-regime plan the text-never-shuffles audit pins
-      smallCorpusBytes: Long = 1L << 20): DataFrame = {
+      k: Int = 8): DataFrame = {
     require(k >= 2, s"span length k must be >= 2, got $k")
     graft.InternalCols.requireAbsent(docs, "Dedup.dropSharedSpans",
       "__id", "__idx", "__k", "__toks", "__wh", "__rm", "__wid", "__widx",
       "__ivs_s", "__ivs_e", "__id0", "__c")
-    // gate for the REBUILD joins' strategy (same zero-job stats estimate
-    // as the dedup family's small-corpus gates): below it the planner
+    // gate for the REBUILD joins' strategy (ScalePolicy.DigestBytes, the
+    // 1 MB gate, for the reason given there): below it the planner
     // broadcasts the removal lists and the text never rides a shuffle
     // (the spec-pinned broadcast-regime invariant); above it the
     // SHUFFLE_HASH hints below keep the text-carrying sort-merge join
     // out of the plan — text then rides exactly its one unavoidable
     // doc-keyed exchange, unsorted
-    val small = smallPlan(docs.select(col(idCol), col(textCol)),
-      smallCorpusBytes)
-    def atScale(d: DataFrame): DataFrame =
-      if (small) d else d.hint("shuffle_hash")
+    val side = joinSide(isSmall(
+      docs.select(col(idCol), col(textCol)), ScalePolicy.DigestBytes))
     // all k-token windows with their 0-based start index, as 128-bit
     // hash-pair surrogates straight off the text bytes
     // ([[graft.functions.expressions.WordWindowHashes]] — r15: the
@@ -1874,7 +1824,7 @@ object Dedup {
       // SHUFFLE_HASH above the gate: removal lists are doc-count-sized
       // (id + int array) — hash-buildable per partition; unhinted this
       // was a sort-merge join at 100×
-      .join(atScale(rmLists), Seq("__id"), "left")
+      .join(side(rmLists), Seq("__id"), "left")
     // Rebuild in O(tokens + removals) per doc: the sorted removal STARTS
     // merge into disjoint [s, e) intervals and the kept text is the
     // concatenation of the GAP slices between them — each token copied
@@ -1905,7 +1855,7 @@ object Dedup {
       // doc-count-sized removal frame leaves the text stream unsorted.
       // Below the gate the planner's broadcast keeps text off shuffles
       // entirely (plan-audited).
-      .join(atScale(rmFull), docs(idCol) === rmFull("__id"), "left")
+      .join(side(rmFull), docs(idCol) === rmFull("__id"), "left")
       // stage interval bounds and the re-tokenized text as ATTRIBUTES so
       // the gap lambdas don't re-derive them (the quantize staging
       // pattern — CollapseProject keeps multi-use non-cheap expressions

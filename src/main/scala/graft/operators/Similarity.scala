@@ -713,15 +713,13 @@ object Similarity {
       dim: Int = 64,
       seed: Long = 42L,
       maxIters: Int = 10,
-      failOnNonConvergence: Boolean = false,
-      smallGraphLimit: Long = 1000000L
+      failOnNonConvergence: Boolean = false
   ): (DataFrame, Dedup.ComponentsStats) = {
     // autoFloor 8 = this entry point's pre-auto fixed default, so default
     // callers keep their old small-corpus recall exactly
     val pairs = annBuckets(corpus, idCol, vecCol, numPlanes, dim, seed, minCos,
       autoFloor = 8)
-    val (labels, stats) =
-      Dedup.componentsWithStats(pairs, maxIters, smallGraphLimit = smallGraphLimit)
+    val (labels, stats) = Dedup.componentsWithStats(pairs, maxIters)
     Dedup.enforceConvergence(stats, maxIters, failOnNonConvergence)
     val losers = labels
       .filter(col("id") =!= col("label"))
@@ -854,8 +852,7 @@ object Similarity {
       maxBucket: Int = 2000,
       maxEqualGroup: Int = 2000,
       maxIters: Int = 10,
-      failOnNonConvergence: Boolean = false,
-      smallGraphLimit: Long = 1000000L
+      failOnNonConvergence: Boolean = false
   ): (DataFrame, Dedup.ComponentsStats) = {
     val (byVec, equalPairs, total) = collapseByVector(
       corpus, idCol, vecCol, minCos, maxEqualGroup)
@@ -904,8 +901,7 @@ object Similarity {
       .select(least(col("ia"), col("ib")).as("id_a"),
         greatest(col("ia"), col("ib")).as("id_b"), col("cos"))
     val pairs = equalPairs.unionByName(crossPairs)
-    val (labels, stats) =
-      Dedup.componentsWithStats(pairs, maxIters, smallGraphLimit = smallGraphLimit)
+    val (labels, stats) = Dedup.componentsWithStats(pairs, maxIters)
     Dedup.enforceConvergence(stats, maxIters, failOnNonConvergence)
     val losers = labels
       .filter(col("id") =!= col("label"))

@@ -600,6 +600,36 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       partitionCols: Seq[String],
       modified: Option[String] = None,
       allowMissingColumns: Boolean = false
+  ): Path =
+    // the partitions this batch touches: a driver-side list of tuples,
+    // collected (by name) only after the bootstrap check
+    mergePartitionedKnownAffected(updates, schema, table, keys,
+      partitionCols,
+      updates.select(partitionCols.map(col): _*).distinct().collect().toSeq,
+      modified, allowMissingColumns)
+
+  /** [[mergePartitioned]] for a caller that ALREADY collected the
+    * updates' distinct partition tuples (r21, guide §2.6): the index
+    * append paths overlap that collect with their read-only moved-id
+    * guard instead of paying the two job floors sequentially — one fewer
+    * sequential job per streamed micro-batch. `affected` MUST be exactly
+    * `updates.select(partitionCols).distinct()` (a superset with
+    * phantom tuples would delete untouched partitions via the
+    * hasNew=false manifest path only if they exist-and-merge-empty —
+    * i.e. never for true supersets of real data, but the contract is
+    * exactness; a SUBSET would leave stale rows outside the rewrite
+    * scope). This is the one partition-scoped merge preamble —
+    * recovery, bootstrap, validation — and `affected` is evaluated once,
+    * after it, never for a missing destination. */
+  private[graft] def mergePartitionedKnownAffected(
+      updates: DataFrame,
+      schema: String,
+      table: String,
+      keys: Seq[String],
+      partitionCols: Seq[String],
+      affected: => Seq[org.apache.spark.sql.Row],
+      modified: Option[String] = None,
+      allowMissingColumns: Boolean = false
   ): Path = {
     require(keys.nonEmpty, "merge needs at least one key column")
     require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
@@ -623,50 +653,6 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // used to be paid twice per merge, which compounds across streamed
     // micro-batch appends. Safe because recovery already ran above, so
     // the listing sees a consistent table.
-    val current = spark.read.parquet(dest.toString)
-    validateMergeSchema(current, updates, keys,
-      allowMissingColumns, s"mergePartitioned($schema/$table)",
-      partitionScoped = true)
-
-    // the partitions this batch touches: a driver-side list of tuples
-    val affected = updates.select(partitionCols.map(col): _*).distinct().collect()
-    mergeIntoPartitions(updates, schema, table, keys, partitionCols,
-      affected.toSeq, modified, allowMissingColumns, Some(current))
-  }
-
-  /** [[mergePartitioned]] for a caller that ALREADY collected the
-    * updates' distinct partition tuples (r21, guide §2.6): the index
-    * append paths overlap that collect with their read-only moved-id
-    * guard instead of paying the two job floors sequentially — one fewer
-    * sequential job per streamed micro-batch. `affected` MUST be exactly
-    * `updates.select(partitionCols).distinct()` (a superset with
-    * phantom tuples would delete untouched partitions via the
-    * hasNew=false manifest path only if they exist-and-merge-empty —
-    * i.e. never for true supersets of real data, but the contract is
-    * exactness; a SUBSET would leave stale rows outside the rewrite
-    * scope). Same recovery, validation, and crash protocol as
-    * [[mergePartitioned]]. */
-  private[graft] def mergePartitionedKnownAffected(
-      updates: DataFrame,
-      schema: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String],
-      affected: Seq[org.apache.spark.sql.Row],
-      modified: Option[String] = None,
-      allowMissingColumns: Boolean = false
-  ): Path = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
-      s"partition columns $partitionCols must be a subset of the merge " +
-        s"keys $keys (otherwise a key could move partitions and its old " +
-        "row would survive)")
-    val dest = tablePath(schema, table)
-    val f = fs(dest)
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
-    if (!f.exists(dest))
-      return writePartitioned(updates, schema, table, partitionCols, modified)
     val current = spark.read.parquet(dest.toString)
     validateMergeSchema(current, updates, keys,
       allowMissingColumns, s"mergePartitioned($schema/$table)",

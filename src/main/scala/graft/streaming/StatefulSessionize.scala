@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import scala.util.control.NonFatal
 
 /** Custom streaming state: gap-based session assignment with
   * `flatMapGroupsWithState` over a `KeyValueGroupedDataset` — the
@@ -67,7 +68,7 @@ object StatefulSessionize {
           .stringToInterval(
             org.apache.spark.unsafe.types.UTF8String.fromString(watermarkDelay))
         iv.months == 0 && iv.days == 0 && iv.microseconds == 0L
-      } catch { case _: Throwable => false }
+      } catch { case NonFatal(_) => false }
 
     // start-sorted sessions, pairwise further than gap apart; an event is
     // a singleton session and one normalize pass merges every chain whose

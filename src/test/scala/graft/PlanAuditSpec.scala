@@ -118,7 +118,7 @@ class PipelinePlanAuditSpec extends SparkSpec {
   test("dedup_minhash at scale evaluates the signature kernel outside " +
     "the query plan (materialized once) and pays no band stage at " +
     "threshold 1.0; the small-corpus gate collapses it to one live plan") {
-    // SCALE path (smallCorpusBytes = 0 forces it): the signature frame
+    // SCALE path (ScalePolicy.forcing): the signature frame
     // is eagerly materialized inside minhashPairs — the kernel runs
     // exactly once, in the materialization job, and every consumer (the
     // heavy-group probe action, the signature collapse, the pair
@@ -131,11 +131,11 @@ class PipelinePlanAuditSpec extends SparkSpec {
       .select("doc_id", "text")
     val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
     val u = d.unionByName(dup)
-    val cand = graft.operators.Dedup.minhashPairs(u, "doc_id", "text",
-      shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0,
-      smallCorpusBytes = 0L)
-    val df = graft.operators.Dedup.verifyPairsExact(cand, u, "doc_id", "text",
-      digestMinBytes = 0L)
+    val df = ScalePolicy.forcing(small = false) {
+      val cand = graft.operators.Dedup.minhashPairs(u, "doc_id", "text",
+        shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
+      graft.operators.Dedup.verifyPairsExact(cand, u, "doc_id", "text")
+    }
     df.queryExecution.executedPlan.executeCollect()
     val finalPlan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -1,12 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{ScalePolicy, SparkSpec}
 
 /** The r11 digest-verification auto-gate: small corpora keep the lazy
   * byte-comparison verification plan (no eager SHA pass), large ones pay
   * the digest fixed cost that removes text-bearing shuffles — and every
-  * path returns the same pairs. */
+  * path returns the same pairs. Each case runs under both
+  * [[ScalePolicy]] regimes, forced. */
 class DedupGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,26 +24,26 @@ class DedupGateSpec extends SparkSpec {
 
   test("all three verification paths agree; false candidates pruned") {
     val (docs, pairs) = fixture
-    def run(byteExact: Boolean, digestMinBytes: Long) =
-      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text",
-        byteExact, digestMinBytes)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def run(byteExact: Boolean, small: Boolean) = ScalePolicy.forcing(small)(
+      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text", byteExact))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = Set((1L, 2L), (3L, 4L))
-    assert(run(byteExact = true, 8L << 20) == expected)
-    assert(run(byteExact = false, 8L << 20) == expected) // gated -> lazy bytes
-    assert(run(byteExact = false, 0L) == expected)       // forced digest
+    assert(run(byteExact = true, small = false) == expected)
+    assert(run(byteExact = false, small = true) == expected) // lazy bytes
+    assert(run(byteExact = false, small = false) == expected) // digest
   }
 
   test("small-corpus path still thins a degenerate group past maxEqualGroup " +
     "to a spanning tree (no g^2 pair expansion)") {
-    // 12 identical docs, maxEqualGroup = 5, DEFAULT gate (corpus is tiny
-    // -> probe-free direct collapse): all-pairs would be 66; the per-row
-    // star fallback emits 11 edges, same connectivity — the expansion a
-    // gate-small corpus of 50k identical docs would otherwise blow up on
+    // 12 identical docs, maxEqualGroup = 5, small regime (probe-free
+    // direct collapse): all-pairs would be 66; the per-row star fallback
+    // emits 11 edges, same connectivity — the expansion a gate-small
+    // corpus of 50k identical docs would otherwise blow up on
     val docs = (0 until 12).map(i => (i.toLong, "identical content here"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-      numHashes = 48, bands = 12, threshold = 1.0, maxEqualGroup = 5)
+    val pairs = ScalePolicy.forcing(small = true)(Dedup.minhashPairs(
+      docs, "doc_id", "text", numHashes = 48, bands = 12, threshold = 1.0,
+      maxEqualGroup = 5))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size == 11, pairs.toString)
     val parent = scala.collection.mutable.Map((0L until 12L).map(i => i -> i): _*)
@@ -75,22 +76,22 @@ class DedupGateSpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Seq(8L << 20, 0L).foreach { gate => // small path / forced scale path
+    Seq(true, false).foreach { small => ScalePolicy.forcing(small) {
       val oldMin = pairSet(Dedup.verifyPairsExact(
         Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
-          bands = 12, threshold = 1.0, smallCorpusBytes = gate),
+          bands = 12, threshold = 1.0),
         docs, "doc_id", "text"))
       val newMin = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
-        numHashes = 48, bands = 12, threshold = 1.0, smallCorpusBytes = gate))
+        numHashes = 48, bands = 12, threshold = 1.0))
       assert(newMin == oldMin && newMin == Set((1L, 2L), (3L, 4L)),
-        s"minhash gate=$gate: $newMin vs $oldMin")
+        s"minhash small=$small: $newMin vs $oldMin")
       val oldSim = pairSet(Dedup.verifyPairsExact(
-        Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 0,
-          smallCorpusBytes = gate), docs, "doc_id", "text"))
+        Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 0),
+        docs, "doc_id", "text"))
       val newSim = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
-        maxHamming = 0, smallCorpusBytes = gate))
-      assert(newSim == oldSim, s"simhash gate=$gate: $newSim vs $oldSim")
-    }
+        maxHamming = 0))
+      assert(newSim == oldSim, s"simhash small=$small: $newSim vs $oldSim")
+    }}
     // null-text docs group by null sketch but must never verify as pairs
     val withNulls = docs.unionByName(Seq(
       (100L, null.asInstanceOf[String]),
@@ -125,24 +126,26 @@ class DedupGateSpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (gate <- Seq(8L << 20, 0L); th <- Seq(1.0, 0.75)) {
-      val twoPass = pairSet(Dedup.verifyPairsExact(
-        Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
-          bands = 12, threshold = th, smallCorpusBytes = gate),
-        docs, "doc_id", "text"))
-      val fused = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
-        numHashes = 48, bands = 12, threshold = th, smallCorpusBytes = gate))
-      assert(fused == twoPass, s"minhash gate=$gate th=$th")
-      assert(fused.nonEmpty)
-    }
-    for (gate <- Seq(8L << 20, 0L); mh <- Seq(0, 4)) {
-      val twoPass = pairSet(Dedup.verifyPairsExact(
-        Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = mh,
-          smallCorpusBytes = gate), docs, "doc_id", "text"))
-      val fused = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
-        maxHamming = mh, smallCorpusBytes = gate))
-      assert(fused == twoPass, s"simhash gate=$gate maxHamming=$mh")
-    }
+    for (small <- Seq(true, false); th <- Seq(1.0, 0.75))
+      ScalePolicy.forcing(small) {
+        val twoPass = pairSet(Dedup.verifyPairsExact(
+          Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
+            bands = 12, threshold = th),
+          docs, "doc_id", "text"))
+        val fused = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
+          numHashes = 48, bands = 12, threshold = th))
+        assert(fused == twoPass, s"minhash small=$small th=$th")
+        assert(fused.nonEmpty)
+      }
+    for (small <- Seq(true, false); mh <- Seq(0, 4))
+      ScalePolicy.forcing(small) {
+        val twoPass = pairSet(Dedup.verifyPairsExact(
+          Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = mh),
+          docs, "doc_id", "text"))
+        val fused = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
+          maxHamming = mh))
+        assert(fused == twoPass, s"simhash small=$small maxHamming=$mh")
+      }
   }
 
   test("below the gate the plan carries no SHA pass; forcing does") {
@@ -150,11 +153,12 @@ class DedupGateSpec extends SparkSpec {
     val lazyPlan = Dedup.verifyPairsExact(pairs, docs, "doc_id", "text")
       .queryExecution.optimizedPlan.toString
     assert(!lazyPlan.contains("sha2"), lazyPlan)
-    // digestMinBytes = 0 forces the digest path; the materialized frame is
-    // plan-opaque (checkpoint scan), so assert on behavior instead: the
-    // optimized plan reads the materialized digests, not the text column
-    val forced = Dedup.verifyPairsExact(pairs, docs, "doc_id", "text",
-      byteExact = false, digestMinBytes = 0L)
+    // the forced scale regime takes the digest path; the materialized
+    // frame is plan-opaque (checkpoint scan), so assert on behavior
+    // instead: the optimized plan reads the materialized digests, not the
+    // text column
+    val forced = ScalePolicy.forcing(small = false)(
+      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text"))
     val forcedPlan = forced.queryExecution.optimizedPlan.toString
     assert(forcedPlan.contains("LogicalRDD") || forcedPlan.contains("Scan"),
       forcedPlan)

@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ScalePolicy, SparkSpec}
 
-/** The driver-side exact components solver at its `smallGraphLimit`-scale
-  * ceiling: 875k pairs (1.75M directed edges after doubling) over 1M
+/** The driver-side exact components solver at its
+  * `ScalePolicy.DriverGraphEdges`-scale ceiling (forced past it here): 875k pairs (1.75M directed edges after doubling) over 1M
   * nodes must solve exactly through the primitive path — typed tuple
   * collect + open-addressed index + primitive union-find, no boxed Rows.
   * Driver memory measured on this graph: 243 MB retained post-GC across
@@ -23,8 +23,8 @@ class DriverComponentsScaleSpec extends SparkSpec {
     val rt = Runtime.getRuntime
     rt.gc()
     val heapBefore = rt.totalMemory() - rt.freeMemory()
-    val (labels, stats) = Dedup.componentsWithStats(
-      pairs, smallGraphLimit = 2000000L)
+    val (labels, stats) = ScalePolicy.forcing(small = true)(
+      Dedup.componentsWithStats(pairs))
     rt.gc() // measure RETAINED memory (the result), not transient garbage
     val heapAfter = rt.totalMemory() - rt.freeMemory()
     info(f"driver heap retained across solve: ${(heapAfter - heapBefore) / 1e6}%.0f MB")
@@ -43,18 +43,20 @@ class DriverComponentsScaleSpec extends SparkSpec {
       .filter(col("id_a") =!= col("id_b"))
       .cache()
     try {
-      val viaDriver = Dedup.componentsWithStats(pairs, smallGraphLimit = 100000L)
+      def labels(small: Boolean) = ScalePolicy.forcing(small)(
+        Dedup.componentsWithStats(pairs, maxIters = 50))
         ._1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val viaLoop = Dedup.componentsWithStats(pairs, maxIters = 50,
-        smallGraphLimit = 0L)
-        ._1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val viaDriver = labels(small = true)
+      val viaLoop = labels(small = false)
       assert(viaDriver == viaLoop)
     } finally pairs.unpersist()
   }
 
   test("int ids keep their type; a null endpoint leaves an isolated node") {
     val pairs = Seq((1, 2), (2, 3), (7, 8)).toDF("id_a", "id_b")
-    val labels = Dedup.componentsWithStats(pairs, smallGraphLimit = 100L)._1
+    def driver(p: org.apache.spark.sql.DataFrame) =
+      ScalePolicy.forcing(small = true)(Dedup.componentsWithStats(p))._1
+    val labels = driver(pairs)
     assert(labels.schema("id").dataType ==
       org.apache.spark.sql.types.IntegerType)
     val m = labels.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
@@ -63,7 +65,7 @@ class DriverComponentsScaleSpec extends SparkSpec {
     val withNull = Seq((java.lang.Long.valueOf(1L), java.lang.Long.valueOf(2L)),
       (java.lang.Long.valueOf(10L), null.asInstanceOf[java.lang.Long]))
       .toDF("id_a", "id_b")
-    val m2 = Dedup.componentsWithStats(withNull, smallGraphLimit = 100L)._1
+    val m2 = driver(withNull)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m2 == Map(1L -> 1L, 2L -> 1L, 10L -> 10L))
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{ScalePolicy, SparkSpec}
 import graft.functions.TextFunctions
 
 class DedupSpec extends SparkSpec {
@@ -93,10 +93,10 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // all-pairs would be 66; the salted fallback emits a spanning TREE of
     // the group (per-salt stars + a chain through the min: 11 edges)
-    // smallCorpusBytes = 0 forces the scale machinery: this spec pins the
-    // salted fallback itself, which the small-corpus gate skips by design
-    val pairs = Dedup.simhashPairs(docs, "doc_id", "text",
-      maxHamming = 0, maxEqualGroup = 5, smallCorpusBytes = 0L)
+    // forcing the scale regime: this spec pins the salted fallback
+    // itself, which the small-corpus regime skips by design
+    val pairs = ScalePolicy.forcing(small = false)(Dedup.simhashPairs(
+      docs, "doc_id", "text", maxHamming = 0, maxEqualGroup = 5))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size == 11, pairs.toString)
     assert(pairs.forall { case (a, b) => a < b && b < 12L })
@@ -112,21 +112,19 @@ class DedupSpec extends SparkSpec {
     "a chain longer than the iteration budget") {
     // a 12-node path: min-label propagation moves one hop per round, so
     // 3 rounds cannot converge — exactly the silent under-merge a 100 TB
-    // run must be able to detect. smallGraphLimit = 0 forces the
+    // run must be able to detect. The scale regime forces the
     // distributed loop (the driver fast path has no iteration cap).
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (labels, stats) =
-      Dedup.componentsWithStats(chain, maxIters = 3, smallGraphLimit = 0)
+    def loop[T](body: => T): T = ScalePolicy.forcing(small = false)(body)
+    val (labels, stats) = loop(Dedup.componentsWithStats(chain, maxIters = 3))
     assert(!stats.converged && stats.iterations == 3, stats.toString)
     assert(labels.filter($"label" =!= 0L).count() > 0) // provably under-merged
     val e = intercept[IllegalStateException] {
-      Dedup.components(chain, maxIters = 3, failOnNonConvergence = true,
-        smallGraphLimit = 0)
+      loop(Dedup.components(chain, maxIters = 3, failOnNonConvergence = true))
     }
     assert(e.getMessage.contains("maxIters=3"))
     // with budget to spare the stats say so: converged before the cap
-    val (done, okStats) =
-      Dedup.componentsWithStats(chain, maxIters = 20, smallGraphLimit = 0)
+    val (done, okStats) = loop(Dedup.componentsWithStats(chain, maxIters = 20))
     assert(okStats.converged && okStats.iterations < 20, okStats.toString)
     assert(done.collect().forall(_.getLong(1) == 0L))
   }
@@ -140,8 +138,8 @@ class DedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val (fast, fastStats) = Dedup.componentsWithStats(edges)
     assert(fastStats.iterations == 0 && fastStats.converged)
-    val (loop, _) = Dedup.componentsWithStats(edges, maxIters = 50,
-      smallGraphLimit = 0)
+    val (loop, _) = ScalePolicy.forcing(small = false)(
+      Dedup.componentsWithStats(edges, maxIters = 50))
     val f = fast.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val l = loop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(f == l)
@@ -154,7 +152,8 @@ class DedupSpec extends SparkSpec {
       .toDF("id_a", "id_b")
     val sf = Dedup.componentsWithStats(sEdges)._1
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val sl = Dedup.componentsWithStats(sEdges, smallGraphLimit = 0)._1
+    val sl = ScalePolicy.forcing(small = false)(
+      Dedup.componentsWithStats(sEdges))._1
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sf == sl)
     assert(sf("b") == "ab" && sf("abc") == "ab" && sf("za") == "z")
@@ -200,10 +199,10 @@ class DedupSpec extends SparkSpec {
   test("minhashPairs star fallback past maxEqualGroup keeps connectivity") {
     val docs = (0 until 12).map(i => (i.toLong, "identical content here again"))
       .toDF("doc_id", "text")
-    // smallCorpusBytes = 0: see the simhash star-fallback spec
-    val pairs = Dedup.minhashPairs(docs, "doc_id", "text",
-      numHashes = 48, bands = 12, threshold = 1.0, maxEqualGroup = 5,
-      smallCorpusBytes = 0L)
+    // scale regime forced: see the simhash star-fallback spec
+    val pairs = ScalePolicy.forcing(small = false)(Dedup.minhashPairs(
+      docs, "doc_id", "text", numHashes = 48, bands = 12, threshold = 1.0,
+      maxEqualGroup = 5))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // spanning tree of the 12-member equal-signature group: 11 edges,
     // one component rooted at the min id
@@ -387,12 +386,12 @@ class DedupSpec extends SparkSpec {
       numHashes = 48, bands = 12, threshold = 1.0)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(plain == kept)
-    // below the est ceiling with the loop forced (smallGraphLimit = 0)
-    // the label-propagation telemetry is real (eager loop: stats exact
+    // below the est ceiling with the loop forced (scale regime) the
+    // label-propagation telemetry is real (eager loop: stats exact
     // while `out` stays lazy)
-    val (out2, stats2) = Dedup.dropNearDuplicatesWithStats(docs, "doc_id",
-      "text", numHashes = 48, bands = 12, threshold = 0.9,
-      smallGraphLimit = 0)
+    val (out2, stats2) = ScalePolicy.forcing(small = false)(
+      Dedup.dropNearDuplicatesWithStats(docs, "doc_id", "text",
+        numHashes = 48, bands = 12, threshold = 0.9))
     assert(stats2.converged && stats2.iterations >= 1, stats2.toString)
     assert(out2.select("doc_id").collect().map(_.getLong(0)).toSet ==
       Set(0L, 50L))
@@ -462,12 +461,12 @@ class DedupSpec extends SparkSpec {
       (0L, "planted duplicated-id body with plenty of bytes to shingle"))
       .toDF("doc_id", "text")
     val in = docs.unionByName(dup).unionByName(shorty)
-    def run(gate: Long) = Dedup.dropNearDuplicatesWithStats(in, "doc_id",
-      "text", numHashes = 48, bands = 12, threshold = 1.0,
-      verifyExact = true, verifyDigestMinBytes = gate)
+    def run(small: Boolean) = ScalePolicy.forcing(small)(
+      Dedup.dropNearDuplicatesWithStats(in, "doc_id", "text",
+        numHashes = 48, bands = 12, threshold = 1.0, verifyExact = true))
       ._1.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
-    val digest = run(0L)             // forces the digest grouping
-    val byteExact = run(Long.MaxValue) // forces exactGroups
+    val digest = run(small = false)   // forces the digest grouping
+    val byteExact = run(small = true) // forces exactGroups
     assert(digest == byteExact,
       s"digest path diverged: ${digest.size} vs ${byteExact.size} rows")
     assert(digest.count(_ == 0L) == 3,
@@ -492,8 +491,9 @@ class SimilaritySpec extends SparkSpec {
     "dropper, telemetry exposed") {
     val corpus = emb.limit(80)
     // loop forced: the telemetry is the real propagation count
-    val (out, stats) = Similarity.dropEmbeddingDuplicatesWithStats(
-      corpus, "vec_id", "embedding", minCos = 0.999, smallGraphLimit = 0)
+    val (out, stats) = ScalePolicy.forcing(small = false)(
+      Similarity.dropEmbeddingDuplicatesWithStats(
+        corpus, "vec_id", "embedding", minCos = 0.999))
     assert(stats.iterations >= 1, stats.toString)
     val kept = out.select("vec_id").collect().map(_.getLong(0)).toSet
     val plain = Similarity.dropEmbeddingDuplicates(

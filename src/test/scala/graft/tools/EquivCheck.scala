@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ScalePolicy
 import graft.operators.Dedup
 
 /** r21 equivalence audit: proves on the SCALE corpora (20×/100×) that the
@@ -11,7 +12,7 @@ import graft.operators.Dedup
   *   1. dedup_keep_best's digest fast path ≡ the pairs+components loop
   *      (reconstructed inline from the same public pieces r20 composed);
   *   2. dropNearDuplicates' verified digest losers ≡ the byte-exact
-  *      exactGroups losers (parameter-forced both ways).
+  *      exactGroups losers (regime forced both ways).
   * Test-scoped tool, not shipped. */
 object EquivCheck {
   def main(args: Array[String]): Unit = {
@@ -71,12 +72,12 @@ object EquivCheck {
     val d = base
     val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
     val in = d.unionByName(dup)
-    def dropWith(gate: Long): Array[Long] = idsOf(
-      Dedup.dropNearDuplicatesWithStats(in, "doc_id", "text",
-        numHashes = 48, bands = 12, threshold = 1.0, verifyExact = true,
-        verifyDigestMinBytes = gate)._1, "doc_id")
-    val dig = dropWith(0L)
-    val bytes = dropWith(Long.MaxValue)
+    def dropWith(small: Boolean): Array[Long] = idsOf(
+      ScalePolicy.forcing(small)(Dedup.dropNearDuplicatesWithStats(in,
+        "doc_id", "text", numHashes = 48, bands = 12, threshold = 1.0,
+        verifyExact = true))._1, "doc_id")
+    val dig = dropWith(small = false)
+    val bytes = dropWith(small = true)
     require(java.util.Arrays.equals(dig, bytes),
       s"dedup_drop diverged: digest=${dig.length} byte=${bytes.length}")
     println(s"[equiv] dedup_drop OK: ${dig.length} survivors identical")

@@ -8,7 +8,7 @@ import graft.SparkEntry
   * markdown file — the receipts behind the "explain-audited" claim, and a
   * baseline to diff when plans regress between rounds.
   *
-  * Usage: runMain graft.tools.ExplainDump [sfDir] [outFile]
+  * Usage: Test/runMain graft.tools.ExplainDump [sfDir] [outFile]
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

@@ -57,7 +57,8 @@ object ProfileDedup {
     timeU("full dedup_minhash (digest)") {
       val cand = Dedup.minhashPairs(u, "doc_id", "text",
         shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
-      Dedup.verifyPairsExact(cand, u, "doc_id", "text", digestMinBytes = 0L)
+      graft.ScalePolicy.forcing(small = false)(
+        Dedup.verifyPairsExact(cand, u, "doc_id", "text"))
         .write.format("noop").mode("overwrite").save()
     }
     spark.stop()
