@@ -45,11 +45,6 @@ private[graft] object Par {
     (x, y, z)
   }
 
-  def run4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
-    val ((x, y), (z, w)) = run2(run2(a, b), run2(c, d))
-    (x, y, z, w)
-  }
-
   /** Run every thunk concurrently (one thread each — callers pass small,
     * structurally-bounded lists: route tables, index side tables), wait
     * for ALL to finish, then rethrow the first failure. All actions

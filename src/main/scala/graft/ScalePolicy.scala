@@ -22,30 +22,20 @@ private[graft] object ScalePolicy {
   /** 1 MB: the text-leaves-the-exchange gate — verified exact dedup's
     * digest grouping (`Dedup.dropNearDuplicatesWithStats`) and the span
     * operators' `shuffle_hash` joins (`sharedSpans`, `dropSharedSpans`).
-    * Deliberately below [[SmallCorpusBytes]]: the estimate is
-    * parquet-compressed scan bytes, and the span rebuild-join hints were
-    * measured to win from ~250 KB of compressed text up (sf0.1
-    * 2.05 → 1.84 s; 20×, a 5.0 MB estimate, 10.3 → 5.9 s), and the
-    * verified dedup input is often a DERIVED frame (pipeline_curate's
-    * post-window near-dedup input) whose stats under-report. Only the
-    * genuinely tiny spec/smoke corpora keep the broadcast-regime plans
-    * the text-never-shuffles audit pins. */
+    * It sits this low because the estimate is parquet-compressed scan
+    * bytes: the span rebuild-join hints were measured to win from
+    * ~250 KB of compressed text up (sf0.1 2.05 → 1.84 s; 20×, a 5.0 MB
+    * estimate, 10.3 → 5.9 s), and the verified dedup input is often a
+    * DERIVED frame (pipeline_curate's post-window near-dedup input)
+    * whose stats under-report. Only the genuinely tiny spec/smoke
+    * corpora keep the broadcast-regime plans the text-never-shuffles
+    * audit pins. */
   val DigestBytes: Long = 1L << 20
 
   /** 4 MB: `Dedup.fanOutDense` spreads dense-vector kernels only above
     * this — below it the kernels finish faster than the exchange they
     * would be spread by (measured +0.27 s on the sf0.1 quantized top-k). */
   val DenseFanOutBytes: Long = 4L << 20
-
-  /** 8 MB: the sketch dedup family's small-corpus regime — minhash and
-    * simhash candidates skip the signature materialization job, the
-    * heavy-group probe and the salted assembly (one action, identical
-    * output); `verifyPairsExact` skips its eager digest pass, which pays
-    * only once text-bearing joins would dominate (measured ~2.4 s off the
-    * 100× minhash minimum); and the digest/winner/anti joins keep the
-    * planner's broadcast. Above it those joins hash-build their
-    * corpus-row-count-bounded side (see [[joinSide]]). */
-  val SmallCorpusBytes: Long = 8L << 20
 
   /** 1,000,000 directed edges: `Dedup.componentsWithStats` solves a graph
     * at or below this exactly on the driver (union-find over one

@@ -2319,16 +2319,14 @@ object SparkEntry {
     val contaminated = operators.Contamination.ngramOverlap(
       nearDeduped, base.filter(col("doc_id") < 20), "doc_id", "text", n = 5)
       .select("doc_id")
-    // SHUFFLE_HASH above the family's small-corpus gate (r21, guide
-    // §3.1): the contaminated side is benchmark-overlap-sized (ids
-    // only) but sits above aggregations whose stats estimate large, so
-    // the planner sort-merge-joined — SORTING the text-carrying curated
-    // stream (157 MB at 100×) to drop a handful of ids. Hash-building
-    // the id list leaves the text stream unsorted; below the gate the
-    // planner's broadcast regime stays.
-    val contaminatedSide = ScalePolicy.joinSide(
-      ScalePolicy.isSmall(base, ScalePolicy.SmallCorpusBytes))(contaminated)
-    nearDeduped.join(contaminatedSide, Seq("doc_id"), "left_anti")
+    // SHUFFLE_HASH (r21, guide §3.1): the contaminated side is
+    // benchmark-overlap-sized (ids only) but sits above aggregations
+    // whose stats estimate large, so the planner sort-merge-joined —
+    // SORTING the text-carrying curated stream (157 MB at 100×) to drop
+    // a handful of ids. Hash-building the id list leaves the text stream
+    // unsorted.
+    nearDeduped.join(contaminated.hint("shuffle_hash"), Seq("doc_id"),
+      "left_anti")
       .select(col("doc_id"),
         TextFunctions.wsTokenCount(col("text")).cast("bigint").as("n_tokens"))
   }

@@ -316,9 +316,7 @@ object Dedup {
     * instead of [[verifyPairsExact]]'s second full text scan + digest
     * materialization — at 100 TB that halves the operator's corpus I/O
     * (one pass computes sketch AND digest), and it was the measured
-    * next-biggest stage of the registered dedup query at 100×. Below the
-    * small-corpus gate nothing materializes and the digests evaluate
-    * lazily inside the join, like verifyPairsExact's gated path.
+    * next-biggest stage of the registered dedup query at 100×.
     * Output and semantics are identical to
     * `verifyPairsExact(minhashPairs(...), docs, ...)`. */
   def minhashPairsVerified(
@@ -337,17 +335,14 @@ object Dedup {
       numHashes, bands, threshold, maxBucket, maxEqualGroup, sampleShift,
       withDigest = true)
     val digs = digests.get
-    // SHUFFLE_HASH on the digest sides (r20, guide §3.1), gated on the
-    // same small-corpus regime the candidate machinery uses: below the
-    // gate the digests broadcast (optimal, unchanged); above it the
-    // digest frame is corpus-row-count × ~40 B — per-partition
-    // hash-buildable at any scale — while the unhinted planner
-    // sort-merge-joined at 100×, sorting the candidate stream twice
-    // (once per digest side)
-    val side = joinSide(isSmall(
-      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
-    val a = side(digs.select(col("id").as("id_a"), col("__dig").as("__dig_a")))
-    val b = side(digs.select(col("id").as("id_b"), col("__dig").as("__dig_b")))
+    // SHUFFLE_HASH on the digest sides (r20, guide §3.1): the digest
+    // frame is corpus-row-count × ~40 B — per-partition hash-buildable at
+    // any scale — while the unhinted planner sort-merge-joined at 100×,
+    // sorting the candidate stream twice (once per digest side)
+    val a = digs.select(col("id").as("id_a"), col("__dig").as("__dig_a"))
+      .hint("shuffle_hash")
+    val b = digs.select(col("id").as("id_b"), col("__dig").as("__dig_b"))
+      .hint("shuffle_hash")
     cand.join(a, "id_a").join(b, "id_b")
       .filter(col("__dig_a") === col("__dig_b"))
       .select(cand.columns.map(col).toIndexedSeq: _*)
@@ -368,18 +363,6 @@ object Dedup {
   ): (DataFrame, Option[DataFrame]) = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    // Small-corpus fast path (ScalePolicy.SmallCorpusBytes; zero jobs to
-    // decide): skip the signature materialization job, the heavy-group
-    // probe action, and the salted
-    // assembly — at this size a degenerate equal-signature group is
-    // bounded by the corpus itself, so the buffers those guard are small
-    // by construction, and the whole operator collapses to ONE action
-    // whose collapse keeps exact all-pairs semantics (identical output —
-    // the salted path only engages past `maxEqualGroup`, and a
-    // gate-small corpus cannot hold a group the machinery would have
-    // treated differently unless maxEqualGroup was lowered for tests).
-    val small = isSmall(
-      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
 
     // Test inputs arrive in few fat splits (one parquet file → one
     // partition); fanOut spreads the CPU-heavy signature stage across the
@@ -420,10 +403,8 @@ object Dedup {
       else base.select(col("id"), sigExpr)
     // stage mark (StageTimer — no-op unless the bench's diagnostic pass
     // enabled it): the kernel scan + checkpoint is action 1 of 3
-    val sigs =
-      if (small) sigsBase
-      else graft.StageTimer.timed("minhash.signature_checkpoint")(
-        materializeOnce(sigsBase))
+    val sigs = graft.StageTimer.timed("minhash.signature_checkpoint")(
+      materializeOnce(sigsBase))
     val digests =
       if (withDigest) Some(sigs.select(col("id"), col("__dig"))) else None
 
@@ -450,9 +431,7 @@ object Dedup {
     def surrogate(sig: Column): Column = struct(
       xxhash64(sig).as("h1"), xxhash64(lit(0x9E3779B97F4A7C15L), sig).as("h2"))
     val keyed = sigs.select(surrogate(col("sig")).as("k"), col("id"))
-    val (bySigK, equalIdPairs) =
-      if (small) collapseByKeyDirect(keyed, maxEqualGroup)
-      else { val (e, p, _) = collapseByKey(keyed, maxEqualGroup); (e, p) }
+    val (bySigK, equalIdPairs, _) = collapseByKey(keyed, maxEqualGroup)
     val sigByK = sigs.select(surrogate(col("sig")).as("k"), col("sig"))
       .dropDuplicates("k")
     val bySig = bySigK.join(sigByK, "k").select(col("sig"), col("ids"))
@@ -506,41 +485,6 @@ object Dedup {
     .select(col("k"), explode(idPairs(col("ids"))).as("p"))
     .select(col("k"), col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
 
-  /** The probe-free collapse: one aggregation, exact all-pairs for every
-    * equal-key group at or below `maxEqualGroup` — [[collapseByKey]]'s
-    * output whenever its probe finds no heavier group. The gate-small
-    * corpus bounds the collect_list BUFFER (a whole-corpus group is a
-    * corpus-sized id list — fine at gate size), but NOT the pair
-    * EXPANSION: a 5 MB corpus of 50k identical docs would still explode
-    * g(g−1)/2 ≈ 1.2×10⁹ in-row pair structs. So groups past
-    * `maxEqualGroup` emit [[starPairs]] instead — the same
-    * spanning-tree thinning the salted path applies, decided per row in
-    * the array expression with no probe action. */
-  private[operators] def collapseByKeyDirect(
-      keyed: DataFrame,
-      maxEqualGroup: Int): (DataFrame, DataFrame) = {
-    val grouped = keyed.groupBy("k")
-      .agg(sort_array(collect_list("id")).as("ids"))
-    val pairs = grouped
-      .filter(size(col("ids")) >= 2)
-      .select(col("k"), explode(
-        when(size(col("ids")) <= maxEqualGroup, idPairs(col("ids")))
-          .otherwise(starPairs(col("ids")))).as("p"))
-      .select(col("k"), col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-    // mirror the scale path's entries: a group past maxEqualGroup enters
-    // downstream band buckets as ONE representative (its sorted head =
-    // group min) — the starPairs above already carry its intra-group
-    // connectivity, and a full ids list would cross-expand ids_a × ids_b
-    // in-row when two degenerate groups share a band bucket (two
-    // 50k-member groups ⇒ ~2.5e9 pair structs inside one row, the exact
-    // blowup this guard exists to stop) besides diverging from the
-    // salted branch's representative-only pair set.
-    val byKey = grouped.withColumn("ids",
-      when(size(col("ids")) <= maxEqualGroup, col("ids"))
-        .otherwise(slice(col("ids"), 1, 1)))
-    (byKey, pairs)
-  }
-
   /** Distinct-key collapse of a `(k, id)` frame with the degenerate-group
     * guard (shared by the sketch deduppers and, via
     * `Similarity.collapseByVector`, the embedding family — `xxhash64`
@@ -581,8 +525,10 @@ object Dedup {
     val anyHeavy = heavyHks.nonEmpty
 
     if (!anyHeavy) {
-      val (byKey, pairs) = collapseByKeyDirect(keyed, maxEqualGroup)
-      (byKey, pairs, total)
+      // no group past maxEqualGroup: one aggregation, exact all-pairs
+      val byKey = keyed.groupBy("k")
+        .agg(sort_array(collect_list("id")).as("ids"))
+      (byKey, allPairsOf(byKey), total)
     } else {
       import keyed.sparkSession.implicits._
       val heavyKeys = heavyHks.toDF("hk")
@@ -678,14 +624,13 @@ object Dedup {
     val (cand, digests) = simhashCandidates(docs, idCol, textCol, maxHamming,
       maxBucket, maxEqualGroup, withDigest = true)
     val digs = digests.get
-    // SHUFFLE_HASH on the digest sides above the small-corpus gate —
-    // same rationale and gate as [[minhashPairsVerified]] (broadcast
-    // stays optimal below the gate; the unhinted plan sorted the
-    // candidate stream twice at 100×)
-    val side = joinSide(isSmall(
-      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
-    val a = side(digs.select(col("id").as("id_a"), col("__dig").as("__dig_a")))
-    val b = side(digs.select(col("id").as("id_b"), col("__dig").as("__dig_b")))
+    // SHUFFLE_HASH on the digest sides — same rationale as
+    // [[minhashPairsVerified]] (the unhinted plan sorted the candidate
+    // stream twice at 100×)
+    val a = digs.select(col("id").as("id_a"), col("__dig").as("__dig_a"))
+      .hint("shuffle_hash")
+    val b = digs.select(col("id").as("id_b"), col("__dig").as("__dig_b"))
+      .hint("shuffle_hash")
     cand.join(a, "id_a").join(b, "id_b")
       .filter(col("__dig_a") === col("__dig_b"))
       .select(cand.columns.map(col).toIndexedSeq: _*)
@@ -700,10 +645,6 @@ object Dedup {
       maxEqualGroup: Int,
       withDigest: Boolean
   ): (DataFrame, Option[DataFrame]) = {
-    // same zero-job small-corpus gate as [[minhashPairs]]: one action,
-    // no sketch materialization job, no probe, exact all-pairs collapse
-    val small = isSmall(
-      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
     // Sketch with the native one-pass expression (provably equal to the
     // composed SimHash.simhash(wsTokens(..)) — see SimHash64Spec).
     // materialized once for the same reason as minhashPairs' signatures:
@@ -717,7 +658,7 @@ object Dedup {
       if (withDigest)
         base.select(col("id"), shExpr, unhex(sha2(col("t"), 256)).as("__dig"))
       else base.select(col("id"), shExpr)
-    val sketched = if (small) sketchedBase else materializeOnce(sketchedBase)
+    val sketched = materializeOnce(sketchedBase)
     val digests =
       if (withDigest) Some(sketched.select(col("id"), col("__dig"))) else None
 
@@ -728,9 +669,7 @@ object Dedup {
     // tree — components/removal results identical, and only beyond a
     // group size no exhaustive list could be consumed at anyway.
     val keyedSk = sketched.select(col("sh").as("k"), col("id"))
-    val (bySketchK, zeroIdPairs) =
-      if (small) collapseByKeyDirect(keyedSk, maxEqualGroup)
-      else { val (e, p, _) = collapseByKey(keyedSk, maxEqualGroup); (e, p) }
+    val (bySketchK, zeroIdPairs, _) = collapseByKey(keyedSk, maxEqualGroup)
     val bySketch = bySketchK.select(col("k").as("sh"), col("ids"))
     val zeroPairs = zeroIdPairs
       .select(col("id_a"), col("id_b"), lit(0).cast("int").as("hamming"))
@@ -819,17 +758,11 @@ object Dedup {
     * orders stronger. `byteExact = true` restores the raw byte-comparison
     * joins for callers that must rule even that out.
     *
-    * The digest pass is an EAGER fixed cost (one full text scan + SHA +
-    * materialization before the verification join can start), worth
-    * paying only when the corpus is big enough that text-bearing joins
-    * would dominate — so the digest path is auto-gated on the
-    * optimizer's estimated corpus mass (`ScalePolicy.SmallCorpusBytes`,
-    * zero jobs to decide — the same gate as [[minhashPairs]]' small-corpus
-    * regime): at or below it the lazy byte-comparison plan runs instead,
-    * whose pair side broadcasts at that size and whose corpus text never
-    * shuffles. A 10⁴-doc corpus keeps sub-second verification; a
-    * 10⁶-doc one keeps the digest win (measured ~2.4 s off the 100×
-    * minhash minimum). */
+    * The digest pass is an eager fixed cost (one full text scan + SHA +
+    * materialization before the verification join can start). It took
+    * ~2.4 s off the 100× minhash minimum; the lazy byte-comparison plan
+    * that small corpora used to keep measured within noise of it on the
+    * benchmark's 6k-doc corpus, so every corpus takes the digest path. */
   def verifyPairsExact(
       pairs: DataFrame,
       docs: DataFrame,
@@ -840,17 +773,15 @@ object Dedup {
     // docs): both join sides read the materialized blocks, so the text
     // scan and the SHA pass run once, not per side. byteExact keeps the
     // lazy double-scan — materializing full text would defeat the point.
-    val lazyBytes = byteExact || isSmall(
-      docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes)
     val keyed =
-      if (lazyBytes) docs.select(col(idCol).as("__vid"), col(textCol).as("__k"))
+      if (byteExact) docs.select(col(idCol).as("__vid"), col(textCol).as("__k"))
       else materializeOnce(docs.select(col(idCol).as("__vid"),
         sha2(col(textCol).cast("string"), 256).as("__k")))
-    // SHUFFLE_HASH above the gate: same digest-join shape as
+    // SHUFFLE_HASH on the digest path: same digest-join shape as
     // [[minhashPairsVerified]] — the keyed side is corpus-row-count-
     // bounded 32-byte digests, the pair stream stays unsorted; the
-    // gate-small lazy-text path keeps the planner's broadcast
-    val side = joinSide(lazyBytes)
+    // byte-exact text path keeps the planner's choice
+    val side = joinSide(byteExact)
     val a = side(keyed.select(col("__vid").as("id_a"), col("__k").as("__k_a")))
     val b = side(keyed.select(col("__vid").as("id_b"), col("__k").as("__k_b")))
     pairs.join(a, "id_a").join(b, "id_b")
@@ -1278,12 +1209,12 @@ object Dedup {
         explode(slice(uniq, lit(2), size(uniq) - 1))
       }
       // zero-job scale gate for the VERIFIED branch (r21, verdict #4;
-      // ScalePolicy.DigestBytes, below the family's small-corpus gate
-      // for the reason given there). Below the gate the byte-exact
-      // (h, content) grouping stays — broadcast-regime plans, text
-      // verified byte for byte. Above it content equality is decided by
-      // the 32-byte SHA-256 digest — the SAME stand-in [[verifyPairsExact]] and
-      // [[minhashPairsVerified]] already use at scale — so the corpus
+      // ScalePolicy.DigestBytes, for the reason given there). Below the
+      // gate the byte-exact (h, content) grouping stays — broadcast-
+      // regime plans, text verified byte for byte. Above it content
+      // equality is decided by the 32-byte SHA-256 digest — the SAME
+      // stand-in [[verifyPairsExact]] and [[minhashPairsVerified]]
+      // use — so the corpus
       // text never rides a shuffle at all: the grouping exchanges
       // (id, 32 B) rows where exactGroups' direct path shuffled full
       // text for every colliding row (at dedup_drop's 20× tier EVERY
@@ -1445,18 +1376,15 @@ object Dedup {
           (col("__t").isNotNull &&
             octet_length(col("__t")) >= shingleK).as("__e")))
         .filter(col("__e")).drop("__e")
-      // SHUFFLE_HASH above the family's small-corpus gate: the best/
-      // winner sides are dup-class-sized — per-partition hash-buildable
-      // at any scale — while tiny corpora keep the planner's broadcast
-      val side = joinSide(isSmall(
-        docs.select(col(idCol), col(textCol)), ScalePolicy.SmallCorpusBytes))
+      // SHUFFLE_HASH: the best/winner sides are dup-class-sized —
+      // per-partition hash-buildable at any scale
       val best = members.groupBy("__k")
         .agg(max(col("__s")).as("__best"), count(lit(1)).as("__n"))
         .filter(col("__n") >= 2)
-      val winners = members.join(side(best), Seq("__k"))
+      val winners = members.join(best.hint("shuffle_hash"), Seq("__k"))
         .filter(col("__s") === col("__best"))
         .groupBy("__k").agg(min(col("__id")).as("__winner"))
-      val losers = members.join(side(winners), Seq("__k"))
+      val losers = members.join(winners.hint("shuffle_hash"), Seq("__k"))
         .filter(col("__id") =!= col("__winner"))
         .select(col("__id").as("__loser"))
       return (docs.join(losers, docs(idCol) === col("__loser"), "left_anti"),

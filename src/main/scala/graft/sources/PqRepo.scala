@@ -591,43 +591,20 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * [[recoverMergePartitioned]] rolls the recorded swap forward, and the
     * next [[mergePartitioned]] call runs that recovery automatically
     * before reading current state. The manifest is deleted only after all
-    * swaps land, so its absence means the table is clean. */
+    * swaps land, so its absence means the table is clean.
+    *
+    * `updates` is evaluated at least twice — once to collect its
+    * distinct partition tuples, again by the write — so it must be
+    * deterministic across re-execution or already materialized. A batch
+    * that changes between the evaluations can write a partition the
+    * collect never saw: its current rows are never read, so the swap
+    * replaces that partition with the batch's rows alone. */
   def mergePartitioned(
       updates: DataFrame,
       schema: String,
       table: String,
       keys: Seq[String],
       partitionCols: Seq[String],
-      modified: Option[String] = None,
-      allowMissingColumns: Boolean = false
-  ): Path =
-    // the partitions this batch touches: a driver-side list of tuples,
-    // collected (by name) only after the bootstrap check
-    mergePartitionedKnownAffected(updates, schema, table, keys,
-      partitionCols,
-      updates.select(partitionCols.map(col): _*).distinct().collect().toSeq,
-      modified, allowMissingColumns)
-
-  /** [[mergePartitioned]] for a caller that ALREADY collected the
-    * updates' distinct partition tuples (r21, guide §2.6): the index
-    * append paths overlap that collect with their read-only moved-id
-    * guard instead of paying the two job floors sequentially — one fewer
-    * sequential job per streamed micro-batch. `affected` MUST be exactly
-    * `updates.select(partitionCols).distinct()` (a superset with
-    * phantom tuples would delete untouched partitions via the
-    * hasNew=false manifest path only if they exist-and-merge-empty —
-    * i.e. never for true supersets of real data, but the contract is
-    * exactness; a SUBSET would leave stale rows outside the rewrite
-    * scope). This is the one partition-scoped merge preamble —
-    * recovery, bootstrap, validation — and `affected` is evaluated once,
-    * after it, never for a missing destination. */
-  private[graft] def mergePartitionedKnownAffected(
-      updates: DataFrame,
-      schema: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String],
-      affected: => Seq[org.apache.spark.sql.Row],
       modified: Option[String] = None,
       allowMissingColumns: Boolean = false
   ): Path = {
@@ -657,6 +634,10 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     validateMergeSchema(current, updates, keys,
       allowMissingColumns, s"mergePartitioned($schema/$table)",
       partitionScoped = true)
+    // the partitions this batch touches: a driver-side list of tuples,
+    // collected only after the bootstrap check
+    val affected =
+      updates.select(partitionCols.map(col): _*).distinct().collect().toSeq
     mergeIntoPartitions(updates, schema, table, keys, partitionCols,
       affected, modified, allowMissingColumns, Some(current))
   }

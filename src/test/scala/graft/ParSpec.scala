@@ -17,7 +17,6 @@ class ParSpec extends AnyFunSuite {
     def side(v: Int): Int = { started.countDown(); started.await(); v }
     assert(Par.run2(side(1), side(2)) == ((1, 2)))
     assert(Par.run3("a", 2, 3.0) == (("a", 2, 3.0)))
-    assert(Par.run4(1, 2, 3, 4) == ((1, 2, 3, 4)))
   }
 
   test("run2 rethrows a failure on either side only after both finished") {

@@ -115,27 +115,23 @@ class PipelinePlanAuditSpec extends SparkSpec {
       s"fast path must not read checkpointed propagation state:\n$p")
   }
 
-  test("dedup_minhash at scale evaluates the signature kernel outside " +
-    "the query plan (materialized once) and pays no band stage at " +
-    "threshold 1.0; the small-corpus gate collapses it to one live plan") {
-    // SCALE path (ScalePolicy.forcing): the signature frame
-    // is eagerly materialized inside minhashPairs — the kernel runs
-    // exactly once, in the materialization job, and every consumer (the
-    // heavy-group probe action, the signature collapse, the pair
-    // branches) reads the materialized fixed-width blocks. So the
-    // EXECUTED plan must carry ZERO live signature computations (it
-    // scans the materialized RDD instead), and at threshold 1.0 — where
-    // cross-signature candidates are provably empty — NO band
-    // posexplode either.
+  test("dedup_minhash evaluates the signature kernel outside the query " +
+    "plan (materialized once) and pays no band stage at threshold 1.0") {
+    // The signature frame is eagerly materialized inside minhashPairs —
+    // the kernel runs exactly once, in the materialization job, and
+    // every consumer (the heavy-group probe action, the signature
+    // collapse, the pair branches) reads the materialized fixed-width
+    // blocks. So the EXECUTED plan must carry ZERO live signature
+    // computations (it scans the materialized RDD instead), and at
+    // threshold 1.0 — where cross-signature candidates are provably
+    // empty — NO band posexplode either.
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
     val u = d.unionByName(dup)
-    val df = ScalePolicy.forcing(small = false) {
-      val cand = graft.operators.Dedup.minhashPairs(u, "doc_id", "text",
-        shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
-      graft.operators.Dedup.verifyPairsExact(cand, u, "doc_id", "text")
-    }
+    val cand = graft.operators.Dedup.minhashPairs(u, "doc_id", "text",
+      shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
+    val df = graft.operators.Dedup.verifyPairsExact(cand, u, "doc_id", "text")
     df.queryExecution.executedPlan.executeCollect()
     val finalPlan = df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -150,16 +146,13 @@ class PipelinePlanAuditSpec extends SparkSpec {
     assert(!finalPlan.contains("posexplode"),
       s"threshold-1.0 plan must not carry the band stage:\n$finalPlan")
 
-    // SMALL-CORPUS path (the registered query at test scale): the gate
-    // skips every materialization/probe action, so the whole operator is
-    // ONE live plan — the kernel appears in it (evaluated in the
-    // collapse aggregation, once) and NO materialized-RDD scan does.
-    val small = SparkEntry.queries("dedup_minhash")(spark, sfDir)
-    val smallPlan = small.queryExecution.executedPlan.toString
-    assert(!smallPlan.contains("ExistingRDD"),
-      s"small-corpus path must not pay a materialization job:\n$smallPlan")
-    assert(!smallPlan.contains("posexplode"),
-      s"threshold-1.0 plan must not carry the band stage:\n$smallPlan")
+    // the registered query at test scale takes the same plan
+    val registered = SparkEntry.queries("dedup_minhash")(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert(!registered.contains("graft_minhash_signature"), registered)
+    assert(registered.contains("ExistingRDD"), registered)
+    assert(!registered.contains("posexplode"),
+      s"threshold-1.0 plan must not carry the band stage:\n$registered")
   }
 
   test("scrub_pii stays one codegen projection over the scan (no shuffle)") {

@@ -19,8 +19,7 @@ class ScalePolicySpec extends SparkSpec {
 
   private val byteGates = Seq(
     "DigestBytes" -> (ScalePolicy.DigestBytes, 1L << 20),
-    "DenseFanOutBytes" -> (ScalePolicy.DenseFanOutBytes, 4L << 20),
-    "SmallCorpusBytes" -> (ScalePolicy.SmallCorpusBytes, 8L << 20))
+    "DenseFanOutBytes" -> (ScalePolicy.DenseFanOutBytes, 4L << 20))
 
   for ((name, (gate, expected)) <- byteGates)
     test(s"$name: small at its threshold, scale one row above; forcing overrides") {

@@ -1,13 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.{ScalePolicy, SparkSpec}
+import graft.SparkSpec
 
-/** The r11 digest-verification auto-gate: small corpora keep the lazy
-  * byte-comparison verification plan (no eager SHA pass), large ones pay
-  * the digest fixed cost that removes text-bearing shuffles — and every
-  * path returns the same pairs. Each case runs under both
-  * [[ScalePolicy]] regimes, forced. */
+/** Exact verification of sketch candidates: the byte-comparison and
+  * digest paths, fused and two-pass, return the same pairs, and a
+  * degenerate equal-sketch group is thinned to a spanning tree. */
 class DedupGateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -22,28 +20,27 @@ class DedupGateSpec extends SparkSpec {
     (docs, pairs)
   }
 
-  test("all three verification paths agree; false candidates pruned") {
+  test("byteExact and digest verification agree; false candidates pruned") {
     val (docs, pairs) = fixture
-    def run(byteExact: Boolean, small: Boolean) = ScalePolicy.forcing(small)(
-      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text", byteExact))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def run(byteExact: Boolean) =
+      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text", byteExact)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = Set((1L, 2L), (3L, 4L))
-    assert(run(byteExact = true, small = false) == expected)
-    assert(run(byteExact = false, small = true) == expected) // lazy bytes
-    assert(run(byteExact = false, small = false) == expected) // digest
+    assert(run(byteExact = true) == expected)
+    assert(run(byteExact = false) == expected) // digest
   }
 
   test("small-corpus path still thins a degenerate group past maxEqualGroup " +
     "to a spanning tree (no g^2 pair expansion)") {
-    // 12 identical docs, maxEqualGroup = 5, small regime (probe-free
-    // direct collapse): all-pairs would be 66; the per-row star fallback
-    // emits 11 edges, same connectivity — the expansion a gate-small
-    // corpus of 50k identical docs would otherwise blow up on
+    // 12 identical docs, maxEqualGroup = 5: all-pairs would be 66; the
+    // salted collapse emits a spanning tree of 11 edges, same
+    // connectivity — the expansion a corpus of 50k identical docs would
+    // otherwise blow up on
     val docs = (0 until 12).map(i => (i.toLong, "identical content here"))
       .toDF("doc_id", "text")
-    val pairs = ScalePolicy.forcing(small = true)(Dedup.minhashPairs(
+    val pairs = Dedup.minhashPairs(
       docs, "doc_id", "text", numHashes = 48, bands = 12, threshold = 1.0,
-      maxEqualGroup = 5))
+      maxEqualGroup = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size == 11, pairs.toString)
     val parent = scala.collection.mutable.Map((0L until 12L).map(i => i -> i): _*)
@@ -55,18 +52,19 @@ class DedupGateSpec extends SparkSpec {
 
   test("direct collapse thins a degenerate group's ENTRY to its representative " +
     "(banding sees one id, not the full group)") {
-    // r12 advice fix: the gate-small path used to keep the FULL ids array
-    // for groups past maxEqualGroup — two 50k-member groups sharing a band
-    // bucket would cross-expand ~2.5e9 in-row pair structs downstream.
-    // Entries must mirror the salted scale branch: representative only.
+    // r12 advice fix: a group past maxEqualGroup must enter banding as
+    // its representative only — two 50k-member groups sharing a band
+    // bucket would otherwise cross-expand ~2.5e9 in-row pair structs
+    // downstream.
     val keyed = (0 until 12).map(i => ("samekey", i.toLong)).toDF("k", "id")
       .unionByName(Seq(("other", 100L), ("other", 101L)).toDF("k", "id"))
-    val (byKey, pairs) = Dedup.collapseByKeyDirect(keyed, maxEqualGroup = 5)
+    val (byKey, pairs, total) = Dedup.collapseByKey(keyed, maxEqualGroup = 5)
+    assert(total == 14)
     val entries = byKey.collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(entries("samekey") == Seq(0L), entries.toString)
     assert(entries("other") == Seq(100L, 101L))
-    // intra-group connectivity still rides the star pairs
+    // intra-group connectivity still rides a spanning tree
     assert(pairs.filter(col("k") === "samekey").count() == 11)
     assert(pairs.filter(col("k") === "other").count() == 1)
   }
@@ -76,22 +74,22 @@ class DedupGateSpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    Seq(true, false).foreach { small => ScalePolicy.forcing(small) {
+    for (byteExact <- Seq(true, false)) {
       val oldMin = pairSet(Dedup.verifyPairsExact(
         Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
           bands = 12, threshold = 1.0),
-        docs, "doc_id", "text"))
+        docs, "doc_id", "text", byteExact))
       val newMin = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
         numHashes = 48, bands = 12, threshold = 1.0))
       assert(newMin == oldMin && newMin == Set((1L, 2L), (3L, 4L)),
-        s"minhash small=$small: $newMin vs $oldMin")
+        s"minhash byteExact=$byteExact: $newMin vs $oldMin")
       val oldSim = pairSet(Dedup.verifyPairsExact(
         Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 0),
-        docs, "doc_id", "text"))
+        docs, "doc_id", "text", byteExact))
       val newSim = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
         maxHamming = 0))
-      assert(newSim == oldSim, s"simhash small=$small: $newSim vs $oldSim")
-    }}
+      assert(newSim == oldSim, s"simhash byteExact=$byteExact: $newSim vs $oldSim")
+    }
     // null-text docs group by null sketch but must never verify as pairs
     val withNulls = docs.unionByName(Seq(
       (100L, null.asInstanceOf[String]),
@@ -126,42 +124,38 @@ class DedupGateSpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (small <- Seq(true, false); th <- Seq(1.0, 0.75))
-      ScalePolicy.forcing(small) {
-        val twoPass = pairSet(Dedup.verifyPairsExact(
-          Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
-            bands = 12, threshold = th),
-          docs, "doc_id", "text"))
-        val fused = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
-          numHashes = 48, bands = 12, threshold = th))
-        assert(fused == twoPass, s"minhash small=$small th=$th")
-        assert(fused.nonEmpty)
-      }
-    for (small <- Seq(true, false); mh <- Seq(0, 4))
-      ScalePolicy.forcing(small) {
-        val twoPass = pairSet(Dedup.verifyPairsExact(
-          Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = mh),
-          docs, "doc_id", "text"))
-        val fused = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
-          maxHamming = mh))
-        assert(fused == twoPass, s"simhash small=$small maxHamming=$mh")
-      }
+    for (byteExact <- Seq(true, false); th <- Seq(1.0, 0.75)) {
+      val twoPass = pairSet(Dedup.verifyPairsExact(
+        Dedup.minhashPairs(docs, "doc_id", "text", numHashes = 48,
+          bands = 12, threshold = th),
+        docs, "doc_id", "text", byteExact))
+      val fused = pairSet(Dedup.minhashPairsVerified(docs, "doc_id", "text",
+        numHashes = 48, bands = 12, threshold = th))
+      assert(fused == twoPass, s"minhash byteExact=$byteExact th=$th")
+      assert(fused.nonEmpty)
+    }
+    for (byteExact <- Seq(true, false); mh <- Seq(0, 4)) {
+      val twoPass = pairSet(Dedup.verifyPairsExact(
+        Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = mh),
+        docs, "doc_id", "text", byteExact))
+      val fused = pairSet(Dedup.simhashPairsVerified(docs, "doc_id", "text",
+        maxHamming = mh))
+      assert(fused == twoPass, s"simhash byteExact=$byteExact maxHamming=$mh")
+    }
   }
 
-  test("below the gate the plan carries no SHA pass; forcing does") {
+  test("the byteExact plan carries no SHA pass; the default plan does") {
     val (docs, pairs) = fixture
-    val lazyPlan = Dedup.verifyPairsExact(pairs, docs, "doc_id", "text")
-      .queryExecution.optimizedPlan.toString
-    assert(!lazyPlan.contains("sha2"), lazyPlan)
-    // the forced scale regime takes the digest path; the materialized
-    // frame is plan-opaque (checkpoint scan), so assert on behavior
-    // instead: the optimized plan reads the materialized digests, not the
-    // text column
-    val forced = ScalePolicy.forcing(small = false)(
-      Dedup.verifyPairsExact(pairs, docs, "doc_id", "text"))
-    val forcedPlan = forced.queryExecution.optimizedPlan.toString
-    assert(forcedPlan.contains("LogicalRDD") || forcedPlan.contains("Scan"),
-      forcedPlan)
-    assert(forced.collect().length == 2)
+    val bytePlan = Dedup.verifyPairsExact(pairs, docs, "doc_id", "text",
+      byteExact = true).queryExecution.optimizedPlan.toString
+    assert(!bytePlan.contains("sha2"), bytePlan)
+    // the default takes the digest path; the materialized frame is
+    // plan-opaque (checkpoint scan), so assert on behavior instead: the
+    // optimized plan reads the materialized digests, not the text column
+    val digest = Dedup.verifyPairsExact(pairs, docs, "doc_id", "text")
+    val digestPlan = digest.queryExecution.optimizedPlan.toString
+    assert(digestPlan.contains("LogicalRDD"), digestPlan)
+    assert(!digestPlan.contains("sha2"), digestPlan)
+    assert(digest.collect().length == 2)
   }
 }

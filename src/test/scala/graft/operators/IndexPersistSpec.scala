@@ -194,6 +194,40 @@ class IndexPersistSpec extends SparkSpec {
       .assigned.count() == emb.count() + 1)
   }
 
+  test("appendToIvfIndex with a non-deterministic batch: the guard, the " +
+    "collect and the write see the same rows") {
+    val repo = PqRepo(spark, Files.createTempDirectory("idx_nd").toString)
+    val built = Similarity.ivfBuild(emb, "vec_id", "embedding",
+      numCentroids = 8, kmeansIters = 1)
+    Similarity.writeIvfIndex(repo, built, "ann", "nd")
+    val before = built.assigned.select("id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toSet
+    val populated = before.map(_._2).toSeq.distinct.sorted
+    val (c1, c2) = (populated(0), populated(1))
+    val cent = built.centroids.toMap
+    val (v1, v2) = (cent(c1).map(_.toFloat), cent(c2).map(_.toFloat))
+    // centroid c1 on the first evaluation, c2 on every later one: a
+    // merge that re-evaluates the batch collects one cluster and writes
+    // another
+    IndexPersistSpec.calls.set(0)
+    val vec = udf(() =>
+      if (IndexPersistSpec.calls.getAndIncrement() == 0) v1 else v2)
+      .asNondeterministic()
+    val newId = 2000000L
+    val batch = spark.range(1).select(lit(newId).as("vec_id"),
+      vec().as("embedding"))
+    Similarity.appendToIvfIndex(repo, batch, "vec_id", "embedding", "ann", "nd",
+      checkMoved = false)
+    val after = Similarity.readIvfIndex(repo, "ann", "nd").assigned
+      .select("id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getInt(1))
+    assert(before.subsetOf(after.toSet),
+      s"${(before -- after.toSet).size} indexed rows lost")
+    assert(after.count(_._1 == newId) == 1, after.filter(_._1 == newId).toSeq)
+    assert(after.length == before.size + 1)
+    assert(after.contains(newId -> c1))
+  }
+
   test("reassignIvfIndex: moved ids land once in their new cluster, " +
     "untouched partitions stay byte-identical, search ≡ same-centroid rebuild") {
     val repo = PqRepo(spark, Files.createTempDirectory("idx_rsn").toString)
@@ -342,4 +376,10 @@ class IndexPersistSpec extends SparkSpec {
       schemaDir.listFiles().map(_.getName).mkString(","))
     assert(repo.table("ann", "p_ivf").count() == 100)
   }
+}
+
+object IndexPersistSpec {
+  /** Call counter of the non-deterministic batch UDF: an object field, so
+    * the local-mode tasks share it instead of a serialized copy. */
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }

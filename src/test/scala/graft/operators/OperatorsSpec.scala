@@ -93,10 +93,8 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // all-pairs would be 66; the salted fallback emits a spanning TREE of
     // the group (per-salt stars + a chain through the min: 11 edges)
-    // forcing the scale regime: this spec pins the salted fallback
-    // itself, which the small-corpus regime skips by design
-    val pairs = ScalePolicy.forcing(small = false)(Dedup.simhashPairs(
-      docs, "doc_id", "text", maxHamming = 0, maxEqualGroup = 5))
+    val pairs = Dedup.simhashPairs(
+      docs, "doc_id", "text", maxHamming = 0, maxEqualGroup = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.size == 11, pairs.toString)
     assert(pairs.forall { case (a, b) => a < b && b < 12L })
@@ -199,10 +197,9 @@ class DedupSpec extends SparkSpec {
   test("minhashPairs star fallback past maxEqualGroup keeps connectivity") {
     val docs = (0 until 12).map(i => (i.toLong, "identical content here again"))
       .toDF("doc_id", "text")
-    // scale regime forced: see the simhash star-fallback spec
-    val pairs = ScalePolicy.forcing(small = false)(Dedup.minhashPairs(
+    val pairs = Dedup.minhashPairs(
       docs, "doc_id", "text", numHashes = 48, bands = 12, threshold = 1.0,
-      maxEqualGroup = 5))
+      maxEqualGroup = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // spanning tree of the 12-member equal-signature group: 11 edges,
     // one component rooted at the min id

@@ -48,19 +48,13 @@ object ProfileDedup {
       Dedup.minhashPairs(u, "doc_id", "text",
         shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
     }
-    timeU("full dedup_minhash (lazy bytes)") {
-      val cand = Dedup.minhashPairs(u, "doc_id", "text",
-        shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
-      Dedup.verifyPairsExact(cand, u, "doc_id", "text")
-        .write.format("noop").mode("overwrite").save()
-    }
-    timeU("full dedup_minhash (digest)") {
-      val cand = Dedup.minhashPairs(u, "doc_id", "text",
-        shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
-      graft.ScalePolicy.forcing(small = false)(
-        Dedup.verifyPairsExact(cand, u, "doc_id", "text"))
-        .write.format("noop").mode("overwrite").save()
-    }
+    for ((label, byteExact) <- Seq("lazy bytes" -> true, "digest" -> false))
+      timeU(s"full dedup_minhash ($label)") {
+        val cand = Dedup.minhashPairs(u, "doc_id", "text",
+          shingleK = 5, numHashes = 48, bands = 12, threshold = 1.0)
+        Dedup.verifyPairsExact(cand, u, "doc_id", "text", byteExact)
+          .write.format("noop").mode("overwrite").save()
+      }
     spark.stop()
   }
 }
