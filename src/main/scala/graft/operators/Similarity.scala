@@ -565,8 +565,10 @@ object Similarity {
       schema: String,
       name: String): Unit = {
     val index = readIvfIndex(repo, schema, name)
-    val assigned = assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids)
+    // materialized once: the affected-cluster collect and the write must
+    // see the same rows, whatever the caller's batch does on re-execution
+    val assigned = Dedup.materializeOnce(assignClusters(
+      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids))
     val oldClusters = index.assigned.select(col("id"), col("cluster"))
       .join(assigned.select(col("id"), col("cluster").as("__new")), Seq("id"))
       .filter(col("cluster") =!= col("__new"))
@@ -621,9 +623,13 @@ object Similarity {
       keys = Seq(idCol, "bucket"), partitionCols = Seq("bucket"))
   }
 
-  /** Reload a persisted IVF index. The centroid pull is index-sized
-    * (≤ numCentroids × dim doubles); the assigned corpus stays a lazy
-    * partitioned scan, cluster-prunable by [[ivfSearch]]'s probe join. */
+  /** Reload a persisted IVF index in one Spark job, the centroid collect.
+    * The centroid pull is index-sized (≤ numCentroids × dim doubles); the
+    * assigned corpus stays a lazy partitioned scan, cluster-prunable by
+    * [[ivfSearch]]'s probe join. Both tables resolve on the driver
+    * ([[graft.sources.PqRepo.table]]): the cluster partition directories
+    * are listed on a driver thread pool and the schema is read from one
+    * footer, so neither table costs a listing or schema-inference job. */
   def readIvfIndex(
       repo: graft.sources.PqRepo, schema: String, name: String): IvfIndex = {
     val cents = repo.table(schema, s"${name}_ivf_centroids")

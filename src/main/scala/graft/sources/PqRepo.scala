@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max, min}
+import org.apache.spark.sql.graft.ParquetBridge
 import org.apache.spark.sql.types.MetadataBuilder
 
 import graft.sync.Modified
@@ -23,6 +24,16 @@ import graft.sync.Modified
   *
   * Unlike the single-file reference, tables here are parquet *directories* —
   * the idiomatic Spark layout, written in parallel by every executor.
+  *
+  * Reads resolve a table on the driver ([[ParquetBridge]]): the directory
+  * tree is listed with `listStatus`, partition directories concurrently,
+  * and the schema comes from one footer, so a read runs no Spark job —
+  * the analog of the reference reading one file's footer. The resulting
+  * DataFrame is the relation Spark's parquet reader builds, with the same
+  * schema, rows and input files. A repo table has one schema by
+  * construction (every merge path runs `validateMergeSchema`, and a
+  * partition-scoped merge refuses to add columns), so a session's
+  * `spark.sql.parquet.mergeSchema` does not apply to it.
   */
 final case class PqRepo(spark: SparkSession, dataDir: String) {
 
@@ -39,7 +50,11 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
   /** Read a repository table. */
   def table(schema: String, table: String): DataFrame =
-    spark.read.parquet(tablePath(schema, table).toString)
+    read(tablePath(schema, table))
+
+  /** The one read path of the repo: a table directory resolved on the
+    * driver, with no listing or schema job. */
+  private def read(p: Path): DataFrame = ParquetBridge.read(spark, p)
 
   /** Write `df` as `<schema>/<table>.parquet`, embedding `modified` in the
     * schema metadata, with temp-write + atomic promote and optional archive
@@ -89,11 +104,12 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   }
 
   /** Embedded `last_modified` for a table, if any (reference
-    * get_modified_pq, parquet.py:280). */
+    * get_modified_pq, parquet.py:280). Reads one footer — the one a read
+    * of the table takes its schema from — and builds no DataFrame. */
   def lastModified(schema: String, table: String): Option[String] = {
     val p = tablePath(schema, table)
     if (!fs(p).exists(p)) return None
-    spark.read.parquet(p.toString).schema.fields
+    ParquetBridge.dataSchema(spark, p).fields
       .flatMap(f => if (f.metadata.contains(MetadataKey))
         Some(f.metadata.getString(MetadataKey)) else None)
       .headOption
@@ -212,7 +228,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       .collect { case (Some(stamp), _, path) if stamp <= asOf => (stamp, path) }
       .sortBy(_._1)
       .lastOption
-      .map { case (_, path) => spark.read.parquet(path.toString) }
+      .map { case (_, path) => read(path) }
 
   /** Resolution detail behind [[repoAsOf]]: for each table the newest
     * version whose stamp is ≤ asOf — (table, stamp, isActive, path), or
@@ -260,7 +276,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
           "snapshot would silently mix timeline points; archive these " +
           "tables with parseable stamps or pick a later asOf")
     resolved.map { case (t, _, _, path) =>
-      t -> spark.read.parquet(path.toString)
+      t -> read(path)
     }.toMap
   }
 
@@ -624,13 +640,12 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       return writePartitioned(updates, schema, table, partitionCols, modified)
 
     // ONE resolved read of the destination serves both the schema
-    // validation and the merge engine's current-side scan (r20): each
-    // `spark.read.parquet(dest)` eagerly lists the partition tree and
-    // reads footers for schema inference — a fixed driver-side cost that
-    // used to be paid twice per merge, which compounds across streamed
-    // micro-batch appends. Safe because recovery already ran above, so
-    // the listing sees a consistent table.
-    val current = spark.read.parquet(dest.toString)
+    // validation and the merge engine's current-side scan: resolving lists
+    // the partition tree and reads one footer on the driver, a fixed cost
+    // per merge that compounds across streamed micro-batch appends. Safe
+    // because recovery already ran above, so the listing sees a
+    // consistent table.
+    val current = read(dest)
     validateMergeSchema(current, updates, keys,
       allowMissingColumns, s"mergePartitioned($schema/$table)",
       partitionScoped = true)
@@ -691,7 +706,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
     // current rows of affected partitions only (PartitionFilters prune the
     // rest before I/O), merged with the updates
-    val current = currentFull.getOrElse(spark.read.parquet(dest.toString))
+    val current = currentFull.getOrElse(read(dest))
       .filter(touchFilter)
     val merged = cowMerge(current, updates, keys, allowMissingColumns)
 

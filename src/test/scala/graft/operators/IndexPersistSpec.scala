@@ -194,38 +194,64 @@ class IndexPersistSpec extends SparkSpec {
       .assigned.count() == emb.count() + 1)
   }
 
-  test("appendToIvfIndex with a non-deterministic batch: the guard, the " +
-    "collect and the write see the same rows") {
-    val repo = PqRepo(spark, Files.createTempDirectory("idx_nd").toString)
+  /** A persisted 8-centroid index `ann/<name>` with its (id, cluster)
+    * rows, two populated clusters c1 < c2, and a one-row batch maker whose
+    * vector is centroid c1 on its first evaluation and c2 on every later
+    * one: a merge that re-evaluates the batch sees different rows in its
+    * collect and in its write. */
+  private def flipFlopIndex(name: String)
+      : (PqRepo, Set[(Long, Int)], Int, Int, Long => org.apache.spark.sql.DataFrame) = {
+    val repo = PqRepo(spark, Files.createTempDirectory(s"idx_$name").toString)
     val built = Similarity.ivfBuild(emb, "vec_id", "embedding",
       numCentroids = 8, kmeansIters = 1)
-    Similarity.writeIvfIndex(repo, built, "ann", "nd")
+    Similarity.writeIvfIndex(repo, built, "ann", name)
     val before = built.assigned.select("id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toSet
     val populated = before.map(_._2).toSeq.distinct.sorted
     val (c1, c2) = (populated(0), populated(1))
     val cent = built.centroids.toMap
     val (v1, v2) = (cent(c1).map(_.toFloat), cent(c2).map(_.toFloat))
-    // centroid c1 on the first evaluation, c2 on every later one: a
-    // merge that re-evaluates the batch collects one cluster and writes
-    // another
     IndexPersistSpec.calls.set(0)
     val vec = udf(() =>
       if (IndexPersistSpec.calls.getAndIncrement() == 0) v1 else v2)
       .asNondeterministic()
-    val newId = 2000000L
-    val batch = spark.range(1).select(lit(newId).as("vec_id"),
-      vec().as("embedding"))
-    Similarity.appendToIvfIndex(repo, batch, "vec_id", "embedding", "ann", "nd",
-      checkMoved = false)
-    val after = Similarity.readIvfIndex(repo, "ann", "nd").assigned
+    (repo, before, c1, c2,
+      (id: Long) => spark.range(1).select(lit(id).as("vec_id"), vec().as("embedding")))
+  }
+
+  private def indexedPairs(repo: PqRepo, name: String): Array[(Long, Int)] =
+    Similarity.readIvfIndex(repo, "ann", name).assigned
       .select("id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1))
+
+  test("appendToIvfIndex with a non-deterministic batch: the guard, the " +
+    "collect and the write see the same rows") {
+    val (repo, before, c1, _, batchOf) = flipFlopIndex("nd")
+    val newId = 2000000L
+    Similarity.appendToIvfIndex(repo, batchOf(newId), "vec_id", "embedding",
+      "ann", "nd", checkMoved = false)
+    val after = indexedPairs(repo, "nd")
     assert(before.subsetOf(after.toSet),
       s"${(before -- after.toSet).size} indexed rows lost")
     assert(after.count(_._1 == newId) == 1, after.filter(_._1 == newId).toSeq)
     assert(after.length == before.size + 1)
     assert(after.contains(newId -> c1))
+  }
+
+  test("reassignIvfIndex with a non-deterministic batch: the affected-" +
+    "cluster collect and the write see the same rows") {
+    val (repo, before, c1, _, batchOf) = flipFlopIndex("rnd")
+    // re-ingest an id of cluster c1: unmoved on the first evaluation. A
+    // batch evaluated once per use either leaves a stale row in c1 or
+    // writes c2 from the batch row alone, depending on which use sees the
+    // first evaluation
+    val id = before.collectFirst { case (i, c) if c == c1 => i }.get
+    Similarity.reassignIvfIndex(repo, batchOf(id), "vec_id", "embedding", "ann", "rnd")
+    val after = indexedPairs(repo, "rnd")
+    assert(before.subsetOf(after.toSet),
+      s"${(before -- after.toSet).size} indexed rows lost")
+    assert(after.count(_._1 == id) == 1, after.filter(_._1 == id).toSeq)
+    assert(after.length == before.size)
   }
 
   test("reassignIvfIndex: moved ids land once in their new cluster, " +

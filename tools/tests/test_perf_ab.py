@@ -4,9 +4,12 @@ Run from the repository root:
 
     python3 -m unittest discover -s tools/tests -v
 """
+import contextlib
 import io
+import json
 import os
 import sys
+import tempfile
 import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -103,6 +106,68 @@ class SummaryMath(unittest.TestCase):
         for needle in ("== w", "pass_s", "bulk_items_per_s",
                        "parent: failed/attempted 0/30", "change: failed/attempted 0/30"):
             self.assertIn(needle, text)
+
+
+LAYERS = [
+    {"name": "operators.similarity.read_index_ms", "unit": "ms", "better": "lower"},
+    {"name": "operators.similarity.search.jobs", "unit": "count", "better": "lower"},
+    {"name": "sync.skip_ratio", "unit": "ratio", "better": "higher"},
+    {"name": "operators.dedup.curate.jobs", "unit": "count", "better": "lower"},
+]
+
+
+def traced_result(read_ms, jobs):
+    return {"correct": True, "attempted": 10, "failed": 0,
+            "metrics": {"operators.similarity.read_index_ms": {"value": read_ms, "unit": "ms"},
+                        "operators.similarity.search.jobs": {"value": jobs, "unit": "count"},
+                        "operators.dedup.curate.jobs": {"value": 0, "unit": "count"}}}
+
+
+class TracedLayers(unittest.TestCase):
+
+    def test_layer_medians_only_for_metrics_the_workload_reports(self):
+        traced = {"parent": [traced_result(m, 7) for m in (500.0, 568.0, 600.0)],
+                  "change": [traced_result(m, 4) for m in (80.0, 88.0, 95.0)]}
+        rows = {r["name"]: r for r in perf_ab.summarize_layers(LAYERS, traced)}
+        self.assertNotIn("sync.skip_ratio", rows)  # not reported by this workload
+        self.assertNotIn("operators.dedup.curate.jobs", rows)  # 0 on both sides
+        r = rows["operators.similarity.read_index_ms"]
+        self.assertEqual((r["n"], r["parent"], r["change"]), (3, 568.0, 88.0))
+        self.assertAlmostEqual(r["worse_by"], (88.0 - 568.0) / 568.0)
+        self.assertEqual((rows["operators.similarity.search.jobs"]["parent"],
+                          rows["operators.similarity.search.jobs"]["change"]), (7, 4))
+        # a traced run without a result drops its pair
+        traced["change"][0] = None
+        rows = {r["name"]: r for r in perf_ab.summarize_layers(LAYERS, traced)}
+        self.assertEqual(rows["operators.similarity.read_index_ms"]["n"], 2)
+
+    def test_layers_are_printed_and_never_change_the_exit_code(self):
+        spec = {"end_to_end": SPEC, "per_layer": LAYERS}
+        runs = {"parent": [result(10.0, 100.0)] * 3, "change": [result(10.0, 100.0)] * 3}
+        # every layer metric far worse on the change side
+        traced = {"parent": [traced_result(10.0, 1)] * 3,
+                  "change": [traced_result(1000.0, 50)] * 3}
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "ab.json")
+            with open(path, "w") as f:
+                json.dump({"spec": spec, "workload": "w", "runs": runs, "traced": traced}, f)
+            buf = io.StringIO()
+            argv = sys.argv
+            sys.argv = ["perf_ab.py", "--summarize", path]
+            try:
+                with contextlib.redirect_stdout(buf), self.assertRaises(SystemExit) as e:
+                    perf_ab.main()
+            finally:
+                sys.argv = argv
+        self.assertEqual(e.exception.code, 0)
+        text = buf.getvalue()
+        self.assertIn("per-layer", text)
+        self.assertIn("operators.similarity.read_index_ms", text)
+        self.assertIn("+99.000", text)
+        # a saved run without traced pairs prints no layer section
+        buf = io.StringIO()
+        perf_ab.report("w", *perf_ab.summarize(SPEC, runs), out=buf)
+        self.assertNotIn("per-layer", buf.getvalue())
 
 
 if __name__ == "__main__":
