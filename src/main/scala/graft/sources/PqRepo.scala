@@ -26,14 +26,14 @@ import graft.sync.Modified
   * the idiomatic Spark layout, written in parallel by every executor.
   *
   * Reads resolve a table on the driver ([[ParquetBridge]]): the directory
-  * tree is listed with `listStatus`, partition directories concurrently,
-  * and the schema comes from one footer, so a read runs no Spark job —
-  * the analog of the reference reading one file's footer. The resulting
-  * DataFrame is the relation Spark's parquet reader builds, with the same
-  * schema, rows and input files. A repo table has one schema by
-  * construction (every merge path runs `validateMergeSchema`, and a
-  * partition-scoped merge refuses to add columns), so a session's
-  * `spark.sql.parquet.mergeSchema` does not apply to it.
+  * tree is listed with `listStatus` and the schema comes from one footer,
+  * so a read runs no Spark job — the analog of the reference reading one
+  * file's footer. The resulting DataFrame is the relation Spark's parquet
+  * reader builds, with the same schema, rows and input files. A repo table
+  * has one schema by construction (every merge path runs
+  * `validateMergeSchema`, and a partition-scoped merge refuses to add
+  * columns), so a session's `spark.sql.parquet.mergeSchema` does not apply
+  * to it.
   */
 final case class PqRepo(spark: SparkSession, dataDir: String) {
 
@@ -50,11 +50,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
   /** Read a repository table. */
   def table(schema: String, table: String): DataFrame =
-    read(tablePath(schema, table))
-
-  /** The one read path of the repo: a table directory resolved on the
-    * driver, with no listing or schema job. */
-  private def read(p: Path): DataFrame = ParquetBridge.read(spark, p)
+    ParquetBridge.read(spark, tablePath(schema, table))
 
   /** Write `df` as `<schema>/<table>.parquet`, embedding `modified` in the
     * schema metadata, with temp-write + atomic promote and optional archive
@@ -228,7 +224,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       .collect { case (Some(stamp), _, path) if stamp <= asOf => (stamp, path) }
       .sortBy(_._1)
       .lastOption
-      .map { case (_, path) => read(path) }
+      .map { case (_, path) => ParquetBridge.read(spark, path) }
 
   /** Resolution detail behind [[repoAsOf]]: for each table the newest
     * version whose stamp is ≤ asOf — (table, stamp, isActive, path), or
@@ -276,7 +272,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
           "snapshot would silently mix timeline points; archive these " +
           "tables with parseable stamps or pick a later asOf")
     resolved.map { case (t, _, _, path) =>
-      t -> read(path)
+      t -> ParquetBridge.read(spark, path)
     }.toMap
   }
 
@@ -645,7 +641,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // per merge that compounds across streamed micro-batch appends. Safe
     // because recovery already ran above, so the listing sees a
     // consistent table.
-    val current = read(dest)
+    val current = ParquetBridge.read(spark, dest)
     validateMergeSchema(current, updates, keys,
       allowMissingColumns, s"mergePartitioned($schema/$table)",
       partitionScoped = true)
@@ -706,7 +702,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
     // current rows of affected partitions only (PartitionFilters prune the
     // rest before I/O), merged with the updates
-    val current = currentFull.getOrElse(read(dest))
+    val current = currentFull.getOrElse(ParquetBridge.read(spark, dest))
       .filter(touchFilter)
     val merged = cowMerge(current, updates, keys, allowMissingColumns)
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
+import org.apache.spark.util.HadoopFSUtils
 
 /** Bridge to the `private[spark]` pieces of Spark's parquet read path, so a
   * parquet directory resolves to a DataFrame on the driver with no Spark
@@ -24,10 +24,9 @@ import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
   * directory; here both happen on the driver:
   *
   *  - the directory tree is listed with `listStatus` and Spark's own
-  *    hidden-path rule, the partition directories concurrently on a small
-  *    fixed pool. Never `listFiles`/`listLocatedStatus`: on the local FS
-  *    their `LocatedFileStatus` forks a `stat` per file. The statuses carry
-  *    no block locations, so scans get no locality hints — the same as
+  *    hidden-path rule. Never `listFiles`/`listLocatedStatus`: on the local
+  *    FS their `LocatedFileStatus` forks a `stat` per file. The statuses
+  *    carry no block locations, so scans get no locality hints — the same as
   *    `spark.sql.sources.ignoreDataLocality`;
   *  - the listing seeds the `InMemoryFileIndex` through a [[FileStatusCache]]
   *    whose `invalidateAll` drops it, so `refresh()` lists the normal way;
@@ -39,8 +38,6 @@ import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
   * Meant for directories whose files share one schema: the session's
   * `spark.sql.parquet.mergeSchema` is not consulted. */
 object ParquetBridge {
-
-  private val ListThreads = 8
 
   /** `root` as a DataFrame: the relation `spark.read.parquet(root)` builds. */
   def read(spark: SparkSession, root: Path): DataFrame = {
@@ -67,7 +64,7 @@ object ParquetBridge {
     val conf = session.sessionState.newHadoopConfWithOptions(options(root))
     val fs = root.getFileSystem(conf)
     val qualified = fs.makeQualified(root)
-    val leaves = listLeaves(fs, qualified)
+    val leaves = listLeaves(fs, qualified, session.sessionState.conf.ignoreMissingFiles)
     (new InMemoryFileIndex(session, Seq(qualified), options(root), None,
       new SeededCache(qualified, leaves)), conf)
   }
@@ -98,30 +95,26 @@ object ParquetBridge {
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
   }
 
-  /** Leaf files under `root`, in the order Spark's serial listing returns
-    * them: the root's own files, then each directory's subtree. */
-  private def listLeaves(fs: FileSystem, root: Path): Seq[FileStatus] = {
-    val top =
-      try fs.listStatus(root)
-      catch { case _: FileNotFoundException =>
-        throw QueryCompilationErrors.dataPathNotExistError(root.toString)
-      }
-    val (dirs, files) = visible(top).partition(_.isDirectory)
-    val nested =
-      if (dirs.isEmpty) Nil
-      else ThreadUtils.parmap(dirs.toSeq, "graft-repo-list", ListThreads)(d =>
-        below(fs, d.getPath)).flatten
-    files.toSeq ++ nested
-  }
-
-  /** A directory vanishing mid-listing (a concurrent partition swap) lists
-    * as empty, as it does in Spark's listing below the root. */
-  private def below(fs: FileSystem, dir: Path): Seq[FileStatus] = {
-    val statuses =
-      try fs.listStatus(dir)
-      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
-    val (dirs, files) = visible(statuses).partition(_.isDirectory)
-    files.toSeq ++ dirs.toSeq.flatMap(d => below(fs, d.getPath))
+  /** Leaf files under `root`, in the order Spark's listing returns them:
+    * each directory's own files, then its subdirectories' subtrees. A
+    * missing root is Spark's PATH_NOT_FOUND. A directory below the root
+    * that vanishes between its parent's listing and its own (a concurrent
+    * partition swap) fails the read, as in Spark's listing (SPARK-27676),
+    * unless `spark.sql.files.ignoreMissingFiles` is set. */
+  private def listLeaves(
+      fs: FileSystem, root: Path, ignoreMissing: Boolean): Seq[FileStatus] = {
+    def below(dir: Path): Seq[FileStatus] = {
+      val statuses =
+        try fs.listStatus(dir)
+        catch {
+          case _: FileNotFoundException if dir == root =>
+            throw QueryCompilationErrors.dataPathNotExistError(root.toString)
+          case _: FileNotFoundException if ignoreMissing => Array.empty[FileStatus]
+        }
+      val (dirs, files) = visible(statuses).partition(_.isDirectory)
+      files.toSeq ++ dirs.toSeq.flatMap(d => below(d.getPath))
+    }
+    below(root)
   }
 
   private def visible(s: Array[FileStatus]): Array[FileStatus] =

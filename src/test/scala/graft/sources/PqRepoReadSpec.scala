@@ -1,9 +1,11 @@
 package graft.sources
 
+import java.io.{File, FileNotFoundException}
+import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.graftbench.SparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
@@ -152,6 +154,31 @@ class PqRepoReadSpec extends SparkSpec {
       spark.read.parquet(repo.tablePath("s", "r").toString).inputFiles.toSet)
   }
 
+  test("a partition directory that vanishes between the root listing and its " +
+    "own fails the read; ignoreMissingFiles reads without it") {
+    val local = freshRepo()
+    local.writePartitioned(rows, "s", "v", Seq("a"), modified = Some("v"))
+    spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl", classOf[VanishingFs].getName)
+    val repo = PqRepo(spark, "vanish://" + local.dataDir)
+    val dir = new File(local.tablePath("s", "v").toUri.getPath)
+    val parked = new File(dir, "_old_a=2")
+    assert(repo.table("s", "v").count() == rows.count())
+
+    // a partition swap parks a=2 right after the reader listed the root
+    VanishingFs.armed.set(Some(new File(dir, "a=2")))
+    intercept[FileNotFoundException](repo.table("s", "v"))
+    assert(parked.exists() && VanishingFs.armed.get.isEmpty)
+
+    assert(parked.renameTo(new File(dir, "a=2")))
+    VanishingFs.armed.set(Some(new File(dir, "a=2")))
+    spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
+    try {
+      val df = repo.table("s", "v")
+      assert(VanishingFs.armed.get.isEmpty)
+      assert(df.select("a").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
+    } finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
+  }
+
   /** Spark jobs started by `body`, counted by a listener. */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -192,4 +219,25 @@ class PqRepoReadSpec extends SparkSpec {
     assert(index.centroids == cents)
     assert(index.assigned.count() == nlist * 8)
   }
+}
+
+/** The local file system under the `vanish` scheme. Once armed with a
+  * directory, the next listing of that directory's parent renames it to
+  * `_old_<name>` right after the parent is listed: the window in which a
+  * concurrent partition swap takes a partition away from a reader. */
+class VanishingFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("vanish:///")
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val out = super.listStatus(f)
+    VanishingFs.armed.get.filter(_.getParentFile == pathToFile(f)).foreach { d =>
+      VanishingFs.armed.set(None)
+      assert(d.renameTo(new File(d.getParentFile, "_old_" + d.getName)))
+    }
+    out
+  }
+}
+
+object VanishingFs {
+  val armed = new AtomicReference[Option[File]](None)
 }
