@@ -587,10 +587,12 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * the current-side scan partition-prunes.
     *
     * Each affected partition is written to a temp table then swapped in
-    * via sidecar renames (old dir → `_old_*` sidecar, new dir into place,
-    * sidecar deleted), so EVERY crash point leaves the partition's old or
-    * new directory present — never neither, never half-written (the `_`
-    * prefix hides the sidecar from readers). A reader racing the swap can
+    * via sidecar renames (old dir → [[PqRepo.parkedName]] sidecar, new
+    * dir into place, sidecar deleted), so EVERY crash point leaves the
+    * partition's old or new data on disk — never neither, never
+    * half-written. Readers skip the sidecar, so between the two renames
+    * (or after a crash there, until recovery) a read sees the table
+    * without that partition. A reader racing the swap can
     * still observe some partitions old and some new — use whole-table
     * [[merge]] when cross-partition snapshot atomicity matters more than
     * the rewrite cost.
@@ -764,11 +766,13 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
   /** Idempotent swap of merged partition dirs into the table — the shared
     * engine of [[mergePartitioned]] and [[recoverMergePartitioned]]. Per
-    * partition: old dir renamed to a reader-invisible `_old_` sidecar, new
-    * dir renamed into place, sidecar deleted. Re-running after a crash at
-    * ANY point completes the partition: a surviving sidecar without new
-    * data to place means the promotion already happened (hasNew partitions
-    * whose tmp dir is gone) and only the sidecar needs cleanup. */
+    * partition: old dir renamed to a reader-invisible sidecar
+    * ([[PqRepo.parkedName]]), new dir renamed into place, sidecar deleted.
+    * Re-running after a crash at ANY point completes the partition: a
+    * surviving sidecar without new data to place means the promotion
+    * already happened (hasNew partitions whose tmp dir is gone) and only
+    * the sidecar needs cleanup. Sidecars under the `_old_<col>=<v>` name
+    * that swaps used before are rolled forward the same way. */
   private def promoteMergedPartitions(
       f: org.apache.hadoop.fs.FileSystem,
       tmp: Path,
@@ -777,10 +781,13 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     entries.foreach { case (rel, hasNew) =>
       val src = new Path(tmp, rel)
       val dst = new Path(dest, rel)
-      val side = new Path(dst.getParent, s"_old_${dst.getName}")
+      val side = new Path(dst.getParent, PqRepo.parkedName(dst.getName))
+      // the visible `_old_<col>=<v>` name older swaps parked under
+      val sides = Seq(side, new Path(dst.getParent, s"_old_${dst.getName}"))
+      def dropSides(): Unit = sides.foreach(s => if (f.exists(s)) f.delete(s, true))
       if (hasNew) {
         if (f.exists(src)) {
-          if (f.exists(side)) f.delete(side, true) // stale from older crash
+          dropSides() // stale from older crash
           f.mkdirs(dst.getParent)
           if (f.exists(dst) && !f.rename(dst, side))
             throw new java.io.IOException(s"Could not sidecar $dst to $side")
@@ -788,11 +795,11 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
             throw new java.io.IOException(s"Could not promote $src to $dst")
         }
         // src gone ⇒ this partition was already promoted
-        if (f.exists(side)) f.delete(side, true)
+        dropSides()
       } else {
         // merged partition is empty: end state is "absent"
         if (f.exists(dst)) f.delete(dst, true)
-        if (f.exists(side)) f.delete(side, true)
+        dropSides()
       }
     }
 
@@ -1190,4 +1197,18 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     else Some(write(df, schema, table, modified = sourceComment,
       archiveExisting = archiveExisting))
   }
+}
+
+object PqRepo {
+
+  /** The name a partition directory is parked under while
+    * [[PqRepo.mergePartitioned]] swaps it: `_old_` and the hive-escaped
+    * directory name. It holds no `=`, so Spark's hidden-path rule
+    * (`HadoopFSUtils.shouldFilterOutPathName`), which the repo's reads
+    * use too, skips it. A `_old_<col>=<v>` name would not be skipped: it
+    * reads as a partition directory of column `_old_<col>`, and the read
+    * fails with conflicting partition column names. */
+  private[sources] def parkedName(dir: String): String =
+    "_old_" + org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .escapePathName(dir)
 }

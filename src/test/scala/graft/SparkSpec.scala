@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbench.SparkInternals
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +22,24 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started by `body`, counted by a listener. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    SparkInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      SparkInternals.drainListenerBus(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** The events table across testdata generations — TIMESTAMP(NANOS)
     * files (surface as long under nanosAsLong) or TIMESTAMP(MICROS) —

@@ -94,6 +94,27 @@ class MinHashIndexSpec extends SparkSpec {
       Seq(201L, 202L))
   }
 
+  test("on a parquet batch the gate runs at most 3 jobs near and 2 at 1.0") {
+    val repo = freshRepo()
+    val base = para(7, words = 60)
+    MinHashIndex.write(repo, docs(1L -> base, 2L -> para(8, words = 60)),
+      "doc_id", "text", "idx", "d", g)
+    repo.write(docs(201L -> (base + " tail"), 202L -> para(50, words = 60),
+      203L -> base), "in", "batch")
+    val batch = repo.table("in", "batch")
+    def gate(t: Double): Seq[Long] = {
+      var out: DataFrame = null
+      val jobs = jobsOf {
+        out = MinHashIndex.dropNearKnown(repo, batch, "doc_id", "text",
+          "idx", "d", threshold = t)
+      }
+      assert(jobs <= (if (t == 1.0) 2 else 3), s"$jobs jobs at threshold $t")
+      out.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    }
+    assert(gate(0.5) == Seq(202L))
+    assert(gate(1.0) == Seq(201L, 202L))
+  }
+
   private def indexRows(repo: PqRepo): (Set[String], Set[String]) = {
     val d = repo.table("idx", "d_mhdocs")
       .select(col("id"), col("dbucket"), hex(col("dig")).as("dg"),

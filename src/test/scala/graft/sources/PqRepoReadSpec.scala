@@ -3,11 +3,9 @@ package graft.sources
 import java.io.{File, FileNotFoundException}
 import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
-import org.apache.spark.graftbench.SparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -161,7 +159,7 @@ class PqRepoReadSpec extends SparkSpec {
     spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl", classOf[VanishingFs].getName)
     val repo = PqRepo(spark, "vanish://" + local.dataDir)
     val dir = new File(local.tablePath("s", "v").toUri.getPath)
-    val parked = new File(dir, "_old_a=2")
+    val parked = new File(dir, PqRepo.parkedName("a=2"))
     assert(repo.table("s", "v").count() == rows.count())
 
     // a partition swap parks a=2 right after the reader listed the root
@@ -179,20 +177,32 @@ class PqRepoReadSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
   }
 
-  /** Spark jobs started by `body`, counted by a listener. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    SparkInternals.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      SparkInternals.drainListenerBus(sc)
-      jobs.get
-    } finally sc.removeSparkListener(listener)
+  test("a partition parked mid-swap is hidden from reads; recovery clears it " +
+    "and a partition parked under the older visible name") {
+    val repo = freshRepo()
+    repo.writePartitioned(rows, "s", "w", Seq("a"))
+    val dir = new File(repo.tablePath("s", "w").toUri.getPath)
+    // a merge has committed new a=1 and a=2 to its tmp layout and manifest
+    val merged = rows.filter(col("a") =!= 0).withColumn("s", concat(col("s"), lit("'")))
+    val tmp = new File(dir.getParentFile, "_tmp_w.parquet")
+    merged.write.partitionBy("a").parquet(tmp.getPath)
+    Files.writeString(new File(dir, "_merge_manifest.json").toPath,
+      s"""{"table":"w","tmp":"$tmp","partitions":[""" +
+        """{"dir":"a=1","hasNew":true},{"dir":"a=2","hasNew":true}]}""")
+    // ... and crashed between the two renames of a=2
+    val parked = new File(dir, PqRepo.parkedName("a=2"))
+    assert(new File(dir, "a=2").renameTo(parked))
+    assert(repo.table("s", "w").select("a").distinct().collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
+    // a swap that crashed before the hidden name left `_old_a=1`
+    val legacy = new File(dir, "_old_a=1")
+    assert(new File(dir, "a=1").renameTo(legacy))
+
+    assert(repo.recoverMergePartitioned("s", "w"))
+    assert(!parked.exists() && !legacy.exists() && !tmp.exists())
+    val cols = rows.columns.map(col)
+    assert(rowsOf(repo.table("s", "w").select(cols: _*)) ==
+      rowsOf(rows.filter(col("a") === 0).unionByName(merged).select(cols: _*)))
   }
 
   test("resolving a 64-partition table and reading its lastModified run no job; " +
@@ -222,9 +232,9 @@ class PqRepoReadSpec extends SparkSpec {
 }
 
 /** The local file system under the `vanish` scheme. Once armed with a
-  * directory, the next listing of that directory's parent renames it to
-  * `_old_<name>` right after the parent is listed: the window in which a
-  * concurrent partition swap takes a partition away from a reader. */
+  * directory, the next listing of that directory's parent parks it as a
+  * partition swap does, right after the parent is listed: the window in
+  * which a concurrent swap takes a partition away from a reader. */
 class VanishingFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("vanish:///")
 
@@ -232,7 +242,7 @@ class VanishingFs extends RawLocalFileSystem {
     val out = super.listStatus(f)
     VanishingFs.armed.get.filter(_.getParentFile == pathToFile(f)).foreach { d =>
       VanishingFs.armed.set(None)
-      assert(d.renameTo(new File(d.getParentFile, "_old_" + d.getName)))
+      assert(d.renameTo(new File(d.getParentFile, PqRepo.parkedName(d.getName))))
     }
     out
   }
