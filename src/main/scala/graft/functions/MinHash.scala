@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+
+import graft.functions.expressions.{MinHashSignature, SlotAgreement}
 
 /** MinHash signatures + banded LSH over shingle sets.
   *
@@ -61,19 +64,44 @@ object MinHash {
     }
   }
 
+  /** n-slot MinHash signature of `text`'s k-byte shingles, from the fused
+    * native [[MinHashSignature]] kernel (byte-window shingling, zero
+    * per-shingle allocation; `shift > 0` samples shingles by content).
+    * Null when `text` is null or shorter than k bytes. The one signature
+    * every near-dup operator, the persisted index and the streaming
+    * dedup compute, so their sketches agree bit for bit. */
+  def signature(text: Column, k: Int, n: Int, shift: Int = 0): Column =
+    ColumnBridge.column(
+      MinHashSignature(ColumnBridge.expression(text), k, n, shift))
+
+  /** The 32-byte SHA-256 of `text`: the content-equality stand-in every
+    * exact verification compares (equal digests ⇔ equal text, up to a
+    * SHA-256 collision). */
+  def contentDigest(text: Column): Column = unhex(sha2(text, 256))
+
+  /** A 128-bit grouping key for a wide value (signature, paragraph): two
+    * independently seeded 64-bit hashes, so an exchange carries 16 bytes
+    * and an aggregation compares two longs instead of the value. A
+    * collision between distinct values is ~n²/2^129 — below the
+    * sketches' own collision floor. */
+  def surrogate(c: Column): Column =
+    struct(xxhash64(c).as("h1"), xxhash64(lit(0x9E3779B97F4A7C15L), c).as("h2"))
+
+  /** Count of equal slots between two signatures, from the fused
+    * [[SlotAgreement]] kernel. */
+  def slotAgreement(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      SlotAgreement(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
   /** Estimated Jaccard similarity from two signatures: fraction of
     * agreeing slots. The agreement count runs as the fused
-    * [[graft.functions.expressions.SlotAgreement]] kernel — an LSH bucket
-    * of m signatures scores m(m-1)/2 pairs, and the composed
-    * `aggregate(zip_with(...))` fold was the bucket stage's interpreted
-    * hot path (same finding as the IVF dot product). Values are identical
-    * ([[estJaccardComposed]] is the spec baseline). */
-  def estJaccard(sigA: Column, sigB: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(graft.functions.expressions.SlotAgreement(
-      ColumnBridge.expression(sigA), ColumnBridge.expression(sigB)))
-      .cast("double") / size(sigA).cast("double")
-  }
+    * [[slotAgreement]] kernel — an LSH bucket of m signatures scores
+    * m(m-1)/2 pairs, and the composed `aggregate(zip_with(...))` fold was
+    * the bucket stage's interpreted hot path (same finding as the IVF dot
+    * product). Values are identical ([[estJaccardComposed]] is the spec
+    * baseline). */
+  def estJaccard(sigA: Column, sigB: Column): Column =
+    slotAgreement(sigA, sigB).cast("double") / size(sigA).cast("double")
 
   /** The composed-Column form of [[estJaccard]] — the bit-exactness
     * baseline for the fused kernel (VectorExpressionsSpec). */

@@ -334,18 +334,26 @@ object Dedup {
     val (cand, digests) = minhashCandidates(docs, idCol, textCol, shingleK,
       numHashes, bands, threshold, maxBucket, maxEqualGroup, sampleShift,
       withDigest = true)
-    val digs = digests.get
-    // SHUFFLE_HASH on the digest sides (r20, guide §3.1): the digest
-    // frame is corpus-row-count × ~40 B — per-partition hash-buildable at
-    // any scale — while the unhinted planner sort-merge-joined at 100×,
-    // sorting the candidate stream twice (once per digest side)
-    val a = digs.select(col("id").as("id_a"), col("__dig").as("__dig_a"))
-      .hint("shuffle_hash")
-    val b = digs.select(col("id").as("id_b"), col("__dig").as("__dig_b"))
-      .hint("shuffle_hash")
-    cand.join(a, "id_a").join(b, "id_b")
+    keepEqualDigests(cand, digests.get, joinSide(small = false))
+  }
+
+  /** The pairs of `pairs` whose two ids carry equal `__dig` in `digests`
+    * (`id`, `__dig`) — the verification join of [[minhashPairsVerified]],
+    * [[simhashPairsVerified]] and [[verifyPairsExact]]. `side` wraps each
+    * digest side: SHUFFLE_HASH on the digest paths (r20, guide §3.1) —
+    * the digest frame is corpus-row-count × ~40 B, per-partition
+    * hash-buildable at any scale, while the unhinted planner
+    * sort-merge-joined at 100×, sorting the candidate stream twice (once
+    * per digest side). */
+  private def keepEqualDigests(
+      pairs: DataFrame,
+      digests: DataFrame,
+      side: DataFrame => DataFrame): DataFrame = {
+    val a = side(digests.select(col("id").as("id_a"), col("__dig").as("__dig_a")))
+    val b = side(digests.select(col("id").as("id_b"), col("__dig").as("__dig_b")))
+    pairs.join(a, "id_a").join(b, "id_b")
       .filter(col("__dig_a") === col("__dig_b"))
-      .select(cand.columns.map(col).toIndexedSeq: _*)
+      .select(pairs.columns.map(col).toIndexedSeq: _*)
   }
 
   private def minhashCandidates(
@@ -386,10 +394,8 @@ object Dedup {
     // again for the main plan — measured +35-55% on the 20x corpus. The
     // checkpointed blocks are fixed-width (id + numHashes longs), never
     // text.
-    val sigExpr = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.expressions.MinHashSignature(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("t")),
-        shingleK, numHashes, sampleShift)).as("sig")
+    val sigExpr =
+      MinHash.signature(col("t"), shingleK, numHashes, sampleShift).as("sig")
     val base = fanOut(docs
       .select(col(idCol).as("id"), col(textCol).as("t"))
       .filter(col("t").isNotNull && octet_length(col("t")) >= shingleK),
@@ -399,7 +405,7 @@ object Dedup {
     // materialized digests, no second pass over the text
     val sigsBase =
       if (withDigest)
-        base.select(col("id"), sigExpr, unhex(sha2(col("t"), 256)).as("__dig"))
+        base.select(col("id"), sigExpr, MinHash.contentDigest(col("t")).as("__dig"))
       else base.select(col("id"), sigExpr)
     // stage mark (StageTimer — no-op unless the bench's diagnostic pass
     // enabled it): the kernel scan + checkpoint is action 1 of 3
@@ -428,11 +434,9 @@ object Dedup {
     // threshold 1.0). A cross-signature surrogate collision is
     // ~n²/2^129 — far below the sketch's own collision floor, and the
     // dedup callers verify every candidate byte-exactly downstream.
-    def surrogate(sig: Column): Column = struct(
-      xxhash64(sig).as("h1"), xxhash64(lit(0x9E3779B97F4A7C15L), sig).as("h2"))
-    val keyed = sigs.select(surrogate(col("sig")).as("k"), col("id"))
+    val keyed = sigs.select(MinHash.surrogate(col("sig")).as("k"), col("id"))
     val (bySigK, equalIdPairs, _) = collapseByKey(keyed, maxEqualGroup)
-    val sigByK = sigs.select(surrogate(col("sig")).as("k"), col("sig"))
+    val sigByK = sigs.select(MinHash.surrogate(col("sig")).as("k"), col("sig"))
       .dropDuplicates("k")
     val bySig = bySigK.join(sigByK, "k").select(col("sig"), col("ids"))
     val equalPairs = equalIdPairs
@@ -446,22 +450,8 @@ object Dedup {
       .select(col("sig"), col("ids"),
         posexplode(MinHash.bandHashes(col("sig"), bands, r)).as(Seq("band", "bh")))
 
-    val crossPairs = banded
-      .groupBy("band", "bh")
-      .agg(collect_list(struct(col("sig"), col("ids"))).as("xs"))
-      .filter(size(col("xs")).between(2, maxBucket))
-      .select(explode(flatten(transform(col("xs"), (x, i) =>
-        filter(
-          transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
-            struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
-              MinHash.estJaccard(x.getField("sig"), y.getField("sig"))
-                .as("est"))),
-          s => s.getField("est") >= threshold)))).as("sp"))
-      .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"), col("sp.est"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("est"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"),
-        col("est").as("est_jaccard"))
+    val crossPairs = bucketPairs(banded, Seq("band", "bh"), "sig",
+      MinHash.estJaccard, _ >= threshold, "est_jaccard", maxBucket)
 
     // Distinct signatures disagree in >= 1 slot, so a cross-signature
     // candidate's est is at most (numHashes-1)/numHashes: any threshold
@@ -573,6 +563,42 @@ object Dedup {
       transform(slice(ids, i + lit(2), size(ids)),
         y => struct(x.as("id_a"), y.as("id_b")))))
 
+  /** Scored pairs within LSH buckets — the in-bucket kernel of every
+    * sketch dedupper. `bucketed` holds one `(buckets…, key, ids)` row per
+    * distinct sketch; rows sharing the `buckets` columns are collected
+    * into one array (buckets past `maxBucket` entries are dropped — the
+    * crowding guard), every unordered entry pair is scored with
+    * `score(key_x, key_y)` inside the array expression (sketch pairs
+    * never ride exploded rows), pairs failing `keep` are discarded, and
+    * the survivors expand to member-id pairs
+    * `(id_a = least, id_b = greatest, scoreName)`. A pair colliding in
+    * several buckets is emitted once per bucket; callers that band
+    * dedupe. Deliberately NOT a self-join: joining the bucketed frame
+    * with itself would re-execute the sketch pipeline once per side. */
+  private[operators] def bucketPairs(
+      bucketed: DataFrame,
+      buckets: Seq[String],
+      key: String,
+      score: (Column, Column) => Column,
+      keep: Column => Column,
+      scoreName: String,
+      maxBucket: Int): DataFrame =
+    bucketed
+      .groupBy(buckets.map(col): _*)
+      .agg(collect_list(struct(col(key), col("ids"))).as("xs"))
+      .filter(size(col("xs")).between(2, maxBucket))
+      .select(explode(flatten(transform(col("xs"), (x, i) =>
+        filter(
+          transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
+            struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
+              score(x.getField(key), y.getField(key)).as(scoreName))),
+          s => keep(s.getField(scoreName)))))).as("sp"))
+      .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"),
+        col("sp." + scoreName))
+      .select(col("ia"), explode(col("ids_b")).as("ib"), col(scoreName))
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col(scoreName))
+
   /** Star pairs of a sorted id array: (min id, other) for every other
     * member — m-1 pairs instead of m(m-1)/2, same connectivity. */
   private[operators] def starPairs(ids: Column): Column =
@@ -623,17 +649,7 @@ object Dedup {
   ): DataFrame = {
     val (cand, digests) = simhashCandidates(docs, idCol, textCol, maxHamming,
       maxBucket, maxEqualGroup, withDigest = true)
-    val digs = digests.get
-    // SHUFFLE_HASH on the digest sides — same rationale as
-    // [[minhashPairsVerified]] (the unhinted plan sorted the candidate
-    // stream twice at 100×)
-    val a = digs.select(col("id").as("id_a"), col("__dig").as("__dig_a"))
-      .hint("shuffle_hash")
-    val b = digs.select(col("id").as("id_b"), col("__dig").as("__dig_b"))
-      .hint("shuffle_hash")
-    cand.join(a, "id_a").join(b, "id_b")
-      .filter(col("__dig_a") === col("__dig_b"))
-      .select(cand.columns.map(col).toIndexedSeq: _*)
+    keepEqualDigests(cand, digests.get, joinSide(small = false))
   }
 
   private def simhashCandidates(
@@ -656,7 +672,7 @@ object Dedup {
       col("id"))
     val sketchedBase =
       if (withDigest)
-        base.select(col("id"), shExpr, unhex(sha2(col("t"), 256)).as("__dig"))
+        base.select(col("id"), shExpr, MinHash.contentDigest(col("t")).as("__dig"))
       else base.select(col("id"), shExpr)
     val sketched = materializeOnce(sketchedBase)
     val digests =
@@ -684,22 +700,9 @@ object Dedup {
 
       // distinct-sketch pairs sharing a band, hamming-filtered inside the
       // array expression, then expanded to member-id pairs
-      val crossPairs = banded
-        .groupBy("band", "key")
-        .agg(collect_list(struct(col("sh"), col("ids"))).as("xs"))
-        .filter(size(col("xs")).between(2, maxBucket))
-        .select(explode(flatten(transform(col("xs"), (x, i) =>
-          filter(
-            transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
-              struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
-                SimHash.hamming(x.getField("sh"), y.getField("sh"))
-                  .cast("int").as("h"))),
-            s => s.getField("h") <= maxHamming)))).as("sp"))
-        .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"), col("sp.h"))
-        .select(col("ia"), explode(col("ids_b")).as("ib"), col("h"))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"),
-          col("h").as("hamming"))
+      val crossPairs = bucketPairs(banded, Seq("band", "key"), "sh",
+        (x, y) => SimHash.hamming(x, y).cast("int"), _ <= maxHamming,
+        "hamming", maxBucket)
 
       (zeroPairs.unionByName(crossPairs)
         .groupBy("id_a", "id_b")
@@ -773,20 +776,13 @@ object Dedup {
     // docs): both join sides read the materialized blocks, so the text
     // scan and the SHA pass run once, not per side. byteExact keeps the
     // lazy double-scan — materializing full text would defeat the point.
+    // The byte-exact path compares the text itself in the digest's place
+    // and keeps the planner's join choice.
     val keyed =
-      if (byteExact) docs.select(col(idCol).as("__vid"), col(textCol).as("__k"))
-      else materializeOnce(docs.select(col(idCol).as("__vid"),
-        sha2(col(textCol).cast("string"), 256).as("__k")))
-    // SHUFFLE_HASH on the digest path: same digest-join shape as
-    // [[minhashPairsVerified]] — the keyed side is corpus-row-count-
-    // bounded 32-byte digests, the pair stream stays unsorted; the
-    // byte-exact text path keeps the planner's choice
-    val side = joinSide(byteExact)
-    val a = side(keyed.select(col("__vid").as("id_a"), col("__k").as("__k_a")))
-    val b = side(keyed.select(col("__vid").as("id_b"), col("__k").as("__k_b")))
-    pairs.join(a, "id_a").join(b, "id_b")
-      .filter(col("__k_a") === col("__k_b"))
-      .select(pairs.columns.map(col).toIndexedSeq: _*)
+      if (byteExact) docs.select(col(idCol).as("id"), col(textCol).as("__dig"))
+      else materializeOnce(docs.select(col(idCol).as("id"),
+        MinHash.contentDigest(col(textCol).cast("string")).as("__dig")))
+    keepEqualDigests(pairs, keyed, joinSide(byteExact))
   }
 
   /** Connected components over an undirected pair list by label
@@ -827,6 +823,31 @@ object Dedup {
       if (failOnNonConvergence) throw new IllegalStateException(msg)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
+
+  /** `docs` without the rows whose `idCol` is in `losers` (one `__loser`
+    * column) — the removal step of every dedup operator. */
+  private[operators] def dropLosers(
+      docs: DataFrame, idCol: String, losers: DataFrame): DataFrame =
+    docs.join(losers, docs(idCol) === col("__loser"), "left_anti")
+
+  /** The survivor tail of the component dedups: connected components of
+    * `pairs`, the caller's non-convergence policy, then [[dropLosers]].
+    * `losers` picks each component's losers from the `(id, label)`
+    * labels, as one `__loser` column; by default every member but the
+    * component minimum (its label). */
+  private[operators] def dropComponentLosers(
+      docs: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      maxIters: Int,
+      reliableCheckpoint: Boolean,
+      failOnNonConvergence: Boolean)(
+      losers: DataFrame => DataFrame = _.filter(col("id") =!= col("label"))
+        .select(col("id").as("__loser"))): (DataFrame, ComponentsStats) = {
+    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
+    enforceConvergence(stats, maxIters, failOnNonConvergence)
+    (dropLosers(docs, idCol, losers(labels)), stats)
+  }
 
   /** Convergence telemetry for [[components]]: how many label-propagation
     * rounds ran, and whether the last one changed nothing. A 100 TB run
@@ -1212,10 +1233,9 @@ object Dedup {
       // ScalePolicy.DigestBytes, for the reason given there). Below the
       // gate the byte-exact (h, content) grouping stays — broadcast-
       // regime plans, text verified byte for byte. Above it content
-      // equality is decided by the 32-byte SHA-256 digest — the SAME
-      // stand-in [[verifyPairsExact]] and [[minhashPairsVerified]]
-      // use — so the corpus
-      // text never rides a shuffle at all: the grouping exchanges
+      // equality is decided by [[MinHash.contentDigest]], the stand-in
+      // [[verifyPairsExact]] and [[minhashPairsVerified]] use, so the
+      // corpus text never rides a shuffle at all: the grouping exchanges
       // (id, 32 B) rows where exactGroups' direct path shuffled full
       // text for every colliding row (at dedup_drop's 20× tier EVERY
       // row collides — the whole corpus text was exchanged, the
@@ -1235,7 +1255,7 @@ object Dedup {
           val digs = fanOut(in.filter(eligible)
             .select(col(idCol).as("__id"), col(textCol).as("__t")),
             col("__id"))
-            .select(col("__id"), unhex(sha2(col("__t"), 256)).as("__dig"))
+            .select(col("__id"), MinHash.contentDigest(col("__t")).as("__dig"))
             .transform(materializeOnce)
           val mins = digs.groupBy("__dig")
             .agg(min(col("__id")).as("__minid"), count(lit(1)).as("__n"))
@@ -1247,10 +1267,7 @@ object Dedup {
             .filter(col("__id") =!= col("__minid"))
             .select(col("__id").as("__loser"))
         } else {
-          import org.apache.spark.sql.graft.ColumnBridge
-          val sig = ColumnBridge.column(
-            graft.functions.expressions.MinHashSignature(
-              ColumnBridge.expression(col("__t")), shingleK, numHashes))
+          val sig = MinHash.signature(col("__t"), shingleK, numHashes)
           // no id list is ever built per signature: min/count partial-
           // aggregate (a degenerate 10M-copy group previously grew one
           // 10M-element collect_list buffer on a single task — the exact
@@ -1269,7 +1286,7 @@ object Dedup {
             .filter(col("__id") =!= col("__minid"))
             .select(col("__id").as("__loser"))
         }
-      return (in.join(losers, in(idCol) === col("__loser"), "left_anti"),
+      return (dropLosers(in, idCol, losers),
         ComponentsStats(iterations = 0, converged = true))
     }
     val pairs =
@@ -1280,12 +1297,8 @@ object Dedup {
           bands, threshold)
       else minhashPairs(in, idCol, textCol, shingleK, numHashes,
         bands, threshold)
-    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
-    enforceConvergence(stats, maxIters, failOnNonConvergence)
-    val losers = labels
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("__loser"))
-    (in.join(losers, in(idCol) === col("__loser"), "left_anti"), stats)
+    dropComponentLosers(in, idCol, pairs, maxIters, reliableCheckpoint,
+      failOnNonConvergence)()
   }
 
   /** Near-dup removal with QUALITY-based representative selection: keep
@@ -1346,19 +1359,13 @@ object Dedup {
       // below applies the same filter.
       val keyExpr =
         if (verifyExact)
-          // the 32-byte content digest [[minhashPairsVerified]] verifies
-          // with — digest classes are exactly its verified components
-          unhex(sha2(col("__t"), 256))
-        else {
-          // the collapse's 128-bit signature surrogate — the SAME
-          // equality the pairs path's grouping keys on
-          import org.apache.spark.sql.graft.ColumnBridge
-          val sig = ColumnBridge.column(
-            graft.functions.expressions.MinHashSignature(
-              ColumnBridge.expression(col("__t")), shingleK, numHashes))
-          struct(xxhash64(sig).as("h1"),
-            xxhash64(lit(0x9E3779B97F4A7C15L), sig).as("h2"))
-        }
+          // the content digest [[minhashPairsVerified]] verifies with —
+          // digest classes are exactly its verified components
+          MinHash.contentDigest(col("__t"))
+        else
+          // the collapse's signature surrogate, the key the pairs path
+          // groups on
+          MinHash.surrogate(MinHash.signature(col("__t"), shingleK, numHashes))
       // one text pass: the keyed projection materializes once
       // (fixed-width id + key + score blocks) because the best/winner/
       // loser consumers below would otherwise each re-run the scan.
@@ -1387,7 +1394,7 @@ object Dedup {
       val losers = members.join(winners.hint("shuffle_hash"), Seq("__k"))
         .filter(col("__id") =!= col("__winner"))
         .select(col("__id").as("__loser"))
-      return (docs.join(losers, docs(idCol) === col("__loser"), "left_anti"),
+      return (dropLosers(docs, idCol, losers),
         ComponentsStats(iterations = 0, converged = true))
     }
     val pairs =
@@ -1396,23 +1403,23 @@ object Dedup {
           bands, threshold)
       else minhashPairs(docs, idCol, textCol, shingleK, numHashes,
         bands, threshold)
-    val (labels, stats) = componentsWithStats(pairs, maxIters, reliableCheckpoint)
-    enforceConvergence(stats, maxIters, failOnNonConvergence)
-    // members of dup components only (every labeled id sits in a ≥2
-    // component); null-score members rank below all scored members
-    val members = labels.join(
-      docs.select(col(idCol).as("id"),
-        coalesce(col(scoreCol).cast("double"),
-          lit(Double.NegativeInfinity)).as("__s")),
-      Seq("id"))
-    val best = members.groupBy("label").agg(max(col("__s")).as("__best"))
-    val winners = members.join(best, Seq("label"))
-      .filter(col("__s") === col("__best"))
-      .groupBy("label").agg(min(col("id")).as("__winner"))
-    val losers = members.join(winners, Seq("label"))
-      .filter(col("id") =!= col("__winner"))
-      .select(col("id").as("__loser"))
-    (docs.join(losers, docs(idCol) === col("__loser"), "left_anti"), stats)
+    dropComponentLosers(docs, idCol, pairs, maxIters, reliableCheckpoint,
+        failOnNonConvergence) { labels =>
+      // members of dup components only (every labeled id sits in a ≥2
+      // component); null-score members rank below all scored members
+      val members = labels.join(
+        docs.select(col(idCol).as("id"),
+          coalesce(col(scoreCol).cast("double"),
+            lit(Double.NegativeInfinity)).as("__s")),
+        Seq("id"))
+      val best = members.groupBy("label").agg(max(col("__s")).as("__best"))
+      val winners = members.join(best, Seq("label"))
+        .filter(col("__s") === col("__best"))
+        .groupBy("label").agg(min(col("id")).as("__winner"))
+      members.join(winners, Seq("label"))
+        .filter(col("id") =!= col("__winner"))
+        .select(col("id").as("__loser"))
+    }
   }
 
   /** Exact n-gram Jaccard similarity for candidate pairs: |A∩B| / |A∪B|
@@ -1555,8 +1562,7 @@ object Dedup {
         posexplode(split(col(textCol), quoted)).as(Seq("__idx", "__p")))
       .filter(length(col("__p")) > 0)
     val keyed = paras.select(col("__id"), col("__idx"),
-      struct(xxhash64(col("__p")),
-        xxhash64(lit(0x9E3779B97F4A7C15L), col("__p"))).as("__k"))
+      MinHash.surrogate(col("__p")).as("__k"))
     val winners = keepFirstByKey(keyed, docs.schema(idCol).dataType,
       "dropDuplicateParagraphs").drop("__k")
     val keepLists = winners

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.functions.MinHash
-import graft.functions.expressions.{MinHashSignature, VectorKernels}
+import graft.functions.expressions.VectorKernels
 import graft.sources.PqRepo
 
 /** Persisted MinHash band index — the near-dup twin of the embedding
@@ -96,12 +96,6 @@ object MinHashIndex {
     Geometry(p(ShingleKProp), p(NumHashesProp), p(BandsProp), p(BucketsProp))
   }
 
-  private def signature(text: Column, g: Geometry): Column =
-    ColumnBridge.column(MinHashSignature(
-      ColumnBridge.expression(text), g.shingleK, g.numHashes, 0))
-
-  private def digest(text: Column): Column = unhex(sha2(text, 256))
-
   /** The band-table partition of a band hash. A probe recomputes it from
     * its own hashes, so its scan prunes to the batch's buckets. */
   private def bandBucket(band: Column, bh: Column, g: Geometry): Column =
@@ -116,8 +110,9 @@ object MinHashIndex {
       textCol: String, g: Geometry): DataFrame =
     Dedup.fanOut(
       docs.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
-      .select(col("id"), signature(col("__t"), g).as("sig"),
-        digest(col("__t")).as("dig"))
+      .select(col("id"),
+        MinHash.signature(col("__t"), g.shingleK, g.numHashes).as("sig"),
+        MinHash.contentDigest(col("__t")).as("dig"))
 
   private def withDocBucket(perDoc: DataFrame, g: Geometry): DataFrame =
     perDoc.withColumn("dbucket",
@@ -279,10 +274,11 @@ object MinHashIndex {
     val needNear = threshold * g.numHashes <= g.numHashes - 1
     val keyed = batch.select(col(idCol).as("id"), col(textCol).as("__t"))
       .filter(col("id").isNotNull)
+    val digCol = MinHash.contentDigest(col("__t")).as("dig")
     val probed =
-      if (!needNear) keyed.select(col("id"), digest(col("__t")).as("dig"))
-      else keyed.select(col("id"), digest(col("__t")).as("dig"),
-          signature(col("__t"), g).as("sig"))
+      if (!needNear) keyed.select(col("id"), digCol)
+      else keyed.select(col("id"), digCol,
+          MinHash.signature(col("__t"), g.shingleK, g.numHashes).as("sig"))
         .withColumn("bands", transform(
           MinHash.bandHashes(col("sig"), g.bands, g.rows), (bh, band) =>
             struct(band.as("band"), bh.as("bh"),

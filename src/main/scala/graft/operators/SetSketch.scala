@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.functions.{MinHash, TextFunctions}
 
 /** Group-level MinHash signatures: set similarity BETWEEN GROUPS.
   *
@@ -154,16 +154,14 @@ object SetSketch {
     // million mirrors of one source would crowd every one of its buckets)
     val equalPairs = bySig
       .filter(size(col("keys")) >= 2)
-      .select(explode(flatten(transform(col("keys"), (x, i) =>
-        transform(slice(col("keys"), i + lit(2), size(col("keys"))),
-          y => struct(x.as("key_a"), y.as("key_b")))))).as("p"))
-      .select(col("p.key_a").as("key_a"), col("p.key_b").as("key_b"),
+      .select(explode(Dedup.idPairs(col("keys"))).as("p"))
+      .select(col("p.id_a").as("key_a"), col("p.id_b").as("key_b"),
         lit(numHashes.toLong).as("n_match"))
 
     // distinct signatures sharing a band bucket: pair in-array, confirm the
     // band with exact slot equality (kills band-hash collisions), score
     val banded = bySig.select(col("signature"), col("keys"),
-      posexplode(graft.functions.MinHash.bandHashes(col("signature"), bands, r))
+      posexplode(MinHash.bandHashes(col("signature"), bands, r))
         .as(Seq("band", "bh")))
     val crossPairs = banded
       .groupBy("band", "bh")
@@ -179,11 +177,7 @@ object SetSketch {
       .select(col("sp.keys_a").as("keys_a"), col("sp.keys_b").as("keys_b"),
         // fused slot-agreement kernel — identical to the composed
         // aggregate(zip_with(...)) fold (VectorExpressionsSpec)
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.expressions.SlotAgreement(
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("sp.sig_a")),
-            org.apache.spark.sql.graft.ColumnBridge.expression(col("sp.sig_b"))))
-          .as("n_match"))
+        MinHash.slotAgreement(col("sp.sig_a"), col("sp.sig_b")).as("n_match"))
       .select(explode(col("keys_a")).as("ka"), col("keys_b"), col("n_match"))
       .select(col("ka"), explode(col("keys_b")).as("kb"), col("n_match"))
       .select(least(col("ka"), col("kb")).as("key_a"),

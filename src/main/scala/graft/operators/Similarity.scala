@@ -55,7 +55,7 @@ object Similarity {
     val scored = q.crossJoin(c)
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cos"))
+        roundedCosine(col("qv"), col("cv")).as("cos"))
 
     rankTopK(scored, "cos", k)
   }
@@ -167,7 +167,7 @@ object Similarity {
       .join(broadcast(cands), "cand_id")
       .join(q, "query_id")
       .select(col("query_id"), col("cand_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cos"))
+        roundedCosine(col("qv"), col("cv")).as("cos"))
 
     rankTopK(exact, "cos", k)
   }
@@ -385,7 +385,7 @@ object Similarity {
       .join(index.assigned, Seq("cluster"))
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("cand_id"),
-        round(VectorFunctions.cosine(col("qv"), col("v")), 6).as("cos"))
+        roundedCosine(col("qv"), col("v")).as("cos"))
 
     rankTopK(scored, "cos", k)
   }
@@ -628,8 +628,9 @@ object Similarity {
     * assigned corpus stays a lazy partitioned scan, cluster-prunable by
     * [[ivfSearch]]'s probe join. Both tables resolve on the driver
     * ([[graft.sources.PqRepo.table]]): the cluster partition directories
-    * are listed on a driver thread pool and the schema is read from one
-    * footer, so neither table costs a listing or schema-inference job. */
+    * are listed one after another by the driver and the schema is read
+    * from one footer, so neither table costs a listing or
+    * schema-inference job. */
   def readIvfIndex(
       repo: graft.sources.PqRepo, schema: String, name: String): IvfIndex = {
     val cents = repo.table(schema, s"${name}_ivf_centroids")
@@ -728,33 +729,10 @@ object Similarity {
     // callers keep their old small-corpus recall exactly
     val pairs = annBuckets(corpus, idCol, vecCol, numPlanes, dim, seed, minCos,
       autoFloor = 8)
-    val (labels, stats) = Dedup.componentsWithStats(pairs, maxIters)
-    Dedup.enforceConvergence(stats, maxIters, failOnNonConvergence)
-    val losers = labels
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("__loser"))
-    (corpus.join(losers, corpus(idCol) === col("__loser"), "left_anti"), stats)
+    Dedup.dropComponentLosers(corpus, idCol, pairs, maxIters,
+      reliableCheckpoint = false, failOnNonConvergence)()
   }
 
-  /** LSH-bucketed approximate neighbors: candidates share a hyperplane
-    * sign-pattern bucket; cosine is computed only within buckets. Recall
-    * is tuned by `numPlanes` (fewer planes → bigger buckets → higher
-    * recall, more work).
-    *
-    * Vectors collapse to DISTINCT values before bucketing (ids ride as
-    * lists) — the duplicate-crowding guard the sketch deduppers carry:
-    * equal-vector pairs are emitted unconditionally from their group, so
-    * no `maxBucket` cap can drop an exact-duplicate pair, and `maxBucket`
-    * guards only genuine distinct-vector bucket crowding. In-bucket
-    * scoring stays an array expression — a self-join would re-execute the
-    * projection pipeline per side. */
-  /** Multi-table LSH ANN: `numTables` independent hyperplane tables, each
-    * vector bucketed once per table in a single pass (posexplode over the
-    * per-table bucket ids — the corpus is scanned once, not L times).
-    * A candidate pair surfaces if it collides in ANY table, so recall is
-    * `1-(1-p^numPlanes)^numTables` instead of `p^numPlanes` — the standard
-    * recall lever when one table's single bucket per vector is too lossy.
-    * Pairs deduplicate across tables via a final (id_a, id_b) max. */
   /** Hyperplane count for an LSH pass over `n` vectors when the caller
     * passes `numPlanes = 0` (auto): `ceil(log2(n / 64))` clamped to
     * [floor, 24], i.e. expected bucket occupancy held near 64 regardless
@@ -797,7 +775,7 @@ object Similarity {
       maxEqualGroup, saltBuckets)
     val equalPairs = pairsK
       .select(col("id_a"), col("id_b"),
-        round(VectorFunctions.cosine(col("k"), col("k")), 6).as("cos"))
+        roundedCosine(col("k"), col("k")).as("cos"))
       .filter(col("cos") >= minCos)
     (entries.select(col("k").as("v"), col("ids")), equalPairs, total)
   }
@@ -891,91 +869,47 @@ object Similarity {
     val bucketed = qd.select(col("v"), col("ids"),
       KMeans.assignLattice(col("q"), cents).as("cluster"),
       bucketCol.as("bucket"))
-    // in-bucket scoring: the annBuckets expression shape — pairs stay
-    // (ids_a, ids_b, cos) structs inside the array expression, vectors
-    // never ride an exploded row
-    val crossPairs = bucketed
-      .groupBy("cluster", "bucket")
-      .agg(collect_list(struct(col("v"), col("ids"))).as("xs"))
-      .filter(size(col("xs")).between(2, maxBucket))
-      .select(explode(flatten(transform(col("xs"), (x, i) =>
-        filter(
-          transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
-            struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
-              round(VectorFunctions.cosine(
-                x.getField("v"), y.getField("v")), 6).as("cos"))),
-          s => s.getField("cos") >= minCos)))).as("sp"))
-      .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"), col("sp.cos"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("cos"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("cos"))
-    val pairs = equalPairs.unionByName(crossPairs)
-    val (labels, stats) = Dedup.componentsWithStats(pairs, maxIters)
-    Dedup.enforceConvergence(stats, maxIters, failOnNonConvergence)
-    val losers = labels
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("__loser"))
-    (corpus.join(losers, corpus(idCol) === col("__loser"), "left_anti"), stats)
+    // in-bucket scoring: the annBuckets kernel — vectors never ride an
+    // exploded row
+    val crossPairs = Dedup.bucketPairs(bucketed, Seq("cluster", "bucket"),
+      "v", roundedCosine, _ >= minCos, "cos", maxBucket)
+    Dedup.dropComponentLosers(corpus, idCol,
+      equalPairs.unionByName(crossPairs), maxIters,
+      reliableCheckpoint = false, failOnNonConvergence)()
   }
 
-  def annBucketsMulti(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numTables: Int = 4,
-      numPlanes: Int = 12,
-      dim: Int = 64,
-      seed: Long = 42L,
-      minCos: Double = 0.0,
-      maxBucket: Int = 2000,
-      maxEqualGroup: Int = 2000
-  ): DataFrame = {
-    // distinct-vector collapse before bucketing — same duplicate-crowding
-    // guard as [[annBuckets]] (equal vectors collide in EVERY table; one
-    // direct emission replaces numTables bucket entries per copy), with
-    // [[collapseByVector]]'s degenerate-group salting
-    val (byVec, equalPairs, total) = collapseByVector(
-      corpus, idCol, vecCol, minCos, maxEqualGroup)
+  /** Cosine rounded to 6 places: the score every similarity search and
+    * near-dup path here reports and filters on. */
+  private def roundedCosine(x: Column, y: Column): Column =
+    round(VectorFunctions.cosine(x, y), 6)
 
-    // numPlanes = 0 auto-scales per table exactly as [[annBuckets]] does —
-    // zero literal planes would co-bucket the whole corpus into one
-    // mega-bucket that maxBucket then silently drops; the floor is this
-    // entry point's fixed default (12)
-    val p = if (numPlanes > 0) numPlanes else autoPlanes(total, floor = 12)
-    val tablePlanes = (0 until numTables).map(t =>
-      VectorFunctions.hyperplanes(p, dim, seed + t))
-
-    val bucketed = byVec.select(col("v"), col("ids"),
-      posexplode(array(tablePlanes.map(pl =>
-        VectorFunctions.lshBucket(col("v"), pl)): _*)).as(Seq("tbl", "bucket")))
-
-    // distinct-vector pairs may surface in several tables — the final
-    // (id_a, id_b) max dedupes across tables, as before; equal-vector
-    // pairs never enter a bucket so the union cannot double-count
-    val crossPairs = bucketed
-      .groupBy("tbl", "bucket")
-      .agg(collect_list(struct(col("v"), col("ids"))).as("xs"))
-      .filter(size(col("xs")).between(2, maxBucket))
-      .select(explode(flatten(transform(col("xs"), (x, i) =>
-        filter(
-          transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
-            struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
-              round(VectorFunctions.cosine(
-                x.getField("v"), y.getField("v")), 6).as("cos"))),
-          s => s.getField("cos") >= minCos)))).as("sp"))
-      .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"), col("sp.cos"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("cos"))
-      .groupBy(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"))
-      .agg(max(col("cos")).as("cos"))
-
-    equalPairs.unionByName(crossPairs)
-  }
-
-  /** `numPlanes = 0` picks the plane count from the corpus size
-    * ([[autoPlanes]]) — the scale lever: bucket occupancy, and with it
-    * the quadratic in-bucket pairing cost, stays bounded as the corpus
-    * grows instead of the resolution silently falling behind. */
+  /** LSH-bucketed approximate neighbors: candidates share a hyperplane
+    * sign-pattern bucket; cosine is computed only within buckets. Recall
+    * is tuned by `numPlanes` (fewer planes → bigger buckets → higher
+    * recall, more work) and `numTables`.
+    *
+    * `numPlanes = 0` picks the plane count from the corpus size
+    * ([[autoPlanes]], never below `autoFloor`) — the scale lever: bucket
+    * occupancy, and with it the quadratic in-bucket pairing cost, stays
+    * bounded as the corpus grows instead of the resolution silently
+    * falling behind.
+    *
+    * `numTables > 1` buckets each vector once per independent hyperplane
+    * table in a single pass (posexplode over the per-table bucket ids —
+    * the corpus is scanned once, not L times). A candidate pair surfaces
+    * if it collides in ANY table, so recall is
+    * `1-(1-p^numPlanes)^numTables` instead of `p^numPlanes` — the
+    * standard recall lever when one table's single bucket per vector is
+    * too lossy. Pairs deduplicate across tables via a final
+    * (id_a, id_b) max; one table cannot surface a pair twice and skips it.
+    *
+    * Vectors collapse to DISTINCT values before bucketing (ids ride as
+    * lists) — the duplicate-crowding guard the sketch deduppers carry:
+    * equal-vector pairs are emitted unconditionally from their group, so
+    * no `maxBucket` cap can drop an exact-duplicate pair, and `maxBucket`
+    * guards only genuine distinct-vector bucket crowding. In-bucket
+    * scoring stays an array expression ([[Dedup.bucketPairs]]) — a
+    * self-join would re-execute the projection pipeline per side. */
   def annBuckets(
       corpus: DataFrame,
       idCol: String,
@@ -986,8 +920,10 @@ object Similarity {
       minCos: Double = 0.0,
       maxBucket: Int = 2000,
       maxEqualGroup: Int = 2000,
-      autoFloor: Int = 8
+      autoFloor: Int = 8,
+      numTables: Int = 1
   ): DataFrame = {
+    require(numTables >= 1, s"numTables must be >= 1 (got $numTables)")
     // Collapse to DISTINCT vectors before bucketing — the same
     // duplicate-crowding guard minhashPairs and simhashPairs carry (their
     // 20x-scale lesson applies verbatim here): a million copies of one
@@ -995,12 +931,12 @@ object Similarity {
     // million, where per-row bucketing would blow the bucket past
     // `maxBucket` and silently drop exactly the duplicate pairs
     // dropEmbeddingDuplicates exists to find. Equal-vector groups emit
-    // their pairs unconditionally (no bucket cap can lose them); cos is
-    // computed, not assumed 1.0: a pair of identical zero vectors scores
-    // 0.0 and null-element vectors score null, exactly as the in-bucket
-    // expression scored them before the collapse. [[collapseByVector]]
-    // salts any group past `maxEqualGroup` so no aggregation buffer holds
-    // a whole degenerate group.
+    // their pairs unconditionally (no bucket cap can lose them, and they
+    // collide in EVERY table); cos is computed, not assumed 1.0: a pair of
+    // identical zero vectors scores 0.0 and null-element vectors score
+    // null, exactly as the in-bucket expression scored them before the
+    // collapse. [[collapseByVector]] salts any group past `maxEqualGroup`
+    // so no aggregation buffer holds a whole degenerate group.
     val (byVec, equalPairs, total) = collapseByVector(
       corpus, idCol, vecCol, minCos, maxEqualGroup)
 
@@ -1011,31 +947,26 @@ object Similarity {
     // candidates, i.e. silently reduce recall for existing numPlanes=0
     // callers; entry points wanting finer small-corpus bucketing opt in)
     val p = if (numPlanes > 0) numPlanes else autoPlanes(total, autoFloor)
-    val planes = VectorFunctions.hyperplanes(p, dim, seed)
+    val tablePlanes = (0 until numTables).map(t =>
+      VectorFunctions.hyperplanes(p, dim, seed + t))
 
-    val bucketed = byVec.select(col("v"), col("ids"),
-      VectorFunctions.lshBucket(col("v"), planes).as("bucket"))
-
-    // Score + threshold inside the bucket array expression so exploded
-    // rows are (ids_a, ids_b, cos) structs, never vector pairs; distinct
-    // vectors share exactly one bucket, so no cross-pair repeats.
-    val crossPairs = bucketed
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("v"), col("ids"))).as("xs"))
-      .filter(size(col("xs")).between(2, maxBucket))
-      .select(explode(flatten(transform(col("xs"), (x, i) =>
-        filter(
-          transform(slice(col("xs"), i + lit(2), size(col("xs"))), y =>
-            struct(x.getField("ids").as("ids_a"), y.getField("ids").as("ids_b"),
-              round(VectorFunctions.cosine(
-                x.getField("v"), y.getField("v")), 6).as("cos"))),
-          s => s.getField("cos") >= minCos)))).as("sp"))
-      .select(explode(col("sp.ids_a")).as("ia"), col("sp.ids_b"), col("sp.cos"))
-      .select(col("ia"), explode(col("ids_b")).as("ib"), col("cos"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("cos"))
-
-    equalPairs.unionByName(crossPairs)
+    // distinct vectors share exactly one bucket per table, and
+    // equal-vector pairs never enter a bucket, so only several tables can
+    // surface a pair twice
+    if (numTables == 1) {
+      val bucketed = byVec.select(col("v"), col("ids"),
+        VectorFunctions.lshBucket(col("v"), tablePlanes.head).as("bucket"))
+      equalPairs.unionByName(Dedup.bucketPairs(bucketed, Seq("bucket"), "v",
+        roundedCosine, _ >= minCos, "cos", maxBucket))
+    } else {
+      val bucketed = byVec.select(col("v"), col("ids"),
+        posexplode(array(tablePlanes.map(pl =>
+          VectorFunctions.lshBucket(col("v"), pl)): _*)).as(Seq("tbl", "bucket")))
+      equalPairs.unionByName(Dedup.bucketPairs(bucketed, Seq("tbl", "bucket"),
+        "v", roundedCosine, _ >= minCos, "cos", maxBucket)
+        .groupBy("id_a", "id_b")
+        .agg(max(col("cos")).as("cos")))
+    }
   }
 
   // ===== product quantization (IVF-PQ) ======================================
@@ -1275,7 +1206,7 @@ object Similarity {
       .join(maybeBroadcast(cands, rerankDepth), "cand_id")
       .join(q.select(col("query_id"), col("qv")), "query_id")
       .select(col("query_id"), col("cand_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cos"))
+        roundedCosine(col("qv"), col("cv")).as("cos"))
 
     rankTopK(exact, "cos", k)
   }
@@ -1482,7 +1413,7 @@ object Similarity {
       .join(maybeBroadcast(cands, rerankDepth), "cand_id")
       .join(broadcast(q.select(col("query_id"), col("qv"))), "query_id")
       .select(col("query_id"), col("cand_id"),
-        round(VectorFunctions.cosine(col("qv"), col("cv")), 6).as("cos"))
+        roundedCosine(col("qv"), col("cv")).as("cos"))
 
     rankTopK(exact, "cos", k)
   }

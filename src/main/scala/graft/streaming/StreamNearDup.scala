@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
+import graft.functions.MinHash
 import graft.operators.Dedup
 
 /** Streaming MinHash-LSH near-duplicate pairs — the ingest-time twin of
@@ -119,10 +120,7 @@ object StreamNearDup {
     val r = numHashes / bands
     val spark = docs.sparkSession
     import spark.implicits._
-    val sigCol = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.expressions.MinHashSignature(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("text")),
-        shingleK, numHashes, 0)).as("sig")
+    val sigCol = MinHash.signature(col("text"), shingleK, numHashes).as("sig")
     // NOTE: the length filter is declared after withWatermark, but
     // Catalyst pushes it below the watermark stats collector (it doesn't
     // reference the event-time column) — so a too-short document does
@@ -132,9 +130,9 @@ object StreamNearDup {
       .withWatermark("ts", watermarkDelay)
       .filter(col("text").isNotNull && octet_length(col("text")) >= shingleK)
       .select(col("doc_id"), col("ts"), sigCol,
-        unhex(sha2(col("text"), 256)).as("dig"))
+        MinHash.contentDigest(col("text")).as("dig"))
       .select(col("doc_id"), col("ts"), col("sig"), col("dig"),
-        posexplode(graft.functions.MinHash.bandHashes(col("sig"), bands, r))
+        posexplode(MinHash.bandHashes(col("sig"), bands, r))
           .as(Seq("band", "bh")))
       .as[BandedDoc]
 

@@ -636,12 +636,12 @@ class MultiTableLshSpec extends SparkSpec {
 
     val single = plantedRecall(Similarity.annBuckets(df, "vec_id", "embedding",
       numPlanes = 10, dim = 32, minCos = 0.8))
-    val multi = plantedRecall(Similarity.annBucketsMulti(df, "vec_id", "embedding",
+    val multi = plantedRecall(Similarity.annBuckets(df, "vec_id", "embedding",
       numTables = 6, numPlanes = 10, dim = 32, minCos = 0.8))
     assert(multi >= single)
     assert(multi > single, s"multi ($multi) should beat single ($single) here")
     // pairs deduplicate across tables
-    val m = Similarity.annBucketsMulti(df, "vec_id", "embedding",
+    val m = Similarity.annBuckets(df, "vec_id", "embedding",
       numTables = 6, numPlanes = 10, dim = 32, minCos = 0.8)
     assert(m.groupBy("id_a", "id_b").count().filter(col("count") > 1).count() == 0)
   }
@@ -651,14 +651,14 @@ class MultiTableLshSpec extends SparkSpec {
     // whole corpus into one mega-bucket that maxBucket then silently
     // dropped — auto mode must bucket (and find planted pairs) instead
     val df = perturbed(13)
-    val auto = Similarity.annBucketsMulti(df, "vec_id", "embedding",
-      numTables = 4, numPlanes = 0, dim = 32, minCos = 0.8)
+    val auto = Similarity.annBuckets(df, "vec_id", "embedding",
+      numTables = 4, numPlanes = 0, dim = 32, minCos = 0.8, autoFloor = 12)
     assert(auto.filter(col("id_b") === col("id_a") + 1000L).count() > 0)
-    // on a small corpus auto resolves to the entry point's floor — its
-    // pre-auto fixed default of 12 planes — so the auto run must equal an
-    // explicit 12-plane run bit for bit; a floor regression (the bug
-    // class the per-entry floors fixed) breaks this identity
-    val manual = Similarity.annBucketsMulti(df, "vec_id", "embedding",
+    // on a small corpus auto resolves to the floor — 12 planes here — so
+    // the auto run must equal an explicit 12-plane run bit for bit; a
+    // floor regression (the bug class the per-entry floors fixed) breaks
+    // this identity
+    val manual = Similarity.annBuckets(df, "vec_id", "embedding",
       numTables = 4, numPlanes = 12, dim = 32, minCos = 0.8)
     assert(auto.collect().toSet == manual.collect().toSet)
   }

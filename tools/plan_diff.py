@@ -1,0 +1,142 @@
+#!/usr/bin/env python3
+"""Diff two ExplainDump outputs query by query, ignoring run-to-run noise.
+
+    python3 tools/plan_diff.py PARENT.md CHANGE.md
+
+Both files are `graft.tools.ExplainDump` outputs (`## <query>` headings,
+each followed by a fenced plan tree). Before comparing, every plan is
+normalized so that two dumps of the same code compare equal:
+
+- expression ids (`id#6030L` -> `id#L`);
+- exchange `[plan_id=N]`;
+- object hash codes (`UnsafeArrayData@f1dd012b`) and JVM lambda class
+  names (`Packing$$$Lambda$8598/0x00007f3885a8b0d0`);
+- lambda variable names (`lambda y_28`, `x_27#6026`);
+- temp paths (`file:/tmp/...`);
+- AQE query-stage numbers (`ShuffleQueryStage 4`) and whole-stage-codegen
+  ids (`*(7)`).
+
+ExplainDump cuts long lines at 157 characters and appends `...`; the cut
+falls at a different place once ids are normalized, so when both sides of
+a line are cut, only their common normalized prefix is compared.
+
+Prints a unified diff for each query whose normalized tree differs (or
+that only one side has) and exits 1 if there is any, else 0.
+"""
+import difflib
+import re
+import sys
+
+ELLIPSIS = "..."
+
+_RULES = [
+    # whole-stage-codegen ids: "*(7) Project" -> "*(N) Project"
+    (re.compile(r"\*\(\d+\)"), "*(N)"),
+    # AQE stages: "ShuffleQueryStage 4", "ResultQueryStage 5", ...
+    (re.compile(r"\b(\w*QueryStage) \d+"), r"\1 N"),
+    (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
+    # lambda variables are named <x>_<counter>: "lambda y_28", "x_27#6026"
+    (re.compile(r"\blambda ([A-Za-z]\w*?)_\d+\b"), r"lambda \1_N"),
+    (re.compile(r"\b([A-Za-z]{1,3})_\d+(?=#)"), r"\1_N"),
+    # expression ids: "id_a#6030L" -> "id_a#L", "sig#5975" -> "sig#"
+    (re.compile(r"#\d+"), "#"),
+    # JVM lambda classes: "Packing$$$Lambda$8598/0x00007f3885a8b0d0"
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
+    # Object.toString hash codes: "UnsafeArrayData@f1dd012b"
+    (re.compile(r"(?<=[\w$])@[0-9a-f]{1,8}(?![0-9A-Za-z])"), "@H"),
+    # temp paths, up to the next delimiter (or the line cut)
+    (re.compile(r"(?:file:)?/tmp/[^\s,\])]*"), "<tmp>"),
+]
+
+
+def normalize_line(line):
+    for rx, repl in _RULES:
+        line = rx.sub(repl, line)
+    return line
+
+
+def parse(text):
+    """{query: [normalized line, ...]} of an ExplainDump markdown file."""
+    plans = {}
+    name = None
+    lines = None
+    for raw in text.splitlines():
+        if raw.startswith("## "):
+            name = raw[3:].strip()
+            lines = None
+        elif raw.startswith("```") and name is not None:
+            if lines is None:
+                lines = []
+            else:
+                plans[name] = lines
+                name = None
+                lines = None
+        elif lines is not None:
+            lines.append(normalize_line(raw))
+    return plans
+
+
+def _cut(line):
+    return line.endswith(ELLIPSIS)
+
+
+def align_cut_lines(a, b):
+    """Copies of `a` and `b` where each pair of lines that ExplainDump cut
+    on both sides is trimmed to the length of the shorter one. The last
+    (possibly partial) token before a cut is dropped first."""
+    if len(a) != len(b):
+        return a, b
+    a2, b2 = [], []
+    for x, y in zip(a, b):
+        if _cut(x) and _cut(y):
+            x = re.sub(r"[^\s,()\[\]]*$", "", x[:-len(ELLIPSIS)])
+            y = re.sub(r"[^\s,()\[\]]*$", "", y[:-len(ELLIPSIS)])
+            n = min(len(x), len(y))
+            x, y = x[:n] + ELLIPSIS, y[:n] + ELLIPSIS
+        a2.append(x)
+        b2.append(y)
+    return a2, b2
+
+
+def diff_plans(parent, change):
+    """[(query, [unified diff line, ...])] for every query whose normalized
+    plan differs or that only one side has, in the parent's order (queries
+    new in the change last)."""
+    out = []
+    names = list(parent) + [n for n in change if n not in parent]
+    for name in names:
+        a = parent.get(name)
+        b = change.get(name)
+        if a is None or b is None:
+            side = "parent" if a is None else "change"
+            out.append((name, [f"(missing in {side})"]))
+            continue
+        a, b = align_cut_lines(a, b)
+        if a != b:
+            d = list(difflib.unified_diff(a, b, "parent/" + name,
+                                          "change/" + name, lineterm=""))
+            out.append((name, d))
+    return out
+
+
+def main(argv):
+    if len(argv) != 3:
+        print("usage: python3 tools/plan_diff.py PARENT.md CHANGE.md",
+              file=sys.stderr)
+        return 2
+    with open(argv[1], encoding="utf-8") as f:
+        parent = parse(f.read())
+    with open(argv[2], encoding="utf-8") as f:
+        change = parse(f.read())
+    diffs = diff_plans(parent, change)
+    for name, lines in diffs:
+        print(f"## {name}")
+        for line in lines:
+            print(line)
+        print()
+    print(f"{len(diffs)} of {len(set(parent) | set(change))} queries differ")
+    return 1 if diffs else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))

@@ -1,0 +1,134 @@
+"""tools/plan_diff.py on canned ExplainDump plans (no JVM).
+
+Run from the repository root:
+
+    python3 -m unittest discover -s tools/tests -v
+"""
+import contextlib
+import io
+import os
+import sys
+import tempfile
+import unittest
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.dont_write_bytecode = True
+import plan_diff  # noqa: E402
+
+PARENT = """# Physical plans (generated by graft.tools.ExplainDump, sf dir: x)
+
+## q_join
+
+```
+ResultQueryStage 5
++- *(7) Project [id_a#6030L, id_b#6031L, 1.0 AS est_jaccard#6078]
+   +- *(7) ShuffledHashJoin [__dig_a#6069], [__dig_b#6071], Inner, BuildRight
+      :- ShuffleQueryStage 4
+      :  +- Exchange hashpartitioning(__dig_a#6069, 4), ENSURE_REQUIREMENTS, [plan_id=10490]
+      :     +- Generate explode(transform(ids#6019, lambdafunction(struct(x_27#6026, y_28#6027), lambda y_28#6027)))
+      +- *(3) Scan ExistingRDD[id#6075L,sig#6076,__dig#6077]
+```
+
+## q_scan
+
+```
+*(1) Filter array_contains([1,2], k#4)
++- *(1) Project [UnsafeArrayData@f1dd012b AS c#5]
+   +- MapPartitions graft.operators.Packing$$$Lambda$8598/0x00007f3885a8b0d0@2cf4dd07, obj#7
+   +- FileScan parquet [k#4] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_export93721/t, PartitionFilters: []
+```
+"""
+
+# the same plans from another run: every id, stage, codegen id, plan id,
+# lambda counter, hash code and temp path differs
+RERUN = """# Physical plans (generated by graft.tools.ExplainDump, sf dir: x)
+
+## q_join
+
+```
+ResultQueryStage 9
++- *(12) Project [id_a#130L, id_b#131L, 1.0 AS est_jaccard#178]
+   +- *(12) ShuffledHashJoin [__dig_a#169], [__dig_b#171], Inner, BuildRight
+      :- ShuffleQueryStage 7
+      :  +- Exchange hashpartitioning(__dig_a#169, 4), ENSURE_REQUIREMENTS, [plan_id=77]
+      :     +- Generate explode(transform(ids#119, lambdafunction(struct(x_3#126, y_4#127), lambda y_4#127)))
+      +- *(1) Scan ExistingRDD[id#175L,sig#176,__dig#177]
+```
+
+## q_scan
+
+```
+*(4) Filter array_contains([1,2], k#40)
++- *(4) Project [UnsafeArrayData@9a0c1 AS c#51]
+   +- MapPartitions graft.operators.Packing$$$Lambda$8519/0x00007f6a79ef4940@1b2, obj#70
+   +- FileScan parquet [k#40] Location: InMemoryFileIndex(1 paths)[file:/tmp/graft_export11/t, PartitionFilters: []
+```
+"""
+
+
+def run(parent_text, change_text):
+    with tempfile.TemporaryDirectory() as d:
+        a = os.path.join(d, "a.md")
+        b = os.path.join(d, "b.md")
+        with open(a, "w") as f:
+            f.write(parent_text)
+        with open(b, "w") as f:
+            f.write(change_text)
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            code = plan_diff.main(["plan_diff.py", a, b])
+        return code, out.getvalue()
+
+
+class PlanDiff(unittest.TestCase):
+
+    def test_rerun_noise_normalizes_away(self):
+        code, out = run(PARENT, RERUN)
+        self.assertEqual(code, 0, out)
+        self.assertIn("0 of 2 queries differ", out)
+
+    def test_moved_join_is_reported(self):
+        change = RERUN.replace("ShuffledHashJoin", "SortMergeJoin")
+        code, out = run(PARENT, change)
+        self.assertEqual(code, 1)
+        self.assertIn("## q_join", out)
+        self.assertNotIn("## q_scan", out)
+        self.assertIn("-   +- *(N) ShuffledHashJoin", out)
+        self.assertIn("+   +- *(N) SortMergeJoin", out)
+
+    def test_field_rename_is_reported(self):
+        change = RERUN.replace("1.0 AS est_jaccard", "1.0 AS est")
+        code, out = run(PARENT, change)
+        self.assertEqual(code, 1)
+        self.assertIn("1 of 2 queries differ", out)
+
+    def test_missing_query_is_reported(self):
+        change = RERUN[:RERUN.index("## q_scan")]
+        code, out = run(PARENT, change)
+        self.assertEqual(code, 1)
+        self.assertIn("(missing in change)", out)
+
+    def test_cut_lines_compare_on_common_prefix(self):
+        # ExplainDump cuts at 157 characters: shorter ids leave more text
+        # before the cut, which must not count as a difference
+        a = ["+- Project [a#1234567, b#1234568, c#1234569, d#12..."]
+        b = ["+- Project [a#1, b#2, c#3, d#4, e#5..."]
+        a2, b2 = plan_diff.align_cut_lines(
+            [plan_diff.normalize_line(x) for x in a],
+            [plan_diff.normalize_line(x) for x in b])
+        self.assertEqual(a2, b2)
+        # but a difference inside the common prefix still shows
+        c = ["+- Project [a#1, z#2, c#3, d#4, e#5..."]
+        a3, c3 = plan_diff.align_cut_lines(
+            [plan_diff.normalize_line(x) for x in a],
+            [plan_diff.normalize_line(x) for x in c])
+        self.assertNotEqual(a3, c3)
+
+    def test_dates_in_table_names_are_kept(self):
+        self.assertEqual(
+            plan_diff.normalize_line("BatchScan t.orders@20240501T060000Z[o#3]"),
+            "BatchScan t.orders@20240501T060000Z[o#]")
+
+
+if __name__ == "__main__":
+    unittest.main()
