@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{InSet, UnsafeArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.MinHash
 import graft.functions.expressions.VectorKernels
@@ -27,9 +28,11 @@ import graft.sources.PqRepo
   *     hits and candidate signatures, scored on the driver. The probe
   *     runs when the gate is called, and the batch must fit on the
   *     driver (`spark.driver.maxResultSize`);
-  *   - [[append]] adds the batch's own rows via the partition-scoped
-  *     crash-recoverable merge, so tomorrow's batch gates against
-  *     today's too.
+  *   - [[append]] signs and collects the batch the same way, probes
+  *     each table for the batch's keys with one pruned, filtered scan,
+  *     and lands rows the index does not hold as new files renamed into
+  *     their partitions (no current row is read or rewritten), so
+  *     tomorrow's batch gates against today's too.
   *
   * On-disk layout under `<schema>/`:
   *   - `<name>_mhdocs`  — (id, sig array<bigint>, dig binary(32),
@@ -114,7 +117,7 @@ object MinHashIndex {
         MinHash.signature(col("__t"), g.shingleK, g.numHashes).as("sig"),
         MinHash.contentDigest(col("__t")).as("dig"))
 
-  private def withDocBucket(perDoc: DataFrame, g: Geometry): DataFrame =
+  private[operators] def withDocBucket(perDoc: DataFrame, g: Geometry): DataFrame =
     perDoc.withColumn("dbucket",
       pmod(xxhash64(col("id")), lit(g.buckets)).cast("int"))
 
@@ -161,22 +164,38 @@ object MinHashIndex {
   }
 
   /** Incrementally APPEND a batch under the frozen geometry — the daily
-    * near-dup-ingest primitive. The batch signs only ITSELF; both merges
-    * are partition-scoped (only the dbucket/bucket directories the batch
-    * hashes into are rewritten, crash-recoverable via the merge
-    * manifest) and keyed so re-ingesting an unchanged document replaces
-    * its own rows byte-identically — append is idempotent, and
+    * near-dup-ingest primitive. Its cost follows the batch, not the
+    * index:
+    *   1. the batch is signed and collected once (one job; it must fit on
+    *      the driver, the bound [[dropNearKnown]] places on the same
+    *      batch);
+    *   2. one pruned, filtered scan of each table collects the index rows
+    *      that hold one of the batch's keys: `_mhdocs` by `dbucket` and
+    *      `id`, `_mhbands` by `bucket`, `bh` and `id`;
+    *   3. each table decides its own inserts from its own probe. A row
+    *      whose key the table does not hold is an insert: its files are
+    *      renamed into their partition directory and no current row is
+    *      read or rewritten. A row whose key the table holds with exactly
+    *      the same rows is already indexed and drops out (an unchanged
+    *      re-ingest). Any other key hit — and every null id, which
+    *      matches null-safely — rewrites its partition through the
+    *      repo's copy-on-write swap ([[PqRepo.mergeIntoPartitions]]).
+    *
+    * The result is the partition-scoped merge keyed on `(id, dbucket)`
+    * and `(id, band, bh, bucket)`: append is idempotent, and
     * `append(A); append(B)` ≡ `write(A ∪ B)` row-for-row
-    * (MinHashIndexSpec pins both).
+    * (MinHashIndexSpec pins both; IndexAppendSpec checks random
+    * sequences against the merge it replaced). Each table commits on its
+    * own, and a crash between the two commits heals when the batch is
+    * replayed: the committed table finds its rows already indexed.
     *
     * A re-ingested id whose TEXT changed would leave stale band rows in
-    * buckets the new text never hashes into — the same
-    * survives-outside-the-rewrite-scope corruption
-    * [[Similarity.appendToIvfIndex]]'s moved-id guard exists for, and
-    * the same remedy: `checkChanged` (default on) joins the batch's
-    * digests against the indexed ones (thin columns, nothing text-sized
-    * moves) and fails loudly on any mismatch; re-sign via [[write]] or
-    * feed provably append-only batches with `checkChanged = false`. */
+    * buckets the new text never hashes into. `checkChanged` (default on)
+    * compares the batch's digests with the indexed ones of the same ids
+    * and fails loudly on any mismatch before anything is written;
+    * re-sign via [[write]] or feed provably append-only batches with
+    * `checkChanged = false`, under which a changed id rewrites its
+    * `dbucket`. */
   def append(
       repo: PqRepo,
       batch: DataFrame,
@@ -186,48 +205,135 @@ object MinHashIndex {
       name: String,
       checkChanged: Boolean = true): Unit = {
     val g = geometry(repo, schema, name)
-    val perDoc = Dedup.materializeOnce(signed(batch, idCol, textCol, g))
-    val docRows = withDocBucket(perDoc, g)
-    val bandR = bandRows(perDoc, g)
-    val changedSample =
-      if (!checkChanged) Array.empty[org.apache.spark.sql.Row]
-      else repo.table(schema, docsTable(name))
-        .select(col("id"), col("dig").as("__old"))
-        .join(perDoc.select(col("id"), col("dig")), Seq("id"))
-        .filter(!(col("__old") <=> col("dig")))
-        .select(col("id")).limit(5).collect() // bounded: ≤5
-    if (changedSample.nonEmpty) {
-      val shown = changedSample.map(_.get(0)).mkString(", ")
-      throw new IllegalStateException(
-        s"MinHashIndex.append($schema/$name): batch re-ingests ids whose " +
-          s"content changed [$shown${if (changedSample.length == 5) ", …" else ""}] — " +
-          "their stale band rows would survive in buckets this merge " +
-          "never rewrites. Rebuild via MinHashIndex.write, or pass " +
-          "checkChanged = false only for provably append-only feeds")
+    // the probes must see every indexed row: heal a crashed earlier
+    // commit first, as the merge engine would
+    Seq(docsTable(name), bandsTable(name)).foreach { t =>
+      repo.recoverWrite(schema, t)
+      repo.recoverMergePartitioned(schema, t)
     }
-    // bucket-clustering of the merged rewrite (touched directories come
-    // back as one file, not per-task fragments that compound across
-    // micro-batches) lives in the repo's partition-scoped merge engine
-    // itself (r20) — shared by every index family. The two merges touch
-    // DISJOINT tables (each with its own manifest-recorded crash
-    // recovery), so they run OVERLAPPED (guide §2.6; a build with every
-    // Par call sequential measured the corpus_dedup benchmark's
-    // index-append p50 56% slower); the crash window is
-    // unchanged — a replay re-merges both tables idempotently exactly as
-    // it did when a crash fell between the sequential merges.
+    val docsIdx = repo.table(schema, docsTable(name))
+    val bandsIdx = repo.table(schema, bandsTable(name))
+    // ids take the index's type, so the probes' matches compare like values
+    val idField = docsIdx.schema("id")
+    val docs = withDocBucket(
+      batch.select(col(idCol).cast(idField.dataType).as("id"), col(textCol).as("__t"))
+        .select(col("id"),
+          MinHash.signature(col("__t"), g.shingleK, g.numHashes).as("sig"),
+          MinHash.contentDigest(col("__t")).as("dig")), g)
+    val rows = docs.withColumn("bands", bandKeys(col("sig"), g))
+      .collect() // bounded: the batch (see scaladoc)
+    if (rows.isEmpty) return
+    val docSide = Side(docsTable(name), docs.schema,
+      rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3))),
+      key = Seq("id", "dbucket"), same = Seq("id", "dig", "dbucket"), partition = "dbucket")
+    val bandSide = Side(bandsTable(name),
+      StructType(Seq(idField, StructField("band", IntegerType),
+        StructField("bh", LongType), StructField("bucket", IntegerType))),
+      rows.toSeq.filter(!_.isNullAt(1)).flatMap(r => r.getSeq[Row](4)
+        .map(b => Row(r.get(0), b.getInt(0), b.getLong(1), b.getInt(2)))),
+      key = Seq("id", "band", "bh", "bucket"), same = Seq("id", "band", "bh", "bucket"),
+      partition = "bucket")
+    // the two tables are probed, and later land, OVERLAPPED (guide §2.6):
+    // with the probes and the writes each run one after the other, the
+    // corpus_dedup benchmark's append p50 measured 39% slower
+    val (storedDocs, storedBands) = graft.Par.run2(
+      docSide.probe(docsIdx, inSet(col("dbucket"), docSide.column("dbucket"))),
+      bandSide.probe(bandsIdx, inSet(col("bucket"), bandSide.column("bucket")) &&
+        inSet(col("bh"), bandSide.column("bh"))))
+    if (checkChanged) {
+      // an indexed row of the same id with another digest (null-safe)
+      val changed = docSide.rows.iterator
+        .filter(r => storedDocs.get(docSide.keyOf(r))
+          .exists(_.keys.exists(_(1) != docSide.sameOf(r)(1))))
+        .map(_.get(0)).distinct.take(5).toSeq
+      if (changed.nonEmpty)
+        throw new IllegalStateException(
+          s"MinHashIndex.append($schema/$name): batch re-ingests ids whose " +
+            s"content changed [${changed.mkString(", ")}" +
+            s"${if (changed.length == 5) ", …" else ""}] — their stale band " +
+            "rows would survive in buckets this append never rewrites. " +
+            "Rebuild via MinHashIndex.write, or pass checkChanged = false " +
+            "only for provably append-only feeds")
+    }
     graft.Par.run2(
-      repo.mergePartitioned(docRows, schema, docsTable(name),
-        keys = Seq("id", "dbucket"), partitionCols = Seq("dbucket")),
-      repo.mergePartitioned(bandR, schema, bandsTable(name),
-        keys = Seq("id", "band", "bh", "bucket"),
-        partitionCols = Seq("bucket")))
+      docSide.land(repo, schema, docsIdx, storedDocs),
+      bandSide.land(repo, schema, bandsIdx, storedBands))
   }
+
+  /** One index table's side of an [[append]]: the batch's rows in the
+    * table's column order (`id` first), the key columns the table merges
+    * on, `same` — the key plus the columns in which two rows with one key
+    * can differ (the docs table's signature is a function of its digest,
+    * so the digest stands for both) — and its partition column. */
+  private final case class Side(table: String, rowType: StructType, rows: Seq[Row],
+      key: Seq[String], same: Seq[String], partition: String) {
+    private val keyAt = key.map(rowType.fieldIndex)
+    private val sameAt = same.map(rowType.fieldIndex)
+    private val keyInSame = key.map(same.indexOf)
+
+    def keyOf(r: Row): Seq[Any] = values(r, keyAt)
+    def sameOf(r: Row): Seq[Any] = values(r, sameAt)
+    def column(c: String): Seq[Any] = rows.map(_.get(rowType.fieldIndex(c))).distinct
+
+    /** The indexed rows of the batch's keys, as a multiset of `same`
+      * tuples per key: one scan, pruned and filtered by `filter` and the
+      * batch's non-null ids. A null id matches nothing here. */
+    def probe(index: DataFrame, filter: Column): Map[Seq[Any], Map[Seq[Any], Int]] = {
+      val ids = rows.iterator.map(_.get(0)).filter(_ != null).toSet
+      if (ids.isEmpty) return Map.empty
+      val keys = rows.map(keyOf).toSet
+      index.filter(filter && inSet(col("id"), ids))
+        .select(same.map(col): _*)
+        .collect() // bounded: indexed rows sharing an id with the batch
+        .toSeq.map(values(_, same.indices))
+        .filter(s => keys(keyInSame.map(s)))
+        .groupBy(s => keyInSame.map(s)).view.mapValues(counts).toMap
+    }
+
+    /** Land the rows in the table: a key it holds with exactly these
+      * rows drops out, a key it does not hold is an insert, and every
+      * other key — and every null id, which matches null-safely —
+      * rewrites its partition. */
+    def land(repo: PqRepo, schema: String, index: DataFrame,
+        stored: Map[Seq[Any], Map[Seq[Any], Int]]): Unit = {
+      val landed = rows.groupBy(keyOf).toSeq.filter { case (k, rs) =>
+        k.head == null || !stored.get(k).contains(counts(rs.map(sameOf)))
+      }
+      if (landed.isEmpty) return
+      val p = rowType.fieldIndex(partition)
+      def partitionOf(rs: Seq[Row]) = Row(rs.head.get(p))
+      val updates = index.sparkSession
+        .createDataFrame(java.util.Arrays.asList(landed.flatMap(_._2): _*), rowType)
+        .coalesce(1)
+      repo.mergeIntoPartitions(updates, schema, table, key, Seq(partition),
+        affected = landed.collect {
+          case (k, rs) if k.head == null || stored.contains(k) => partitionOf(rs)
+        }.distinct,
+        currentFull = Some(index),
+        inserted = landed.map(l => partitionOf(l._2)).distinct)
+    }
+  }
+
+  /** Driver-side values of `r` at `at`, binary wrapped so equality
+    * compares content. */
+  private def values(r: Row, at: Seq[Int]): Seq[Any] = at.map(i => r.get(i) match {
+    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
+    case v => v
+  })
+
+  private def counts[A](xs: Seq[A]): Map[A, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
+
+  /** The band keys of a signature, one `(band, bh, bucket)` struct per
+    * band: the rows [[bandRows]] indexes, as one array per doc. */
+  private def bandKeys(sig: Column, g: Geometry): Column =
+    transform(MinHash.bandHashes(sig, g.bands, g.rows), (bh, band) =>
+      struct(band.as("band"), bh.as("bh"), bandBucket(band, bh, g).as("bucket")))
 
   /** `c IN values` as one [[InSet]] over catalyst values. The probe
     * sets are batch-sized (one band hash per band per batch doc); as an
     * IN list each value would be a literal node in the plan. Parquet
     * pushdown and partition pruning read InSet as they read IN. */
-  private def inSet(c: Column, values: Iterable[Any]): Column =
+  private[operators] def inSet(c: Column, values: Iterable[Any]): Column =
     ColumnBridge.column(InSet(ColumnBridge.expression(c),
       values.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 
@@ -279,10 +385,7 @@ object MinHashIndex {
       if (!needNear) keyed.select(col("id"), digCol)
       else keyed.select(col("id"), digCol,
           MinHash.signature(col("__t"), g.shingleK, g.numHashes).as("sig"))
-        .withColumn("bands", transform(
-          MinHash.bandHashes(col("sig"), g.bands, g.rows), (bh, band) =>
-            struct(band.as("band"), bh.as("bh"),
-              bandBucket(band, bh, g).as("bucket"))))
+        .withColumn("bands", bandKeys(col("sig"), g))
     val rows = probed.collect() // bounded: the batch (see scaladoc)
     def dig(r: Row): Option[ArraySeq[Byte]] =
       Option(r.getAs[Array[Byte]]("dig")).map(ArraySeq.unsafeWrapArray(_))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
@@ -191,7 +191,7 @@ object Similarity {
     * codegen'd, no UDF, and — unlike a join against a centroid table —
     * ZERO shuffle: at 10⁹ corpus rows nothing crosses the wire.
     * [[assignByJoin]] is the specced join-shaped alternative. */
-  private def assignClusters(
+  private[operators] def assignClusters(
       vecs: DataFrame, centroids: Seq[(Int, Seq[Double])]): DataFrame =
     vecs.withColumn("cluster",
       element_at(VectorFunctions.nearestCentroids(col("v"), centroids, 1), 1))
@@ -476,22 +476,26 @@ object Similarity {
     * exists to remove. The batch assigns against the EXISTING centroids
     * (standard IVF ingest: the index geometry is frozen between
     * re-trains — a drifted corpus re-trains via [[ivfBuild]] +
-    * [[writeIvfIndex]]) and lands through the repo's partition-scoped
-    * merge: only the cluster partitions the batch touches are rewritten
-    * (crash-recoverable via the merge manifest), the rest of the index
-    * stays byte-identical on disk.
+    * [[writeIvfIndex]]) and its cost follows the batch, not the index:
+    * the assigned batch is materialized once on the executors (an
+    * embedding batch can be far larger than the driver), only its
+    * `(id, cluster)` pairs are collected, and one id-filtered scan of the
+    * index's `(id, cluster)` columns finds the indexed rows of its ids.
+    * A new id is an insert: its files are renamed into its cluster
+    * partition and no current row is read or rewritten. A re-ingested id
+    * in its indexed cluster (its vector may have changed), and every
+    * null id, rewrites that cluster through the repo's crash-recoverable
+    * copy-on-write swap ([[graft.sources.PqRepo.mergeIntoPartitions]]).
+    * The result is the merge keyed on `(id, cluster)`, so re-ingesting
+    * an unchanged vector is idempotent.
     *
-    * Merge keys are (id, cluster), so re-ingesting an unchanged vector
-    * is idempotent. A re-ingested id whose EMBEDDING changed enough to
-    * move clusters would land a SECOND row while its stale row survives
-    * in a partition the batch never touches — `checkMoved` (default on)
-    * detects exactly that and fails loudly instead of quietly corrupting
-    * the index: the batch's (id, new-cluster) assignments join the
-    * index's (id, cluster) pair — a column-pruned two-thin-column scan,
-    * nothing vector-sized moves — and any differing cluster aborts
-    * before the merge touches disk. Provably append-only feeds (fresh
-    * ids every batch) can pass `checkMoved = false` to skip the scan;
-    * a detected reassignment means the corpus drifted — re-train via
+    * A re-ingested id whose EMBEDDING changed enough to move clusters
+    * would land a SECOND row while its stale row survives in a partition
+    * the batch never touches — `checkMoved` (default on) detects exactly
+    * that from the same probe and fails loudly before anything is
+    * written. Provably append-only feeds (fresh ids every batch) can pass
+    * `checkMoved = false`; a detected reassignment means the corpus
+    * drifted — re-ingest via [[reassignIvfIndex]] or re-train via
     * [[ivfBuild]] + [[writeIvfIndex]]. */
   def appendToIvfIndex(
       repo: graft.sources.PqRepo,
@@ -501,29 +505,50 @@ object Similarity {
       schema: String,
       name: String,
       checkMoved: Boolean = true): Unit = {
+    val table = s"${name}_ivf"
+    // the probe must see every indexed row: heal a crashed earlier
+    // commit first, as the merge engine would
+    repo.recoverWrite(schema, table)
+    repo.recoverMergePartitioned(schema, table)
     val index = readIvfIndex(repo, schema, name)
-    // materialized once: the guard and the merge's collect and write
-    // must all see the same rows, whatever the caller's batch does on
-    // re-execution
+    // materialized once: the collect and the write must see the same
+    // rows, whatever the caller's batch does on re-execution. Ids take
+    // the index's type, so the probe's matches compare like values.
     val assigned = Dedup.materializeOnce(assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids))
-    val movedSample =
-      if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else movedIds(index.assigned, assigned)
-    if (movedSample.nonEmpty) {
-      val shown = movedSample.map(r =>
-        s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
-      throw new IllegalStateException(
-        s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
-          s"embeddings moved clusters [$shown${if (movedSample.length == 5) ", …" else ""}] — " +
-          "the stale rows would survive in partitions this merge never " +
-          "rewrites. Use reassignIvfIndex (bounded rewrite of the old + " +
-          "new cluster partitions), re-train via ivfBuild + " +
-          "writeIvfIndex if the corpus drifted, or pass checkMoved = " +
-          "false only for provably append-only feeds")
+      batch.select(col(idCol).cast(index.assigned.schema("id").dataType).as("id"),
+        col(vecCol).as("v")), index.centroids))
+    val keys = assigned.select(col("id"), col("cluster")).collect()
+      .map(r => (r.get(0), r.getInt(1))) // bounded: two thin columns per batch row
+    if (keys.isEmpty) return
+    val ids = keys.iterator.map(_._1).filter(_ != null).toSet
+    val indexed =
+      if (ids.isEmpty) Array.empty[(Any, Int)]
+      else index.assigned.filter(MinHashIndex.inSet(col("id"), ids))
+        .select(col("id"), col("cluster")).collect()
+        .map(r => (r.get(0), r.getInt(1))) // bounded: indexed rows of batch ids
+    if (checkMoved) {
+      val batchClusters = keys.toSeq.groupMap(_._1)(_._2)
+      val moved = indexed.iterator.flatMap { case (id, old) =>
+        batchClusters.getOrElse(id, Nil).filter(_ != old).map(c => s"$id: $old -> $c")
+      }.take(5).toSeq
+      if (moved.nonEmpty)
+        throw new IllegalStateException(
+          s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
+            s"embeddings moved clusters [${moved.mkString(", ")}" +
+            s"${if (moved.length == 5) ", …" else ""}] — the stale rows " +
+            "would survive in partitions this append never rewrites. Use " +
+            "reassignIvfIndex (bounded rewrite of the old + new cluster " +
+            "partitions), re-train via ivfBuild + writeIvfIndex if the " +
+            "corpus drifted, or pass checkMoved = false only for provably " +
+            "append-only feeds")
     }
-    repo.mergePartitioned(assigned, schema, s"${name}_ivf",
-      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
+    val hit = indexed.toSet
+    repo.mergeIntoPartitions(assigned, schema, table,
+      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
+      affected = keys.collect { case k if k._1 == null || hit(k) => Row(k._2) }
+        .distinct.toSeq,
+      currentFull = Some(index.assigned),
+      inserted = keys.map(k => Row(k._2)).distinct.toSeq)
   }
 
   /** The moved-id guard of the IVF append paths: up to 5 (id, old
@@ -575,6 +600,7 @@ object Similarity {
       .select(col("cluster"))
     val affected = assigned.select(col("cluster"))
       .unionByName(oldClusters).distinct().collect() // bounded: ≤ 2·nlist
+    if (affected.isEmpty) return
     repo.mergeIntoPartitions(assigned, schema, s"${name}_ivf",
       keys = Seq("id"), partitionCols = Seq("cluster"),
       affected = affected.toSeq)

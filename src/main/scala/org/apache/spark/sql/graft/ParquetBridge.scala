@@ -8,11 +8,12 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
@@ -54,6 +55,23 @@ object ParquetBridge {
     val session = spark.asInstanceOf[ClassicSession]
     val (index, conf) = indexOf(session, root)
     dataSchema(session, index, conf)
+  }
+
+  /** The data files of each partition of a [[read]] frame, counted from
+    * the listing the read made (no listing, no job): each partition's
+    * values in `cols` order, with its file count. */
+  def filesPerPartition(df: DataFrame, cols: Seq[String]): Seq[(Row, Int)] = {
+    val index = df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location
+    }.getOrElse(throw new IllegalArgumentException("not a file-source read"))
+    val names = index.partitionSchema.fieldNames.map(_.toLowerCase)
+    val at = cols.map(c => names.indexOf(c.toLowerCase))
+    val toScala = CatalystTypeConverters.createToScalaConverter(index.partitionSchema)
+    index.listFiles(Nil, Nil).map { p =>
+      val values = toScala(p.values).asInstanceOf[Row]
+      Row.fromSeq(at.map(values.get)) -> p.files.size
+    }
   }
 
   /** The reader options `spark.read.parquet(root)` resolves with. */

@@ -1,11 +1,9 @@
 package graft.sources
 
 import java.io.{File, FileNotFoundException}
-import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
@@ -156,23 +154,23 @@ class PqRepoReadSpec extends SparkSpec {
     "own fails the read; ignoreMissingFiles reads without it") {
     val local = freshRepo()
     local.writePartitioned(rows, "s", "v", Seq("a"), modified = Some("v"))
-    spark.sparkContext.hadoopConfiguration.set("fs.vanish.impl", classOf[VanishingFs].getName)
-    val repo = PqRepo(spark, "vanish://" + local.dataDir)
+    CrashFs.register(spark)
+    val repo = PqRepo(spark, "crash://" + local.dataDir)
     val dir = new File(local.tablePath("s", "v").toUri.getPath)
     val parked = new File(dir, PqRepo.parkedName("a=2"))
     assert(repo.table("s", "v").count() == rows.count())
 
     // a partition swap parks a=2 right after the reader listed the root
-    VanishingFs.armed.set(Some(new File(dir, "a=2")))
+    CrashFs.vanish.set(Some(new File(dir, "a=2")))
     intercept[FileNotFoundException](repo.table("s", "v"))
-    assert(parked.exists() && VanishingFs.armed.get.isEmpty)
+    assert(parked.exists() && CrashFs.vanish.get.isEmpty)
 
     assert(parked.renameTo(new File(dir, "a=2")))
-    VanishingFs.armed.set(Some(new File(dir, "a=2")))
+    CrashFs.vanish.set(Some(new File(dir, "a=2")))
     spark.conf.set("spark.sql.files.ignoreMissingFiles", "true")
     try {
       val df = repo.table("s", "v")
-      assert(VanishingFs.armed.get.isEmpty)
+      assert(CrashFs.vanish.get.isEmpty)
       assert(df.select("a").distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
     } finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
   }
@@ -229,25 +227,4 @@ class PqRepoReadSpec extends SparkSpec {
     assert(index.centroids == cents)
     assert(index.assigned.count() == nlist * 8)
   }
-}
-
-/** The local file system under the `vanish` scheme. Once armed with a
-  * directory, the next listing of that directory's parent parks it as a
-  * partition swap does, right after the parent is listed: the window in
-  * which a concurrent swap takes a partition away from a reader. */
-class VanishingFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("vanish:///")
-
-  override def listStatus(f: Path): Array[FileStatus] = {
-    val out = super.listStatus(f)
-    VanishingFs.armed.get.filter(_.getParentFile == pathToFile(f)).foreach { d =>
-      VanishingFs.armed.set(None)
-      assert(d.renameTo(new File(d.getParentFile, PqRepo.parkedName(d.getName))))
-    }
-    out
-  }
-}
-
-object VanishingFs {
-  val armed = new AtomicReference[Option[File]](None)
 }

@@ -1,6 +1,9 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
@@ -42,12 +45,11 @@ object ExplainDump {
             a.executedPlan.toString
           case p => p.toString
         }
-        // keep the operator tree, drop per-node detail dumps
-        sb.append(plan.linesIterator.takeWhile(_.trim.nonEmpty)
-          .map(l => if (l.length > 160) l.take(157) + "..." else l)
-          .mkString("\n"))
+        // keep the operator tree, drop per-node detail dumps; lines stay
+        // whole, so a plan diff sees every expression
+        sb.append(plan.linesIterator.takeWhile(_.trim.nonEmpty).mkString("\n"))
       } catch {
-        case e: Throwable => sb.append(s"ERROR: ${e.getMessage}")
+        case NonFatal(e) => sb.append(s"ERROR: ${e.getMessage}")
       }
       sb.append("\n```\n")
     }

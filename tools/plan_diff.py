@@ -16,9 +16,10 @@ normalized so that two dumps of the same code compare equal:
 - AQE query-stage numbers (`ShuffleQueryStage 4`) and whole-stage-codegen
   ids (`*(7)`).
 
-ExplainDump cuts long lines at 157 characters and appends `...`; the cut
-falls at a different place once ids are normalized, so when both sides of
-a line are cut, only their common normalized prefix is compared.
+ExplainDump used to cut long lines at 157 characters and append `...`;
+the cut falls at a different place once ids are normalized, so when
+either side of a line is cut (a dump of older code), only the common
+normalized prefix is compared.
 
 Prints a unified diff for each query whose normalized tree differs (or
 that only one side has) and exits 1 if there is any, else 0.
@@ -44,8 +45,8 @@ _RULES = [
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N"),
     # Object.toString hash codes: "UnsafeArrayData@f1dd012b"
     (re.compile(r"(?<=[\w$])@[0-9a-f]{1,8}(?![0-9A-Za-z])"), "@H"),
-    # temp paths, up to the next delimiter (or the line cut)
-    (re.compile(r"(?:file:)?/tmp/[^\s,\])]*"), "<tmp>"),
+    # temp paths, up to the next delimiter (or the line cut, which stays)
+    (re.compile(r"(?:file:)?/tmp/[^\s,\])]*?(?=\.\.\.$|[\s,\])]|$)"), "<tmp>"),
 ]
 
 
@@ -82,16 +83,18 @@ def _cut(line):
 
 def align_cut_lines(a, b):
     """Copies of `a` and `b` where each pair of lines that ExplainDump cut
-    on both sides is trimmed to the length of the shorter one. The last
-    (possibly partial) token before a cut is dropped first."""
+    on either side is trimmed to the shortest cut prefix. The last
+    (possibly partial) token before a cut is dropped first. A whole line
+    shorter than that prefix stays whole, so it still differs."""
     if len(a) != len(b):
         return a, b
     a2, b2 = [], []
     for x, y in zip(a, b):
-        if _cut(x) and _cut(y):
-            x = re.sub(r"[^\s,()\[\]]*$", "", x[:-len(ELLIPSIS)])
-            y = re.sub(r"[^\s,()\[\]]*$", "", y[:-len(ELLIPSIS)])
-            n = min(len(x), len(y))
+        cut = [_cut(x), _cut(y)]
+        if any(cut):
+            x, y = [re.sub(r"[^\s,()\[\]]*$", "", v[:-len(ELLIPSIS)]) if c else v
+                    for v, c in zip((x, y), cut)]
+            n = min(len(v) for v, c in zip((x, y), cut) if c)
             x, y = x[:n] + ELLIPSIS, y[:n] + ELLIPSIS
         a2.append(x)
         b2.append(y)

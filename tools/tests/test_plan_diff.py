@@ -124,6 +124,29 @@ class PlanDiff(unittest.TestCase):
             [plan_diff.normalize_line(x) for x in c])
         self.assertNotEqual(a3, c3)
 
+    def test_a_cut_line_compares_with_a_whole_one_on_its_prefix(self):
+        # a dump of older code holds the cut line, a newer dump the whole
+        cut = ["+- Project [a#1234567, b#1234568, c#1234569, d#12..."]
+        whole = ["+- Project [a#1, b#2, c#3, d#4, e#5, f#6]"]
+        a2, b2 = plan_diff.align_cut_lines(
+            [plan_diff.normalize_line(x) for x in cut],
+            [plan_diff.normalize_line(x) for x in whole])
+        self.assertEqual(a2, b2)
+        # a cut inside a temp path keeps its cut mark
+        cut_tmp = ["+- FileScan parquet [] Location: InMemoryFileIndex[file:/tmp/x12/t.parq..."]
+        whole_tmp = ["+- FileScan parquet [] Location: InMemoryFileIndex[file:/tmp/y3/t.parquet], "
+                     "PartitionFilters: []"]
+        a4, b4 = plan_diff.align_cut_lines(
+            [plan_diff.normalize_line(x) for x in cut_tmp],
+            [plan_diff.normalize_line(x) for x in whole_tmp])
+        self.assertEqual(a4, b4)
+        # a whole line that ends inside the cut prefix still differs
+        short = ["+- Project [a#1]"]
+        a3, s3 = plan_diff.align_cut_lines(
+            [plan_diff.normalize_line(x) for x in cut],
+            [plan_diff.normalize_line(x) for x in short])
+        self.assertNotEqual(a3, s3)
+
     def test_dates_in_table_names_are_kept(self):
         self.assertEqual(
             plan_diff.normalize_line("BatchScan t.orders@20240501T060000Z[o#3]"),
