@@ -1247,42 +1247,29 @@ object Dedup {
           exactGroups(in.filter(eligible), col(idCol), col(textCol))
             .filter(col("n") >= 2)
             .select(losersOf(col("ids")).as("__loser"))
-        else if (verifyExact) {
-          // digest twin of the signature branch below: min/count partial
-          // aggregation (no per-group id list), digest-keyed join marks
-          // rows above their group minimum; a duplicated id equal to the
-          // min keeps all its rows, as losersOf's array_distinct did
-          val digs = fanOut(in.filter(eligible)
-            .select(col(idCol).as("__id"), col(textCol).as("__t")),
-            col("__id"))
-            .select(col("__id"), MinHash.contentDigest(col("__t")).as("__dig"))
-            .transform(materializeOnce)
-          val mins = digs.groupBy("__dig")
-            .agg(min(col("__id")).as("__minid"), count(lit(1)).as("__n"))
-            .filter(col("__n") >= 2)
-          // SHUFFLE_HASH: the min side is dup-class-sized (≤ one row per
-          // distinct duplicated content) — hash-buildable per partition;
-          // unhinted the planner sort-merge-joined the digest stream
-          digs.join(mins.hint("shuffle_hash"), Seq("__dig"))
-            .filter(col("__id") =!= col("__minid"))
-            .select(col("__id").as("__loser"))
-        } else {
-          val sig = MinHash.signature(col("__t"), shingleK, numHashes)
-          // no id list is ever built per signature: min/count partial-
-          // aggregate (a degenerate 10M-copy group previously grew one
-          // 10M-element collect_list buffer on a single task — the exact
-          // blowup the salted paths elsewhere exist to prevent), then a
-          // sig-keyed join marks every row above its group minimum. A
-          // duplicated id equal to the min keeps all its rows, as
-          // losersOf's array_distinct guard did.
-          val sigs = fanOut(in.filter(eligible)
+        else {
+          // no id list is ever built per content class: min/count
+          // partial-aggregate (a degenerate 10M-copy group previously grew
+          // one 10M-element collect_list buffer on a single task — the
+          // exact blowup the salted paths elsewhere exist to prevent),
+          // then a class-keyed join marks every row above its class
+          // minimum. A duplicated id equal to the min keeps all its rows,
+          // as losersOf's array_distinct guard did. The class key is the
+          // SHA-256 digest when verifying, else the signature surrogate.
+          val keyed = fanOut(in.filter(eligible)
             .select(col(idCol).as("__id"), col(textCol).as("__t")), col("__id"))
-            .select(col("__id"), sig.as("__sig"))
+            .select(col("__id"), (
+              if (verifyExact) MinHash.contentDigest(col("__t"))
+              else MinHash.signature(col("__t"), shingleK, numHashes)).as("__key"))
             .transform(materializeOnce)
-          val mins = sigs.groupBy("__sig")
+          val mins = keyed.groupBy("__key")
             .agg(min(col("__id")).as("__minid"), count(lit(1)).as("__n"))
             .filter(col("__n") >= 2)
-          sigs.join(mins, Seq("__sig"))
+          // SHUFFLE_HASH for digests: the min side is dup-class-sized (≤
+          // one row per distinct duplicated content) — hash-buildable per
+          // partition; unhinted the planner sort-merge-joined the digest
+          // stream
+          keyed.join(if (verifyExact) mins.hint("shuffle_hash") else mins, Seq("__key"))
             .filter(col("__id") =!= col("__minid"))
             .select(col("__id").as("__loser"))
         }

@@ -3,15 +3,14 @@ package graft.operators
 import scala.collection.immutable.ArraySeq
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{InSet, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.functions.MinHash
 import graft.functions.expressions.VectorKernels
-import graft.sources.PqRepo
+import graft.sources.{KeyedAppend, PqRepo}
+import graft.sources.KeyedAppend.inSet
 
 /** Persisted MinHash band index — the near-dup twin of the embedding
   * index lifecycle ([[Similarity.writeIvfIndex]] /
@@ -28,11 +27,13 @@ import graft.sources.PqRepo
   *     hits and candidate signatures, scored on the driver. The probe
   *     runs when the gate is called, and the batch must fit on the
   *     driver (`spark.driver.maxResultSize`);
-  *   - [[append]] signs and collects the batch the same way, probes
-  *     each table for the batch's keys with one pruned, filtered scan,
-  *     and lands rows the index does not hold as new files renamed into
-  *     their partitions (no current row is read or rewritten), so
-  *     tomorrow's batch gates against today's too.
+  *   - [[append]] signs and collects the batch the same way and lands
+  *     it in each table through the repo's keyed append
+  *     ([[graft.sources.KeyedAppend]], shared with the embedding
+  *     indexes): one pruned, filtered scan per table probes for the
+  *     batch's keys, and rows the index does not hold land as new files
+  *     renamed into their partitions (no current row is read or
+  *     rewritten), so tomorrow's batch gates against today's too.
   *
   * On-disk layout under `<schema>/`:
   *   - `<name>_mhdocs`  — (id, sig array<bigint>, dig binary(32),
@@ -172,14 +173,11 @@ object MinHashIndex {
     *   2. one pruned, filtered scan of each table collects the index rows
     *      that hold one of the batch's keys: `_mhdocs` by `dbucket` and
     *      `id`, `_mhbands` by `bucket`, `bh` and `id`;
-    *   3. each table decides its own inserts from its own probe. A row
-    *      whose key the table does not hold is an insert: its files are
-    *      renamed into their partition directory and no current row is
-    *      read or rewritten. A row whose key the table holds with exactly
-    *      the same rows is already indexed and drops out (an unchanged
-    *      re-ingest). Any other key hit — and every null id, which
-    *      matches null-safely — rewrites its partition through the
-    *      repo's copy-on-write swap ([[PqRepo.mergeIntoPartitions]]).
+    *   3. each table lands its rows through the repo's keyed append
+    *      ([[KeyedAppend]]), from its own probe: a key the table does not
+    *      hold lands as new files, a key it holds with exactly the same
+    *      rows drops out (an unchanged re-ingest), and any other hit,
+    *      like every null id, rewrites its partition.
     *
     * The result is the partition-scoped merge keyed on `(id, dbucket)`
     * and `(id, band, bh, bucket)`: append is idempotent, and
@@ -207,10 +205,7 @@ object MinHashIndex {
     val g = geometry(repo, schema, name)
     // the probes must see every indexed row: heal a crashed earlier
     // commit first, as the merge engine would
-    Seq(docsTable(name), bandsTable(name)).foreach { t =>
-      repo.recoverWrite(schema, t)
-      repo.recoverMergePartitioned(schema, t)
-    }
+    Seq(docsTable(name), bandsTable(name)).foreach(repo.recover(schema, _))
     val docsIdx = repo.table(schema, docsTable(name))
     val bandsIdx = repo.table(schema, bandsTable(name))
     // ids take the index's type, so the probes' matches compare like values
@@ -223,29 +218,33 @@ object MinHashIndex {
     val rows = docs.withColumn("bands", bandKeys(col("sig"), g))
       .collect() // bounded: the batch (see scaladoc)
     if (rows.isEmpty) return
-    val docSide = Side(docsTable(name), docs.schema,
-      rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3))),
-      key = Seq("id", "dbucket"), same = Seq("id", "dig", "dbucket"), partition = "dbucket")
-    val bandSide = Side(bandsTable(name),
-      StructType(Seq(idField, StructField("band", IntegerType),
-        StructField("bh", LongType), StructField("bucket", IntegerType))),
-      rows.toSeq.filter(!_.isNullAt(1)).flatMap(r => r.getSeq[Row](4)
+    def local(rs: Seq[Row], rowType: StructType) =
+      batch.sparkSession.createDataFrame(java.util.Arrays.asList(rs: _*), rowType)
+    val docsIn = new KeyedAppend(repo, schema, docsTable(name), docsIdx,
+      local(rows.toSeq.map(r => Row(r.get(0), r.get(1), r.get(2), r.get(3))), docs.schema),
+      key = Seq("id", "dbucket"), partition = "dbucket",
+      // the signature is a function of the digest, which stands for both
+      same = Seq("id", "dig", "dbucket"))
+    val bandKey = Seq("id", "band", "bh", "bucket")
+    val bandsIn = new KeyedAppend(repo, schema, bandsTable(name), bandsIdx,
+      local(rows.toSeq.filter(!_.isNullAt(1)).flatMap(r => r.getSeq[Row](4)
         .map(b => Row(r.get(0), b.getInt(0), b.getLong(1), b.getInt(2)))),
-      key = Seq("id", "band", "bh", "bucket"), same = Seq("id", "band", "bh", "bucket"),
-      partition = "bucket")
+        StructType(Seq(idField, StructField("band", IntegerType),
+          StructField("bh", LongType), StructField("bucket", IntegerType)))),
+      key = bandKey, partition = "bucket", same = bandKey)
     // the two tables are probed, and later land, OVERLAPPED (guide §2.6):
     // with the probes and the writes each run one after the other, the
     // corpus_dedup benchmark's append p50 measured 39% slower
     val (storedDocs, storedBands) = graft.Par.run2(
-      docSide.probe(docsIdx, inSet(col("dbucket"), docSide.column("dbucket"))),
-      bandSide.probe(bandsIdx, inSet(col("bucket"), bandSide.column("bucket")) &&
-        inSet(col("bh"), bandSide.column("bh"))))
+      docsIn.probe(inSet(col("dbucket"), docsIn.values("dbucket"))),
+      bandsIn.probe(inSet(col("bucket"), bandsIn.values("bucket")) &&
+        inSet(col("bh"), bandsIn.values("bh"))))
     if (checkChanged) {
       // an indexed row of the same id with another digest (null-safe)
-      val changed = docSide.rows.iterator
-        .filter(r => storedDocs.get(docSide.keyOf(r))
-          .exists(_.keys.exists(_(1) != docSide.sameOf(r)(1))))
-        .map(_.get(0)).distinct.take(5).toSeq
+      val storedDigs = storedDocs.groupMap(_.head)(docsIn.value(_, "dig"))
+      val changed = docsIn.rows.iterator
+        .filter(r => storedDigs.get(r.head).exists(_.exists(_ != docsIn.value(r, "dig"))))
+        .map(_.head).distinct.take(5).toSeq
       if (changed.nonEmpty)
         throw new IllegalStateException(
           s"MinHashIndex.append($schema/$name): batch re-ingests ids whose " +
@@ -255,87 +254,14 @@ object MinHashIndex {
             "Rebuild via MinHashIndex.write, or pass checkChanged = false " +
             "only for provably append-only feeds")
     }
-    graft.Par.run2(
-      docSide.land(repo, schema, docsIdx, storedDocs),
-      bandSide.land(repo, schema, bandsIdx, storedBands))
+    graft.Par.run2(docsIn.land(storedDocs), bandsIn.land(storedBands))
   }
-
-  /** One index table's side of an [[append]]: the batch's rows in the
-    * table's column order (`id` first), the key columns the table merges
-    * on, `same` — the key plus the columns in which two rows with one key
-    * can differ (the docs table's signature is a function of its digest,
-    * so the digest stands for both) — and its partition column. */
-  private final case class Side(table: String, rowType: StructType, rows: Seq[Row],
-      key: Seq[String], same: Seq[String], partition: String) {
-    private val keyAt = key.map(rowType.fieldIndex)
-    private val sameAt = same.map(rowType.fieldIndex)
-    private val keyInSame = key.map(same.indexOf)
-
-    def keyOf(r: Row): Seq[Any] = values(r, keyAt)
-    def sameOf(r: Row): Seq[Any] = values(r, sameAt)
-    def column(c: String): Seq[Any] = rows.map(_.get(rowType.fieldIndex(c))).distinct
-
-    /** The indexed rows of the batch's keys, as a multiset of `same`
-      * tuples per key: one scan, pruned and filtered by `filter` and the
-      * batch's non-null ids. A null id matches nothing here. */
-    def probe(index: DataFrame, filter: Column): Map[Seq[Any], Map[Seq[Any], Int]] = {
-      val ids = rows.iterator.map(_.get(0)).filter(_ != null).toSet
-      if (ids.isEmpty) return Map.empty
-      val keys = rows.map(keyOf).toSet
-      index.filter(filter && inSet(col("id"), ids))
-        .select(same.map(col): _*)
-        .collect() // bounded: indexed rows sharing an id with the batch
-        .toSeq.map(values(_, same.indices))
-        .filter(s => keys(keyInSame.map(s)))
-        .groupBy(s => keyInSame.map(s)).view.mapValues(counts).toMap
-    }
-
-    /** Land the rows in the table: a key it holds with exactly these
-      * rows drops out, a key it does not hold is an insert, and every
-      * other key — and every null id, which matches null-safely —
-      * rewrites its partition. */
-    def land(repo: PqRepo, schema: String, index: DataFrame,
-        stored: Map[Seq[Any], Map[Seq[Any], Int]]): Unit = {
-      val landed = rows.groupBy(keyOf).toSeq.filter { case (k, rs) =>
-        k.head == null || !stored.get(k).contains(counts(rs.map(sameOf)))
-      }
-      if (landed.isEmpty) return
-      val p = rowType.fieldIndex(partition)
-      def partitionOf(rs: Seq[Row]) = Row(rs.head.get(p))
-      val updates = index.sparkSession
-        .createDataFrame(java.util.Arrays.asList(landed.flatMap(_._2): _*), rowType)
-        .coalesce(1)
-      repo.mergeIntoPartitions(updates, schema, table, key, Seq(partition),
-        affected = landed.collect {
-          case (k, rs) if k.head == null || stored.contains(k) => partitionOf(rs)
-        }.distinct,
-        currentFull = Some(index),
-        inserted = landed.map(l => partitionOf(l._2)).distinct)
-    }
-  }
-
-  /** Driver-side values of `r` at `at`, binary wrapped so equality
-    * compares content. */
-  private def values(r: Row, at: Seq[Int]): Seq[Any] = at.map(i => r.get(i) match {
-    case b: Array[Byte] => ArraySeq.unsafeWrapArray(b)
-    case v => v
-  })
-
-  private def counts[A](xs: Seq[A]): Map[A, Int] = xs.groupMapReduce(identity)(_ => 1)(_ + _)
 
   /** The band keys of a signature, one `(band, bh, bucket)` struct per
     * band: the rows [[bandRows]] indexes, as one array per doc. */
   private def bandKeys(sig: Column, g: Geometry): Column =
     transform(MinHash.bandHashes(sig, g.bands, g.rows), (bh, band) =>
       struct(band.as("band"), bh.as("bh"), bandBucket(band, bh, g).as("bucket")))
-
-  /** `c IN values` as one [[InSet]] over catalyst values. The probe
-    * sets are batch-sized (one band hash per band per batch doc); as an
-    * IN list each value would be a literal node in the plan. Parquet
-    * pushdown and partition pruning read InSet as they read IN. */
-  private[operators] def inSet(c: Column, values: Iterable[Any]): Column =
-    ColumnBridge.column(InSet(ColumnBridge.expression(c),
-      values.iterator.map(CatalystTypeConverters.convertToCatalyst).toSet))
 
   /** Gate a daily batch: drop every batch row whose content is an exact
     * or near duplicate (estimated Jaccard ≥ `threshold`) of an INDEXED

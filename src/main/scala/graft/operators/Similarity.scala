@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
+import graft.sources.KeyedAppend
+import graft.sources.KeyedAppend.inSet
 
 /** Similarity search over embedding columns.
   *
@@ -410,19 +412,18 @@ object Similarity {
   /** Sidecar property recording the bucket count a persisted quantized
     * index was hash-partitioned with — [[appendToQuantizedIndex]] must
     * bucket its batch with the SAME modulus or merge keys would miss. */
-  private val Q8BucketsProp = "q8.numBuckets"
+  private[operators] val Q8BucketsProp = "q8.numBuckets"
 
-  private def q8Bucket(idCol: String, numBuckets: Int) =
+  private[operators] def q8Bucket(idCol: String, numBuckets: Int) =
     pmod(xxhash64(col(idCol)), lit(numBuckets.toLong)).cast("int").as("bucket")
 
   /** Build and persist the int8 quantized index as `<schema>/<name>_q8`,
     * hash-partitioned into `numBuckets` directories on
     * `pmod(xxhash64(id), numBuckets)`. The bucket layout exists for
-    * [[appendToQuantizedIndex]]: an incremental batch rewrites only the
-    * bucket directories its ids hash into, never the whole index — at
-    * 100 TB of embeddings a 0.1% daily batch must not trigger a full
-    * copy-on-write of all codes (the defect class
-    * [[graft.sources.PqRepo.mergePartitioned]] exists to remove). The
+    * [[appendToQuantizedIndex]]: its probe scans only the bucket
+    * directories the batch's ids hash into, new ids land as new files,
+    * and only a bucket holding a re-ingested id is rewritten — at 100 TB
+    * of embeddings a 0.1% daily batch must not copy all codes. The
     * bucket count is stamped in the table's meta sidecar so appends
     * can't silently bucket with a different modulus. Search reads are
     * unchanged: [[readQuantizedIndex]] hides the bucket column. */
@@ -478,16 +479,12 @@ object Similarity {
     * re-trains — a drifted corpus re-trains via [[ivfBuild]] +
     * [[writeIvfIndex]]) and its cost follows the batch, not the index:
     * the assigned batch is materialized once on the executors (an
-    * embedding batch can be far larger than the driver), only its
-    * `(id, cluster)` pairs are collected, and one id-filtered scan of the
-    * index's `(id, cluster)` columns finds the indexed rows of its ids.
-    * A new id is an insert: its files are renamed into its cluster
-    * partition and no current row is read or rewritten. A re-ingested id
-    * in its indexed cluster (its vector may have changed), and every
-    * null id, rewrites that cluster through the repo's crash-recoverable
-    * copy-on-write swap ([[graft.sources.PqRepo.mergeIntoPartitions]]).
-    * The result is the merge keyed on `(id, cluster)`, so re-ingesting
-    * an unchanged vector is idempotent.
+    * embedding batch can be far larger than the driver) and lands
+    * through the repo's keyed append ([[KeyedAppend]]) on `(id,
+    * cluster)`: one id-filtered thin scan probes the index, a new id
+    * lands as new files, and only a cluster holding a re-ingested id (or
+    * a null id) is rewritten. Re-ingesting an unchanged vector is
+    * idempotent.
     *
     * A re-ingested id whose EMBEDDING changed enough to move clusters
     * would land a SECOND row while its stale row survives in a partition
@@ -504,63 +501,55 @@ object Similarity {
       vecCol: String,
       schema: String,
       name: String,
-      checkMoved: Boolean = true): Unit = {
-    val table = s"${name}_ivf"
-    // the probe must see every indexed row: heal a crashed earlier
-    // commit first, as the merge engine would
-    repo.recoverWrite(schema, table)
-    repo.recoverMergePartitioned(schema, table)
-    val index = readIvfIndex(repo, schema, name)
-    // materialized once: the collect and the write must see the same
-    // rows, whatever the caller's batch does on re-execution. Ids take
-    // the index's type, so the probe's matches compare like values.
-    val assigned = Dedup.materializeOnce(assignClusters(
-      batch.select(col(idCol).cast(index.assigned.schema("id").dataType).as("id"),
-        col(vecCol).as("v")), index.centroids))
-    val keys = assigned.select(col("id"), col("cluster")).collect()
-      .map(r => (r.get(0), r.getInt(1))) // bounded: two thin columns per batch row
-    if (keys.isEmpty) return
-    val ids = keys.iterator.map(_._1).filter(_ != null).toSet
-    val indexed =
-      if (ids.isEmpty) Array.empty[(Any, Int)]
-      else index.assigned.filter(MinHashIndex.inSet(col("id"), ids))
-        .select(col("id"), col("cluster")).collect()
-        .map(r => (r.get(0), r.getInt(1))) // bounded: indexed rows of batch ids
-    if (checkMoved) {
-      val batchClusters = keys.toSeq.groupMap(_._1)(_._2)
-      val moved = indexed.iterator.flatMap { case (id, old) =>
-        batchClusters.getOrElse(id, Nil).filter(_ != old).map(c => s"$id: $old -> $c")
+      checkMoved: Boolean = true): Unit =
+    clusterAppend(repo, batch, idCol, vecCol, schema, s"${name}_ivf", Seq("id", "cluster"),
+      Option.when(checkMoved)(s"appendToIvfIndex($schema/$name)" ->
+        ("Use reassignIvfIndex (bounded rewrite of the old + new cluster " +
+          "partitions), re-train via ivfBuild + writeIvfIndex if the corpus drifted"))) {
+      val index = readIvfIndex(repo, schema, name)
+      (index.assigned, index.centroids, identity)
+    }
+
+  /** The keyed append ([[KeyedAppend]]) of an embedding batch into the
+    * cluster-partitioned `table`, which `read` reads (rows, centroids,
+    * the batch's encoding) after a crashed earlier commit is healed, so
+    * the probe sees every indexed row. The batch's ids take the index's
+    * type, so the probe's matches compare like values; it is assigned,
+    * encoded and materialized once (the probe's collect and the write
+    * must see the same rows, whatever the batch does on re-execution).
+    *
+    * `guard` (the operation and its remedy) is the moved-cluster guard:
+    * it fails, before anything is written, when an indexed row of a
+    * batch id sits in another cluster than the batch assigns the id to,
+    * a stale row no rewritten partition would drop. */
+  private def clusterAppend(repo: graft.sources.PqRepo, batch: DataFrame, idCol: String,
+      vecCol: String, schema: String, table: String, key: Seq[String],
+      guard: Option[(String, String)])(
+      read: => (DataFrame, Seq[(Int, Seq[Double])], DataFrame => DataFrame)): Unit = {
+    repo.recover(schema, table)
+    val (index, cents, encode) = read
+    val append = new KeyedAppend(repo, schema, table, index,
+      Dedup.materializeOnce(encode(assignClusters(
+        batch.select(col(idCol).cast(index.schema("id").dataType).as("id"),
+          col(vecCol).as("v")), cents))),
+      key, partition = "cluster")
+    val indexed = append.probe()
+    guard.foreach { case (op, remedy) =>
+      val batchClusters = append.rows.groupMap(_.head)(append.value(_, "cluster"))
+      val moved = indexed.iterator.flatMap { r =>
+        val old = append.value(r, "cluster")
+        batchClusters.getOrElse(r.head, Nil).filter(_ != old).map(c => s"${r.head}: $old -> $c")
       }.take(5).toSeq
       if (moved.nonEmpty)
         throw new IllegalStateException(
-          s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
-            s"embeddings moved clusters [${moved.mkString(", ")}" +
-            s"${if (moved.length == 5) ", …" else ""}] — the stale rows " +
-            "would survive in partitions this append never rewrites. Use " +
-            "reassignIvfIndex (bounded rewrite of the old + new cluster " +
-            "partitions), re-train via ivfBuild + writeIvfIndex if the " +
-            "corpus drifted, or pass checkMoved = false only for provably " +
-            "append-only feeds")
+          s"$op: batch re-ingests ids whose embeddings moved clusters " +
+            s"[${moved.mkString(", ")}${if (moved.length == 5) ", …" else ""}] — " +
+            "the stale rows would survive in partitions this append never " +
+            s"rewrites. $remedy, or pass checkMoved = false only for " +
+            "provably append-only feeds")
     }
-    val hit = indexed.toSet
-    repo.mergeIntoPartitions(assigned, schema, table,
-      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"),
-      affected = keys.collect { case k if k._1 == null || hit(k) => Row(k._2) }
-        .distinct.toSeq,
-      currentFull = Some(index.assigned),
-      inserted = keys.map(k => Row(k._2)).distinct.toSeq)
+    append.land(indexed)
   }
-
-  /** The moved-id guard of the IVF append paths: up to 5 (id, old
-    * cluster, new cluster) rows whose batch assignment differs from the
-    * indexed one — a thin two-column join, nothing vector-sized moves. */
-  private def movedIds(
-      indexed: DataFrame, assigned: DataFrame): Array[org.apache.spark.sql.Row] =
-    indexed.select(col("id"), col("cluster").as("__old"))
-      .join(assigned.select(col("id"), col("cluster")), Seq("id"))
-      .filter(col("__old") =!= col("cluster"))
-      .select(col("id"), col("__old"), col("cluster"))
-      .limit(5).collect()
 
   /** Re-ingest a batch whose embeddings may have MOVED clusters — the
     * remedy [[appendToIvfIndex]]'s moved-id guard points at, short of a
@@ -570,57 +559,43 @@ object Similarity {
     * the cluster its new embedding assigns to, and its stale row is
     * deleted from the old cluster partition.
     *
-    * Scale shape — a bounded rewrite, not a rebuild: the detection join
-    * ((id, cluster) both sides — column-pruned thin scans, nothing
-    * vector-sized moves) yields the old clusters of moved ids; those
-    * partitions plus the batch's new clusters (≤ 2·nlist values,
-    * collected driver-side) form the rewrite scope handed to the repo's
-    * manifest-recorded partition swap. Untouched cluster partitions are
-    * never read or rewritten (byte-identical on disk — spec-verified),
-    * and every crash point recovers exactly like [[appendToIvfIndex]]'s.
-    * The safety obligation of merging on `id` alone is met by
-    * construction: a matched current row lives either in the batch row's
-    * new cluster (unmoved) or in a detected old cluster (moved) — both
-    * in scope. */
+    * Scale shape — a bounded rewrite, not a rebuild: [[appendToIvfIndex]]'s
+    * keyed append, keyed on `id` alone and unguarded. Its probe finds
+    * every indexed row of a batch id, so the stale rows' clusters are
+    * rewritten and each batch row lands in its new one; a new id is an
+    * insert, and a null id rewrites only the cluster its row lands in.
+    * Untouched cluster partitions are never read or rewritten
+    * (byte-identical on disk — spec-verified), and every crash point
+    * recovers exactly like [[appendToIvfIndex]]'s. */
   def reassignIvfIndex(
       repo: graft.sources.PqRepo,
       batch: DataFrame,
       idCol: String,
       vecCol: String,
       schema: String,
-      name: String): Unit = {
-    val index = readIvfIndex(repo, schema, name)
-    // materialized once: the affected-cluster collect and the write must
-    // see the same rows, whatever the caller's batch does on re-execution
-    val assigned = Dedup.materializeOnce(assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), index.centroids))
-    val oldClusters = index.assigned.select(col("id"), col("cluster"))
-      .join(assigned.select(col("id"), col("cluster").as("__new")), Seq("id"))
-      .filter(col("cluster") =!= col("__new"))
-      .select(col("cluster"))
-    val affected = assigned.select(col("cluster"))
-      .unionByName(oldClusters).distinct().collect() // bounded: ≤ 2·nlist
-    if (affected.isEmpty) return
-    repo.mergeIntoPartitions(assigned, schema, s"${name}_ivf",
-      keys = Seq("id"), partitionCols = Seq("cluster"),
-      affected = affected.toSeq)
-  }
+      name: String): Unit =
+    clusterAppend(repo, batch, idCol, vecCol, schema, s"${name}_ivf", Seq("id"), None) {
+      val index = readIvfIndex(repo, schema, name)
+      (index.assigned, index.centroids, identity)
+    }
 
   /** Incrementally append/upsert a batch into a persisted quantized
     * index: codes derive only from the batch, and the bucket-scoped repo
     * merge replaces rows by id — re-quantizing an updated document's
     * embedding updates its codes in place.
     *
-    * Scale shape: the batch is bucketed with the modulus recorded in the
-    * index's meta sidecar, and [[graft.sources.PqRepo.mergePartitioned]]
-    * on (id, bucket) rewrites ONLY the bucket directories the batch's
-    * ids hash into — untouched buckets' files stay byte-identical on
-    * disk (spec-verified). The bucket is a pure function of the id, so a
-    * key can never move partitions and the merge is exactly whole-table
-    * upsert semantics. A missing index bootstraps via
-    * [[writeQuantizedIndex]]; an index written by a pre-bucketed build
-    * (no sidecar) fails loudly — rebuild it rather than silently
-    * rewriting the whole table per batch. */
+    * Scale shape: the batch's ids take the index's type, and it is coded
+    * once (materialized) and bucketed with the modulus recorded in the
+    * index's meta sidecar. It lands through the repo's keyed append
+    * ([[KeyedAppend]]) on (id, bucket): a probe pruned to the batch's
+    * buckets finds the ids already indexed, new ids land as new files,
+    * and only a bucket holding a re-ingested id is rewritten — other
+    * buckets' files stay byte-identical on disk (spec-verified). The
+    * bucket is a pure function of the id, so a key can never move
+    * partitions: whole-table upsert semantics. A missing index
+    * bootstraps via [[writeQuantizedIndex]]; an index written by a
+    * pre-bucketed build (no sidecar) fails loudly — rebuild it rather
+    * than silently rewriting the whole table per batch. */
   def appendToQuantizedIndex(
       repo: graft.sources.PqRepo,
       batch: DataFrame,
@@ -629,11 +604,8 @@ object Similarity {
       schema: String,
       name: String): Unit = {
     val table = s"${name}_q8"
-    val destMissing = repo.list(schema).forall(_ != table)
-    if (destMissing) {
-      writeQuantizedIndex(repo, batch, idCol, vecCol, schema, name)
-      return
-    }
+    if (!repo.list(schema).contains(table))
+      return writeQuantizedIndex(repo, batch, idCol, vecCol, schema, name)
     val numBuckets = repo.readTableMeta(schema, table).get(Q8BucketsProp) match {
       case Some(n) => n.toInt
       case None => throw new IllegalStateException(
@@ -643,10 +615,15 @@ object Similarity {
           "guessed modulus would split ids across buckets, and a flat merge " +
           "would rewrite the entire index)")
     }
-    val coded = quantize(batch, idCol, vecCol)
-      .withColumn("bucket", q8Bucket(idCol, numBuckets))
-    repo.mergePartitioned(coded, schema, table,
-      keys = Seq(idCol, "bucket"), partitionCols = Seq("bucket"))
+    repo.recover(schema, table)
+    val index = repo.table(schema, table)
+    // ids take the index's type before they are bucketed and probed
+    val append = new KeyedAppend(repo, schema, table, index,
+      Dedup.materializeOnce(quantize(
+        batch.select(col(idCol).cast(index.schema(idCol).dataType).as(idCol), col(vecCol)),
+        idCol, vecCol).withColumn("bucket", q8Bucket(idCol, numBuckets))),
+      key = Seq(idCol, "bucket"), partition = "bucket")
+    append.land(append.probe(inSet(col("bucket"), append.values("bucket"))))
   }
 
   /** Reload a persisted IVF index in one Spark job, the centroid collect.
@@ -1121,7 +1098,7 @@ object Similarity {
     * (Jégou et al. 2011 §IV-A). A broadcast join with the
     * centroid-count-sized table plus one codegen'd `zip_with`: no
     * shuffle, corpus never collected. */
-  private def withResidual(
+  private[operators] def withResidual(
       assigned: DataFrame,
       centroids: Seq[(Int, Seq[Double])]): DataFrame = {
     val spark = assigned.sparkSession
@@ -1332,13 +1309,11 @@ object Similarity {
     * PQ layout: the batch assigns against the FROZEN centroids and
     * encodes with the FROZEN codebooks (the index geometry is fixed
     * between re-trains — a drifted corpus re-trains via [[ivfBuild]] +
-    * [[pqTrain]] + [[writeIvfPqIndex]]) and lands through the repo's
-    * partition-scoped merge on (id, cluster): only the cluster
-    * directories the batch touches rewrite, re-ingest is idempotent.
-    * `checkMoved` (default on) is [[appendToIvfIndex]]'s moved-cluster
-    * guard — a re-ingested id whose embedding moved clusters would
-    * leave its stale codes in an untouched partition; the thin
-    * (id, cluster) join detects it and aborts before disk. */
+    * [[pqTrain]] + [[writeIvfPqIndex]]). The coded batch is
+    * materialized once and lands exactly as [[appendToIvfIndex]]'s does,
+    * guarded by the same `checkMoved`: a re-ingested id whose embedding
+    * moved clusters would leave its stale codes in an untouched
+    * partition. */
   def appendToIvfPqIndex(
       repo: graft.sources.PqRepo,
       batch: DataFrame,
@@ -1346,38 +1321,21 @@ object Similarity {
       vecCol: String,
       schema: String,
       name: String,
-      checkMoved: Boolean = true): Unit = {
-    val IvfPqIndexData(cents, books, coded, residual) =
-      readIvfPqIndex(repo, schema, name)
-    // materialized once, as in appendToIvfIndex
-    val assigned = Dedup.materializeOnce(assignClusters(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), cents))
-    val movedSample =
-      if (!checkMoved) Array.empty[org.apache.spark.sql.Row]
-      else movedIds(coded, assigned)
-    if (movedSample.nonEmpty) {
-      val shown = movedSample.map(r =>
-        s"${r.get(0)}: ${r.get(1)} -> ${r.get(2)}").mkString(", ")
-      throw new IllegalStateException(
-        s"appendToIvfPqIndex($schema/$name): batch re-ingests ids whose " +
-          s"embeddings moved clusters [$shown${if (movedSample.length == 5) ", …" else ""}] — " +
-          "stale codes would survive in partitions this merge never " +
-          "rewrites. Re-train via ivfBuild + pqTrain + writeIvfPqIndex " +
-          "if the corpus drifted, or pass checkMoved = false only for " +
-          "provably append-only feeds")
+      checkMoved: Boolean = true): Unit =
+    clusterAppend(repo, batch, idCol, vecCol, schema, s"${name}_ivfpq", Seq("id", "cluster"),
+      Option.when(checkMoved)(s"appendToIvfPqIndex($schema/$name)" ->
+        "Re-train via ivfBuild + pqTrain + writeIvfPqIndex if the corpus drifted")) {
+      val IvfPqIndexData(cents, books, coded, residual) = readIvfPqIndex(repo, schema, name)
+      // encode with the layout the index was WRITTEN with: a residual
+      // index's batch quantizes x − centroid under the same frozen
+      // geometry (the flag comes from the persisted meta, never the caller)
+      (coded, cents, assigned =>
+        if (residual)
+          withResidual(assigned, cents).select(col("id"), col("cluster"),
+            VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
+        else assigned.select(col("id"), col("cluster"),
+          VectorFunctions.pqEncode(col("v"), books.books).as("codes")))
     }
-    // encode with the layout the index was WRITTEN with: a residual
-    // index's batch quantizes x − centroid under the same frozen
-    // geometry (the flag comes from the persisted meta, never the caller)
-    val codedBatch =
-      if (residual)
-        withResidual(assigned, cents).select(col("id"), col("cluster"),
-          VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
-      else assigned.select(col("id"), col("cluster"),
-        VectorFunctions.pqEncode(col("v"), books.books).as("codes"))
-    repo.mergePartitioned(codedBatch, schema, s"${name}_ivfpq",
-      keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
-  }
 
   /** IVF-PQ search over a persisted index: each query probes its
     * `nprobe` nearest clusters (the partition-pruned equi-join of

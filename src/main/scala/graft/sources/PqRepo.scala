@@ -634,8 +634,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // a manifest from a crashed previous merge — or a whole-table promote
     // that crashed mid-swap: roll both forward first, so the current-side
     // read below sees a consistent table
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
+    recover(schema, table)
     if (!f.exists(dest))
       return writePartitioned(updates, schema, table, partitionCols, modified)
 
@@ -658,13 +657,14 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       affected, modified, allowMissingColumns, Some(current))
   }
 
-  /** The partition-scoped merge ENGINE, shared by [[mergePartitioned]]
-    * (affected = the updates' own partition tuples; `partitionCols ⊆
-    * keys` makes that sufficient), by the index appends (affected = the
-    * partitions holding one of the batch's keys) and by callers that
-    * merge on a key the partition value is NOT a function of — e.g. IVF
-    * reassignment, where a re-ingested id must vanish from its OLD
-    * cluster partition while landing in its new one.
+  /** The partition-scoped merge ENGINE. It has two callers:
+    * [[mergePartitioned]] (affected = the updates' own partition tuples;
+    * `partitionCols ⊆ keys` makes that sufficient) and [[KeyedAppend]],
+    * the keyed append of every persisted index (affected = the
+    * partitions where its probe found one of the batch's keys). The
+    * latter also merges on keys the partition value is NOT a function
+    * of: IVF reassignment, where a re-ingested id must vanish from its
+    * OLD cluster partition while landing in its new one.
     *
     * `affected` names the partitions to REWRITE: their current rows are
     * merged with the updates that fall in them and swapped in through
@@ -675,8 +675,8 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * safety obligation the `partitionCols ⊆ keys` rule otherwise
     * enforces: every current row whose key tuple matches an updates row
     * must live in one of `affected`'s partitions, or that row survives
-    * beside its replacement (exactly the corruption appendToIvfIndex's
-    * moved-id guard detects).
+    * beside its replacement (exactly the corruption the IVF appends'
+    * moved-cluster guard detects).
     *
     * `inserted` names partitions the caller knows receive inserts. One
     * of them that already holds [[PqRepo.FoldFiles]] or more data files joins
@@ -703,8 +703,8 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       allowMissingColumns: Boolean = false,
       // a caller that already resolved the destination (mergePartitioned's
       // validation read, an append's probe) passes it here so the table is
-      // listed once per merge, not twice; None re-reads (direct engine
-      // callers). MUST have been created after recovery ran on this table.
+      // listed once per merge, not twice; None re-reads. MUST have been
+      // created after recovery ran on this table.
       currentFull: Option[DataFrame] = None,
       inserted: Seq[Row] = Nil
   ): Path = {
@@ -716,8 +716,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // layout + manifest below would permanently lose a partition whose
     // merged data still lived only in tmp. mergePartitioned runs these at
     // entry too (both are fast no-ops on a clean table).
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
+    recover(schema, table)
     graft.InternalCols.requireAbsent(updates, "PqRepo.mergeIntoPartitions", ModeCol)
     val currentAll = currentFull.getOrElse(ParquetBridge.read(spark, dest))
     val crowded =
@@ -777,6 +776,14 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     f.delete(tmp, true)
     f.delete(mergeManifestPath(schema, table), false)
     dest
+  }
+
+  /** Heal a crashed earlier promote ([[recoverWrite]]) and merge
+    * ([[recoverMergePartitioned]]) of a table, so a read after it sees
+    * every row. */
+  private[graft] def recover(schema: String, table: String): Unit = {
+    recoverWrite(schema, table)
+    recoverMergePartitioned(schema, table)
   }
 
   /** The synthetic leading partition column of the merge engine's tmp
@@ -1268,9 +1275,6 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
 
 object PqRepo {
 
-  /** One partition directory a merge commits: `src` (relative to the tmp
-    * layout) replaces `dir`, or with `add` joins its files to it; with
-    * no `src` the partition came out empty and `dir` ends absent. */
   /** Data files at which a partition that receives inserts is rewritten
     * instead (see [[PqRepo.mergeIntoPartitions]]). Every extra file per
     * partition slows the index reads: on a 6k-doc MinHash index (8
@@ -1283,6 +1287,9 @@ object PqRepo {
     * partition folds back at 4 files. */
   private[graft] val FoldFiles = 4
 
+  /** One partition directory a merge commits: `src` (relative to the tmp
+    * layout) replaces `dir`, or with `add` joins its files to it; with
+    * no `src` the partition came out empty and `dir` ends absent. */
   private[sources] final case class PartitionMove(
       dir: String, src: Option[String], add: Boolean = false)
 

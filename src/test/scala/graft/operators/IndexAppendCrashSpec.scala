@@ -45,8 +45,10 @@ class IndexAppendCrashSpec extends SparkSpec {
         n == "_merge_manifest.json").toSeq
 
   /** Walk every crash point of `op` on a copy of the fixture repo built by
-    * `build`; `rows` snapshots the tables `op` writes. */
-  private def walk(name: String, tables: Seq[String], rows: PqRepo => Seq[Seq[String]])(
+    * `build`; `rows` snapshots the tables `op` writes. With a `reference`,
+    * the uncrashed result must equal what it leaves on another copy. */
+  private def walk(name: String, tables: Seq[String], rows: PqRepo => Seq[Seq[String]],
+      reference: Option[PqRepo => Unit] = None)(
       build: PqRepo => Unit)(op: PqRepo => Unit): Seq[Seq[String]] = {
     CrashFs.register(spark)
     val fixture = Files.createTempDirectory(s"crash_$name")
@@ -61,6 +63,11 @@ class IndexAppendCrashSpec extends SparkSpec {
     val clean = fresh()
     val n = CrashFs.run(0)(op(clean))
     val after = rows(clean)
+    reference.foreach { ref =>
+      val repo = fresh()
+      ref(repo)
+      assert(rows(repo) == after, s"$name differs from its reference")
+    }
     assert(before != after, s"$name changed nothing")
     assert(n >= 4, s"$name took only $n steps")
     info(s"$name: $n steps")
@@ -121,26 +128,73 @@ class IndexAppendCrashSpec extends SparkSpec {
     assert(after == mhRows(ref))
   }
 
+  private val dim = 4
+  private def vec(c: Int, j: Int): Seq[Float] =
+    (0 until dim).map(d => (if (d == c) 1.0f else 0.0f) + 0.01f * ((j + d) % 5))
+  private val cents = (0 until dim).map(c => c -> (0 until dim).map(d => if (d == c) 1.0 else 0.0))
+  /** Vectors of `ids`, each near the centroid of `cluster(id)`. */
+  private def frame(ids: Seq[Long], cluster: Long => Int = i => (i % dim).toInt) = {
+    import spark.implicits._
+    ids.map(i => (i, vec(cluster(i), i.toInt))).toDF("vec_id", "embedding")
+  }
+  private def ivfRows(repo: PqRepo): Seq[Seq[String]] = Seq(
+    repo.table("idx", "e_ivf").select(col("id"), col("cluster"), to_json(col("v")))
+      .collect().map(_.toString).toSeq.sorted)
+  private def ivf(vecs: DataFrame): Similarity.IvfIndex =
+    Similarity.IvfIndex(cents, Similarity.assignClusters(
+      vecs.select(col("vec_id").as("id"), col("embedding").as("v")), cents))
+  private def build(vecs: DataFrame)(repo: PqRepo): Unit =
+    Similarity.writeIvfIndex(repo, ivf(vecs), "idx", "e")
+
   test("appendToIvfIndex of new ids recovers from a crash at every step") {
-    val dim = 4
-    def vec(c: Int, j: Int): Seq[Float] =
-      (0 until dim).map(d => (if (d == c) 1.0f else 0.0f) + 0.01f * ((j + d) % 5))
-    val cents = (0 until dim).map(c => c -> (0 until dim).map(d => if (d == c) 1.0 else 0.0))
-    def frame(ids: Seq[Long]) = {
-      import spark.implicits._
-      ids.map(i => (i, vec((i % dim).toInt, i.toInt))).toDF("vec_id", "embedding")
-    }
-    def ivfRows(repo: PqRepo): Seq[Seq[String]] = Seq(
-      repo.table("idx", "e_ivf").select(col("id"), col("cluster"), to_json(col("v")))
-        .collect().map(_.toString).toSeq.sorted)
-    def build(vecs: DataFrame)(repo: PqRepo): Unit =
-      Similarity.writeIvfIndex(repo, Similarity.IvfIndex(cents, Similarity.assignClusters(
-        vecs.select(col("vec_id").as("id"), col("embedding").as("v")), cents)), "idx", "e")
     val batch = frame(100L to 105L)
     val after = walk("ivf_new", Seq("e_ivf"), ivfRows)(build(frame(1L to 12L)))(
       Similarity.appendToIvfIndex(_, batch, "vec_id", "embedding", "idx", "e"))
     val all = PqRepo(spark, Files.createTempDirectory("crash_ivf_all").toString)
     build(frame((1L to 12L) ++ (100L to 105L)))(all)
     assert(after == ivfRows(all))
+  }
+
+  test("appendToIvfPqIndex of new ids recovers from a crash at every step") {
+    def pqRows(repo: PqRepo): Seq[Seq[String]] = Seq(
+      repo.table("idx", "e_ivfpq").select(col("id"), col("cluster"), to_json(col("codes")))
+        .collect().map(_.toString).toSeq.sorted)
+    val batch = frame(100L to 105L)
+    walk("ivfpq_new", Seq("e_ivfpq"), pqRows,
+      Some(IndexAppendMergePlan.ivfPqAppend(_, batch, "vec_id", "embedding", "idx", "e"))) {
+      repo =>
+        val base = frame(1L to 12L)
+        Similarity.writeIvfPqIndex(repo, ivf(base), Similarity.pqTrain(base, "vec_id",
+          "embedding", m = 2, ksub = 4, kmeansIters = 2, sampleRows = 8), "idx", "e")
+    }(Similarity.appendToIvfPqIndex(_, batch, "vec_id", "embedding", "idx", "e"))
+  }
+
+  test("an appendToQuantizedIndex upsert, which swaps and adds, recovers from a " +
+    "crash at every step") {
+    def bucket(id: Long): Long = spark.range(1)
+      .select(pmod(xxhash64(lit(id)), lit(4L))).head().getLong(0)
+    // id 2 takes another vector (a key hit: its bucket is swapped); the
+    // new id hashes into another bucket (an insert)
+    val newId = (100L to 200L).find(bucket(_) != bucket(2L)).get
+    val batch = frame(Seq(2L, newId), i => (i + 1).toInt % dim)
+    def q8Rows(repo: PqRepo): Seq[Seq[String]] = Seq(
+      repo.table("idx", "q_q8").select(col("vec_id"), col("bucket"), col("qmin"),
+        col("qmax"), to_json(col("codes"))).collect().map(_.toString).toSeq.sorted)
+    walk("q8_mixed", Seq("q_q8"), q8Rows,
+      Some(IndexAppendMergePlan.q8Append(_, batch, "vec_id", "embedding", "idx", "q")))(
+      Similarity.writeQuantizedIndex(_, frame(1L to 12L), "vec_id", "embedding", "idx", "q",
+        numBuckets = 4))(
+      Similarity.appendToQuantizedIndex(_, batch, "vec_id", "embedding", "idx", "q"))
+  }
+
+  test("a reassignIvfIndex batch of one moved id and one new id recovers from a " +
+    "crash at every step") {
+    // id 2 moves from cluster 2 to 3 (its old cluster is swapped); id 100
+    // is new (an insert into cluster 0)
+    val batch = frame(Seq(2L, 100L), i => if (i == 2L) 3 else 0)
+    walk("ivf_reassign", Seq("e_ivf"), ivfRows,
+      Some(IndexAppendMergePlan.ivfReassign(_, batch, "vec_id", "embedding", "idx", "e")))(
+      build(frame(1L to 12L)))(
+      Similarity.reassignIvfIndex(_, batch, "vec_id", "embedding", "idx", "e"))
   }
 }

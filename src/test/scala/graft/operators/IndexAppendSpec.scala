@@ -129,14 +129,20 @@ class IndexAppendSpec extends SparkSpec {
     repo.table("idx", "e_ivf").select(col("id"), col("cluster"), to_json(col("v")))
       .collect().map(_.toString).toSeq.sorted
 
-  test("random appendToIvfIndex sequences leave the rows the copy-on-write " +
-    "merge leaves") {
+  /** A seeded sequence of `n` vector batches (every kind of `kinds` at
+    * least once) run through `ref` and `keyed` on two copies of the index
+    * `build` writes from `base`; the tables hold the same rows
+    * (`tableRows`) after every step. Returns the kinds reached, and
+    * "guardFailed" when both paths refused a batch. */
+  private def vecSequence(seed: Long, n: Int, kinds: Seq[String],
+      base: Seq[(Option[Long], Int, Int)])(build: (PqRepo, Seq[(Option[Long], Int, Int)]) => Unit)(
+      ref: (PqRepo, DataFrame, Boolean) => Unit, keyed: (PqRepo, DataFrame, Boolean) => Unit,
+      tableRows: PqRepo => Seq[String]): Set[String] = {
     val seen = scala.collection.mutable.Set.empty[String]
-    val base = (1L to 8L).map(i => (Option(i), (i % dim).toInt, 0)) :+ ((None, 1, 0))
-    val (ref, inc) = (freshRepo(), freshRepo())
-    Seq(ref, inc).foreach(ivfIndex(_, base))
-    val steps = stepsGen(10).apply(Gen.Parameters.default,
-      org.scalacheck.rng.Seed(7202L)).get
+    val (r0, i0) = (freshRepo(), freshRepo())
+    Seq(r0, i0).foreach(build(_, base))
+    val steps = stepsGen(n, kinds).apply(Gen.Parameters.default,
+      org.scalacheck.rng.Seed(seed)).get
     var id = 100L
     val landed = ArrayBuffer(base: _*)
     steps.foreach { s =>
@@ -147,6 +153,7 @@ class IndexAppendSpec extends SparkSpec {
         case "fresh" => (0 to s.n).map(_ => fresh())
         // the same cluster, another vector
         case "reingest" => (0 to s.n).map(old).distinct.map { case (i, c, j) => (i, c, j + 1) }
+        case "unchanged" => (0 to s.n).map(old).distinct
         // another cluster: checked ("guarded") or not
         case "changed" | "guarded" => Seq(old(0)).map { case (i, c, j) => (i, (c + 1) % dim, j) }
         case "dupId" => val f = fresh(); Seq(f, if (s.flip) f else (f._1, f._2, f._3 + 1))
@@ -155,22 +162,84 @@ class IndexAppendSpec extends SparkSpec {
       }
       val batch = vecs(rows)
       val check = s.kind != "changed"
-      val r = Try(IndexAppendMergePlan.ivfAppend(ref, batch, "vec_id", "embedding",
-        "idx", "e", check))
-      val i = Try(Similarity.appendToIvfIndex(inc, batch, "vec_id", "embedding",
-        "idx", "e", check))
-      (r, i) match {
+      (Try(ref(r0, batch, check)), Try(keyed(i0, batch, check))) match {
         case (Success(_), Success(_)) => landed ++= rows
         case (Failure(_: IllegalStateException), Failure(e: IllegalStateException)) =>
           assert(e.getMessage.contains("moved clusters"), e.getMessage)
           seen += "guardFailed"
         case other => fail(s"$s: reference and append disagree: $other")
       }
-      assert(ivfRows(inc) == ivfRows(ref), s"after $s")
+      assert(tableRows(i0) == tableRows(r0), s"after $s")
       seen += s.kind
     }
+    seen.toSet
+  }
+
+  private val ivfBase = (1L to 8L).map(i => (Option(i), (i % dim).toInt, 0)) :+ ((None, 1, 0))
+
+  test("random appendToIvfIndex sequences leave the rows the copy-on-write " +
+    "merge leaves") {
+    val seen = vecSequence(7202L, 10, Kinds, ivfBase)(ivfIndex)(
+      IndexAppendMergePlan.ivfAppend(_, _, "vec_id", "embedding", "idx", "e", _),
+      Similarity.appendToIvfIndex(_, _, "vec_id", "embedding", "idx", "e", _), ivfRows)
     val wanted = Kinds :+ "guardFailed"
     assert(wanted.filterNot(seen).isEmpty, s"never reached: ${wanted.filterNot(seen)}")
+  }
+
+  /** Kinds of the vector sequences: also an unchanged re-ingest. */
+  private val VecKinds = Kinds :+ "unchanged"
+
+  private def ivfPqIndex(residual: Boolean)(repo: PqRepo, rows: Seq[(Option[Long], Int, Int)]): Unit = {
+    val index = Similarity.IvfIndex(cents, Similarity.assignClusters(
+      vecs(rows).select(col("vec_id").as("id"), col("embedding").as("v")), cents))
+    val books =
+      if (residual) Similarity.pqTrainResidual(index, m = 2, ksub = 4, kmeansIters = 2, sampleRows = 8)
+      else Similarity.pqTrain(vecs(rows), "vec_id", "embedding", m = 2, ksub = 4,
+        kmeansIters = 2, sampleRows = 8)
+    Similarity.writeIvfPqIndex(repo, index, books, "idx", "e", residual)
+  }
+  private def pqRows(repo: PqRepo): Seq[String] =
+    repo.table("idx", "e_ivfpq").select(col("id"), col("cluster"), to_json(col("codes")))
+      .collect().map(_.toString).toSeq.sorted
+
+  test("random appendToIvfPqIndex sequences, raw and residual, leave the rows " +
+    "the copy-on-write merge leaves") {
+    Seq(false, true).foreach { residual =>
+      val seen = vecSequence(if (residual) 7304L else 7303L, 12, VecKinds, ivfBase)(
+        ivfPqIndex(residual))(
+        IndexAppendMergePlan.ivfPqAppend(_, _, "vec_id", "embedding", "idx", "e", _),
+        Similarity.appendToIvfPqIndex(_, _, "vec_id", "embedding", "idx", "e", _), pqRows)
+      val wanted = VecKinds :+ "guardFailed"
+      assert(wanted.filterNot(seen).isEmpty,
+        s"residual = $residual, never reached: ${wanted.filterNot(seen)}")
+    }
+  }
+
+  private def q8Index(repo: PqRepo, rows: Seq[(Option[Long], Int, Int)]): Unit =
+    Similarity.writeQuantizedIndex(repo, vecs(rows), "vec_id", "embedding", "idx", "q",
+      numBuckets = 4)
+  private def q8Rows(repo: PqRepo): Seq[String] =
+    repo.table("idx", "q_q8").select(col("vec_id"), col("bucket"), col("qmin"), col("qmax"),
+      to_json(col("codes"))).collect().map(_.toString).toSeq.sorted
+
+  test("random appendToQuantizedIndex sequences leave the rows the copy-on-write " +
+    "merge leaves") {
+    // no guard: a moved vector ("changed", "guarded") is an upsert of its id
+    val seen = vecSequence(7405L, 12, VecKinds, ivfBase)(q8Index)(
+      (r, b, _) => IndexAppendMergePlan.q8Append(r, b, "vec_id", "embedding", "idx", "q"),
+      (r, b, _) => Similarity.appendToQuantizedIndex(r, b, "vec_id", "embedding", "idx", "q"),
+      q8Rows)
+    assert(VecKinds.filterNot(seen).isEmpty, s"never reached: ${VecKinds.filterNot(seen)}")
+  }
+
+  test("random reassignIvfIndex sequences leave the rows the join-scoped " +
+    "merge leaves") {
+    // no guard: moved ids ("changed", "guarded") land once in their new cluster
+    val seen = vecSequence(7506L, 12, VecKinds, ivfBase)(ivfIndex)(
+      (r, b, _) => IndexAppendMergePlan.ivfReassign(r, b, "vec_id", "embedding", "idx", "e"),
+      (r, b, _) => Similarity.reassignIvfIndex(r, b, "vec_id", "embedding", "idx", "e"),
+      ivfRows)
+    assert(VecKinds.filterNot(seen).isEmpty, s"never reached: ${VecKinds.filterNot(seen)}")
   }
 
   test("an all-new parquet batch appends in at most 5 jobs, and every indexed " +
@@ -204,6 +273,38 @@ class IndexAppendSpec extends SparkSpec {
     before.foreach { case (p, (mtime, _)) =>
       assert(after.get(p).map(_._1).contains(mtime), s"$p rewritten") }
     assert(repo.table("idx", "e_ivf").count() == 61)
+  }
+
+  test("appendToIvfPqIndex of new ids runs at most 8 jobs and leaves every " +
+    "indexed file in place") {
+    val repo = freshRepo()
+    ivfPqIndex(residual = false)(repo, (1L to 40L).map(i => (Option(i), (i % dim).toInt, i.toInt)))
+    val before = dataFiles(repo, "e_ivfpq")
+    val batch = vecs((100L to 120L).map(i => (Option(i), (i % dim).toInt, i.toInt)))
+      .localCheckpoint()
+    // three side-table reads, the coded batch, its keys, the probe, the write
+    val jobs = jobsOf(Similarity.appendToIvfPqIndex(repo, batch, "vec_id", "embedding", "idx", "e"))
+    assert(jobs <= 8, s"$jobs jobs")
+    val after = dataFiles(repo, "e_ivfpq")
+    before.foreach { case (p, (mtime, _)) =>
+      assert(after.get(p).map(_._1).contains(mtime), s"$p rewritten") }
+    assert(repo.table("idx", "e_ivfpq").count() == 61)
+  }
+
+  test("appendToQuantizedIndex of new ids runs at most 5 jobs and leaves every " +
+    "indexed file in place") {
+    val repo = freshRepo()
+    q8Index(repo, (1L to 40L).map(i => (Option(i), (i % dim).toInt, i.toInt)))
+    val before = dataFiles(repo, "q_q8")
+    val batch = vecs((100L to 120L).map(i => (Option(i), (i % dim).toInt, i.toInt)))
+      .localCheckpoint()
+    // the coded batch, its keys, the probe, the write
+    val jobs = jobsOf(Similarity.appendToQuantizedIndex(repo, batch, "vec_id", "embedding", "idx", "q"))
+    assert(jobs <= 5, s"$jobs jobs")
+    val after = dataFiles(repo, "q_q8")
+    before.foreach { case (p, (mtime, _)) =>
+      assert(after.get(p).map(_._1).contains(mtime), s"$p rewritten") }
+    assert(repo.table("idx", "q_q8").count() == 61)
   }
 
   test("the bytes one append writes do not grow with the index") {
@@ -252,9 +353,9 @@ object IndexAppendSpec {
   } yield Step(kind, a, n, flip)
 
   /** `n` steps: every kind once, the rest mostly fresh, in random order. */
-  def stepsGen(n: Int): Gen[Seq[Step]] = for {
-    each <- Gen.sequence[Seq[Step], Step](Kinds.map(step))
-    extra <- Gen.listOfN(n - Kinds.length,
+  def stepsGen(n: Int, kinds: Seq[String] = Kinds): Gen[Seq[Step]] = for {
+    each <- Gen.sequence[Seq[Step], Step](kinds.map(step))
+    extra <- Gen.listOfN(n - kinds.length,
       Gen.frequency(3 -> "fresh", 1 -> "reingest", 1 -> "mixed").flatMap(step))
     keys <- Gen.listOfN(n, Gen.choose(0, 1 << 20))
   } yield (each ++ extra).zip(keys).sortBy(_._2).map(_._1)

@@ -22,6 +22,9 @@ object ExplainDump {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // whole field lists: past this many fields a plan node prints
+      // "... N more fields", which hides a change in the dropped fields
+      .config("spark.sql.debug.maxToStringFields", Int.MaxValue.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

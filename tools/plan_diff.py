@@ -21,6 +21,12 @@ the cut falls at a different place once ids are normalized, so when
 either side of a line is cut (a dump of older code), only the common
 normalized prefix is compared.
 
+ExplainDump also used to keep Spark's `spark.sql.debug.maxToStringFields`
+cut of long field lists (`[a#1, b#2, ... 7 more fields]`). A line cut so
+on one side only matches a whole line on the other when the shown text
+is equal and each cut hides exactly as many fields as the whole line
+holds in its place.
+
 Prints a unified diff for each query whose normalized tree differs (or
 that only one side has) and exits 1 if there is any, else 0.
 """
@@ -101,6 +107,51 @@ def align_cut_lines(a, b):
     return a2, b2
 
 
+_FIELDS_CUT = re.compile(r"(?:, )?\.\.\. (\d+) more fields")
+
+
+def _top_level_fields(text):
+    """Number of ", "-separated fields of `text` outside any brackets."""
+    depth, n = 0, 1
+    for i, ch in enumerate(text):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif depth == 0 and text.startswith(", ", i):
+            n += 1
+    return n
+
+
+def _fields_cut_matches(cut, whole):
+    """True when `whole` is `cut` with each `... N more fields` cut filled
+    by N fields."""
+    parts = _FIELDS_CUT.split(cut)
+    texts, counts = parts[0::2], [int(n) for n in parts[1::2]]
+    rx = "(?:, )?(.*?)".join(re.escape(t) for t in texts)
+    m = re.fullmatch(rx, whole)
+    return m is not None and all(
+        _top_level_fields(g) == n for g, n in zip(m.groups(), counts))
+
+
+def align_field_cuts(a, b):
+    """Copies of `a` and `b` where a line whose field lists one side cut
+    is replaced by the cut line on the other side when the two match
+    (see `_fields_cut_matches`)."""
+    if len(a) != len(b):
+        return a, b
+    a2, b2 = [], []
+    for x, y in zip(a, b):
+        cx, cy = bool(_FIELDS_CUT.search(x)), bool(_FIELDS_CUT.search(y))
+        if cx and not cy and _fields_cut_matches(x, y):
+            y = x
+        elif cy and not cx and _fields_cut_matches(y, x):
+            x = y
+        a2.append(x)
+        b2.append(y)
+    return a2, b2
+
+
 def diff_plans(parent, change):
     """[(query, [unified diff line, ...])] for every query whose normalized
     plan differs or that only one side has, in the parent's order (queries
@@ -114,7 +165,7 @@ def diff_plans(parent, change):
             side = "parent" if a is None else "change"
             out.append((name, [f"(missing in {side})"]))
             continue
-        a, b = align_cut_lines(a, b)
+        a, b = align_cut_lines(*align_field_cuts(a, b))
         if a != b:
             d = list(difflib.unified_diff(a, b, "parent/" + name,
                                           "change/" + name, lineterm=""))

@@ -147,6 +147,30 @@ class PlanDiff(unittest.TestCase):
             [plan_diff.normalize_line(x) for x in short])
         self.assertNotEqual(a3, s3)
 
+    def test_a_field_list_cut_compares_as_a_cut(self):
+        # Spark's maxToStringFields cut in the parent's dump, whole fields
+        # in the change's
+        cut = ["HashAggregate(keys=[k#1], functions=[min(pmod((a#2 + b#3), 7)), "
+               "max(c#4), ... 2 more fields], output=[k#1, m#9])"]
+        whole = ["HashAggregate(keys=[k#10], functions=[min(pmod((a#20 + b#30), 7)), "
+                 "max(c#40), count(1), sum(pmod(d#50, 3))], output=[k#10, m#90])"]
+        norm = lambda ls: [plan_diff.normalize_line(x) for x in ls]  # noqa: E731
+        a, b = plan_diff.align_field_cuts(norm(cut), norm(whole))
+        self.assertEqual(a, b)
+        code, _ = run("## q\n\n```\n" + cut[0] + "\n```\n",
+                      "## q\n\n```\n" + whole[0] + "\n```\n")
+        self.assertEqual(code, 0)
+        # a changed shown field, or a hidden count that does not match,
+        # still differs
+        shown = [whole[0].replace("max(c#40)", "min(c#40)")]
+        self.assertNotEqual(*plan_diff.align_field_cuts(norm(cut), norm(shown)))
+        extra = [whole[0].replace("count(1), ", "count(1), avg(e#6), ")]
+        self.assertNotEqual(*plan_diff.align_field_cuts(norm(cut), norm(extra)))
+        code, out = run("## q\n\n```\n" + cut[0] + "\n```\n",
+                        "## q\n\n```\n" + extra[0] + "\n```\n")
+        self.assertEqual(code, 1)
+        self.assertIn("1 of 1 queries differ", out)
+
     def test_dates_in_table_names_are_kept(self):
         self.assertEqual(
             plan_diff.normalize_line("BatchScan t.orders@20240501T060000Z[o#3]"),
