@@ -770,10 +770,10 @@ object SparkEntry {
   private def ensurePartitionedOrders(s: SparkSession, dir: String): String =
     partitionedLayouts.getOrElseUpdate(dir, {
       val repo = PqRepo(s, scratch("graft_part"))
-      repo.writePartitioned(
+      repo.write(
         t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
-        "tpch", "orders_part", Seq("o_orderpriority")).toString
+        "tpch", "orders_part", partitionCols = Seq("o_orderpriority")).toString
     })
 
   /** Dynamic partition pruning (SURVEY 12c): the partitioned fact joined

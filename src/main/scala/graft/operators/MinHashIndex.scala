@@ -153,15 +153,15 @@ object MinHashIndex {
     // bucket-clustering of the layout write (one file per bucket
     // directory instead of `buckets × shuffle.partitions` fragments —
     // measured 54 s/rep → ~6 s on the streamed sf0.1 query) now lives in
-    // [[graft.sources.PqRepo.writePartitioned]] itself (r20), shared by
+    // [[graft.sources.PqRepo.write]] itself (r20), shared by
     // every index family. The two tables are disjoint outputs reading the
     // same checkpointed signature blocks — written OVERLAPPED (guide
     // §2.6) so the per-job floor is paid once, not twice.
     graft.Par.run2(
-      repo.writePartitioned(withDocBucket(perDoc, geometry), schema,
-        docsTable(name), Seq("dbucket"), metaProps = Some(geometry.props)),
-      repo.writePartitioned(bandRows(perDoc, geometry), schema,
-        bandsTable(name), Seq("bucket")))
+      repo.write(withDocBucket(perDoc, geometry), schema, docsTable(name),
+        metaProps = Some(geometry.props), partitionCols = Seq("dbucket")),
+      repo.write(bandRows(perDoc, geometry), schema, bandsTable(name),
+        partitionCols = Seq("bucket")))
   }
 
   /** Incrementally APPEND a batch under the frozen geometry — the daily

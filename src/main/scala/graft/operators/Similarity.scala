@@ -443,8 +443,8 @@ object Similarity {
     // atomically with the bucket tree, so no crash point can leave a
     // healthy index that appendToQuantizedIndex then refuses for want of
     // its geometry stamp
-    repo.writePartitioned(coded, schema, s"${name}_q8", Seq("bucket"),
-      metaProps = Some(Map(Q8BucketsProp -> numBuckets.toString)))
+    repo.write(coded, schema, s"${name}_q8",
+      metaProps = Some(Map(Q8BucketsProp -> numBuckets.toString)), partitionCols = Seq("bucket"))
   }
 
   /** The persisted quantized index: (idCol, qmin, qmax, codes). The
@@ -465,8 +465,7 @@ object Similarity {
     // disjoint outputs, overlapped (guide §2.6): the centroid side table's
     // job floor hides under the corpus-sized assigned write
     graft.Par.run2(
-      repo.writePartitioned(index.assigned, schema, s"${name}_ivf",
-        Seq("cluster")),
+      repo.write(index.assigned, schema, s"${name}_ivf", partitionCols = Seq("cluster")),
       repo.write(index.centroids.toDF("cid", "cv"), schema,
         s"${name}_ivf_centroids"))
   }
@@ -1263,7 +1262,7 @@ object Similarity {
     // writes' per-job floors hide under the coded scan instead of
     // stacking after it
     graft.Par.run2(
-      repo.writePartitioned(coded, schema, s"${name}_ivfpq", Seq("cluster")), {
+      repo.write(coded, schema, s"${name}_ivfpq", partitionCols = Seq("cluster")), {
         repo.write(index.centroids.toDF("cid", "cv"), schema,
           s"${name}_ivfpq_centroids")
         repo.write(booksToDF(spark, books), schema, s"${name}_ivfpq_books")

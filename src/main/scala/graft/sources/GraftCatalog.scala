@@ -27,7 +27,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the repo path, so the engine's entire scan machinery applies
   * unchanged — filter pushdown (`PushedFilters`), column pruning
   * (`ReadSchema`), partition discovery AND partition pruning over
-  * [[PqRepo.writePartitioned]] hive layouts, vectorized reading,
+  * [[PqRepo.write]]'s hive layouts, vectorized reading,
   * whole-stage codegen. Nothing is reimplemented; the catalog only
   * resolves `schema.table → <dataDir>/<schema>/<table>.parquet` — the
   * same resolution [[PqRepo.table]] performs — and hides the repo's `_`
@@ -151,7 +151,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def readOnly(op: String): Nothing =
     throw new UnsupportedOperationException(
       s"$op: the graft catalog is the QUERY surface; land data through " +
-        "PqRepo.write/merge/writePartitioned (temp-write + atomic promote " +
+        "PqRepo.write/merge (temp-write + atomic promote " +
         "+ crash manifests), archive/remove through PqRepo admin")
 
   override def createTable(ident: Identifier, schema: StructType,

@@ -23,7 +23,21 @@ import graft.sync.Modified
   *    parquet.py:294-534.
   *
   * Unlike the single-file reference, tables here are parquet *directories* —
-  * the idiomatic Spark layout, written in parallel by every executor.
+  * the idiomatic Spark layout, written in parallel by every executor —
+  * flat or hive-partitioned.
+  *
+  * One write, one merge, one recovery. [[write]] is the only layout
+  * writer and [[merge]] the only upsert, for flat and partitioned tables
+  * alike. Every mutating entry point ([[write]] and its wrappers,
+  * [[merge]], [[mergeIntoPartitions]], [[compact]], [[setComment]],
+  * [[archive]], [[restore]], [[writeTableMeta]], [[remove]]) first runs
+  * [[recover]], which rolls any
+  * commit a crash interrupted forward or back, before it reads the table
+  * or touches its `_tmp_<table>.parquet` layout. Whole-table commits go
+  * through one promote (archiving included), partition-scoped ones
+  * through the manifest-recorded partition swap, so a crash at any step
+  * leaves a table that recovery turns into exactly the old or exactly
+  * the new version.
   *
   * Reads resolve a table on the driver ([[ParquetBridge]]): the directory
   * tree is listed with `listStatus` and the schema comes from one footer,
@@ -53,9 +67,23 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   def table(schema: String, table: String): DataFrame =
     ParquetBridge.read(spark, tablePath(schema, table))
 
-  /** Write `df` as `<schema>/<table>.parquet`, embedding `modified` in the
-    * schema metadata, with temp-write + atomic promote and optional archive
-    * of the replaced table. Returns the final path.
+  /** Write `df` as `<schema>/<table>.parquet` and return the final path:
+    * flat, or with `partitionCols` hive-partitioned
+    * (`<table>.parquet/<col>=<value>/...`), so every downstream filter on
+    * those coarse keys prunes whole directories before any I/O
+    * (PartitionFilters in the scan, not data filters). The one layout
+    * writer, in one body for both layouts:
+    *   1. [[recover]] heals a crashed earlier commit of the table;
+    *   2. a stale tmp layout is cleared;
+    *   3. rows are clustered on the partition columns
+    *      ([[clusterOnPartitions]]);
+    *   4. `modified` is stamped into the schema metadata;
+    *   5. the layout is written to the tmp location, and the `metaProps`
+    *      sidecar INTO it, so the sidecar travels atomically with the files
+    *      it describes;
+    *   6. [[promote]] swaps the tmp layout in; with `archiveExisting` the
+    *      replaced table moves into `archiveDir` in the same commit, so
+    *      the archive holds the old table whenever the new one landed.
     *
     * File/row-group budgets (reference parquet.py:221
     * `_write_batches_with_target_row_groups` + :671 `write_parquet` bounds
@@ -73,30 +101,42 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       archiveDir: String = "archive",
       maxRecordsPerFile: Option[Long] = None,
       parquetBlockBytes: Option[Long] = None,
-      metaProps: Option[Map[String, String]] = None
+      metaProps: Option[Map[String, String]] = None,
+      partitionCols: Seq[String] = Nil
+  ): Path =
+    writeLayout(clusterOnPartitions(df, partitionCols), schema, table, partitionCols,
+      modified, Some(archiveDir).filter(_ => archiveExisting), maxRecordsPerFile,
+      parquetBlockBytes, metaProps)
+
+  /** [[write]]'s body after the clustering step, for a frame that is
+    * already laid out ([[compact]]'s own layout, which a second shuffle
+    * would collapse over). */
+  private def writeLayout(
+      laid: DataFrame,
+      schema: String,
+      table: String,
+      partitionCols: Seq[String],
+      modified: Option[String],
+      archiveDir: Option[String],
+      maxRecordsPerFile: Option[Long],
+      parquetBlockBytes: Option[Long],
+      metaProps: Option[Map[String, String]]
   ): Path = {
     val dest = tablePath(schema, table)
-    // deliberately the same tmp path mergePartitioned uses: a concurrent
-    // write and merge of one table collide on it instead of interleaving
-    val tmp = mergeTmpPath(schema, table)
     val f = fs(dest)
-
-    val out = stampModified(df, Nil, modified)
-
-    recoverWrite(schema, table)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    val writer = out.write.mode("overwrite")
+    recover(schema, table)
+    // the one tmp path of a table: a concurrent write and merge of one
+    // table collide on it instead of interleaving
+    val tmp = clearTmp(f, schema, table)
+    val writer = stampModified(laid, partitionCols, modified)
+      .write.mode("overwrite").partitionBy(partitionCols: _*)
     maxRecordsPerFile.foreach(n => writer.option("maxRecordsPerFile", n))
     parquetBlockBytes.foreach(b => writer.option("parquet.block.size", b))
     writer.parquet(tmp.toString)
-    // the property sidecar is written INTO the tmp layout, so it travels
-    // atomically with the files it describes through the promote swap —
-    // no crash point can leave a promoted layout without its sidecar
     metaProps.filter(_.nonEmpty).foreach(p =>
       writeMetaFile(f, new Path(tmp, MetaFileName), p))
-
-    if (archiveExisting && f.exists(dest)) archive(schema, table, archiveDir)
-    promoteTable(f, tmp, schema, table)
+    promote(f, schema, table,
+      archiveDir.filter(_ => f.exists(dest)).map(archiveTarget(schema, table, _)))
     dest
   }
 
@@ -126,21 +166,26 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   }
 
   /** Move a table into the archive directory, stamped with its parsed
-    * last-modified time or `unknown_modified` (reference pq_archive). */
+    * last-modified time or `unknown_modified` (reference pq_archive). One
+    * rename, after [[recover]]. */
   def archive(schema: String, table: String, archiveDir: String = "archive"): Option[Path] = {
+    recover(schema, table)
     val src = tablePath(schema, table)
     val f = fs(src)
     if (!f.exists(src)) return None
+    val dest = archiveTarget(schema, table, archiveDir)
+    if (!f.exists(dest.getParent)) f.mkdirs(dest.getParent)
+    if (f.exists(dest)) f.delete(dest, true)
+    rename(f, src, dest)
+    Some(dest)
+  }
+
+  /** Where [[archive]] puts the active table. */
+  private def archiveTarget(schema: String, table: String, archiveDir: String): Path = {
     val stamp = lastModified(schema, table)
       .flatMap(Modified.parseFileSafe)
       .getOrElse("unknown_modified")
-    val destDir = archivePath(schema, archiveDir)
-    f.mkdirs(destDir)
-    val dest = new Path(destDir, s"${table}_$stamp.parquet")
-    if (f.exists(dest)) f.delete(dest, true)
-    if (!f.rename(src, dest))
-      throw new java.io.IOException(s"Could not archive $src to $dest")
-    Some(dest)
+    new Path(archivePath(schema, archiveDir), s"${table}_$stamp.parquet")
   }
 
   private val archivedNameRe = raw"^(.+)_(\d{8}T\d{6}Z|unknown_modified)$$".r
@@ -154,7 +199,12 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     }
 
   /** Restore an archived table to active status; optionally archive the
-    * currently-active table first (reference pq_restore). */
+    * currently-active table first (reference pq_restore). The snapshot
+    * takes the tmp slot, stamped beforehand, and lands through
+    * [[promote]], so the restore and the archiving of the current table
+    * are one commit: a crash leaves the current table active with the
+    * snapshot archived, or the snapshot active with the current table
+    * archived. */
   def restore(
       archivedBasename: String,
       schema: String,
@@ -162,18 +212,23 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       archiveDir: String = "archive"
   ): Option[Path] = {
     val stem = archivedBasename.stripSuffix(".parquet")
-    val src = new Path(archivePath(schema, archiveDir), s"$stem.parquet")
-    val f = fs(src)
-    if (!f.exists(src)) return None
     restoreBasename(stem).flatMap { table =>
+      recover(schema, table)
+      val src = new Path(archivePath(schema, archiveDir), s"$stem.parquet")
       val dest = tablePath(schema, table)
-      if (f.exists(dest)) {
-        if (!archiveCurrent) return None
-        archive(schema, table, archiveDir)
+      val f = fs(src)
+      val current = f.exists(dest)
+      if (!f.exists(src) || (current && !archiveCurrent)) None
+      else {
+        val tmp = clearTmp(f, schema, table)
+        // the stamp goes in BEFORE the snapshot moves: an unstamped tmp
+        // layout is garbage the next write deletes
+        stampPromote(f, src,
+          Some(archiveDir).filter(_ => current).map(archiveTarget(schema, table, _)))
+        rename(f, src, tmp)
+        completePromote(f, schema, table)
+        Some(dest)
       }
-      if (!f.rename(src, dest))
-        throw new java.io.IOException(s"Could not restore $src to $dest")
-      Some(dest)
     }
   }
 
@@ -290,58 +345,11 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     if (df.isEmpty) None
     else Some(write(df, schema, table, modified, archiveExisting))
 
-  /** Hive-style partitioned write: `<table>.parquet/<col>=<value>/...`.
-    * At lake scale, partitioning on coarse keys (date, source) lets every
-    * downstream filter on those keys prune whole directories before any
-    * I/O (PartitionFilters in the scan, not data filters) — see the
-    * partition-pruning plan audit. */
-  def writePartitioned(
-      df: DataFrame,
-      schema: String,
-      table: String,
-      partitionCols: Seq[String],
-      modified: Option[String] = None,
-      maxRecordsPerFile: Option[Long] = None,
-      parquetBlockBytes: Option[Long] = None,
-      metaProps: Option[Map[String, String]] = None,
-      cluster: Boolean = true
-  ): Path = {
-    val dest = tablePath(schema, table)
-    // same tmp + sidecar promote as [[write]] (r12): the partitioned
-    // layout appears atomically — readers never observe a half-written
-    // partition tree, and no crash point loses the previous table
-    val tmp = mergeTmpPath(schema, table)
-    val f = fs(dest)
-    recoverWrite(schema, table)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    // cluster rows on the partition columns before the dynamic-partition
-    // write (r20 optimization, guide §6 small files / §2.4): without it
-    // EVERY shuffle task holds rows of every partition value and writes
-    // one file per (task, value) — `values × tasks` small files whose
-    // open/list/swap floors then dominate every later scan and merge
-    // (measured 54 s/rep on the streamed sf0.1 MinHash query, ~6 s
-    // clustered — the r20 MinHashIndex call-site fix, now hoisted here so
-    // every partitioned layout gets it). [[compact]] passes
-    // cluster = false: it lays out rows itself (targetPartitions
-    // override) and a second shuffle here would collapse over the
-    // caller's and override its file-count goal.
-    val laid = clusterOnPartitions(df, partitionCols, cluster)
-    val writer = stampModified(laid, partitionCols, modified)
-      .write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-    maxRecordsPerFile.foreach(n => writer.option("maxRecordsPerFile", n))
-    parquetBlockBytes.foreach(b => writer.option("parquet.block.size", b))
-    writer.parquet(tmp.toString)
-    // sidecar travels atomically inside the tmp layout (see [[write]]) —
-    // an index build can no longer crash into a promoted layout whose
-    // geometry sidecar is missing
-    metaProps.filter(_.nonEmpty).foreach(p =>
-      writeMetaFile(f, new Path(tmp, MetaFileName), p))
-    promoteTable(f, tmp, schema, table)
-    dest
-  }
-
-  /** The shared pre-write clustering for partitioned layouts: an AQE
+  /** The shared pre-write clustering for partitioned layouts. Unclustered,
+    * every shuffle task holds rows of every partition value and writes one
+    * file per (task, value), and those small files then dominate every
+    * later scan and merge (54 s per rep on the streamed sf0.1 MinHash
+    * query against ~6 s clustered). The clustering is an AQE
     * REBALANCE on the partition columns (r21, verdict #1 — guide §2.5
     * skew / §6 small files) instead of r20's plain
     * `repartition(partitionCols)`. The plain repartition capped write
@@ -363,33 +371,16 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * degrades to a plain hash exchange on the partition columns — the
     * r20 behavior, never worse. Scale-adaptive by construction: no
     * local-mode constant anywhere. */
-  private def clusterOnPartitions(
-      df: DataFrame, partitionCols: Seq[String], cluster: Boolean): DataFrame =
-    if (cluster && partitionCols.nonEmpty)
-      df.hint("rebalance", partitionCols.map(col): _*)
+  private def clusterOnPartitions(df: DataFrame, partitionCols: Seq[String]): DataFrame =
+    if (partitionCols.nonEmpty) df.hint("rebalance", partitionCols.map(col): _*)
     else df
 
   /** The table's hive partition columns, inferred from its directory
-    * layout (one `col=value` level per partition column) — empty for a
-    * flat table. */
+    * layout by a read — empty for a flat table. */
   def partitionColsOf(schema: String, table: String): Seq[String] = {
     val dest = tablePath(schema, table)
-    val f = fs(dest)
-    if (!f.exists(dest)) return Nil
-    val cols = Seq.newBuilder[String]
-    var cur = dest
-    var done = false
-    while (!done) {
-      f.listStatus(cur).find(s =>
-        s.isDirectory && s.getPath.getName.contains("=") &&
-          !s.getPath.getName.startsWith("_")) match {
-        case Some(s) =>
-          cols += s.getPath.getName.split("=", 2)(0)
-          cur = s.getPath
-        case None => done = true
-      }
-    }
-    cols.result()
+    if (!fs(dest).exists(dest)) Nil
+    else ParquetBridge.partitionColumns(this.table(schema, table))
   }
 
   /** The lastModified stamp on the first DATA column (partition columns
@@ -462,16 +453,39 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   /** Copy-on-write MERGE (upsert): rows of `updates` replace current rows
     * with the same key tuple, new keys append, everything else carries
     * over — the Delta/Iceberg `MERGE INTO` primitive on this repo's
-    * atomic tmp+promote machinery. The current table is read while the
-    * tmp file is written and the destination only changes at the promote
-    * rename, so readers never observe a partial merge and a mid-job crash
-    * leaves the original intact.
+    * atomic tmp+promote machinery. The one merge, for both layouts:
+    *   1. [[recover]] heals a crashed earlier commit of the table;
+    *   2. a missing destination is an empty current table, so the first
+    *      merge is a plain [[write]] in the requested layout — idempotent
+    *      bootstrap for incremental loaders;
+    *   3. the destination is read ONCE; that read's partition columns
+    *      must equal `partitionCols`, or the merge refuses before any
+    *      write (a flat rewrite would demote the partition columns to
+    *      data columns, a partitioned one would interleave partition dirs
+    *      with flat files);
+    *   4. the updates' schema is checked against that read
+    *      ([[validateMergeSchema]]);
+    *   5. a flat table is rewritten whole: one anti join on the key tuple
+    *      (updates broadcast while they fit — the common case for
+    *      incremental loads) plus the surviving rows, through [[write]];
+    *      a partitioned table rewrites ONLY the hive partitions the
+    *      updates touch ([[mergeIntoPartitions]] with the updates' own
+    *      partition tuples): on a 100 TB date-partitioned table an
+    *      incremental load touching 3 days rewrites 3 directories, not
+    *      the lake, and untouched partitions are never read.
     *
-    * Scale shape: one anti join on the key tuple (updates broadcast while
-    * they fit — the common case for incremental loads) plus a full
-    * rewrite of the surviving rows. Whole-table COW is the right default
-    * below the partition-pruning threshold; for very large tables merge
-    * partition-by-partition over a [[writePartitioned]] layout instead.
+    * A partitioned merge requires `partitionCols ⊆ keys`: then a key can
+    * never move between partitions, so replacing within the affected
+    * partitions is exactly whole-table merge semantics. Its affected
+    * tuples are collected driver-side (a partition count, bounded by
+    * design), so `updates` is evaluated at least twice and must be
+    * deterministic across re-execution or already materialized. A batch
+    * that changes between the evaluations can write a partition the
+    * collect never saw: the engine takes such rows as inserts, so their
+    * files join that partition beside its current rows, which are kept,
+    * and a key it already held keeps its old row beside the new one.
+    * Readers never observe a partial flat merge; a reader racing a
+    * partitioned one can see some partitions old and some new.
     *
     * `updates` must be key-unique: rows sharing a key tuple within one
     * updates batch all land (this operator does not pick a winner —
@@ -479,28 +493,58 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * can carry replays).
     *
     * The key join is null-safe (`<=>`): a NULL-keyed update REPLACES an
-    * existing NULL-keyed row instead of appending beside it. A missing
-    * destination is an empty current table, so the first merge is a plain
-    * insert — idempotent bootstrap for incremental loaders. */
+    * existing NULL-keyed row instead of appending beside it. */
   def merge(
       updates: DataFrame,
       schema: String,
       table: String,
       keys: Seq[String],
       modified: Option[String] = None,
-      allowMissingColumns: Boolean = false
+      allowMissingColumns: Boolean = false,
+      partitionCols: Seq[String] = Nil
   ): Path = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    recoverWrite(schema, table) // heal a crashed earlier promote first
-    requireFlatLayout(schema, table, "merge")
+    require(partitionCols.forall(keys.contains),
+      s"partition columns $partitionCols must be a subset of the merge " +
+        s"keys $keys (otherwise a key could move partitions and its old " +
+        "row would survive)")
+    val op = s"merge($schema/$table)"
+    recover(schema, table)
     val dest = tablePath(schema, table)
     if (!fs(dest).exists(dest))
-      return write(updates, schema, table, modified = modified)
+      return write(updates, schema, table, modified = modified, partitionCols = partitionCols)
     val current = this.table(schema, table)
-    validateMergeSchema(current, updates, keys, allowMissingColumns,
-      s"merge($schema/$table)")
-    val merged = cowMerge(current, updates, keys, allowMissingColumns)
-    write(merged, schema, table, modified = modified)
+    requireLayout(current, partitionCols, op)
+    validateMergeSchema(current, updates, keys, allowMissingColumns, op,
+      partitionScoped = partitionCols.nonEmpty)
+    if (partitionCols.isEmpty)
+      write(cowMerge(current, updates, keys, allowMissingColumns), schema, table,
+        modified = modified)
+    else {
+      val affected = updates.select(partitionCols.map(col): _*).distinct().collect().toSeq
+      if (affected.isEmpty) dest
+      else mergeIntoPartitions(updates, schema, table, keys, partitionCols,
+        affected, modified, allowMissingColumns, Some(current))
+    }
+  }
+
+  /** A rewrite in the `partitionCols` layout of `current`, a read of the
+    * table, must find the table in that layout: a flat rewrite of a
+    * hive-partitioned tree would silently demote its partition columns
+    * (every downstream pruning scan degrades to a full read), and
+    * partition directories written into a flat table interleave with its
+    * files, a layout Spark cannot read coherently. */
+  private def requireLayout(current: DataFrame, partitionCols: Seq[String], op: String): Unit = {
+    def layout(cols: Seq[String]) =
+      if (cols.isEmpty) "flat" else s"hive-partitioned on [${cols.mkString(", ")}]"
+    val onDisk = ParquetBridge.partitionColumns(current)
+    if (onDisk != partitionCols)
+      throw new IllegalStateException(
+        s"$op: the table is ${layout(onDisk)}, but the call asks for a " +
+          s"${layout(partitionCols)} rewrite, which would demote partition " +
+          "columns or mix partition directories with flat files. Pass the " +
+          "table's own partitionCols, or rebuild it through write with the " +
+          "new ones")
   }
 
   /** Up-front schema drift check for the merge paths (r13): a drifted
@@ -551,7 +595,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
           "partition-scoped merge cannot evolve untouched partitions — " +
           "the new column would exist only in rewritten files, giving " +
           "readers an inference-order-dependent schema. Rebuild the " +
-          "table through writePartitioned with the evolved schema, then " +
+          "table through write with the evolved schema, then " +
           "merge")
   }
 
@@ -573,93 +617,10 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       .unionByName(updates, allowMissingColumns = allowMissingColumns)
   }
 
-  /** Partition-pruned copy-on-write MERGE over a [[writePartitioned]]
-    * layout: rewrites ONLY the hive partitions that carry updated or new
-    * keys; untouched partitions' files are never read, rewritten, or even
-    * listed — on a 100 TB date-partitioned table an incremental load
-    * touching 3 days rewrites 3 directories, not the lake.
-    *
-    * Requires `partitionCols ⊆ keys`: then a key can never move between
-    * partitions, so replacing within affected partitions is exactly
-    * whole-table merge semantics restricted to the partitions updates
-    * touch. The affected partition tuples are collected driver-side (a
-    * partition count, bounded by design — hive partitioning only works
-    * with coarse keys) and become an OR-of-conjunctions source filter, so
-    * the current-side scan partition-prunes.
-    *
-    * Each affected partition is written to a temp table then swapped in
-    * via sidecar renames (old dir → [[PqRepo.parkedName]] sidecar, new
-    * dir into place, sidecar deleted), so EVERY crash point leaves the
-    * partition's old or new data on disk — never neither, never
-    * half-written. Readers skip the sidecar, so between the two renames
-    * (or after a crash there, until recovery) a read sees the table
-    * without that partition. A reader racing the swap can
-    * still observe some partitions old and some new — use whole-table
-    * [[merge]] when cross-partition snapshot atomicity matters more than
-    * the rewrite cost.
-    *
-    * Before the first swap (and after the tmp write has fully committed) a
-    * `_merge_manifest.json` is written under the table dir recording every
-    * partition the swap will touch and whether the tmp layout holds new
-    * data for it. An interrupted merge is therefore diagnosable (the
-    * manifest names exactly the dirs in flight) and resumable:
-    * [[recoverMergePartitioned]] rolls the recorded swap forward, and the
-    * next [[mergePartitioned]] call runs that recovery automatically
-    * before reading current state. The manifest is deleted only after all
-    * swaps land, so its absence means the table is clean.
-    *
-    * `updates` is evaluated at least twice — once to collect its
-    * distinct partition tuples, again by the write — so it must be
-    * deterministic across re-execution or already materialized. A batch
-    * that changes between the evaluations can write a partition the
-    * collect never saw: the engine takes such rows as inserts, so their
-    * files join that partition beside its current rows, which are kept,
-    * and a key it already held keeps its old row beside the new one. */
-  def mergePartitioned(
-      updates: DataFrame,
-      schema: String,
-      table: String,
-      keys: Seq[String],
-      partitionCols: Seq[String],
-      modified: Option[String] = None,
-      allowMissingColumns: Boolean = false
-  ): Path = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
-      s"partition columns $partitionCols must be a subset of the merge " +
-        s"keys $keys (otherwise a key could move partitions and its old " +
-        "row would survive)")
-    val dest = tablePath(schema, table)
-    val f = fs(dest)
-    // a manifest from a crashed previous merge — or a whole-table promote
-    // that crashed mid-swap: roll both forward first, so the current-side
-    // read below sees a consistent table
-    recover(schema, table)
-    if (!f.exists(dest))
-      return writePartitioned(updates, schema, table, partitionCols, modified)
-
-    // ONE resolved read of the destination serves both the schema
-    // validation and the merge engine's current-side scan: resolving lists
-    // the partition tree and reads one footer on the driver, a fixed cost
-    // per merge that compounds across streamed micro-batch appends. Safe
-    // because recovery already ran above, so the listing sees a
-    // consistent table.
-    val current = ParquetBridge.read(spark, dest)
-    validateMergeSchema(current, updates, keys,
-      allowMissingColumns, s"mergePartitioned($schema/$table)",
-      partitionScoped = true)
-    // the partitions this batch touches: a driver-side list of tuples,
-    // collected only after the bootstrap check
-    val affected =
-      updates.select(partitionCols.map(col): _*).distinct().collect().toSeq
-    if (affected.isEmpty) return dest
-    mergeIntoPartitions(updates, schema, table, keys, partitionCols,
-      affected, modified, allowMissingColumns, Some(current))
-  }
-
-  /** The partition-scoped merge ENGINE. It has two callers:
-    * [[mergePartitioned]] (affected = the updates' own partition tuples;
-    * `partitionCols ⊆ keys` makes that sufficient) and [[KeyedAppend]],
+  /** The partition-scoped merge ENGINE. It has two callers: the
+    * partitioned branch of [[merge]] (affected = the updates' own
+    * partition tuples; `partitionCols ⊆ keys` makes that sufficient) and
+    * [[KeyedAppend.land]],
     * the keyed append of every persisted index (affected = the
     * partitions where its probe found one of the batch's keys). The
     * latter also merges on keys the partition value is NOT a function
@@ -691,7 +652,17 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * updates already sit in one task, which writes one file per
     * partition without a shuffle. A reader racing the commit sees each
     * partition old, new, or — for an insert the clustered write split
-    * into several files — old plus some of its new files. */
+    * into several files — old plus some of its new files.
+    *
+    * The commit: after the tmp write, a `_merge_manifest.json` under the
+    * table dir records every partition in flight — its presence certifies
+    * the tmp layout complete — and the moves run
+    * ([[promoteMergedPartitions]]); the manifest goes last, so its absence
+    * means the table is clean. A crash at any step leaves every partition
+    * old or new on disk, never neither and never half-written, and
+    * [[recover]] (which this engine, like every entry point, runs before
+    * it reads the table or touches tmp) rolls the recorded moves
+    * forward. */
   private[graft] def mergeIntoPartitions(
       updates: DataFrame,
       schema: String,
@@ -701,7 +672,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       affected: Seq[Row],
       modified: Option[String] = None,
       allowMissingColumns: Boolean = false,
-      // a caller that already resolved the destination (mergePartitioned's
+      // a caller that already resolved the destination (merge's
       // validation read, an append's probe) passes it here so the table is
       // listed once per merge, not twice; None re-reads. MUST have been
       // created after recovery ran on this table.
@@ -710,12 +681,10 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   ): Path = {
     val dest = tablePath(schema, table)
     val f = fs(dest)
-    // heal any crashed earlier promote or merge BEFORE reading current
-    // state or touching tmp/manifest: a mid-swap table has partitions
-    // parked as reader-invisible `_old_` sidecars, and clobbering the tmp
-    // layout + manifest below would permanently lose a partition whose
-    // merged data still lived only in tmp. mergePartitioned runs these at
-    // entry too (both are fast no-ops on a clean table).
+    // heal any crashed earlier commit BEFORE reading current state or
+    // touching tmp/manifest: clobbering the tmp layout and manifest of a
+    // crashed merge would lose a partition whose merged data still lived
+    // only in tmp (a fast no-op on a clean table)
     recover(schema, table)
     graft.InternalCols.requireAbsent(updates, "PqRepo.mergeIntoPartitions", ModeCol)
     val currentAll = currentFull.getOrElse(ParquetBridge.read(spark, dest))
@@ -739,13 +708,12 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // away), merged with the updates; each row tagged with its mode
     val merged = cowMerge(currentAll.filter(touch), updates, keys, allowMissingColumns)
       .withColumn(ModeCol, when(touch, lit(SwapMode)).otherwise(lit(AddMode)))
-    // clustered as in [[writePartitioned]] (r20/r21): an unclustered
+    // clustered as in [[write]] (r20/r21): an unclustered
     // dynamic-partition write fragments every touched directory into
     // per-task files that compound across micro-batch merges
     val cluster = rewrite.nonEmpty || updates.queryExecution.toRdd.getNumPartitions > 1
-    val tmp = mergeTmpPath(schema, table)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    stampModified(clusterOnPartitions(merged, partitionCols, cluster),
+    val tmp = clearTmp(f, schema, table)
+    stampModified(if (cluster) clusterOnPartitions(merged, partitionCols) else merged,
         partitionCols :+ ModeCol, modified)
       .write.mode("overwrite").partitionBy(ModeCol +: partitionCols: _*)
       .parquet(tmp.toString)
@@ -778,12 +746,23 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     dest
   }
 
-  /** Heal a crashed earlier promote ([[recoverWrite]]) and merge
-    * ([[recoverMergePartitioned]]) of a table, so a read after it sees
-    * every row. */
-  private[graft] def recover(schema: String, table: String): Unit = {
-    recoverWrite(schema, table)
-    recoverMergePartitioned(schema, table)
+  /** Heal a crashed earlier commit of a table, so that it is exactly its
+    * old or exactly its new version and a read after it sees every row:
+    *  - a stamped whole-table promote ([[promote]], a [[write]] or
+    *    [[restore]]) rolls forward, archiving included;
+    *  - an `_old_` sidecar left by a promote of older versions rolls
+    *    back when the table path is empty, else is dropped;
+    *  - a partition-scoped merge rolls forward from its
+    *    `_merge_manifest.json`.
+    * Every mutating entry point runs it first; public so an operator can
+    * heal a table without writing to it. Idempotent; returns true when
+    * something was repaired. Do not run it concurrently with a writer on
+    * the same table. An unstamped tmp layout is left for the next write
+    * to clear. */
+  def recover(schema: String, table: String): Boolean = {
+    val f = fs(tablePath(schema, table))
+    val promoted = completePromote(f, schema, table) || recoverSidecar(f, schema, table)
+    recoverMerge(f, schema, table) || promoted
   }
 
   /** The synthetic leading partition column of the merge engine's tmp
@@ -793,18 +772,16 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   private val SwapMode = "swap"
   private val AddMode = "add"
 
-  /** Roll an interrupted [[mergePartitioned]] forward from its committed
-    * `_merge_manifest.json`: every recorded partition ends at its merged
-    * state (promoted, absent for empty merges, or holding every file the
-    * merge added), sidecars and the tmp layout are cleaned, the manifest
-    * removed. Idempotent; a no-op returning false when no manifest exists
-    * (the table is clean). */
-  def recoverMergePartitioned(schema: String, table: String): Boolean = {
+  /** Roll an interrupted [[mergeIntoPartitions]] forward from its
+    * committed `_merge_manifest.json`: every recorded partition ends at its
+    * merged state (promoted, absent for empty merges, or holding every file
+    * the merge added), sidecars and the tmp layout are cleaned, the
+    * manifest removed. False when no manifest exists. */
+  private def recoverMerge(f: FileSystem, schema: String, table: String): Boolean = {
     val manifest = mergeManifestPath(schema, table)
-    val f = fs(manifest)
     if (!f.exists(manifest)) return false
     val moves = readMergeManifest(manifest)
-    val tmp = mergeTmpPath(schema, table)
+    val tmp = tmpPath(schema, table)
     promoteMergedPartitions(f, tmp, tablePath(schema, table), moves)
     if (f.exists(tmp)) f.delete(tmp, true)
     f.delete(manifest, false)
@@ -812,7 +789,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   }
 
   /** Idempotent commit of the moves of a merge — the shared engine of
-    * [[mergeIntoPartitions]] and [[recoverMergePartitioned]].
+    * [[mergeIntoPartitions]] and [[recoverMerge]].
     *
     * A swap parks the old dir under a reader-invisible sidecar
     * ([[PqRepo.parkedName]]), renames the new dir into place and deletes
@@ -837,25 +814,22 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       // the visible `_old_<col>=<v>` name older swaps parked under
       val sides = Seq(side, new Path(dst.getParent, s"_old_${dst.getName}"))
       def dropSides(): Unit = sides.foreach(s => if (f.exists(s)) f.delete(s, true))
-      def rename(from: Path, to: Path): Unit =
-        if (!f.rename(from, to))
-          throw new java.io.IOException(s"Could not move $from to $to")
       m.src.map(new Path(tmp, _)) match {
         case Some(src) if m.add =>
           if (f.exists(src)) {
             if (!f.exists(dst)) {
               if (!f.exists(dst.getParent)) f.mkdirs(dst.getParent)
-              rename(src, dst)
+              rename(f, src, dst)
             } else f.listStatus(src)
               .filter(s => s.isFile && !isHiddenName(s.getPath.getName))
-              .foreach(s => rename(s.getPath, new Path(dst, s.getPath.getName)))
+              .foreach(s => rename(f, s.getPath, new Path(dst, s.getPath.getName)))
           }
         case Some(src) =>
           if (f.exists(src)) {
             dropSides() // stale from older crash
             if (!f.exists(dst.getParent)) f.mkdirs(dst.getParent)
-            if (f.exists(dst)) rename(dst, side)
-            rename(src, dst)
+            if (f.exists(dst)) rename(f, dst, side)
+            rename(f, src, dst)
           }
           // src gone ⇒ this partition was already promoted
           dropSides()
@@ -872,7 +846,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   /** The `a=1/b=2` relative partition dirs present under `base`, walking
     * exactly `depth` directory levels (sidecars and files skipped) — the
     * writer-authored names, used as promotion truth by
-    * [[mergePartitioned]]. */
+    * [[mergeIntoPartitions]]. */
   private def listPartitionRelDirs(
       f: org.apache.hadoop.fs.FileSystem,
       base: Path,
@@ -895,7 +869,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   }
 
   /** Hive-escaped relative partition dir (`a=1/b=2`), matching Spark's
-    * writer layout for the common types; [[mergePartitioned]] treats the
+    * writer layout for the common types; [[mergeIntoPartitions]] treats the
     * LISTED tmp layout as truth and uses this rendering only for the
     * defensive empty-merge entries. */
   private def partitionRelDir(partitionCols: Seq[String], row: Row): String =
@@ -907,65 +881,81 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       s"$c=$v"
     }.mkString("/")
 
-  private def mergeTmpPath(schema: String, table: String): Path =
+  /** The one tmp location of a table, shared by [[write]], [[restore]]
+    * and [[mergeIntoPartitions]]. */
+  private def tmpPath(schema: String, table: String): Path =
     new Path(new Path(dataDir, schema), s"_tmp_$table.parquet")
+
+  /** Delete a stale tmp layout (after [[recover]] ran, nothing in it is
+    * committed) and return the tmp path. */
+  private def clearTmp(f: FileSystem, schema: String, table: String): Path = {
+    val tmp = tmpPath(schema, table)
+    if (f.exists(tmp)) f.delete(tmp, true)
+    tmp
+  }
 
   private def oldSidecarPath(schema: String, table: String): Path =
     new Path(new Path(dataDir, schema), s"_old_$table.parquet")
 
-  /** Whole-table ops that rewrite through the FLAT [[write]] path must
-    * refuse hive-partitioned trees: the rewrite would demote partition
-    * columns to data columns — every downstream partition-pruning scan
-    * silently degrades to a full read — and a later [[mergePartitioned]]
-    * would interleave partition dirs with flat files, a layout Spark
-    * cannot read coherently. */
-  private def requireFlatLayout(schema: String, table: String, op: String): Unit =
-    if (partitionColsOf(schema, table).nonEmpty)
-      throw new IllegalStateException(
-        s"$op($schema/$table): the table is hive-partitioned; a flat " +
-          "rewrite would silently demote its partition columns (losing " +
-          "directory pruning) and leave any table-level meta sidecar " +
-          "stale. Use mergePartitioned for upserts, or rebuild through " +
-          "writePartitioned with the original partition columns")
+  private def rename(f: FileSystem, from: Path, to: Path): Unit =
+    if (!f.rename(from, to))
+      throw new java.io.IOException(s"Could not move $from to $to")
 
-  /** Swap a fully-written tmp layout into the table path, preserving the
-    * previous table as a reader-invisible `_old_` sidecar until the new
-    * one is in place — the whole-table analog of [[mergePartitioned]]'s
-    * per-partition swap. NO crash point loses data: at every instant the
-    * table path or the sidecar holds a complete table (a crash inside
-    * the two-rename window leaves the path briefly absent for readers;
-    * the next write on the table — or an explicit [[recoverWrite]] —
-    * restores it). A failed final rename rolls the old table back. */
-  private def promoteTable(
-      f: FileSystem, tmp: Path, schema: String, table: String): Unit = {
-    val dest = tablePath(schema, table)
-    val side = oldSidecarPath(schema, table)
-    if (f.exists(side)) f.delete(side, true) // stale: recoverWrite ran at entry
-    if (f.exists(dest) && !f.rename(dest, side))
-      throw new java.io.IOException(s"Could not stage $dest aside to $side")
-    if (!f.rename(tmp, dest)) {
-      if (f.exists(side)) f.rename(side, dest) // roll the old table back
-      throw new java.io.IOException(s"Could not promote $tmp to $dest")
-    }
-    if (f.exists(side)) f.delete(side, true)
+  /** The stamp that makes a complete tmp layout the table's next version. */
+  private val PromoteFileName = "_graft_promote.json"
+  private val ArchiveProp = "archive"
+
+  /** Stamp the layout at `dir` (the tmp layout, or a snapshot about to
+    * become it) for [[completePromote]], naming where the replaced table
+    * goes: `archiveTo`, or the hidden `_old_` sidecar. */
+  private def stampPromote(f: FileSystem, dir: Path, archiveTo: Option[Path]): Unit =
+    writeMetaFile(f, new Path(dir, PromoteFileName),
+      archiveTo.map(a => Map(ArchiveProp -> a.toString)).getOrElse(Map.empty))
+
+  /** The one whole-table commit of a complete tmp layout: stamp it, then
+    * [[completePromote]]. */
+  private def promote(f: FileSystem, schema: String, table: String, archiveTo: Option[Path]): Unit = {
+    stampPromote(f, tmpPath(schema, table), archiveTo)
+    completePromote(f, schema, table)
   }
 
-  /** Heal a write whose [[promoteTable]] swap crashed between its two
-    * renames: a surviving `_old_` sidecar means either the new table
-    * landed (sidecar is leftover — dropped) or it did not (the sidecar IS
-    * the previous table — renamed back into place). Runs automatically at
-    * the start of every write path; public so an operator can heal a
-    * table without writing to it. Returns true when something was
-    * repaired. Do not run concurrently with a writer on the same table —
-    * writers already serialize on the shared tmp path. */
-  def recoverWrite(schema: String, table: String): Boolean = {
+  /** Carry a stamped promote through from wherever it stopped: the
+    * replaced table moves to the archive or aside to the `_old_` sidecar,
+    * the tmp layout renames into the table path, then the sidecar and the
+    * stamp are deleted. Before the stamp the old table stands; from the
+    * stamp on, every run ends at the new one (with the old one archived
+    * when asked). Between the two renames a reader finds no table until
+    * this completes. Idempotent; false when no promote was in flight. */
+  private def completePromote(f: FileSystem, schema: String, table: String): Boolean = {
+    val dest = tablePath(schema, table)
+    val tmp = tmpPath(schema, table)
+    val side = oldSidecarPath(schema, table)
+    val stamp = new Path(tmp, PromoteFileName)
+    val landed = new Path(dest, PromoteFileName)
+    val pending = f.exists(stamp)
+    if (!pending && !f.exists(landed)) return false
+    if (pending) {
+      if (f.exists(dest)) {
+        val aside = readMetaFile(f, stamp).get(ArchiveProp).map(new Path(_)).getOrElse(side)
+        if (f.exists(aside)) f.delete(aside, true)
+        if (!f.exists(aside.getParent)) f.mkdirs(aside.getParent)
+        rename(f, dest, aside)
+      }
+      rename(f, tmp, dest)
+    }
+    if (f.exists(side)) f.delete(side, true)
+    f.delete(landed, false)
+    true
+  }
+
+  /** An `_old_` sidecar with no stamp in flight, left by a promote that
+    * parked the table unstamped: it IS the table when the table path is
+    * empty (renamed back), else a leftover (dropped). */
+  private def recoverSidecar(f: FileSystem, schema: String, table: String): Boolean = {
     val side = oldSidecarPath(schema, table)
     val dest = tablePath(schema, table)
-    val f = fs(side)
     if (!f.exists(side)) return false
-    if (f.exists(dest)) f.delete(side, true)
-    else if (!f.rename(side, dest))
-      throw new java.io.IOException(s"Could not restore $side to $dest")
+    if (f.exists(dest)) f.delete(side, true) else rename(f, side, dest)
     true
   }
 
@@ -990,18 +980,19 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * e.g. the bucket count a hash-partitioned layout was built with or
     * the sort/z-order columns [[compact]] must re-apply.
     * Underscore-prefixed, so parquet readers never see it, and stored
-    * INSIDE the table dir, so it survives [[mergePartitioned]] (which
+    * INSIDE the table dir, so it survives a partitioned [[merge]] (which
     * swaps partition subdirs, not the table dir) but is correctly dropped
-    * by any whole-table rewrite ([[write]]/[[writePartitioned]] replace
-    * the dir) — stale geometry cannot outlive the layout it describes;
-    * rebuilders re-stamp it. Writers that create the layout should pass
-    * `metaProps` to [[write]]/[[writePartitioned]] instead, which stamps
+    * by any whole-table rewrite ([[write]] replaces the dir) — stale
+    * geometry cannot outlive the layout it describes; rebuilders re-stamp
+    * it. Writers that create the layout should pass `metaProps` to
+    * [[write]] instead, which stamps
     * the sidecar INSIDE the tmp layout so it promotes atomically with the
     * files; this standalone path (for annotating an existing table)
     * stages through a hidden tmp file + rename, so a crash can at worst
     * lose the update, never leave a torn sidecar. */
   def writeTableMeta(
       schema: String, table: String, props: Map[String, String]): Path = {
+    recover(schema, table)
     val p = tableMetaPath(schema, table)
     val f = fs(p)
     require(f.exists(tablePath(schema, table)),
@@ -1018,7 +1009,11 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   def readTableMeta(schema: String, table: String): Map[String, String] = {
     val p = tableMetaPath(schema, table)
     val f = fs(p)
-    if (!f.exists(p)) return Map.empty
+    if (f.exists(p)) readMetaFile(f, p) else Map.empty
+  }
+
+  /** The property map of a file [[writeMetaFile]] wrote. */
+  private def readMetaFile(f: FileSystem, p: Path): Map[String, String] = {
     val in = f.open(p)
     val json =
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -1047,7 +1042,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       if (m.add) s"""{"dir":"${m.dir}","add":true$src}"""
       else s"""{"dir":"${m.dir}","hasNew":${m.src.nonEmpty}$src}"""
     }.mkString(
-      s"""{"table":"$table","tmp":"${mergeTmpPath(schema, table)}","partitions":[""",
+      s"""{"table":"$table","tmp":"${tmpPath(schema, table)}","partitions":[""",
       ",", "]}")
     val out = fs(manifest).create(manifest, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1137,10 +1132,13 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   /** Replace the embedded `last_modified` comment (the repo analog of
     * reference set_table_comment, postgres/comments.py:35). Parquet footers
     * are immutable, so this rewrites the table through the normal
-    * tmp+promote path — an admin-rate operation. */
+    * tmp+promote path — an admin-rate operation. A flat rewrite only: a
+    * hive-partitioned table is refused. */
   def setComment(schema: String, table: String, comment: String): Path = {
-    requireFlatLayout(schema, table, "setComment")
-    write(this.table(schema, table), schema, table, modified = Some(comment))
+    recover(schema, table)
+    val current = this.table(schema, table)
+    requireLayout(current, Nil, s"setComment($schema/$table)")
+    write(current, schema, table, modified = Some(comment))
   }
 
   /** Write with piggybacked data-quality metrics: the aliased aggregate
@@ -1166,12 +1164,14 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
   /** Compact a table to a bounded file layout — the maintenance pass after
     * many incremental/small writes (task-sized files accumulate; small
     * files break scan parallelism planning and metadata caches at scale).
-    * Rewrites through the same tmp+promote path (readers never see a
+    * Runs [[recover]] first, so it never compacts a table a crashed merge
+    * left with a partition parked, then rewrites through [[write]]'s
+    * tmp+promote body minus its clustering (readers never see a
     * half-compacted table) and preserves the embedded `last_modified`.
     *
     * Hive-partitioned tables (r12) compact WITHOUT flattening: rows
     * re-lay per partition value (repartition on the partition columns —
-    * exactly where incremental [[mergePartitioned]] runs accumulate
+    * exactly where incremental partitioned [[merge]] runs accumulate
     * task-sized files), the directory tree and any `_graft_meta.json`
     * sidecar survive (the preserved sidecar travels inside the tmp
     * layout, so no crash point can strip a healthy index of its
@@ -1195,47 +1195,33 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       maxRecordsPerFile: Option[Long] = None,
       parquetBlockBytes: Option[Long] = None
   ): Path = {
+    recover(schema, table)
     val src = this.table(schema, table)
-    val pcols = partitionColsOf(schema, table)
+    val pcols = ParquetBridge.partitionColumns(src)
     val meta = readTableMeta(schema, table)
-    if (pcols.nonEmpty) {
-      val cols = pcols.map(col)
-      val laid = targetPartitions
-        .map(n => src.repartition(n, cols: _*))
-        .getOrElse(src.repartition(cols: _*))
-      // cluster = false: `laid` already carries compact's own layout
-      // (targetPartitions override) — writePartitioned's default
-      // clustering would collapse over it and ignore the file-count goal
-      writePartitioned(laid, schema, table, pcols,
-        modified = lastModified(schema, table),
-        maxRecordsPerFile = maxRecordsPerFile,
-        parquetBlockBytes = parquetBlockBytes,
-        metaProps = Some(meta),
-        cluster = false)
-    } else {
-      val layoutCols = meta.get(LayoutColsProp)
-        .map(_.split(",").toSeq).getOrElse(Nil)
-      val n = targetPartitions
-        .orElse(meta.get(LayoutFilesProp).flatMap(s =>
-          scala.util.Try(s.toInt).toOption))
-      val (laid, newMeta) = meta.get(LayoutKindProp) match {
-        case Some("sorted") if layoutCols.nonEmpty && n.isDefined =>
-          (sortedLayout(src, layoutCols, n.get),
-            meta + (LayoutFilesProp -> n.get.toString))
-        case Some("zorder") if layoutCols.nonEmpty && n.isDefined =>
-          val bits = meta.get(LayoutBitsProp)
-            .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(16)
-          (zOrderLayout(src, layoutCols, n.get, bits),
-            meta + (LayoutFilesProp -> n.get.toString))
-        case _ =>
-          (targetPartitions.map(src.coalesce).getOrElse(src), meta)
-      }
-      write(laid, schema, table,
-        modified = lastModified(schema, table),
-        maxRecordsPerFile = maxRecordsPerFile,
-        parquetBlockBytes = parquetBlockBytes,
-        metaProps = Some(newMeta))
+    val layoutCols = meta.get(LayoutColsProp).map(_.split(",").toSeq).getOrElse(Nil)
+    val n = targetPartitions
+      .orElse(meta.get(LayoutFilesProp).flatMap(s => scala.util.Try(s.toInt).toOption))
+    // `laid` carries compact's own layout, so the write skips its
+    // clustering, which would collapse over it and ignore the file-count goal
+    val (laid, newMeta) = meta.get(LayoutKindProp) match {
+      case _ if pcols.nonEmpty =>
+        val cols = pcols.map(col)
+        (targetPartitions.map(src.repartition(_, cols: _*))
+          .getOrElse(src.repartition(cols: _*)), meta)
+      case Some("sorted") if layoutCols.nonEmpty && n.isDefined =>
+        (sortedLayout(src, layoutCols, n.get),
+          meta + (LayoutFilesProp -> n.get.toString))
+      case Some("zorder") if layoutCols.nonEmpty && n.isDefined =>
+        val bits = meta.get(LayoutBitsProp)
+          .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(16)
+        (zOrderLayout(src, layoutCols, n.get, bits),
+          meta + (LayoutFilesProp -> n.get.toString))
+      case _ =>
+        (targetPartitions.map(src.coalesce).getOrElse(src), meta)
     }
+    writeLayout(laid, schema, table, pcols, lastModified(schema, table), None,
+      maxRecordsPerFile, parquetBlockBytes, Some(newMeta))
   }
 
   /** Remove an active or archived table (reference pq_remove). */
@@ -1245,6 +1231,8 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       archived: Boolean = false,
       archiveDir: String = "archive"
   ): Boolean = {
+    // a stamped promote left behind would bring the table back
+    if (!archived) recover(schema, table)
     val p =
       if (archived) new Path(archivePath(schema, archiveDir), s"$table.parquet")
       else tablePath(schema, table)
@@ -1264,6 +1252,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
       force: Boolean = false,
       archiveExisting: Boolean = false
   ): Option[Path] = {
+    recover(schema, table) // the gate reads the healed table's stamp
     val src = Modified.info("src", sourceComment)
     val dst = Modified.info("pq", lastModified(schema, table))
     val proceed = force || (src.date.isDefined && Modified.updateAvailable(src, dst))
@@ -1294,7 +1283,7 @@ object PqRepo {
       dir: String, src: Option[String], add: Boolean = false)
 
   /** The name a partition directory is parked under while
-    * [[PqRepo.mergePartitioned]] swaps it: `_old_` and the hive-escaped
+    * [[PqRepo.mergeIntoPartitions]] swaps it: `_old_` and the hive-escaped
     * directory name. It holds no `=`, so Spark's hidden-path rule
     * (`HadoopFSUtils.shouldFilterOutPathName`), which the repo's reads
     * use too, skips it. A `_old_<col>=<v>` name would not be skipped: it

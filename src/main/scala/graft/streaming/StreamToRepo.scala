@@ -7,10 +7,12 @@ import org.apache.spark.sql.functions._
 import graft.sources.PqRepo
 
 /** Exactly-once streaming → repo landing: a `foreachBatch` sink that
-  * lands each micro-batch through [[PqRepo.merge]] (or the
-  * partition-scoped [[PqRepo.mergePartitioned]]) guarded by a batch-id
+  * lands each micro-batch through [[PqRepo.merge]] (flat, or
+  * partition-scoped with `partitionCols`) guarded by a batch-id
   * idempotency LEDGER, so a restarted stream cannot double-land the
-  * micro-batch Structured Streaming re-delivers after a crash.
+  * micro-batch Structured Streaming re-delivers after a crash. Every
+  * sink here is an instance of [[ledgeredSink]], the one place a ledger
+  * marker is created.
   *
   * Why the plain parquet sink isn't enough: the file sink's
   * exactly-once guarantee holds only INSIDE its own checkpointed
@@ -26,26 +28,27 @@ import graft.sources.PqRepo
   *      batch id under `<schema>/_ledger_<table>/batch-<id>` — NEXT TO
   *      the table dir, not inside it, because the repo's copy-on-write
   *      promote replaces the table directory wholesale. Marker creation
-  *      is a single atomic filesystem create AFTER the merge promotes;
+  *      is a single atomic filesystem create AFTER the merge commits;
   *      a re-delivered batch whose marker exists is skipped without
   *      reading its data. The `_` prefix hides the dir from any reader
   *      that lists the schema.
   *   2. **Key-idempotent merge** (crash window): if the process dies
-  *      after the merge promoted but before the marker landed, the
+  *      after the merge committed but before the marker landed, the
   *      replay re-merges the identical batch — and [[PqRepo.merge]]
   *      replaces rows by key, so re-merging the same rows is a no-op on
-  *      the table's contents (StreamToRepoSpec kills exactly this
-  *      window and proves the row set is unchanged).
+  *      the table's contents. A crash inside the merge itself is healed
+  *      by the replay's own [[PqRepo.recover]] (StreamToRepoSpec walks
+  *      every step of a landing).
   *
-  * Scale shape: whole-table merge is copy-on-write over the table — fine
-  * for aggregate-sized results (closed sessions, per-window stats),
-  * wrong for a 100 TB fact table; pass `partitionCols` to route through
-  * [[PqRepo.mergePartitioned]], which rewrites only the hive partitions
-  * the batch touches (its `_merge_manifest.json` crash protocol already
-  * makes each partition swap resumable). The ledger dir accumulates one
-  * empty file per batch — prune with [[pruneLedger]] once batches are
-  * older than any possible replay (Spark replays at most the batches
-  * after the last checkpoint commit). */
+  * Scale shape: a flat merge is copy-on-write over the table — fine for
+  * aggregate-sized results (closed sessions, per-window stats), wrong
+  * for a 100 TB fact table; pass `partitionCols` (the table's own) and
+  * the merge rewrites only the hive partitions the batch touches (its
+  * `_merge_manifest.json` crash protocol makes each partition swap
+  * resumable). The ledger dir accumulates one empty file per batch —
+  * prune with [[pruneLedger]] once batches are older than any possible
+  * replay (Spark replays at most the batches after the last checkpoint
+  * commit). */
 object StreamToRepo {
 
   private def ledgerPath(repo: PqRepo, schema: String, table: String): Path =
@@ -113,44 +116,32 @@ object StreamToRepo {
     require(routes.nonEmpty, "routeSink needs at least one route")
     require(routes.map(_._1).distinct.size == routes.size,
       "route table names must be unique")
-    val ledgerTable = routes.map(_._1).mkString("+")
     val routesCol = "__graft_routes"
-    (batch: DataFrame, batchId: Long) => {
-      val marker = markerPath(repo, schema, ledgerTable, batchId)
-      val f = fs(repo, marker)
-      if (!f.exists(marker)) {
-        graft.InternalCols.requireAbsent(batch, "routeSink", routesCol)
-        val tagged = batch
-          .withColumn(routesCol, filter(
-            array(routes.map { case (table, pred) =>
-              when(pred, lit(table)) }: _*),
-            _.isNotNull))
-          .persist()
-        // one action populates the cache — THE single pass over the
-        // batch's upstream plan; the route filters below read blocks
-        tagged.count()
-        try {
-          // routes land OVERLAPPED (r20, guide §2.6): each route merges
-          // into its OWN table (disjoint outputs, each with its own
-          // atomic promote/recovery), reading the shared cached tagged
-          // frame. The exactly-once story is unchanged: the marker still
-          // lands only after EVERY route merged, and a crash mid-routes
-          // replays all routes key-merge-idempotently — exactly as when
-          // a crash fell between the previously sequential merges.
-          graft.Par.runAll(routes.map { case (table, _) => () =>
-            val slice = tagged
-              .filter(array_contains(col(routesCol), table))
-              .drop(routesCol)
-            if (partitionCols.nonEmpty)
-              repo.mergePartitioned(slice, schema, table, keys, partitionCols)
-            else
-              repo.merge(slice, schema, table, keys)
-            ()
-          })
-        } finally tagged.unpersist()
-        f.mkdirs(marker.getParent)
-        f.create(marker, false).close()
-      }
+    ledgeredSink(repo, schema, routes.map(_._1).mkString("+")) { batch =>
+      graft.InternalCols.requireAbsent(batch, "routeSink", routesCol)
+      val tagged = batch
+        .withColumn(routesCol, filter(
+          array(routes.map { case (table, pred) =>
+            when(pred, lit(table)) }: _*),
+          _.isNotNull))
+        .persist()
+      // one action populates the cache — THE single pass over the
+      // batch's upstream plan; the route filters below read blocks
+      tagged.count()
+      try {
+        // routes land OVERLAPPED (r20, guide §2.6): each route merges
+        // into its OWN table (disjoint outputs, each with its own
+        // atomic promote/recovery), reading the shared cached tagged
+        // frame. The exactly-once story is unchanged: the marker still
+        // lands only after EVERY route merged, and a crash mid-routes
+        // replays all routes key-merge-idempotently — exactly as when
+        // a crash fell between the previously sequential merges.
+        graft.Par.runAll(routes.map { case (table, _) => () =>
+          repo.merge(tagged.filter(array_contains(col(routesCol), table)).drop(routesCol),
+            schema, table, keys, partitionCols = partitionCols)
+          ()
+        })
+      } finally tagged.unpersist()
     }
   }
 
@@ -197,9 +188,6 @@ object StreamToRepo {
       partitionCols: Seq[String] = Nil
   ): (DataFrame, Long) => Unit =
     ledgeredSink(repo, schema, table) { batch =>
-      if (partitionCols.nonEmpty)
-        repo.mergePartitioned(batch, schema, table, keys, partitionCols)
-      else
-        repo.merge(batch, schema, table, keys)
+      repo.merge(batch, schema, table, keys, partitionCols = partitionCols)
     }
 }

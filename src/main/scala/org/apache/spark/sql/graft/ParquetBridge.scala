@@ -13,7 +13,7 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.errors.{QueryCompilationErrors, QueryExecutionErrors}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
@@ -61,10 +61,7 @@ object ParquetBridge {
     * the listing the read made (no listing, no job): each partition's
     * values in `cols` order, with its file count. */
   def filesPerPartition(df: DataFrame, cols: Seq[String]): Seq[(Row, Int)] = {
-    val index = df.queryExecution.analyzed.collectFirst {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location
-    }.getOrElse(throw new IllegalArgumentException("not a file-source read"))
+    val index = locationOf(df)
     val names = index.partitionSchema.fieldNames.map(_.toLowerCase)
     val at = cols.map(c => names.indexOf(c.toLowerCase))
     val toScala = CatalystTypeConverters.createToScalaConverter(index.partitionSchema)
@@ -73,6 +70,17 @@ object ParquetBridge {
       Row.fromSeq(at.map(values.get)) -> p.files.size
     }
   }
+
+  /** The partition column names of a [[read]] frame, in directory order,
+    * from the listing the read made: empty for a flat table. */
+  def partitionColumns(df: DataFrame): Seq[String] =
+    locationOf(df).partitionSchema.fieldNames.toSeq
+
+  private def locationOf(df: DataFrame): FileIndex =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location
+    }.getOrElse(throw new IllegalArgumentException("not a file-source read"))
 
   /** The reader options `spark.read.parquet(root)` resolves with. */
   private def options(root: Path): Map[String, String] = Map("path" -> root.toString)

@@ -1,27 +1,19 @@
 package graft.operators
 
-import java.io.File
-import java.nio.file.{Files, Path => JPath}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.{CrashFs, PqRepo}
+import graft.sources.{CrashWalk, PqRepo}
 
-/** Crash at every commit point of the index appends: for each step k of
-  * an append, the append dies at its k-th file system call, and then
-  *   1. each table reads without error;
-  *   2. the next call's recovery leaves it exactly old or exactly new;
-  *   3. a second recovery changes nothing;
-  *   4. replaying the batch reaches exactly the state of an append that
-  *      never crashed — for new rows `write(A ∪ B)`, for a re-ingest the
-  *      copy-on-write merge's — with no tmp layout or manifest left
-  *      behind.
-  * Steps are the repo's own driver-side calls ([[CrashFs]]). */
-class IndexAppendCrashSpec extends SparkSpec {
+/** Crash at every commit point of the index writes and appends
+  * ([[CrashWalk]]): after recovery each table is exactly old or exactly
+  * new, and replaying the batch reaches exactly the state of an append
+  * that never crashed — for new rows `write(A ∪ B)`, for a re-ingest the
+  * copy-on-write merge's. */
+class IndexAppendCrashSpec extends SparkSpec with CrashWalk {
 
   private val g = MinHashIndex.Geometry(shingleK = 5, numHashes = 32, bands = 8, buckets = 4)
 
@@ -31,66 +23,6 @@ class IndexAppendCrashSpec extends SparkSpec {
   private def docs(rows: (Long, String)*): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
-  }
-
-  private def copyTree(from: JPath, to: JPath): Unit =
-    Files.walk(from).iterator().asScala.foreach { p =>
-      val q = to.resolve(from.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
-    }
-
-  private def leftovers(root: File): Seq[String] =
-    Files.walk(root.toPath).iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.startsWith("_tmp_") || n.startsWith("_old_") ||
-        n == "_merge_manifest.json").toSeq
-
-  /** Walk every crash point of `op` on a copy of the fixture repo built by
-    * `build`; `rows` snapshots the tables `op` writes. With a `reference`,
-    * the uncrashed result must equal what it leaves on another copy. */
-  private def walk(name: String, tables: Seq[String], rows: PqRepo => Seq[Seq[String]],
-      reference: Option[PqRepo => Unit] = None)(
-      build: PqRepo => Unit)(op: PqRepo => Unit): Seq[Seq[String]] = {
-    CrashFs.register(spark)
-    val fixture = Files.createTempDirectory(s"crash_$name")
-    build(PqRepo(spark, fixture.toString))
-    def fresh(): PqRepo = {
-      val dir = Files.createTempDirectory(s"crash_${name}_k")
-      Files.delete(dir)
-      copyTree(fixture, dir)
-      PqRepo(spark, "crash://" + dir)
-    }
-    val before = rows(PqRepo(spark, fixture.toString))
-    val clean = fresh()
-    val n = CrashFs.run(0)(op(clean))
-    val after = rows(clean)
-    reference.foreach { ref =>
-      val repo = fresh()
-      ref(repo)
-      assert(rows(repo) == after, s"$name differs from its reference")
-    }
-    assert(before != after, s"$name changed nothing")
-    assert(n >= 4, s"$name took only $n steps")
-    info(s"$name: $n steps")
-    for (k <- 1 to n) {
-      val repo = fresh()
-      intercept[CrashFs.Crash](CrashFs.run(k)(op(repo)))
-      // reads of a crashed table do not fail
-      tables.foreach(t => repo.table("idx", t).collect())
-      def recover(): Boolean = tables.map(t =>
-        repo.recoverWrite("idx", t) | repo.recoverMergePartitioned("idx", t)).reduce(_ | _)
-      recover()
-      val healed = rows(repo)
-      healed.indices.foreach { i =>
-        assert(healed(i) == before(i) || healed(i) == after(i),
-          s"$name, crash at step $k of $n: ${tables(i)} is neither old nor new")
-      }
-      assert(!recover(), s"$name, step $k: a second recovery found work")
-      assert(rows(repo) == healed)
-      op(repo)
-      assert(rows(repo) == after, s"$name, crash at step $k of $n: replay differs")
-      assert(leftovers(new File(repo.dataDir.stripPrefix("crash://"))).isEmpty)
-    }
-    after
   }
 
   private def mhRows(repo: PqRepo): Seq[Seq[String]] = Seq(
@@ -111,6 +43,14 @@ class IndexAppendCrashSpec extends SparkSpec {
     MinHashIndex.write(all, docs(corpus: _*).unionByName(batch), "doc_id", "text",
       "idx", "d", g)
     assert(after == mhRows(all))
+  }
+
+  test("MinHashIndex.write over an existing index recovers from a crash at every step") {
+    // both tables are rewritten whole, overlapped: each ends old or new
+    walk("mh_write", Seq("d_mhdocs", "d_mhbands"), mhRows, absentOk = true)(
+      MinHashIndex.write(_, docs(corpus: _*), "doc_id", "text", "idx", "d", g))(
+      MinHashIndex.write(_, docs(corpus.take(3) :+ (7L -> para(7)): _*), "doc_id", "text",
+        "idx", "d", g))
   }
 
   test("a checkChanged = false re-ingest, which swaps and adds, recovers from " +

@@ -11,8 +11,8 @@ import graft.sources.PqRepo
 /** The index appends that the keyed, insert-as-new-files appends
   * ([[graft.sources.KeyedAppend]]) replaced, kept as the reference they
   * are property-tested against (IndexAppendSpec): the whole batch merges
-  * through the partition-scoped copy-on-write
-  * [[PqRepo.mergePartitioned]], which reads and rewrites every partition
+  * through the partition-scoped copy-on-write [[PqRepo.merge]], which
+  * reads and rewrites every partition
   * the batch touches, and reassignment finds its moved ids with a join.
   * The IVF-PQ, quantized and reassign bodies are the library's own as
   * they stood before the keyed append. */
@@ -39,9 +39,9 @@ object IndexAppendMergePlan {
       throw new IllegalStateException(
         s"MinHashIndex.append($schema/$name): batch re-ingests ids whose " +
           s"content changed [${changedSample.map(_.get(0)).mkString(", ")}]")
-    repo.mergePartitioned(withDocBucket(perDoc, g), schema, docsTable(name),
+    repo.merge(withDocBucket(perDoc, g), schema, docsTable(name),
       keys = Seq("id", "dbucket"), partitionCols = Seq("dbucket"))
-    repo.mergePartitioned(bandRows(perDoc, g), schema, bandsTable(name),
+    repo.merge(bandRows(perDoc, g), schema, bandsTable(name),
       keys = Seq("id", "band", "bh", "bucket"), partitionCols = Seq("bucket"))
   }
 
@@ -66,7 +66,7 @@ object IndexAppendMergePlan {
       throw new IllegalStateException(
         s"appendToIvfIndex($schema/$name): batch re-ingests ids whose " +
           s"embeddings moved clusters [${moved.map(_.get(0)).mkString(", ")}]")
-    repo.mergePartitioned(assigned, schema, s"${name}_ivf",
+    repo.merge(assigned, schema, s"${name}_ivf",
       keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
   }
 
@@ -106,7 +106,7 @@ object IndexAppendMergePlan {
           VectorFunctions.pqEncode(col("__rv"), books.books).as("codes"))
       else assigned.select(col("id"), col("cluster"),
         VectorFunctions.pqEncode(col("v"), books.books).as("codes"))
-    repo.mergePartitioned(codedBatch, schema, s"${name}_ivfpq",
+    repo.merge(codedBatch, schema, s"${name}_ivfpq",
       keys = Seq("id", "cluster"), partitionCols = Seq("cluster"))
   }
 
@@ -134,7 +134,7 @@ object IndexAppendMergePlan {
     }
     val coded = quantize(batch, idCol, vecCol)
       .withColumn("bucket", q8Bucket(idCol, numBuckets))
-    repo.mergePartitioned(coded, schema, table,
+    repo.merge(coded, schema, table,
       keys = Seq(idCol, "bucket"), partitionCols = Seq("bucket"))
   }
 

@@ -18,7 +18,7 @@ class GraftCatalogSpec extends SparkSpec {
     val repo = PqRepo(spark, p)
     repo.write(spark.read.parquet(s"$sfDir/nation.parquet"), "tpch", "nation")
     repo.write(spark.read.parquet(s"$sfDir/orders.parquet"), "tpch", "orders")
-    repo.writePartitioned(
+    repo.write(
       spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), col("text"), col("lang")),
       "corpus", "docs", partitionCols = Seq("lang"))

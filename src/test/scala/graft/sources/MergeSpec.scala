@@ -91,20 +91,20 @@ class MergeSpec extends SparkSpec {
     "missing-column evolution allowed, added columns always rejected") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergeschema3").toString)
-    repo.writePartitioned(
+    repo.write(
       Seq(("d1", 1L, 10.0, "x"), ("d2", 2L, 20.0, "y"))
         .toDF("day", "k", "v", "note"),
-      "s", "t", Seq("day"))
+      "s", "t", partitionCols = Seq("day"))
     // default: drift is named before any partition is touched
     val e1 = intercept[IllegalArgumentException] {
-      repo.mergePartitioned(Seq(("d1", 1L, 11.0)).toDF("day", "k", "v"),
+      repo.merge(Seq(("d1", 1L, 11.0)).toDF("day", "k", "v"),
         "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"))
     }
-    assert(e1.getMessage.contains("mergePartitioned(s/t)") &&
+    assert(e1.getMessage.contains("merge(s/t)") &&
       e1.getMessage.contains("missing from updates: [note]"), e1.getMessage)
     // opt-in: a batch missing `note` lands with nulls — file schemas stay
     // uniform because the output keeps the current table's full schema
-    repo.mergePartitioned(Seq(("d1", 1L, 11.0)).toDF("day", "k", "v"),
+    repo.merge(Seq(("d1", 1L, 11.0)).toDF("day", "k", "v"),
       "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"),
       allowMissingColumns = true)
     val out = repo.table("s", "t").select("day", "k", "v", "note").collect()
@@ -115,7 +115,7 @@ class MergeSpec extends SparkSpec {
     // a batch ADDING a column can never evolve partition-scoped: untouched
     // partitions' files would keep the old schema (inference-order reads)
     val e2 = intercept[IllegalArgumentException] {
-      repo.mergePartitioned(
+      repo.merge(
         Seq(("d1", 1L, 12.0, "x", "new")).toDF("day", "k", "v", "note", "extra"),
         "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"),
         allowMissingColumns = true)
@@ -128,10 +128,10 @@ class MergeSpec extends SparkSpec {
     "partition files stay byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("mergespec4")
     val repo = PqRepo(spark, dir.toString)
-    repo.writePartitioned(
+    repo.write(
       Seq(("d1", 1L, 10.0), ("d1", 2L, 20.0), ("d2", 3L, 30.0), ("d3", 4L, 40.0))
         .toDF("day", "k", "v"),
-      "s", "t", Seq("day"))
+      "s", "t", partitionCols = Seq("day"))
 
     def files(sub: String): Map[String, Array[Byte]] = {
       val base = java.nio.file.Paths.get(dir.toString, "s", "t.parquet", sub)
@@ -146,7 +146,7 @@ class MergeSpec extends SparkSpec {
     val d3Before = files("day=d3")
 
     // touches d1 (update k=2) and a NEW partition d4
-    repo.mergePartitioned(
+    repo.merge(
       Seq(("d1", 2L, 99.0), ("d4", 5L, 50.0)).toDF("day", "k", "v"),
       "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"))
 
@@ -174,11 +174,11 @@ class MergeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mergets")
     val repo = PqRepo(spark, dir.toString)
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    repo.writePartitioned(
+    repo.write(
       Seq((ts("2024-01-01 10:00:00"), 1L, 10.0), (ts("2024-01-02 10:00:00"), 2L, 20.0))
         .toDF("pt", "k", "v"),
-      "s", "tts", Seq("pt"))
-    repo.mergePartitioned(
+      "s", "tts", partitionCols = Seq("pt"))
+    repo.merge(
       Seq((ts("2024-01-01 10:00:00"), 1L, 99.0), (ts("2024-01-03 10:00:00"), 3L, 30.0))
         .toDF("pt", "k", "v"),
       "s", "tts", keys = Seq("pt", "k"), partitionCols = Seq("pt"))
@@ -191,10 +191,10 @@ class MergeSpec extends SparkSpec {
     "(the merge path keeps writePartitioned's metadata contract)") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergespec6").toString)
-    repo.writePartitioned(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
-      "s", "t", Seq("day"), modified = Some("2026-01-01"))
+    repo.write(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
+      "s", "t", partitionCols = Seq("day"), modified = Some("2026-01-01"))
     assert(repo.lastModified("s", "t").contains("2026-01-01"))
-    repo.mergePartitioned(Seq(("d1", 1L, 2.0)).toDF("day", "k", "v"),
+    repo.merge(Seq(("d1", 1L, 2.0)).toDF("day", "k", "v"),
       "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"),
       modified = Some("2026-02-02"))
     assert(repo.lastModified("s", "t").contains("2026-02-02"))
@@ -204,10 +204,10 @@ class MergeSpec extends SparkSpec {
     "manifest: every recorded partition reaches its merged state") {
     val dir = java.nio.file.Files.createTempDirectory("mergespec7")
     val repo = PqRepo(spark, dir.toString)
-    repo.writePartitioned(
+    repo.write(
       Seq(("d1", 1L, 10.0), ("d2", 2L, 20.0), ("d3", 3L, 30.0))
         .toDF("day", "k", "v"),
-      "s", "t", Seq("day"))
+      "s", "t", partitionCols = Seq("day"))
 
     // Reconstruct the exact on-disk state of a merge (updates touching d1
     // and d2) killed between the two swaps: the tmp layout and manifest are
@@ -228,7 +228,7 @@ class MergeSpec extends SparkSpec {
     // crash window the sidecar protocol bounds), d2 still old
     assert(!java.nio.file.Files.exists(tableDir.resolve("day=d1")))
 
-    assert(repo.recoverMergePartitioned("s", "t"))
+    assert(repo.recover("s", "t"))
     val out = repo.table("s", "t").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
     assert(out == Set((1L, 99.0, "d1"), (2L, 88.0, "d2"), (3L, 30.0, "d3")))
@@ -237,10 +237,10 @@ class MergeSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(tableDir.resolve("_merge_manifest.json")))
     assert(!java.nio.file.Files.exists(base.resolve("_tmp_t.parquet")))
     // a clean table has nothing to recover
-    assert(!repo.recoverMergePartitioned("s", "t"))
+    assert(!repo.recover("s", "t"))
 
     // and a subsequent normal merge still behaves
-    repo.mergePartitioned(Seq(("d3", 3L, 77.0)).toDF("day", "k", "v"),
+    repo.merge(Seq(("d3", 3L, 77.0)).toDF("day", "k", "v"),
       "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"))
     val after = repo.table("s", "t").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
@@ -251,11 +251,11 @@ class MergeSpec extends SparkSpec {
     "partition columns outside the key set") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergespec5").toString)
-    repo.mergePartitioned(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
+    repo.merge(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
       "s", "t", keys = Seq("day", "k"), partitionCols = Seq("day"))
     assert(repo.table("s", "t").count() == 1)
     val e = intercept[IllegalArgumentException] {
-      repo.mergePartitioned(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
+      repo.merge(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
         "s", "t", keys = Seq("k"), partitionCols = Seq("day"))
     }
     assert(e.getMessage.contains("subset"))

@@ -65,8 +65,8 @@ class PqRepoReadSpec extends SparkSpec {
 
   test("one- and two-level partitioned tables with a null partition value") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "one", Seq("b"), modified = Some("one"))
-    repo.writePartitioned(rows, "s", "two", Seq("a", "b"), modified = Some("two"))
+    repo.write(rows, "s", "one", partitionCols = Seq("b"), modified = Some("one"))
+    repo.write(rows, "s", "two", partitionCols = Seq("a", "b"), modified = Some("two"))
     assertTableParity(repo, "s", "one")
     assertTableParity(repo, "s", "two")
     assert(repo.table("s", "one").filter(col("b").isNull).count() == 48)
@@ -75,7 +75,7 @@ class PqRepoReadSpec extends SparkSpec {
 
   test("a table with a _graft_meta.json sidecar") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "meta", Seq("a"),
+    repo.write(rows, "s", "meta", partitionCols = Seq("a"),
       modified = Some("meta"), metaProps = Some(Map("k" -> "v")))
     assert(repo.readTableMeta("s", "meta") == Map("k" -> "v"))
     assertTableParity(repo, "s", "meta")
@@ -85,12 +85,12 @@ class PqRepoReadSpec extends SparkSpec {
   test("partition merges leave files with different stamps: the footer " +
     "Spark infers from decides") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "m", Seq("a"), modified = Some("first"))
+    repo.write(rows, "s", "m", partitionCols = Seq("a"), modified = Some("first"))
     // rewrites only a=1 and a=2, under new stamps
-    repo.mergePartitioned(rows.filter(col("a") === 1).withColumn("s", lit("x")),
+    repo.merge(rows.filter(col("a") === 1).withColumn("s", lit("x")),
       "s", "m", keys = Seq("id", "a"), partitionCols = Seq("a"),
       modified = Some("second"))
-    repo.mergePartitioned(rows.filter(col("a") === 2).withColumn("s", lit("y")),
+    repo.merge(rows.filter(col("a") === 2).withColumn("s", lit("y")),
       "s", "m", keys = Seq("id", "a"), partitionCols = Seq("a"),
       modified = Some("third"))
     val stamps = Seq(0, 1, 2).map(a => stampOf(
@@ -116,7 +116,7 @@ class PqRepoReadSpec extends SparkSpec {
 
   test("an empty table and a missing table fail as Spark's read does") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "e", Seq("a"))
+    repo.write(rows, "s", "e", partitionCols = Seq("a"))
     val path = repo.tablePath("s", "e")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(path).filter(_.isDirectory).foreach(s => fs.delete(s.getPath, true))
@@ -135,7 +135,7 @@ class PqRepoReadSpec extends SparkSpec {
 
   test("refreshing a resolved read lists the table again") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "r", Seq("a"))
+    repo.write(rows, "s", "r", partitionCols = Seq("a"))
     val df = repo.table("s", "r")
     val before = df.inputFiles.length
     rows.filter(col("a") === 0).drop("a").write
@@ -153,7 +153,7 @@ class PqRepoReadSpec extends SparkSpec {
   test("a partition directory that vanishes between the root listing and its " +
     "own fails the read; ignoreMissingFiles reads without it") {
     val local = freshRepo()
-    local.writePartitioned(rows, "s", "v", Seq("a"), modified = Some("v"))
+    local.write(rows, "s", "v", partitionCols = Seq("a"), modified = Some("v"))
     CrashFs.register(spark)
     val repo = PqRepo(spark, "crash://" + local.dataDir)
     val dir = new File(local.tablePath("s", "v").toUri.getPath)
@@ -178,7 +178,7 @@ class PqRepoReadSpec extends SparkSpec {
   test("a partition parked mid-swap is hidden from reads; recovery clears it " +
     "and a partition parked under the older visible name") {
     val repo = freshRepo()
-    repo.writePartitioned(rows, "s", "w", Seq("a"))
+    repo.write(rows, "s", "w", partitionCols = Seq("a"))
     val dir = new File(repo.tablePath("s", "w").toUri.getPath)
     // a merge has committed new a=1 and a=2 to its tmp layout and manifest
     val merged = rows.filter(col("a") =!= 0).withColumn("s", concat(col("s"), lit("'")))
@@ -196,7 +196,7 @@ class PqRepoReadSpec extends SparkSpec {
     val legacy = new File(dir, "_old_a=1")
     assert(new File(dir, "a=1").renameTo(legacy))
 
-    assert(repo.recoverMergePartitioned("s", "w"))
+    assert(repo.recover("s", "w"))
     assert(!parked.exists() && !legacy.exists() && !tmp.exists())
     val cols = rows.columns.map(col)
     assert(rowsOf(repo.table("s", "w").select(cols: _*)) ==
@@ -213,7 +213,7 @@ class PqRepoReadSpec extends SparkSpec {
       (col("id") % nlist).cast("int").as("cluster"))
     val cents = (0 until nlist).map(c => c -> Seq(c.toDouble, 1.0))
     Similarity.writeIvfIndex(repo, Similarity.IvfIndex(cents, assigned), "ann", "j")
-    repo.writePartitioned(assigned, "s", "p64", Seq("cluster"), modified = Some("m"))
+    repo.write(assigned, "s", "p64", partitionCols = Seq("cluster"), modified = Some("m"))
     assert(repo.partitionColsOf("s", "p64") == Seq("cluster"))
     assert(new java.io.File(repo.tablePath("s", "p64").toUri.getPath)
       .listFiles().count(_.getName.startsWith("cluster=")) == nlist)

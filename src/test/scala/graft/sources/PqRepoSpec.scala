@@ -99,7 +99,7 @@ class PartitionedRepoSpec extends graft.SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_part").toString)
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .withColumn("o_year", year(col("o_orderdate").cast("date")))
-    repo.writePartitioned(orders, "tpch", "orders_part", Seq("o_year"))
+    repo.write(orders, "tpch", "orders_part", partitionCols = Seq("o_year"))
 
     val back = repo.table("tpch", "orders_part")
     assert(back.count() == orders.count())
@@ -127,7 +127,7 @@ class PartitionedLayoutGuardSpec extends graft.SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_repo_pl").toString)
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
       .withColumn("o_year", org.apache.spark.sql.functions.year(col("o_orderdate")))
-    repo.writePartitioned(orders, "tpch", "orders_part", Seq("o_year"),
+    repo.write(orders, "tpch", "orders_part", partitionCols = Seq("o_year"),
       modified = Some("x (Updated 2024-05-01)"))
     (repo, orders.count())
   }
@@ -139,7 +139,7 @@ class PartitionedLayoutGuardSpec extends graft.SparkSpec {
       repo.merge(repo.table("tpch", "orders_part").limit(5),
         "tpch", "orders_part", keys = Seq("o_orderkey"))
     }
-    assert(e1.getMessage.contains("mergePartitioned"), e1.getMessage)
+    assert(e1.getMessage.contains("merge"), e1.getMessage)
     val e2 = intercept[IllegalStateException] {
       repo.setComment("tpch", "orders_part", "y (Updated 2024-06-01)")
     }
@@ -192,7 +192,7 @@ class WriteSizingSpec extends graft.SparkSpec {
     // crash AFTER dest→sidecar, BEFORE tmp→dest: the sidecar IS the table
     assert(dest.renameTo(side))
     assert(!repo.list("tpch").contains("nation")) // sidecar hidden from list
-    assert(repo.recoverWrite("tpch", "nation"))
+    assert(repo.recover("tpch", "nation"))
     assert(repo.table("tpch", "nation").count() == nation.count())
     assert(!side.exists())
 
@@ -200,12 +200,12 @@ class WriteSizingSpec extends graft.SparkSpec {
     repo.write(nation.limit(3), "tpch", "stale")
     val staleDir = new java.io.File(repo.tablePath("tpch", "stale").toUri.getPath)
     org.apache.commons.io.FileUtils.copyDirectory(staleDir, side)
-    assert(repo.recoverWrite("tpch", "nation"))
+    assert(repo.recover("tpch", "nation"))
     assert(!side.exists())
     assert(repo.table("tpch", "nation").count() == nation.count())
 
     // clean table: no-op
-    assert(!repo.recoverWrite("tpch", "nation"))
+    assert(!repo.recover("tpch", "nation"))
     // the next write over a sidecar-only state heals then replaces
     assert(dest.renameTo(side))
     repo.write(nation.limit(5), "tpch", "nation")

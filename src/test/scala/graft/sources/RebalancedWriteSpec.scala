@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 
-/** The r21 scale-safety contract of [[PqRepo.writePartitioned]] /
+/** The r21 scale-safety contract of partitioned [[PqRepo.write]] /
   * `mergeIntoPartitions` clustering (verdict #1): the pre-write shuffle
   * is an AQE REBALANCE on the partition columns, not a plain
   * `repartition(partitionCols)` — so write parallelism is NOT capped at
@@ -63,7 +63,7 @@ class RebalancedWriteSpec extends graft.SparkSpec {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "262144",
         "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled" ->
           "true") {
-        repo.writePartitioned(df, "lake", "rebal", Seq("part"))
+        repo.write(df, "lake", "rebal", partitionCols = Seq("part"))
       }
       // the execution listener fires asynchronously; poll briefly
       val deadline = System.nanoTime() + 10_000_000_000L
@@ -96,11 +96,11 @@ class RebalancedWriteSpec extends graft.SparkSpec {
     val base = spark.range(0, 100)
       .select((col("id") % 4).cast("int").as("b"), col("id"),
         col("id").cast("string").as("v"))
-    repo.writePartitioned(base, "lake", "m", Seq("b"))
+    repo.write(base, "lake", "m", partitionCols = Seq("b"))
     val updates = spark.range(200, 260).repartition(4)
       .select((col("id") % 2).cast("int").as("b"), col("id"),
         col("id").cast("string").as("v"))
-    repo.mergePartitioned(updates, "lake", "m",
+    repo.merge(updates, "lake", "m",
       keys = Seq("id", "b"), partitionCols = Seq("b"))
     val dest = new java.io.File(repo.tablePath("lake", "m").toUri.getPath)
     for (b <- 0 until 2) {

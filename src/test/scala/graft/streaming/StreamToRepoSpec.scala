@@ -226,8 +226,8 @@ class StreamToRepoSpec extends SparkSpec {
     // re-lay the index with a 3-row file cap: the many-small-files state
     // a long-lived table accumulates (here from file-size bounding; the
     // search-identity and compact assertions below are layout-agnostic)
-    repo.writePartitioned(repo.table("ann", "emb_ivf"), "ann", "emb_ivf",
-      Seq("cluster"), maxRecordsPerFile = Some(3L))
+    repo.write(repo.table("ann", "emb_ivf"), "ann", "emb_ivf",
+      partitionCols = Seq("cluster"), maxRecordsPerFile = Some(3L))
     val queries = Seq(
       (900L, Array(0.9f, 1.2f, 0.3f, 0.1f)),
       (901L, Array(-0.8f, 1.4f, 0.2f, 0.2f)),

@@ -18,12 +18,12 @@ object RebalReceipt {
     val df = s.range(0, 100000, 1, 8)
       .select((col("id") % 16).cast("int").as("bucket"), col("id"),
         concat_ws("-", Seq.fill(8)(col("id")): _*).as("payload"))
-    repo.writePartitioned(df, "lake", "receipt", Seq("bucket"))
+    repo.write(df, "lake", "receipt", partitionCols = Seq("bucket"))
     val deadline = System.nanoTime() + 10_000_000_000L
     while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     val all = plans.toArray(Array.empty[String]).mkString("\n\n")
     java.nio.file.Files.write(java.nio.file.Paths.get("plans/r21/writepartitioned_rebalance_after.txt"),
-      ("== writePartitioned(cluster = true) executed plan (r21: AQE rebalance on the partition columns; " +
+      ("== partitioned write executed plan (r21: AQE rebalance on the partition columns; " +
        "r20 shape was a plain 'Exchange hashpartitioning(bucket, n), REPARTITION_BY_COL') ==\n\n" + all)
         .getBytes("UTF-8"))
     println("[receipt] " + (if (all.contains("REBALANCE_PARTITIONS_BY_COL")) "REBALANCE_PARTITIONS_BY_COL present" else "MISSING"))
