@@ -1,27 +1,11 @@
 package graft
 
-/** Environment-based defaults (reference db2pq/config.py and
-  * files/paths.py:13 resolve_data_dir): `DATA_DIR` roots the parquet
-  * repository; `GRAFT_ENGINE` plays the role of `DB2PQ_ENGINE` for
-  * selecting an ingest engine default ("jdbc" is the only in-repo engine;
-  * the hook exists so deployments can register alternatives). */
+/** Environment-based defaults (reference db2pq files/paths.py:13
+  * resolve_data_dir): `DATA_DIR` roots the parquet repository. */
 object GraftConfig {
-
-  @volatile private var defaultEngine: Option[String] = None
 
   def resolveDataDir(dataDir: Option[String] = None): String =
     dataDir
       .orElse(sys.env.get("DATA_DIR"))
       .getOrElse(System.getProperty("user.dir"))
-
-  def setDefaultEngine(engine: String): Unit = {
-    val e = engine.trim.toLowerCase
-    require(e.nonEmpty, "engine must be non-empty")
-    defaultEngine = Some(e)
-  }
-
-  def getDefaultEngine: String =
-    defaultEngine
-      .orElse(sys.env.get("GRAFT_ENGINE").map(_.trim.toLowerCase))
-      .getOrElse("jdbc")
 }

@@ -1,10 +1,13 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.TextFunctions
 import graft.operators.{AsOfJoin, BloomDedup, Dedup, MinHashIndex, Multimodal, Sessionize, Similarity}
@@ -24,22 +27,22 @@ import graft.sources.PqRepo
   */
 object SparkEntry {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // The events table carries TIMESTAMP(NANOS) parquet, which Spark's
-    // vectorized reader rejects; read nanos as long and rebuild a naive
-    // microsecond timestamp (wall clock preserved; session tz is UTC).
-    if (name == "events") {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$dir/$name.parquet")
-      raw.schema("ts").dataType match {
-        // TIMESTAMP(NANOS) files surface as long under nanosAsLong
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-        // micros/NTZ files (e.g. rewritten robustness corpora) read directly
-        case _ => raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
-      }
-    } else s.read.parquet(s"$dir/$name.parquet")
+  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(s, dir) else s.read.parquet(s"$dir/$name.parquet")
+
+  /** The events table. It carries TIMESTAMP(NANOS) parquet, which Spark's
+    * vectorized reader rejects: nanos are read as long and rebuilt into a
+    * naive microsecond timestamp (wall clock preserved; session tz is UTC).
+    * Micros/NTZ files (e.g. rewritten robustness corpora) read directly. */
+  private[graft] def events(s: SparkSession, dir: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = s.read.parquet(s"$dir/events.parquet")
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts",
+          timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
+      case _ => raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
+    }
   }
 
   /** Per-invocation scratch directory, deleted on JVM exit. Registered
@@ -55,12 +58,11 @@ object SparkEntry {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       scratchDirs.forEach { p =>
         try {
-          import java.nio.file.{Files => F}
-          if (F.exists(p)) {
-            F.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .forEach(q => { try F.deleteIfExists(q) catch { case _: Throwable => () } })
+          if (Files.exists(p)) {
+            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+              .forEach(q => { try Files.deleteIfExists(q) catch { case NonFatal(_) => () } })
           }
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
       }
     }))
   }
@@ -70,10 +72,83 @@ object SparkEntry {
     p.toString
   }
 
+  /** Every one-time staging of the registry — staged repos, layouts,
+    * indexes, stream feeds — keyed by (kind, corpus dir): built on a
+    * query's first execution against a dir, reused by every later one in
+    * this JVM, so repeat executions measure the query, not its setup. */
+  private val stagings =
+    scala.collection.concurrent.TrieMap[(String, String), Any]()
+
+  private def staged[T](kind: String, dir: String)(build: => T): T =
+    stagings.getOrElseUpdate((kind, dir), build).asInstanceOf[T]
+
+  /** Next value of the named counter (itself kept in [[stagings]]). Staged
+    * catalogs and bucketed tables are resolved by NAME, and a bench
+    * session visits sf0.1 and the scale corpora in one JVM: a name built
+    * from a 32-bit dir hash could collide between two dirs and silently
+    * serve the first dir's staging, a counter cannot. */
+  private def nextSeq(counter: String): Int =
+    staged("seq", counter)(new java.util.concurrent.atomic.AtomicInteger())
+      .incrementAndGet()
+
+  /** Writes `df` as one parquet file under `dir`; returns the file. */
+  private def singleParquet(df: DataFrame, dir: String): java.nio.file.Path = {
+    df.coalesce(1).write.parquet(dir)
+    new java.io.File(dir).listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath
+  }
+
   /** Exact integer cents from a 2-dp-valued double column. */
   private def cents(c: Column): Column = round(c * 100, 0).cast("bigint")
 
   private def epochSec(c: Column): Column = unix_timestamp(c.cast("timestamp"))
+
+  // ----- fixture builders shared by the registered queries ---------------
+
+  /** The planted duplicate of each row of `df`: its `payload` under the
+    * id shifted by 10⁶ (divisible by 4, so a copy keeps its original's
+    * `id % 4`). */
+  private def plantedCopy(df: DataFrame, id: String, payload: String): DataFrame =
+    df.select((col(id) + 1000000).as(id), col(payload))
+
+  /** The daily batch of the known-content gates: copies of the documents
+    * with ids below 100 (known content, must be dropped) plus variants of
+    * those below 50 suffixed with `tag` (fresh content, must survive).
+    * [[knownBatchSql]] is its oracle. */
+  private def gateBatch(d: DataFrame, tag: String): DataFrame =
+    plantedCopy(d.filter(col("doc_id") < 100), "doc_id", "text")
+      .unionByName(d.filter(col("doc_id") < 50)
+        .select((col("doc_id") + 2000000).as("doc_id"),
+          concat(col("text"), lit(s" $tag")).as("text")))
+
+  /** The ingest queries' 80/20 (base, batch) split: the base builds the
+    * index, every fifth row arrives later as the batch. A modulo split
+    * because id ranges differ per corpus. */
+  private def fifthSplit(df: DataFrame, id: String): (DataFrame, DataFrame) =
+    (df.filter(pmod(col(id), lit(5)) =!= 0), df.filter(pmod(col(id), lit(5)) === 0))
+
+  /** The query vectors of every ANN top-k query. */
+  private def queryVecs(e: DataFrame): DataFrame = e.filter(col("vec_id") < 10)
+
+  /** The registered output of every ANN top-k query. */
+  private def ranked(topK: DataFrame): DataFrame =
+    topK.select(col("query_id"), col("cand_id"), col("cos"),
+      col("rank").cast("bigint").as("rank"))
+
+  private def ivf(e: DataFrame, numCentroids: Int = 16) =
+    Similarity.ivfBuild(e, "vec_id", "embedding",
+      numCentroids = numCentroids, kmeansIters = 1)
+
+  private def pqBooks(e: DataFrame) =
+    Similarity.pqTrain(e, "vec_id", "embedding",
+      m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
+
+  /** Top-5 over the IVF-PQ index `ann.emb` of `repo`, reranking every
+    * candidate: with nprobe = the index's cluster count this is exact. */
+  private def ivfPqTop5(repo: PqRepo, e: DataFrame, nprobe: Int): DataFrame =
+    ranked(Similarity.ivfPqSearch(Similarity.readIvfPqIndex(repo, "ann", "emb"),
+      e, queryVecs(e), "vec_id", "embedding",
+      k = 5, nprobe = nprobe, rerankDepth = Int.MaxValue))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -158,19 +233,28 @@ object SparkEntry {
         lit(repo.lastModified("tpch", "nation").getOrElse("")))
   }
 
+  /** The SQL of `sql_passthrough` and `sql_catalog` (and their shared
+    * oracle) over the given orders and customer table names. */
+  private def segmentCountSql(orders: String, customer: String): String =
+    s"""SELECT c.c_mktsegment, o.o_orderpriority, CAST(count(*) AS BIGINT) AS n
+         FROM $orders o JOIN $customer c ON o.o_custkey = c.c_custkey
+         WHERE o.o_totalprice > 100000
+         GROUP BY c.c_mktsegment, o.o_orderpriority"""
+
   private def sqlPassthrough(s: SparkSession, dir: String): DataFrame = {
     // process_sql / wrds_sql_to_pq analog: arbitrary SQL over the catalog.
     Seq("orders", "customer").foreach(n => t(s, dir, n).createOrReplaceTempView(n))
-    s.sql("""
-      SELECT c.c_mktsegment, o.o_orderpriority, CAST(count(*) AS BIGINT) AS n
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      WHERE o.o_totalprice > 100000
-      GROUP BY c.c_mktsegment, o.o_orderpriority""")
+    s.sql(segmentCountSql("orders", "customer"))
   }
 
-  private val catalogStagings =
-    scala.collection.concurrent.TrieMap[String, (String, Int)]()
-  private val catalogSeq = new java.util.concurrent.atomic.AtomicInteger()
+  /** Registers the DSv2 [[graft.sources.GraftCatalog]] `name` over the
+    * repo at `repoDir`; returns the name. */
+  private def graftCatalog(s: SparkSession, name: String, repoDir: String): String = {
+    s.conf.set(s"spark.sql.catalog.$name",
+      classOf[graft.sources.GraftCatalog].getName)
+    s.conf.set(s"spark.sql.catalog.$name.dataDir", repoDir)
+    name
+  }
 
   /** SURVEY §2.1 `sql_catalog` (NEW r18): the `sql_passthrough` twin
     * routed through the DSv2 [[graft.sources.GraftCatalog]] — repo tables
@@ -180,35 +264,19 @@ object SparkEntry {
     * itself: identifier resolution → Spark's own v2 parquet scan, so the
     * plan audit shows PushedFilters (`o_totalprice > 100000`) and pruned
     * ReadSchema THROUGH the catalog (PlanAuditSpec pins it). The staged
-    * repo is written once per (session, dir); the catalog NAME embeds a
-    * per-dir COUNTER (not a dir hash — Spark caches catalog instances by
-    * name, so a 32-bit hash collision between two corpus dirs in one JVM
-    * would silently serve the first dir's staged repo; the counter is
-    * collision-free by construction) because a bench session visits
-    * sf0.1 and the scale corpora in one JVM, and a name reuse would
-    * silently read the first dir's staging. */
+    * repo is written once per dir; the catalog NAME embeds a counter
+    * ([[nextSeq]]). */
   private def sqlCatalog(s: SparkSession, dir: String): DataFrame = {
-    val (repoDir, seq) = catalogStagings.getOrElseUpdate(dir, {
+    val (repoDir, seq) = staged("catalog", dir) {
       val p = scratch("graft_catalog_repo")
       val repo = PqRepo(s, p)
       repo.write(t(s, dir, "orders"), "tpch", "orders")
       repo.write(t(s, dir, "customer"), "tpch", "customer")
-      (p, catalogSeq.incrementAndGet())
-    })
-    val cat = s"graft_c$seq"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.dataDir", repoDir)
-    s.sql(s"""
-      SELECT c.c_mktsegment, o.o_orderpriority, CAST(count(*) AS BIGINT) AS n
-      FROM $cat.tpch.orders o
-      JOIN $cat.tpch.customer c ON o.o_custkey = c.c_custkey
-      WHERE o.o_totalprice > 100000
-      GROUP BY c.c_mktsegment, o.o_orderpriority""")
+      (p, nextSeq("catalog"))
+    }
+    val cat = graftCatalog(s, s"graft_c$seq", repoDir)
+    s.sql(segmentCountSql(s"$cat.tpch.orders", s"$cat.tpch.customer"))
   }
-
-  private val asofStagings =
-    scala.collection.concurrent.TrieMap[String, (String, Int)]()
 
   /** SURVEY §2.1 `sql_catalog_asof` (NEW r19, verdict #4): catalog TIME
     * TRAVEL — the repo's archive timeline SQL-addressable through the
@@ -227,7 +295,7 @@ object SparkEntry {
     * read-only by construction (ReadOnlyTable — GraftCatalogSpec pins
     * refused INSERTs on both active and versioned paths). */
   private def sqlCatalogAsof(s: SparkSession, dir: String): DataFrame = {
-    val (repoDir, seq) = asofStagings.getOrElseUpdate(dir, {
+    val (repoDir, seq) = staged("catalog_asof", dir) {
       val p = scratch("graft_catalog_asof")
       val repo = PqRepo(s, p)
       val v1 = t(s, dir, "orders")
@@ -237,12 +305,9 @@ object SparkEntry {
       val v2 = v1.withColumn("o_totalprice", col("o_totalprice") + 1000000.0)
       repo.write(v2, "tpch", "orders",
         modified = Some("(Updated 2024-06-01)"), archiveExisting = true)
-      (p, catalogSeq.incrementAndGet())
-    })
-    val cat = s"graft_a$seq"
-    s.conf.set(s"spark.sql.catalog.$cat",
-      classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.dataDir", repoDir)
+      (p, nextSeq("catalog"))
+    }
+    val cat = graftCatalog(s, s"graft_a$seq", repoDir)
     def agg(src: String, from: String) = s"""
       SELECT '$src' AS src, CAST(count(*) AS BIGINT) AS n,
         CAST(sum(CAST(round(o_totalprice*100, 0) AS BIGINT)) AS BIGINT)
@@ -460,46 +525,40 @@ object SparkEntry {
         col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("sum_price_c"))
 
-  private def qAsofTolerance(s: SparkSession, dir: String): DataFrame = {
+  /** The as-of join queries: each event joined by `join` to its
+    * customer's latest order per order day. */
+  private def asofEvents(s: SparkSession, dir: String)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val e = t(s, dir, "events").select("event_id", "user_id", "ts")
     val o = t(s, dir, "orders")
       .groupBy("o_custkey", "o_orderdate")
       .agg(max("o_orderkey").as("o_orderkey"))
-    AsOfJoin.nearestPriorWithin(e, o,
-      leftKey = "user_id", rightKey = "o_custkey",
-      leftTs = "ts", rightTs = "o_orderdate",
-      payloads = Seq("o_orderkey"), toleranceSeconds = 30L * 86400)
+    join(e, o)
       .select(col("event_id"), epochSec(col("ts")).as("ts_epoch"), col("o_orderkey"))
   }
+
+  private def qAsofTolerance(s: SparkSession, dir: String): DataFrame =
+    asofEvents(s, dir)(AsOfJoin.nearestPriorWithin(_, _,
+      leftKey = "user_id", rightKey = "o_custkey",
+      leftTs = "ts", rightTs = "o_orderdate",
+      payloads = Seq("o_orderkey"), toleranceSeconds = 30L * 86400))
 
   private def qCube(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "orders")
       .cube("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n"), sum(cents(col("o_totalprice"))).as("sum_price_c"))
 
-  private def qAsOf(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").select("event_id", "user_id", "ts")
-    val o = t(s, dir, "orders")
-      .groupBy("o_custkey", "o_orderdate")
-      .agg(max("o_orderkey").as("o_orderkey"))
-    AsOfJoin.nearestPrior(e, o,
+  private def qAsOf(s: SparkSession, dir: String): DataFrame =
+    asofEvents(s, dir)(AsOfJoin.nearestPrior(_, _,
       leftKey = "user_id", rightKey = "o_custkey",
       leftTs = "ts", rightTs = "o_orderdate",
-      payloads = Seq("o_orderkey"))
-      .select(col("event_id"), epochSec(col("ts")).as("ts_epoch"), col("o_orderkey"))
-  }
+      payloads = Seq("o_orderkey")))
 
-  private def qAsofForward(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "events").select("event_id", "user_id", "ts")
-    val o = t(s, dir, "orders")
-      .groupBy("o_custkey", "o_orderdate")
-      .agg(max("o_orderkey").as("o_orderkey"))
-    AsOfJoin.nearestFollowing(e, o,
+  private def qAsofForward(s: SparkSession, dir: String): DataFrame =
+    asofEvents(s, dir)(AsOfJoin.nearestFollowing(_, _,
       leftKey = "user_id", rightKey = "o_custkey",
       leftTs = "ts", rightTs = "o_orderdate",
-      payloads = Seq("o_orderkey"))
-      .select(col("event_id"), epochSec(col("ts")).as("ts_epoch"), col("o_orderkey"))
-  }
+      payloads = Seq("o_orderkey")))
 
   private def qSessionize(s: SparkSession, dir: String): DataFrame =
     // value pre-converted to integer cents: the per-session sum must be
@@ -544,15 +603,6 @@ object SparkEntry {
       .dropDuplicates("__dedup_key")
       .select("user_id", "event_type")
 
-  /** Multi-format ingest (SURVEY 18e): the same TablePlan pipeline over
-    * CSV and JSON sources — the documents table staged to both formats,
-    * read back with explicit schemas, planned, and joined: a row appears
-    * iff BOTH decoders reproduced it. Spark's DataSource breadth is the
-    * library's multi-backend story (SURVEY §2.1 exclusions note); this
-    * query pins it with an oracle. */
-  private val formatStagings =
-    scala.collection.concurrent.TrieMap[String, String]()
-
   /** Source fingerprint of a corpus's documents table (file count, total
     * bytes, newest mtime) — the staleness key for [[formatIngest]]'s
     * cross-JVM staging cache. Regenerating a corpus in place (the scale
@@ -575,6 +625,12 @@ object SparkEntry {
     f.delete()
   }
 
+  /** Multi-format ingest (SURVEY 18e): the same TablePlan pipeline over
+    * CSV and JSON sources — the documents table staged to both formats,
+    * read back with explicit schemas, planned, and joined: a row appears
+    * iff BOTH decoders reproduced it. Spark's DataSource breadth is the
+    * library's multi-backend story (SURVEY §2.1 exclusions note); this
+    * query pins it with an oracle. */
   private def formatIngest(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
     // staged once per CORPUS, not per run (r20, verdict #3 — this closes
@@ -587,7 +643,7 @@ object SparkEntry {
     // never half-serve. Repeat executions in any JVM measure the
     // multi-format READ path only — the write-once-read-many profile a
     // lake's ingest landing zone actually has.
-    val staged = formatStagings.getOrElseUpdate(dir, {
+    val layouts = staged("format", dir) {
       val fp = documentsFingerprint(dir)
       val cacheRoot = new java.io.File(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_fmt_cache")
@@ -595,9 +651,9 @@ object SparkEntry {
         cacheRoot, dir.replaceAll("[^A-Za-z0-9._-]", "_"))
       val marker = new java.io.File(dst, "_staged_fingerprint")
       val fresh = marker.isFile &&
-        (try new String(java.nio.file.Files.readAllBytes(marker.toPath),
+        (try new String(Files.readAllBytes(marker.toPath),
           java.nio.charset.StandardCharsets.UTF_8) == fp
-        catch { case _: Throwable => false })
+        catch { case NonFatal(_) => false })
       if (!fresh) {
         cacheRoot.mkdirs()
         val tmp = new java.io.File(cacheRoot, dst.getName + "__building")
@@ -606,7 +662,7 @@ object SparkEntry {
           .option("quoteAll", "true").option("escape", "\"")
           .csv(s"$tmp/csv")
         d.write.mode("overwrite").json(s"$tmp/json")
-        java.nio.file.Files.write(new java.io.File(tmp, "_staged_fingerprint").toPath,
+        Files.write(new java.io.File(tmp, "_staged_fingerprint").toPath,
           fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         if (dst.exists()) deleteTree(dst)
         if (!tmp.renameTo(dst))
@@ -614,14 +670,14 @@ object SparkEntry {
             s"format_ingest staging: cannot promote $tmp to $dst")
       }
       dst.toString
-    })
+    }
 
     val plan = TablePlan(keep = Seq("^(doc_id|lang|n_chars)$"),
       where = Some("doc_id % 7 = 0"))
     val fromCsv = plan(s.read.schema(d.schema)
       .option("multiLine", "true").option("escape", "\"")
-      .csv(s"$staged/csv"))
-    val fromJson = plan(s.read.schema(d.schema).json(s"$staged/json"))
+      .csv(s"$layouts/csv"))
+    val fromJson = plan(s.read.schema(d.schema).json(s"$layouts/json"))
 
     fromCsv.join(fromJson.withColumnRenamed("lang", "lang_j")
         .withColumnRenamed("n_chars", "n_chars_j"), "doc_id")
@@ -629,8 +685,50 @@ object SparkEntry {
       .select("doc_id", "lang", "n_chars")
   }
 
-  private val nearDupStagings =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
+  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered —
+    * the streaming harness queries' fixed overhead is dominated by state-
+    * store and shuffle-file COUNT, not data volume: every stateful
+    * operator commits one state-store delta per shuffle partition per
+    * micro-batch, so a 32-partition session pays 32 tiny checkpoint
+    * commits per operator per batch to move kilobytes. The operators
+    * themselves are partition-count-agnostic (keyed state, watermark
+    * semantics identical); production sessions size this by throughput.
+    * The conf is read at stream START (each execution uses a fresh
+    * checkpoint), and restored after the eager section so the rest of
+    * the registry keeps the session default. */
+  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", n)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** The one streaming run of every streaming harness query: start
+    * `writer` with its checkpoint under `work` (4 shuffle partitions, see
+    * [[withShufflePartitions]]) and process all available input. Given a
+    * staged `(source dir, sentinel stash)`, the sentinel file is first
+    * removed from the source (so sentinels never accumulate across
+    * executions), then copied in after the first drain and processed in a
+    * second one: it triggers the batch in which the batch-lagged
+    * watermark takes effect. */
+  private def runStream(s: SparkSession, work: String,
+      sentinel: Option[(String, String)] = None)(
+      writer: => DataStreamWriter[_]): Unit = {
+    val copies = sentinel.map { case (src, stash) =>
+      (Paths.get(stash), Paths.get(src, "zz_sentinel.parquet"))
+    }
+    copies.foreach { case (_, dst) => Files.deleteIfExists(dst) }
+    withShufflePartitions(s, 4) {
+      val q = writer.option("checkpointLocation", s"$work/ckpt")
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        copies.foreach { case (stash, dst) =>
+          Files.copy(stash, dst)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    }
+  }
 
   /** Streaming MinHash-LSH near-dup (SURVEY 28i, r16; r17 gates the REAL
     * operator): `StreamNearDup.pairsPerWindow` driven end-to-end through
@@ -653,46 +751,32 @@ object SparkEntry {
   private def streamNearDupQ(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import graft.streaming.StreamNearDup.{DocEvent, NearDupPair, pairsPerWindow}
-    val (src, sentinelStash) = nearDupStagings.getOrElseUpdate(dir, {
+    val staging @ (src, _) = staged("neardup", dir) {
       val p = scratch("graft_neardup")
       val d = t(s, dir, "documents").select("doc_id", "text")
-      val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      d.unionByName(dup)
+      d.unionByName(plantedCopy(d, "doc_id", "text"))
         .withColumn("ts", timestamp_seconds(
           lit(1704067200L) + pmod(col("doc_id"), lit(4)) * 3600))
         .select("doc_id", "text", "ts")
         .write.parquet(s"$p/src")
-      Seq((-1L, "zz graft sentinel watermark advance document",
+      val sentinel = Seq((-1L, "zz graft sentinel watermark advance document",
         new java.sql.Timestamp((1704067200L + 10L * 3600) * 1000)))
         .toDF("doc_id", "text", "ts")
-        .coalesce(1).write.parquet(s"$p/sentinel")
-      val part = new java.io.File(s"$p/sentinel").listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get.toString
-      (s"$p/src", part)
-    })
-    val sentinelDst = java.nio.file.Paths.get(src, "zz_sentinel.parquet")
-    Files.deleteIfExists(sentinelDst)
+      (s"$p/src", singleParquet(sentinel, s"$p/sentinel").toString)
+    }
     val work = scratch("graft_neardup_run")
-    withShufflePartitions(s, 4) {
-      val q = pairsPerWindow(
+    runStream(s, work, Some(staging)) {
+      pairsPerWindow(
         s.readStream.schema("doc_id LONG, text STRING, ts TIMESTAMP")
           .parquet(src).as[DocEvent],
         windowSeconds = 3600, shingleK = 5, numHashes = 48, bands = 12,
         threshold = 1.0, verify = true)
-        .writeStream.format("parquet")
-        .option("path", s"$work/sink")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        Files.copy(java.nio.file.Paths.get(sentinelStash), sentinelDst)
-        q.processAllAvailable()
-      } finally q.stop()
+        .writeStream.format("parquet").option("path", s"$work/sink")
     }
     // per-band multiplicity collapse (operator MULTIPLICITY contract): a
     // pair arrives once per live colliding band with an identical row, so
     // the collapse is a plain distinct over the output — output-sized
-    s.read.schema(org.apache.spark.sql.Encoders.product[NearDupPair].schema)
+    s.read.schema(Encoders.product[NearDupPair].schema)
       .parquet(s"$work/sink")
       .filter(col("id_a") >= 0)
       .select("window_start", "id_a", "id_b", "est_jaccard")
@@ -716,28 +800,16 @@ object SparkEntry {
       .select(unix_timestamp(col("w.start")).as("hour_epoch"),
         col("event_type"), col("n"), col("value_sum_c"))
 
-  private val bucketedTags =
-    scala.collection.concurrent.TrieMap[String, Int]()
-  private val bucketedSeq = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Per-dir table-name tag for the bucketed layout. A COUNTER, not a dir
-    * hash: Spark resolves the bucketed tables by catalog NAME, so a
-    * 32-bit `dir.hashCode` collision between two corpus dirs visited in
-    * one JVM (a bench session sees sf0.1 plus both scale corpora) would
-    * silently serve the first dir's bucketed data to the second — the
-    * same collision class the r19 catalog-name fix closed; this applies
-    * the identical counter scheme here. */
-  private def bucketedTag(dir: String): String =
-    s"b${bucketedTags.getOrElseUpdate(dir, bucketedSeq.incrementAndGet())}"
-
   /** One-time bucketed-layout write for [[qBucketedJoin]], memoized per
-    * (session, dir). A 100 TB deployment writes this layout ONCE and joins
+    * (session, dir); the tables are named with a per-dir counter tag
+    * ([[nextSeq]]). A 100 TB deployment writes this layout ONCE and joins
     * many times, so the join metric excludes it — but the cost must not
     * vanish: Bench times this call separately and reports it as a `setup`
-    * entry in its JSON line. */
-  private[graft] def ensureBucketedLayout(s: SparkSession, dir: String): Unit = {
-    val tag = bucketedTag(dir)
-    if (!s.catalog.tableExists(s"tpch_${tag}_lineitem_b")) {
+    * entry in its JSON line. Returns the (lineitem, orders) table names. */
+  private[graft] def ensureBucketedLayout(s: SparkSession, dir: String): (String, String) = {
+    val tag = staged("bucketed", dir)(s"b${nextSeq("bucketed")}")
+    val (l, o) = (s"tpch_${tag}_lineitem_b", s"tpch_${tag}_orders_b")
+    if (!s.catalog.tableExists(l)) {
       val repo = PqRepo(s, scratch("graft_bucketed"))
       repo.writeBucketed(
         t(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
@@ -746,44 +818,37 @@ object SparkEntry {
         t(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
         s"tpch_$tag", "orders_b", Seq("o_orderkey"), 8)
     }
+    (l, o)
   }
 
   private def qBucketedJoin(s: SparkSession, dir: String): DataFrame = {
     // Co-located join: both fact tables bucketed+sorted on the join key →
     // the merge join needs no Exchange on either side (only the final
     // aggregation shuffles).
-    ensureBucketedLayout(s, dir)
-    val tag = bucketedTag(dir)
-    val (l, o) = (s"tpch_${tag}_lineitem_b", s"tpch_${tag}_orders_b")
+    val (l, o) = ensureBucketedLayout(s, dir)
     s.table(l).hint("merge")
       .join(s.table(o), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), sum(cents(col("l_quantity"))).as("sum_qty_c"))
   }
 
-  private val partitionedLayouts =
-    scala.collection.concurrent.TrieMap[String, String]()
-
-  /** One-time hive-partitioned orders layout (memoized per dir, like the
-    * bucketed one): the write-once layout a lake keeps so that partition
-    * filters — static or runtime-injected — prune directories. */
-  private def ensurePartitionedOrders(s: SparkSession, dir: String): String =
-    partitionedLayouts.getOrElseUpdate(dir, {
-      val repo = PqRepo(s, scratch("graft_part"))
-      repo.write(
-        t(s, dir, "orders")
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
-        "tpch", "orders_part", partitionCols = Seq("o_orderpriority")).toString
-    })
-
   /** Dynamic partition pruning (SURVEY 12c): the partitioned fact joined
     * to a FILTERED dim on the partition column — the partition list is
     * only known at runtime, so Catalyst injects a DPP subquery into the
     * fact scan (`dynamicpruningexpression` in PartitionFilters) and whole
     * directories are skipped before any I/O. THE mechanism that makes
-    * star joins viable on a 100 TB partitioned lake; plan-audited. */
+    * star joins viable on a 100 TB partitioned lake; plan-audited. The
+    * hive-partitioned orders layout is written once per dir, like the
+    * bucketed one: the write-once layout a lake keeps so that partition
+    * filters — static or runtime-injected — prune directories. */
   private def qDpp(s: SparkSession, dir: String): DataFrame = {
-    val fact = s.read.parquet(ensurePartitionedOrders(s, dir))
+    val layout = staged("partitioned", dir) {
+      PqRepo(s, scratch("graft_part")).write(
+        t(s, dir, "orders")
+          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
+        "tpch", "orders_part", partitionCols = Seq("o_orderpriority")).toString
+    }
+    val fact = s.read.parquet(layout)
     val dim = t(s, dir, "orders").select("o_orderpriority").distinct()
       .filter(col("o_orderpriority") < "3")
       .withColumnRenamed("o_orderpriority", "dp")
@@ -815,38 +880,15 @@ object SparkEntry {
       .agg(max("session_id").as("n_sessions"), count(lit(1)).as("n_events"))
   }
 
-  private val closedStagings =
-    scala.collection.concurrent.TrieMap[String, (String, String)]()
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered —
-    * the streaming harness queries' fixed overhead is dominated by state-
-    * store and shuffle-file COUNT, not data volume: every stateful
-    * operator commits one state-store delta per shuffle partition per
-    * micro-batch, so a 32-partition session pays 32 tiny checkpoint
-    * commits per operator per batch to move kilobytes. The operators
-    * themselves are partition-count-agnostic (keyed state, watermark
-    * semantics identical); production sessions size this by throughput.
-    * The conf is read at stream START (each execution uses a fresh
-    * checkpoint), and restored after the eager section so the rest of
-    * the registry keeps the session default. */
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Stage the closed-sessions streaming corpus once per (session, dir):
+  /** Stage the closed-sessions streaming corpus once per dir:
     * second-truncated events as the parquet stream source, plus a one-row
-    * max-timestamp sentinel file STASHED OUTSIDE the source dir — each
-    * execution copies it in under a fixed name to trigger the batch in
-    * which the (batch-lagged) watermark takes effect, and removes it
-    * again before the next run, so sentinels never accumulate. Shared by
-    * the three session-based streaming queries (closed_sessions,
-    * stream_to_repo, stream_route); extracted because the hand-copied
-    * plant construction had drifted before (see curateGatedFrame).
+    * max-timestamp sentinel file STASHED OUTSIDE the source dir, which
+    * [[runStream]] copies in after the first drain. Shared by the three
+    * session-based streaming queries (closed_sessions, stream_to_repo,
+    * stream_route), whose runs over the read-only source are sequential.
     * Returns (source dir, sentinel stash path). */
   private def closedStaging(s: SparkSession, dir: String): (String, String) =
-    closedStagings.getOrElseUpdate(dir, {
+    staged("closed", dir) {
       import s.implicits._
       val p = scratch("graft_closed")
       val ev = t(s, dir, "events")
@@ -855,12 +897,19 @@ object SparkEntry {
       ev.write.parquet(s"$p/src")
       val mx = s.read.parquet(s"$p/src").agg(max(col("ts"))).head
         .getTimestamp(0).getTime
-      Seq((-1L, new java.sql.Timestamp(mx))).toDF("user_id", "ts")
-        .coalesce(1).write.parquet(s"$p/sentinel")
-      val part = new java.io.File(s"$p/sentinel").listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get.toString
-      (s"$p/src", part)
-    })
+      val sentinel = Seq((-1L, new java.sql.Timestamp(mx))).toDF("user_id", "ts")
+      (s"$p/src", singleParquet(sentinel, s"$p/sentinel").toString)
+    }
+
+  /** The watermark-closed session stream over a staged source dir. */
+  private def closedSessionStream(s: SparkSession, src: String) = {
+    import s.implicits._
+    import graft.streaming.StatefulSessionize.{TsEvent, closedSessions}
+    closedSessions(
+      s.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(src)
+        .as[TsEvent],
+      gapSeconds = 1800)
+  }
 
   /** Watermark-closed streaming sessions (SURVEY 28f), driven end-to-end
     * through the REAL streaming operator via a parquet file source and a
@@ -876,33 +925,18 @@ object SparkEntry {
     * the millisecond-precision watermark lands exactly on the oracle's
     * integer-second grid: without the truncation, a session whose floored
     * end satisfies `end + gap == floor(W)` is emitted by the operator
-    * (sub-second watermark excess) but withheld by the oracle. */
+    * (sub-second watermark excess) but withheld by the oracle. Repeat
+    * executions measure the streaming read/state/emit path over the
+    * IDENTICAL staged file set. */
   private def closedSessionsQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.StatefulSessionize.{ClosedSession, TsEvent, closedSessions}
-    // events (and the one-row sentinel file) staged once per (session,
-    // dir), like formatIngest's layouts; repeat executions measure the
-    // streaming read/state/emit path over the IDENTICAL file set
-    val (src, sentinelStash) = closedStaging(s, dir)
-    val sentinelDst = java.nio.file.Paths.get(src, "zz_sentinel.parquet")
-    Files.deleteIfExists(sentinelDst)
+    val staging @ (src, _) = closedStaging(s, dir)
     val work = scratch("graft_closed_run")
-    withShufflePartitions(s, 4) {
-      val q = closedSessions(
-        s.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(src)
-          .as[TsEvent],
-        gapSeconds = 1800)
-        .writeStream.format("parquet")
-        .option("path", s"$work/sink")
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        Files.copy(java.nio.file.Paths.get(sentinelStash), sentinelDst)
-        q.processAllAvailable()
-      } finally q.stop()
+    runStream(s, work, Some(staging)) {
+      closedSessionStream(s, src)
+        .writeStream.format("parquet").option("path", s"$work/sink")
     }
-    s.read.schema(org.apache.spark.sql.Encoders.product[ClosedSession].schema)
+    s.read.schema(Encoders.product[
+        graft.streaming.StatefulSessionize.ClosedSession].schema)
       .parquet(s"$work/sink")
       .filter(col("user_id") >= 0)
       .select("user_id", "start_epoch", "end_epoch", "n_events")
@@ -922,32 +956,14 @@ object SparkEntry {
     * multi-batch run (second batch = the sentinel's watermark advance)
     * merges instead of clobbering. */
   private def streamToRepoQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.StatefulSessionize.{TsEvent, closedSessions}
-    // same staging as closed_sessions (read-only src + sentinel stash;
-    // executions are sequential and each resets the sentinel first)
-    val (src, sentinelStash) = closedStaging(s, dir)
-    val sentinelDst = java.nio.file.Paths.get(src, "zz_sentinel.parquet")
-    Files.deleteIfExists(sentinelDst)
+    val staging @ (src, _) = closedStaging(s, dir)
     val work = scratch("graft_stream_repo")
-    val repo = graft.sources.PqRepo(s, s"$work/repo")
-    withShufflePartitions(s, 4) {
-      val q = closedSessions(
-        s.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(src)
-          .as[TsEvent],
-        gapSeconds = 1800)
-        .toDF()
-        .writeStream
+    val repo = PqRepo(s, s"$work/repo")
+    runStream(s, work, Some(staging)) {
+      closedSessionStream(s, src).toDF().writeStream
         .foreachBatch(graft.streaming.StreamToRepo.mergeSink(
           repo, "streams", "closed_sessions",
           keys = Seq("user_id", "start_epoch")))
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        Files.copy(java.nio.file.Paths.get(sentinelStash), sentinelDst)
-        q.processAllAvailable()
-      } finally q.stop()
     }
     repo.table("streams", "closed_sessions")
       .filter(col("user_id") >= 0)
@@ -965,33 +981,17 @@ object SparkEntry {
     * route label, so the oracle verifies BOTH that every session landed
     * exactly once and that it landed in the right table. */
   private def streamRouteQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.streaming.StatefulSessionize.{TsEvent, closedSessions}
-    val (src, sentinelStash) = closedStaging(s, dir)
-    val sentinelDst = java.nio.file.Paths.get(src, "zz_sentinel.parquet")
-    Files.deleteIfExists(sentinelDst)
+    val staging @ (src, _) = closedStaging(s, dir)
     val work = scratch("graft_stream_route")
-    val repo = graft.sources.PqRepo(s, s"$work/repo")
-    withShufflePartitions(s, 4) {
-      val q = closedSessions(
-        s.readStream.schema("user_id LONG, ts TIMESTAMP").parquet(src)
-          .as[TsEvent],
-        gapSeconds = 1800)
-        .toDF()
-        .writeStream
+    val repo = PqRepo(s, s"$work/repo")
+    runStream(s, work, Some(staging)) {
+      closedSessionStream(s, src).toDF().writeStream
         .foreachBatch(graft.streaming.StreamToRepo.routeSink(
           repo, "streams",
           routes = Seq(
             "sessions_multi" -> (col("n_events") >= 2),
             "sessions_single" -> (col("n_events") === 1)),
           keys = Seq("user_id", "start_epoch")))
-        .option("checkpointLocation", s"$work/ckpt")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        Files.copy(java.nio.file.Paths.get(sentinelStash), sentinelDst)
-        q.processAllAvailable()
-      } finally q.stop()
     }
     def landed(table: String, route: String) =
       repo.table("streams", table)
@@ -1002,8 +1002,40 @@ object SparkEntry {
       .unionByName(landed("sessions_single", "single"))
   }
 
-  private val ivfStreamStagings =
-    scala.collection.concurrent.TrieMap[String, String]()
+  /** Ingest feed for the streaming index-maintenance queries, staged
+    * once per dir: the [[fifthSplit]] batch of `df` (its `id` and
+    * `payload`), split into three single-file slices so the file source
+    * (`maxFilesPerTrigger = 1`) yields a genuinely multi-batch stream
+    * (deterministic id-mod boundaries). Returns the source dir. */
+  private def stagedSlices(kind: String, dir: String,
+      df: DataFrame, id: String, payload: String): String =
+    staged(kind, dir) {
+      val p = scratch(s"graft_${kind}_src")
+      Files.createDirectories(Paths.get(s"$p/src"))
+      val batchRows = fifthSplit(df, id)._2.select(id, payload)
+      (0 until 3).foreach { i =>
+        Files.move(
+          singleParquet(batchRows.filter(pmod(col(id), lit(15)) === i * 5),
+            s"$p/tmp_$i"),
+          Paths.get(s"$p/src", s"batch_$i.parquet"))
+      }
+      s"$p/src"
+    }
+
+  /** A ledgered stream of the staged slices at `src` into `repo`: each
+    * micro-batch lands through [[graft.streaming.StreamToRepo.ledgeredSink]]
+    * (the exactly-once batch-id ledger) around `append`. */
+  private def streamSlices(s: SparkSession, src: String, schema: String,
+      repo: PqRepo, ledgerSchema: String, ledger: String)(
+      append: DataFrame => Unit): Unit =
+    runStream(s, scratch(s"graft_${ledger}_run")) {
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream
+        .foreachBatch(graft.streaming.StreamToRepo.ledgeredSink(
+          repo, ledgerSchema, ledger)(append))
+    }
 
   /** SURVEY §2.3 `stream_ivf_append` (NEW r19, verdict #3): streaming
     * ANN-INDEX MAINTENANCE — the daily-embedding pipe as a real
@@ -1021,32 +1053,23 @@ object SparkEntry {
     * that window). The post-stream nprobe-all search over the merged
     * index equals the full-corpus brute force (shared oracle), proving
     * the streamed vectors are really searchable. */
-  /** Ingest feed for the streaming index-maintenance queries, staged
-    * once per (session, dir): every fifth vector, split into three
-    * single-file slices so the file source yields a genuinely
-    * multi-batch stream (deterministic id-mod boundaries). Shared by
-    * the flat-IVF and IVF-PQ streaming queries — same feed, different
-    * index family. */
-  private def stagedIvfStreamSrc(s: SparkSession, dir: String): String =
-    ivfStreamStagings.getOrElseUpdate(dir, {
-      val p = scratch("graft_sivf_src")
-      Files.createDirectories(java.nio.file.Paths.get(s"$p/src"))
-      val batchRows = t(s, dir, "embeddings")
-        .filter(pmod(col("vec_id"), lit(5)) === 0)
-        .select("vec_id", "embedding")
-      (0 until 3).foreach { i =>
-        batchRows.filter(pmod(col("vec_id"), lit(15)) === i * 5)
-          .coalesce(1).write.parquet(s"$p/tmp_$i")
-        val part = new java.io.File(s"$p/tmp_$i").listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$p/src", s"batch_$i.parquet"))
-      }
-      s"$p/src"
-    })
-
-  private val mhStreamStagings =
-    scala.collection.concurrent.TrieMap[String, String]()
+  private def streamIvfAppendQ(s: SparkSession, dir: String): DataFrame = {
+    val e = t(s, dir, "embeddings")
+    val src = stagedSlices("sivf", dir, e, "vec_id", "embedding")
+    val repo = PqRepo(s, scratch("graft_sivf_repo"))
+    // 8 clusters (not the batch twins' 16): the harness cost is cluster-
+    // directory file churn — every micro-batch merge rewrites each
+    // touched cluster partition, and a sf-scale batch touches them all —
+    // while the RESULT is cluster-count-invariant (nprobe = numCentroids
+    // probes everything ⇒ exact ≡ brute force)
+    Similarity.writeIvfIndex(repo, ivf(fifthSplit(e, "vec_id")._1, 8), "ann", "emb")
+    streamSlices(s, src, "vec_id LONG, embedding ARRAY<FLOAT>",
+      repo, "ann", "emb_ivf_ingest") { b =>
+      Similarity.appendToIvfIndex(repo, b, "vec_id", "embedding", "ann", "emb")
+    }
+    ranked(Similarity.ivfSearch(Similarity.readIvfIndex(repo, "ann", "emb"),
+      queryVecs(e), "vec_id", "embedding", k = 5, nprobe = 8))
+  }
 
   /** SURVEY §2.3 `stream_minhash_append` (r20, beyond-directive): the
     * STREAMED variant the r19 verdict's MinHash-index directive pointed
@@ -1072,88 +1095,23 @@ object SparkEntry {
     * hashes into (partition-scoped merge), never the whole index. */
   private def streamMinhashAppendQ(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val src = mhStreamStagings.getOrElseUpdate(dir, {
-      val p = scratch("graft_smh_src")
-      Files.createDirectories(java.nio.file.Paths.get(s"$p/src"))
-      val batchRows = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-        .select("doc_id", "text")
-      (0 until 3).foreach { i =>
-        batchRows.filter(pmod(col("doc_id"), lit(15)) === i * 5)
-          .coalesce(1).write.parquet(s"$p/tmp_$i")
-        val part = new java.io.File(s"$p/tmp_$i").listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        Files.move(part.toPath,
-          java.nio.file.Paths.get(s"$p/src", s"batch_$i.parquet"))
-      }
-      s"$p/src"
-    })
+    val src = stagedSlices("smh", dir, d, "doc_id", "text")
     val repo = PqRepo(s, scratch("graft_smh_repo"))
-    MinHashIndex.write(repo,
-      d.filter(pmod(col("doc_id"), lit(5)) =!= 0).select("doc_id", "text"),
+    MinHashIndex.write(repo, fifthSplit(d, "doc_id")._1.select("doc_id", "text"),
       "doc_id", "text", "corpus", "docs")
-    val work = scratch("graft_smh_run")
-    withShufflePartitions(s, 4) {
-      val q = s.readStream.schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch(graft.streaming.StreamToRepo.ledgeredSink(
-          repo, "corpus", "mh_ingest") { b =>
-          // checkChanged = false: the staged slices partition doc_id
-          // space (disjoint fresh ids — provably append-only, the
-          // documented bypass condition), and the only re-delivery path
-          // is the ledger's crash window, which replays IDENTICAL
-          // content the guard would pass anyway; the batch lifecycle
-          // query keeps the guard on
-          MinHashIndex.append(repo, b, "doc_id", "text", "corpus", "docs",
-            checkChanged = false)
-        })
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    streamSlices(s, src, "doc_id LONG, text STRING",
+      repo, "corpus", "mh_ingest") { b =>
+      // checkChanged = false: the staged slices partition doc_id
+      // space (disjoint fresh ids — provably append-only, the
+      // documented bypass condition), and the only re-delivery path
+      // is the ledger's crash window, which replays IDENTICAL
+      // content the guard would pass anyway; the batch lifecycle
+      // query keeps the guard on
+      MinHashIndex.append(repo, b, "doc_id", "text", "corpus", "docs",
+        checkChanged = false)
     }
-    val batch = d.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 2000000).as("doc_id"),
-          concat(col("text"), lit(" smh-fresh")).as("text")))
-    MinHashIndex.dropNearKnown(repo, batch, "doc_id", "text",
+    MinHashIndex.dropNearKnown(repo, gateBatch(d, "smh-fresh"), "doc_id", "text",
       "corpus", "docs", threshold = 1.0).select("doc_id")
-  }
-
-  private def streamIvfAppendQ(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    val src = stagedIvfStreamSrc(s, dir)
-    val repo = PqRepo(s, scratch("graft_sivf_repo"))
-    val base = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    // 8 clusters (not the batch twins' 16): the harness cost is cluster-
-    // directory file churn — every micro-batch merge rewrites each
-    // touched cluster partition, and a sf-scale batch touches them all —
-    // while the RESULT is cluster-count-invariant (nprobe = numCentroids
-    // probes everything ⇒ exact ≡ brute force)
-    val built = Similarity.ivfBuild(base, "vec_id", "embedding",
-      numCentroids = 8, kmeansIters = 1)
-    Similarity.writeIvfIndex(repo, built, "ann", "emb")
-    val work = scratch("graft_sivf_run")
-    withShufflePartitions(s, 4) {
-      val q = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch(graft.streaming.StreamToRepo.ledgeredSink(
-          repo, "ann", "emb_ivf_ingest") { b =>
-          Similarity.appendToIvfIndex(repo, b, "vec_id", "embedding",
-            "ann", "emb")
-        })
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    val index = Similarity.readIvfIndex(repo, "ann", "emb")
-    Similarity.ivfSearch(index, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, nprobe = 8)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
   }
 
   /** SURVEY §2.3 `stream_ivfpq_append` (r19, beyond-directive): the PQ
@@ -1171,35 +1129,15 @@ object SparkEntry {
     * index; the merge engine is shared). */
   private def streamIvfPqAppendQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val src = stagedIvfStreamSrc(s, dir)
+    val src = stagedSlices("sivf", dir, e, "vec_id", "embedding")
     val repo = PqRepo(s, scratch("graft_sivfpq_repo"))
-    val base = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val built = Similarity.ivfBuild(base, "vec_id", "embedding",
-      numCentroids = 8, kmeansIters = 1)
-    val books = Similarity.pqTrain(base, "vec_id", "embedding",
-      m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
-    Similarity.writeIvfPqIndex(repo, built, books, "ann", "emb")
-    val work = scratch("graft_sivfpq_run")
-    withShufflePartitions(s, 4) {
-      val q = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream
-        .foreachBatch(graft.streaming.StreamToRepo.ledgeredSink(
-          repo, "ann", "emb_ivfpq_ingest") { b =>
-          Similarity.appendToIvfPqIndex(repo, b, "vec_id", "embedding",
-            "ann", "emb")
-        })
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    val base = fifthSplit(e, "vec_id")._1
+    Similarity.writeIvfPqIndex(repo, ivf(base, 8), pqBooks(base), "ann", "emb")
+    streamSlices(s, src, "vec_id LONG, embedding ARRAY<FLOAT>",
+      repo, "ann", "emb_ivfpq_ingest") { b =>
+      Similarity.appendToIvfPqIndex(repo, b, "vec_id", "embedding", "ann", "emb")
     }
-    val idx = Similarity.readIvfPqIndex(repo, "ann", "emb")
-    Similarity.ivfPqSearch(idx, e,
-      e.filter(col("vec_id") < 10), "vec_id", "embedding",
-      k = 5, nprobe = 8, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ivfPqTop5(repo, e, nprobe = 8)
   }
 
   // ===== §2.3 LLM-pipeline operators ========================================
@@ -1255,8 +1193,8 @@ object SparkEntry {
 
   private def dedupExact(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select("doc_id", "text")
-    val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    Dedup.exact(d.unionByName(dup), Seq("text"), Seq(col("doc_id")))
+    Dedup.exact(d.unionByName(plantedCopy(d, "doc_id", "text")),
+      Seq("text"), Seq(col("doc_id")))
       .select("doc_id", "text")
   }
 
@@ -1398,10 +1336,7 @@ object SparkEntry {
 
   private def embedCosineTopK(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.bruteForceTopK(e, queryVecs(e), "vec_id", "embedding", k = 5))
   }
 
   // Planted-duplicate construction (the dedup_embed model): identical
@@ -1413,8 +1348,7 @@ object SparkEntry {
 
   private def dedupMinhash(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select("doc_id", "text")
-    val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val u = d.unionByName(dup)
+    val u = d.unionByName(plantedCopy(d, "doc_id", "text"))
     // 48 slots, unsampled: the r11 kernel-diet experiment (32 slots +
     // 1/4 content sampling) was oracle-green but a measured 4-9× LOSS at
     // 100× — a thinner sketch collides near-identical replica texts into
@@ -1434,8 +1368,7 @@ object SparkEntry {
 
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select("doc_id", "text")
-    val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    val u = d.unionByName(dup)
+    val u = d.unionByName(plantedCopy(d, "doc_id", "text"))
     // fused sketch+digest single scan (r12) — see dedupMinhash
     Dedup.simhashPairsVerified(u, "doc_id", "text", maxHamming = 0)
       .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
@@ -1443,13 +1376,13 @@ object SparkEntry {
 
   private def embedLshAnn(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val dup = e.select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
     // numPlanes = 0: auto-scaled from corpus size, growing with the
     // corpus so bucket occupancy — and the quadratic in-bucket pairing —
     // stays bounded; autoFloor = 8 keeps this call site's pre-auto fixed
     // plane count at small scale. Output is plane-independent at
     // minCos = 1.0 because equal-vector pairs bypass the buckets.
-    Similarity.annBuckets(e.unionByName(dup), "vec_id", "embedding",
+    Similarity.annBuckets(e.unionByName(plantedCopy(e, "vec_id", "embedding")),
+      "vec_id", "embedding",
       numPlanes = 0, dim = 64, minCos = 1.0, autoFloor = 8)
   }
 
@@ -1458,12 +1391,8 @@ object SparkEntry {
     // (≡ brute force — also the IvfSpec property), hence oracle-able; the
     // approximate nprobe<numCentroids path is spec-verified instead.
     val e = t(s, dir, "embeddings")
-    val index = Similarity.ivfBuild(e, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
-    Similarity.ivfSearch(index, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, nprobe = 16)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.ivfSearch(ivf(e), queryVecs(e),
+      "vec_id", "embedding", k = 5, nprobe = 16))
   }
 
   /** SURVEY 34g2 `embed_ivf_refined`: the ivfBuild path with full-corpus
@@ -1479,18 +1408,15 @@ object SparkEntry {
     val e = t(s, dir, "embeddings")
     val index = Similarity.ivfBuild(e, "vec_id", "embedding",
       numCentroids = 16, kmeansIters = 0, refineIterations = 2)
-    Similarity.ivfSearch(index, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, nprobe = 16)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.ivfSearch(index, queryVecs(e),
+      "vec_id", "embedding", k = 5, nprobe = 16))
   }
 
   private def dedupEmbed(s: SparkSession, dir: String): DataFrame = {
     // plant exact-duplicate vectors under shifted ids; the ANN pipeline
     // must collapse each (original, copy) component to the original
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val copies = e.filter(col("vec_id") % 5 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
+    val copies = plantedCopy(e.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
     Similarity.dropEmbeddingDuplicates(e.unionByName(copies),
       "vec_id", "embedding", minCos = 0.999)
       .select("vec_id")
@@ -1507,8 +1433,7 @@ object SparkEntry {
     * (non-equal) recall is the SimilaritySpec planted-blob property. */
   private def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-    val copies = e.filter(col("vec_id") % 5 === 0)
-      .select((col("vec_id") + 1000000).as("vec_id"), col("embedding"))
+    val copies = plantedCopy(e.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
     Similarity.semanticDedup(e.unionByName(copies),
       "vec_id", "embedding", minCos = 0.999)
       .select("vec_id")
@@ -1516,18 +1441,18 @@ object SparkEntry {
 
   private def dedupDrop(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select("doc_id", "text")
-    val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-    operators.Dedup.dropNearDuplicates(d.unionByName(dup), "doc_id", "text",
+    operators.Dedup.dropNearDuplicates(d.unionByName(plantedCopy(d, "doc_id", "text")),
+      "doc_id", "text",
       numHashes = 48, bands = 12, threshold = 1.0, verifyExact = true)
       .select("doc_id")
   }
 
   private def dedupGroups(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents").select("doc_id", "text")
-    val dup = d.select((col("doc_id") + 1000000).as("doc_id"), col("text"))
     // ids serialized to a csv string: the driver's pandas canonicalizer
     // cannot hash array cells (round-1 comparator crash)
-    Dedup.exactGroups(d.unionByName(dup), col("doc_id"), col("text"))
+    Dedup.exactGroups(d.unionByName(plantedCopy(d, "doc_id", "text")),
+      col("doc_id"), col("text"))
       .select(array_join(col("ids").cast("array<string>"), ",").as("ids"),
         col("n"))
   }
@@ -1546,10 +1471,8 @@ object SparkEntry {
     // no-op → result ≡ brute force (oracle-able, like IVF nprobe=all);
     // the partial-depth approximate path is spec-verified instead
     val e = t(s, dir, "embeddings")
-    Similarity.quantizedTopK(e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.quantizedTopK(e, queryVecs(e),
+      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue))
   }
 
   /** SURVEY 34f `embed_index_topk`: quantized ANN over a PERSISTED index —
@@ -1561,10 +1484,8 @@ object SparkEntry {
     val repo = PqRepo(s, scratch("graft_annidx"))
     Similarity.writeQuantizedIndex(repo, e, "vec_id", "embedding", "ann", "emb")
     val coded = Similarity.readQuantizedIndex(repo, "ann", "emb")
-    Similarity.quantizedTopKIndexed(coded, e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.quantizedTopKIndexed(coded, e, queryVecs(e),
+      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue))
   }
 
   /** SURVEY 34g `embed_ivf_index`: IVF search over a PERSISTED index —
@@ -1574,14 +1495,9 @@ object SparkEntry {
   private def embedIvfIndexQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_ivfidx"))
-    val built = Similarity.ivfBuild(e, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
-    Similarity.writeIvfIndex(repo, built, "ann", "emb")
-    val index = Similarity.readIvfIndex(repo, "ann", "emb")
-    Similarity.ivfSearch(index, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, nprobe = 16)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    Similarity.writeIvfIndex(repo, ivf(e), "ann", "emb")
+    ranked(Similarity.ivfSearch(Similarity.readIvfIndex(repo, "ann", "emb"),
+      queryVecs(e), "vec_id", "embedding", k = 5, nprobe = 16))
   }
 
   /** SURVEY 34j `pq_topk` (r15): product-quantization ADC top-k — the
@@ -1593,12 +1509,8 @@ object SparkEntry {
     * recall is spec-verified. */
   private def pqTopKQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    val books = Similarity.pqTrain(e, "vec_id", "embedding",
-      m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
-    Similarity.pqTopK(e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", books, k = 5, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.pqTopK(e, queryVecs(e),
+      "vec_id", "embedding", pqBooks(e), k = 5, rerankDepth = Int.MaxValue))
   }
 
   /** SURVEY 34k `ivfpq_topk` (r15): IVF-PQ over a PERSISTED index — the
@@ -1611,17 +1523,8 @@ object SparkEntry {
   private def ivfPqTopKQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_ivfpq"))
-    val built = Similarity.ivfBuild(e, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
-    val books = Similarity.pqTrain(e, "vec_id", "embedding",
-      m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
-    Similarity.writeIvfPqIndex(repo, built, books, "ann", "emb")
-    val idx = Similarity.readIvfPqIndex(repo, "ann", "emb")
-    Similarity.ivfPqSearch(idx, e,
-      e.filter(col("vec_id") < 10), "vec_id", "embedding",
-      k = 5, nprobe = 16, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    Similarity.writeIvfPqIndex(repo, ivf(e), pqBooks(e), "ann", "emb")
+    ivfPqTop5(repo, e, nprobe = 16)
   }
 
   /** SURVEY 34m `ivfpq_residual` (r16): IVFADC proper (Jégou et al. 2011
@@ -1636,18 +1539,12 @@ object SparkEntry {
   private def ivfPqResidualQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_ivfpqres"))
-    val built = Similarity.ivfBuild(e, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
+    val built = ivf(e)
     val books = Similarity.pqTrainResidual(built,
       m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
     Similarity.writeIvfPqIndex(repo, built, books, "ann", "emb",
       residual = true)
-    val idx = Similarity.readIvfPqIndex(repo, "ann", "emb")
-    Similarity.ivfPqSearch(idx, e,
-      e.filter(col("vec_id") < 10), "vec_id", "embedding",
-      k = 5, nprobe = 16, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ivfPqTop5(repo, e, nprobe = 16)
   }
 
   /** SURVEY 34l `ivfpq_append` (r15): incremental ingest into the
@@ -1659,21 +1556,11 @@ object SparkEntry {
   private def ivfPqAppendQ(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_ivfpqapp"))
-    val base = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val batch = e.filter(pmod(col("vec_id"), lit(5)) === 0)
-    val built = Similarity.ivfBuild(base, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
-    val books = Similarity.pqTrain(base, "vec_id", "embedding",
-      m = 8, ksub = 16, kmeansIters = 4, sampleRows = 1024)
-    Similarity.writeIvfPqIndex(repo, built, books, "ann", "emb")
+    val (base, batch) = fifthSplit(e, "vec_id")
+    Similarity.writeIvfPqIndex(repo, ivf(base), pqBooks(base), "ann", "emb")
     Similarity.appendToIvfPqIndex(repo, batch, "vec_id", "embedding",
       "ann", "emb")
-    val idx = Similarity.readIvfPqIndex(repo, "ann", "emb")
-    Similarity.ivfPqSearch(idx, e,
-      e.filter(col("vec_id") < 10), "vec_id", "embedding",
-      k = 5, nprobe = 16, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ivfPqTop5(repo, e, nprobe = 16)
   }
 
   /** SURVEY 34h `embed_ivf_append`: incremental ingest into a persisted
@@ -1685,19 +1572,11 @@ object SparkEntry {
   private def embedIvfAppend(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_ivfapp"))
-    // modulo split (id ranges differ per sf): 80% of the corpus builds
-    // the index, every fifth vector arrives later as the ingest batch
-    val base = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val batch = e.filter(pmod(col("vec_id"), lit(5)) === 0)
-    val built = Similarity.ivfBuild(base, "vec_id", "embedding",
-      numCentroids = 16, kmeansIters = 1)
-    Similarity.writeIvfIndex(repo, built, "ann", "emb")
+    val (base, batch) = fifthSplit(e, "vec_id")
+    Similarity.writeIvfIndex(repo, ivf(base), "ann", "emb")
     Similarity.appendToIvfIndex(repo, batch, "vec_id", "embedding", "ann", "emb")
-    val index = Similarity.readIvfIndex(repo, "ann", "emb")
-    Similarity.ivfSearch(index, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, nprobe = 16)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.ivfSearch(Similarity.readIvfIndex(repo, "ann", "emb"),
+      queryVecs(e), "vec_id", "embedding", k = 5, nprobe = 16))
   }
 
   /** SURVEY 34i `embed_q8_append` (r12): incremental ingest into the
@@ -1710,8 +1589,7 @@ object SparkEntry {
   private def embedQ8Append(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
     val repo = PqRepo(s, scratch("graft_q8app"))
-    val base = e.filter(pmod(col("vec_id"), lit(5)) =!= 0)
-    val batch = e.filter(pmod(col("vec_id"), lit(5)) === 0)
+    val (base, batch) = fifthSplit(e, "vec_id")
     // 8 buckets at test scale (the 20% batch touches them all anyway —
     // the pruning win is spec-verified with a one-row batch; production
     // keeps the 32-bucket default)
@@ -1719,10 +1597,8 @@ object SparkEntry {
       "emb", numBuckets = 8)
     Similarity.appendToQuantizedIndex(repo, batch, "vec_id", "embedding", "ann", "emb")
     val coded = Similarity.readQuantizedIndex(repo, "ann", "emb")
-    Similarity.quantizedTopKIndexed(coded, e, e.filter(col("vec_id") < 10),
-      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue)
-      .select(col("query_id"), col("cand_id"), col("cos"),
-        col("rank").cast("bigint").as("rank"))
+    ranked(Similarity.quantizedTopKIndexed(coded, e, queryVecs(e),
+      "vec_id", "embedding", k = 5, rerankDepth = Int.MaxValue))
   }
 
   private def multimodalMeta(s: SparkSession, dir: String): DataFrame =
@@ -1831,12 +1707,7 @@ object SparkEntry {
     // daily-ingest shape: the new batch is half known content (copies of
     // corpus docs) and half genuinely new; only the new half survives
     val d = t(s, dir, "documents")
-    val batch = d.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 2000000).as("doc_id"),
-          concat(col("text"), lit(" fresh")).as("text")))
-    Dedup.dropKnown(batch, d, "text").select("doc_id")
+    Dedup.dropKnown(gateBatch(d, "fresh"), d, "text").select("doc_id")
   }
 
   /** Persisted-sketch incremental dedup (SURVEY 29a): the full index
@@ -1852,27 +1723,20 @@ object SparkEntry {
     val d = t(s, dir, "documents")
     val ingestA = d.filter(col("doc_id") % 2 === 0)
     val ingestB = d.filter(col("doc_id") % 2 === 1)
-    val batch = d.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 2000000).as("doc_id"),
-          concat(col("text"), lit(" bloom-fresh")).as("text")))
     val capacity = math.max(d.count(), 1L)
     val sketch = BloomDedup.appendToSketch(
       BloomDedup.buildSketch(ingestA, "text", capacity, numShards = 8),
       ingestB, "text")
-    BloomDedup.dropKnownBloom(batch, d, "text", sketch).select("doc_id")
+    BloomDedup.dropKnownBloom(gateBatch(d, "bloom-fresh"), d, "text", sketch)
+      .select("doc_id")
   }
-
-  private val mhIndexStagings =
-    scala.collection.concurrent.TrieMap[String, String]()
 
   /** SURVEY §2.3 `dedup_minhash_incremental` (NEW r20, verdict #2): the
     * PERSISTED near-dup index lifecycle — the MinHash twin of the
     * embedding index's write/append/search cycle, closing the last
     * 100 TB dedup gap (near-dup gating previously re-signed the whole
     * corpus per run; [[operators.MinHashIndex]]). Staged once per
-    * (session, dir): the corpus's even-id half is signed and indexed
+    * dir: the corpus's even-id half is signed and indexed
     * (signatures + band buckets + digests through the repo's atomic
     * layer), the odd-id half APPENDED under the frozen geometry via the
     * partition-scoped merge — so the gate below provably runs against
@@ -1889,7 +1753,7 @@ object SparkEntry {
     * write-once-gate-daily cost profile a real crawl pipeline has. */
   private def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame = {
     val d = t(s, dir, "documents")
-    val repoDir = mhIndexStagings.getOrElseUpdate(dir, {
+    val repoDir = staged("mh_index", dir) {
       val p = scratch("graft_mh_index")
       val repo = PqRepo(s, p)
       MinHashIndex.write(repo, d.filter(col("doc_id") % 2 === 0)
@@ -1897,13 +1761,8 @@ object SparkEntry {
       MinHashIndex.append(repo, d.filter(col("doc_id") % 2 === 1)
         .select("doc_id", "text"), "doc_id", "text", "corpus", "docs")
       p
-    })
-    val batch = d.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
-      .unionByName(d.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 2000000).as("doc_id"),
-          concat(col("text"), lit(" mh-fresh")).as("text")))
-    MinHashIndex.dropNearKnown(PqRepo(s, repoDir), batch, "doc_id", "text",
+    }
+    MinHashIndex.dropNearKnown(PqRepo(s, repoDir), gateBatch(d, "mh-fresh"), "doc_id", "text",
       "corpus", "docs", threshold = 1.0).select("doc_id")
   }
 
@@ -2052,6 +1911,16 @@ object SparkEntry {
         col("drift").cast("string").as("drift"))
   }
 
+  /** Per-document (lang, term, tf) rows of the lower-cased text: the
+    * input of both heavy-hitter queries. */
+  private def langTermCounts(d: DataFrame): DataFrame =
+    d.select(col("lang"),
+      explode(org.apache.spark.sql.graft.ColumnBridge.column(
+        graft.functions.expressions.TokenCounts(
+          org.apache.spark.sql.graft.ColumnBridge.expression(
+            lower(col("text"))))))
+        .as(Seq("term", "tf")))
+
   /** SURVEY 43d `heavy_hitters` (r15): per-language frequent tokens via
     * the bounded Misra–Gries aggregate — k = 256 exceeds the corpus's
     * distinct per-language vocabulary at every verification scale (130
@@ -2059,13 +1928,7 @@ object SparkEntry {
     * oracle is the plain per-group count ranking (the no-op-parameter ⇒
     * exact pattern); the sub-k sketch regime is spec-verified. */
   private def heavyHittersQ(s: SparkSession, dir: String): DataFrame = {
-    val d = t(s, dir, "documents")
-    val tf = d.select(col("lang"),
-      explode(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.expressions.TokenCounts(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            lower(col("text"))))))
-        .as(Seq("term", "tf")))
+    val tf = langTermCounts(t(s, dir, "documents"))
     tf.groupBy("lang")
       .agg(TextFunctions.heavyHitters(col("term"), col("tf"), 256).as("__hh"),
         countDistinct(col("term")).as("__nd"))
@@ -2102,13 +1965,7 @@ object SparkEntry {
     * comparisons are integer cross-multiplications — no division. */
   private def heavyHittersApproxQ(s: SparkSession, dir: String): DataFrame = {
     val k = 8
-    val d = t(s, dir, "documents")
-    val tf = d.select(col("lang"),
-      explode(org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.expressions.TokenCounts(
-          org.apache.spark.sql.graft.ColumnBridge.expression(
-            lower(col("text"))))))
-        .as(Seq("term", "tf")))
+    val tf = langTermCounts(t(s, dir, "documents"))
     // exact truth: per-(lang, term) weights, per-lang totals. One
     // vocabulary-sized exchange; `tot` is |langs| rows — broadcast.
     val truth = tf.groupBy("lang", "term")
@@ -2813,6 +2670,60 @@ object SparkEntry {
                   OR starts_with(p, 'mc_eid') OR starts_with(p, 'ref_')))) AS kept
             FROM parts)"""
 
+  /** The closed-stream emission over a finite input with final watermark
+    * W = max(ts): gap-sessions restricted to those provably closed
+    * (end + gap < W) — open tails are exactly what append mode withholds.
+    * `extraCols` appends output columns computed over the session row. */
+  private def closedSessionSql(extraCols: String = ""): String =
+    s"""WITH e AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
+                    FROM events),
+           g AS (
+             SELECT user_id, t,
+               sum(CASE WHEN prev IS NULL OR t - prev > 1800 THEN 1 ELSE 0 END)
+                 OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
+             FROM (SELECT user_id, t,
+                     lag(t) OVER (PARTITION BY user_id ORDER BY t) AS prev
+                   FROM e)),
+           s AS (SELECT user_id, min(t) AS start_epoch, max(t) AS end_epoch,
+                   CAST(count(*) AS BIGINT) AS n_events
+                 FROM g GROUP BY user_id, sid)
+         SELECT user_id, start_epoch, end_epoch, n_events$extraCols
+         FROM s WHERE end_epoch + 1800 < (SELECT max(t) FROM e)"""
+
+  /** The oracle of the known-content gates over [[gateBatch]]`(d, tag)`:
+    * exactly the batch rows whose text no corpus document carries. */
+  private def knownBatchSql(tag: String): String =
+    s"""WITH batch AS (
+           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 100
+           UNION ALL
+           SELECT doc_id + 2000000, text || ' $tag' FROM documents WHERE doc_id < 50)
+         SELECT b.doc_id FROM batch b
+         WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = b.text)"""
+
+  /** `WITH u AS (...)`: the rows `id, payload` of `from` plus their
+    * [[plantedCopy]] — of the rows of `copyFrom`, when given. */
+  private def plantedSql(id: String, payload: String, from: String,
+      copyFrom: String = ""): String =
+    s"""WITH u AS (SELECT $id, $payload FROM $from
+                    UNION ALL
+                    SELECT $id + 1000000, $payload FROM ${if (copyFrom.isEmpty) from else copyFrom})"""
+
+  /** Keep-min-id per identical embedding over the corpus plus planted
+    * copies of every fifth vector: the oracle of the embedding dedups. */
+  private lazy val plantedEmbedMinSql =
+    s"""${plantedSql("vec_id", "embedding", "embeddings",
+           copyFrom = "embeddings WHERE vec_id % 5 = 0")}
+         SELECT min(vec_id) AS vec_id FROM u GROUP BY embedding"""
+
+  /** Each event's customer's latest order of the last order day `op`
+    * (`>=`: at or before, `<=`: at or after) the event. */
+  private def asofSql(op: String): String =
+    s"""WITH o AS (SELECT o_custkey, o_orderdate, CAST(max(o_orderkey) AS BIGINT) AS o_orderkey
+                    FROM orders GROUP BY 1, 2)
+         SELECT e.event_id, CAST(floor(epoch(e.ts)) AS BIGINT) AS ts_epoch, o.o_orderkey
+         FROM events e ASOF LEFT JOIN o
+           ON e.user_id = o.o_custkey AND e.ts $op o.o_orderdate"""
+
   private def inList(words: Seq[String]) =
     words.map(w => s"'$w'").mkString("(", ",", ")")
 
@@ -3077,19 +2988,11 @@ object SparkEntry {
       """SELECT 'region' AS tbl, CAST(count(*) AS BIGINT) AS n_rows, 'x (Updated 2024-05-01)' AS last_modified FROM region
          UNION ALL SELECT 'nation', CAST(count(*) AS BIGINT), 'x (Updated 2024-05-01)' FROM nation
          UNION ALL SELECT 'supplier', CAST(count(*) AS BIGINT), 'x (Updated 2024-05-01)' FROM supplier""",
-    "sql_passthrough" ->
-      """SELECT c.c_mktsegment, o.o_orderpriority, CAST(count(*) AS BIGINT) AS n
-         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-         WHERE o.o_totalprice > 100000
-         GROUP BY c.c_mktsegment, o.o_orderpriority""",
-    "sql_catalog" ->
-      // identical SQL to sql_passthrough — the query differs only in the
-      // table-resolution path (DSv2 catalog over the staged repo vs temp
-      // views), which must be contents-invariant
-      """SELECT c.c_mktsegment, o.o_orderpriority, CAST(count(*) AS BIGINT) AS n
-         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-         WHERE o.o_totalprice > 100000
-         GROUP BY c.c_mktsegment, o.o_orderpriority""",
+    "sql_passthrough" -> segmentCountSql("orders", "customer"),
+    // identical SQL to sql_passthrough — the query differs only in the
+    // table-resolution path (DSv2 catalog over the staged repo vs temp
+    // views), which must be contents-invariant
+    "sql_catalog" -> segmentCountSql("orders", "customer"),
     "sql_catalog_asof" ->
       // v1 (VERSION AS OF the archive stamp, and TIMESTAMP AS OF an
       // instant between the versions) aggregates the RAW prices; the
@@ -3227,18 +3130,10 @@ object SparkEntry {
           FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""",
     "q_distinct" ->
       "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders",
-    "q_asof" ->
-      """WITH o AS (SELECT o_custkey, o_orderdate, CAST(max(o_orderkey) AS BIGINT) AS o_orderkey
-                    FROM orders GROUP BY 1, 2)
-         SELECT e.event_id, CAST(floor(epoch(e.ts)) AS BIGINT) AS ts_epoch, o.o_orderkey
-         FROM events e ASOF LEFT JOIN o
-           ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""",
-    "q_asof_forward" ->
-      """WITH o AS (SELECT o_custkey, o_orderdate, CAST(max(o_orderkey) AS BIGINT) AS o_orderkey
-                    FROM orders GROUP BY 1, 2)
-         SELECT e.event_id, CAST(floor(epoch(e.ts)) AS BIGINT) AS ts_epoch, o.o_orderkey
-         FROM events e ASOF LEFT JOIN o
-           ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate""",
+    "q_asof" -> asofSql(">="),
+
+    "q_asof_forward" -> asofSql("<="),
+
     "embed_quantize" ->
       // double arithmetic in the same operation order as the Spark side:
       // codes are bit-identical across IEEE-754 engines
@@ -3297,60 +3192,15 @@ object SparkEntry {
          SELECT user_id, CAST(max(session_id) AS BIGINT) AS n_sessions,
            CAST(count(*) AS BIGINT) AS n_events
          FROM g GROUP BY 1""",
-    // the closed-stream emission over a finite input with final watermark
-    // W = max(ts): gap-sessions restricted to those provably closed
-    // (end + gap < W) — open tails are exactly what append mode withholds
-    "closed_sessions" ->
-      """WITH e AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
-                    FROM events),
-           g AS (
-             SELECT user_id, t,
-               sum(CASE WHEN prev IS NULL OR t - prev > 1800 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
-             FROM (SELECT user_id, t,
-                     lag(t) OVER (PARTITION BY user_id ORDER BY t) AS prev
-                   FROM e)),
-           s AS (SELECT user_id, min(t) AS start_epoch, max(t) AS end_epoch,
-                   CAST(count(*) AS BIGINT) AS n_events
-                 FROM g GROUP BY user_id, sid)
-         SELECT user_id, start_epoch, end_epoch, n_events
-         FROM s WHERE end_epoch + 1800 < (SELECT max(t) FROM e)""",
-    "stream_to_repo" ->
-      // identical session algebra to closed_sessions — the query differs
-      // only in the landing path (foreachBatch → PqRepo.merge → ledger),
-      // which must be contents-invariant
-      """WITH e AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
-                    FROM events),
-           g AS (
-             SELECT user_id, t,
-               sum(CASE WHEN prev IS NULL OR t - prev > 1800 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
-             FROM (SELECT user_id, t,
-                     lag(t) OVER (PARTITION BY user_id ORDER BY t) AS prev
-                   FROM e)),
-           s AS (SELECT user_id, min(t) AS start_epoch, max(t) AS end_epoch,
-                   CAST(count(*) AS BIGINT) AS n_events
-                 FROM g GROUP BY user_id, sid)
-         SELECT user_id, start_epoch, end_epoch, n_events
-         FROM s WHERE end_epoch + 1800 < (SELECT max(t) FROM e)""",
-    "stream_route" ->
-      // the closed-session algebra + the route label: every session must
-      // land exactly once, in exactly the table its n_events selects
-      """WITH e AS (SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS t
-                    FROM events),
-           g AS (
-             SELECT user_id, t,
-               sum(CASE WHEN prev IS NULL OR t - prev > 1800 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY user_id ORDER BY t ROWS UNBOUNDED PRECEDING) AS sid
-             FROM (SELECT user_id, t,
-                     lag(t) OVER (PARTITION BY user_id ORDER BY t) AS prev
-                   FROM e)),
-           s AS (SELECT user_id, min(t) AS start_epoch, max(t) AS end_epoch,
-                   CAST(count(*) AS BIGINT) AS n_events
-                 FROM g GROUP BY user_id, sid)
-         SELECT user_id, start_epoch, end_epoch, n_events,
-           CASE WHEN n_events >= 2 THEN 'multi' ELSE 'single' END AS route
-         FROM s WHERE end_epoch + 1800 < (SELECT max(t) FROM e)""",
+    "closed_sessions" -> closedSessionSql(),
+    // identical session algebra to closed_sessions — the query differs
+    // only in the landing path (foreachBatch → PqRepo.merge → ledger),
+    // which must be contents-invariant
+    "stream_to_repo" -> closedSessionSql(),
+    // the closed-session algebra + the route label: every session must
+    // land exactly once, in exactly the table its n_events selects
+    "stream_route" -> closedSessionSql(
+      ", CASE WHEN n_events >= 2 THEN 'multi' ELSE 'single' END AS route"),
     "stream_events" ->
       s"""SELECT CAST(floor(epoch(time_bucket(INTERVAL 1 hour, ts))) AS BIGINT) AS hour_epoch,
           event_type, CAST(count(*) AS BIGINT) AS n,
@@ -3371,9 +3221,7 @@ object SparkEntry {
       // pairs must share the synthetic 4-window slot (copy offset 10⁶ is
       // divisible by 4, so copies stay in their original's window; the
       // same-window join term is what separates this from dedup_minhash)
-      """WITH u AS (SELECT doc_id, text FROM documents WHERE strlen(text) >= 5
-                    UNION ALL
-                    SELECT doc_id + 1000000, text FROM documents WHERE strlen(text) >= 5)
+      s"""${plantedSql("doc_id", "text", "documents WHERE strlen(text) >= 5")}
          SELECT CAST(1704067200 + (a.doc_id % 4) * 3600 AS BIGINT) AS window_start,
            a.doc_id AS id_a, b.doc_id AS id_b, CAST(1.0 AS DOUBLE) AS est_jaccard
          FROM u a JOIN u b ON a.text = b.text AND a.doc_id % 4 = b.doc_id % 4
@@ -3439,11 +3287,7 @@ object SparkEntry {
       // planted structure, so corpora with organic exact-dup cliques (the
       // --skew robustness corpus) are described correctly too; assumes no
       // DISTINCT vectors at cos >= 0.999, like the operator's threshold.
-      """WITH u AS (SELECT vec_id, embedding FROM embeddings
-                    UNION ALL
-                    SELECT vec_id + 1000000, embedding FROM embeddings
-                    WHERE vec_id % 5 = 0)
-         SELECT min(vec_id) AS vec_id FROM u GROUP BY embedding""",
+      plantedEmbedMinSql,
     "dedup_semantic" ->
       // the dedup_embed oracle model, different engine path: identical
       // vectors share the lattice quantization, hence the assigned
@@ -3451,11 +3295,7 @@ object SparkEntry {
       // geometry is even trained, so keep-min-per-identical-embedding is
       // exact regardless of where the centroids land. Same assumption:
       // no DISTINCT vectors at rounded cos >= 0.999.
-      """WITH u AS (SELECT vec_id, embedding FROM embeddings
-                    UNION ALL
-                    SELECT vec_id + 1000000, embedding FROM embeddings
-                    WHERE vec_id % 5 = 0)
-         SELECT min(vec_id) AS vec_id FROM u GROUP BY embedding""",
+      plantedEmbedMinSql,
     "multimodal_meta" ->
       // documents are ASCII (one byte per char), so the UTF-8 byte sum is
       // the ascii-code sum; the stub decoder's feature fold is that exact
@@ -3511,22 +3351,18 @@ object SparkEntry {
       // (requires all 48 independent min-hash slots equal).
       // DuckDB strlen counts BYTES (length() is chars), matching the Spark
       // side's octet_length(t) >= shingleK filter on non-ASCII corpora too.
-      """WITH u AS (SELECT doc_id, text FROM documents WHERE strlen(text) >= 5
-                    UNION ALL
-                    SELECT doc_id + 1000000, text FROM documents WHERE strlen(text) >= 5)
+      s"""${plantedSql("doc_id", "text", "documents WHERE strlen(text) >= 5")}
          SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(1.0 AS DOUBLE) AS est_jaccard
          FROM u a JOIN u b ON a.text = b.text AND a.doc_id < b.doc_id""",
     "dedup_simhash" ->
       // identical texts → identical 64-bit sketches → hamming 0
-      """WITH u AS (SELECT doc_id, text FROM documents
-                    UNION ALL SELECT doc_id + 1000000, text FROM documents)
+      s"""${plantedSql("doc_id", "text", "documents")}
          SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS INT) AS hamming
          FROM u a JOIN u b ON a.text = b.text AND a.doc_id < b.doc_id""",
     "dedup_drop" ->
       // each exact-dup component keeps its smallest id; texts shorter than
       // the shingle width produce no signature, so both copies survive
-      """WITH u AS (SELECT doc_id, text FROM documents
-                    UNION ALL SELECT doc_id + 1000000, text FROM documents)
+      s"""${plantedSql("doc_id", "text", "documents")}
          SELECT min(doc_id) AS doc_id FROM u WHERE strlen(text) >= 5 GROUP BY text
          UNION ALL
          SELECT doc_id FROM u WHERE strlen(text) < 5""",
@@ -3536,9 +3372,7 @@ object SparkEntry {
       // is recomputed from content equality (canonical id_a < id_b), so
       // organic exact-dup cliques beyond the planted (v, v+1000000) pairs
       // — e.g. the --skew robustness corpus — are described correctly.
-      """WITH u AS (SELECT vec_id, embedding FROM embeddings
-                    UNION ALL
-                    SELECT vec_id + 1000000, embedding FROM embeddings)
+      s"""${plantedSql("vec_id", "embedding", "embeddings")}
          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            CAST(1.0 AS DOUBLE) AS cos
          FROM u a JOIN u b
@@ -3552,14 +3386,12 @@ object SparkEntry {
       // pruning; refinement quality is the IvfSpec recovery property
       bruteTop5Sql,
     "dedup_groups" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-                    UNION ALL SELECT doc_id + 1000000, text FROM documents)
+      s"""${plantedSql("doc_id", "text", "documents")}
          SELECT array_to_string(list_sort(list(doc_id)), ',') AS ids,
                 CAST(count(*) AS BIGINT) AS n
          FROM u GROUP BY text""",
     "dedup_exact" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-                    UNION ALL SELECT doc_id + 1000000, text FROM documents)
+      s"""${plantedSql("doc_id", "text", "documents")}
          SELECT doc_id, text FROM u
          QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1""",
     "token_count" ->
@@ -3619,41 +3451,17 @@ object SparkEntry {
                        ELSE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
                             / CAST(len(list_distinct(a.g || b.g)) AS DOUBLE) END, 6) AS jaccard
           FROM d a JOIN d b ON a.doc_id < b.doc_id""",
-    "dedup_incremental" ->
-      """WITH batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 100
-           UNION ALL
-           SELECT doc_id + 2000000, text || ' fresh' FROM documents WHERE doc_id < 50)
-         SELECT b.doc_id FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = b.text)""",
-    "dedup_bloom" ->
-      """WITH batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 100
-           UNION ALL
-           SELECT doc_id + 2000000, text || ' bloom-fresh' FROM documents WHERE doc_id < 50)
-         SELECT b.doc_id FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = b.text)""",
+    "dedup_incremental" -> knownBatchSql("fresh"),
+    "dedup_bloom" -> knownBatchSql("bloom-fresh"),
     // threshold-1.0 near-dup gating against the persisted index is
     // provably the exact-content anti-join (MinHashIndex.dropNearKnown's
     // threshold algebra) — the same NOT-EXISTS twin as dedup_incremental
-    "dedup_minhash_incremental" ->
-      """WITH batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 100
-           UNION ALL
-           SELECT doc_id + 2000000, text || ' mh-fresh' FROM documents WHERE doc_id < 50)
-         SELECT b.doc_id FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = b.text)""",
+    "dedup_minhash_incremental" -> knownBatchSql("mh-fresh"),
     // the gate copies ids < 100, which include streamed-only docs (ids
     // ≡ 0 mod 5): a lost micro-batch would leave those copies alive and
     // the full-corpus NOT-EXISTS twin flags them — probe-visibility of
     // the streamed signatures is what this oracle checks
-    "stream_minhash_append" ->
-      """WITH batch AS (
-           SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id < 100
-           UNION ALL
-           SELECT doc_id + 2000000, text || ' smh-fresh' FROM documents WHERE doc_id < 50)
-         SELECT b.doc_id FROM batch b
-         WHERE NOT EXISTS (SELECT 1 FROM documents d WHERE d.text = b.text)""",
+    "stream_minhash_append" -> knownBatchSql("smh-fresh"),
     "scrub_pii" ->
       raw"""SELECT doc_id,
            regexp_replace(regexp_replace(regexp_replace(

@@ -375,14 +375,6 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     if (partitionCols.nonEmpty) df.hint("rebalance", partitionCols.map(col): _*)
     else df
 
-  /** The table's hive partition columns, inferred from its directory
-    * layout by a read — empty for a flat table. */
-  def partitionColsOf(schema: String, table: String): Seq[String] = {
-    val dest = tablePath(schema, table)
-    if (!fs(dest).exists(dest)) Nil
-    else ParquetBridge.partitionColumns(this.table(schema, table))
-  }
-
   /** The lastModified stamp on the first DATA column (partition columns
     * don't materialize in the files), shared by every partitioned write
     * path so merge-rewritten partitions keep the stamp too. */

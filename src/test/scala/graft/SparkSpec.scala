@@ -42,18 +42,8 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   /** The events table across testdata generations — TIMESTAMP(NANOS)
-    * files (surface as long under nanosAsLong) or TIMESTAMP(MICROS) —
-    * with `ts` normalized to timestamp_ntz either way (same logic as
-    * SparkEntry's reader). */
-  def eventsTable(dir: String = sfDir): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          timestamp_micros(expr("ts div 1000")).cast("timestamp_ntz"))
-      case _ => raw.withColumn("ts", col("ts").cast("timestamp_ntz"))
-    }
-  }
+    * or TIMESTAMP(MICROS) files — with `ts` normalized to timestamp_ntz
+    * either way, by SparkEntry's own reader. */
+  def eventsTable(dir: String = sfDir): org.apache.spark.sql.DataFrame =
+    SparkEntry.events(spark, dir)
 }

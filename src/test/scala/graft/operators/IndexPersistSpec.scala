@@ -391,7 +391,7 @@ class IndexPersistSpec extends SparkSpec {
     assert(incremental == rebuilt)
   }
 
-  test("writePartitioned promotes atomically: no tmp dir left, table readable") {
+  test("hive-layout write promotes atomically: no tmp dir left, table readable") {
     val repo = PqRepo(spark, Files.createTempDirectory("idx_part").toString)
     val built = Similarity.ivfBuild(emb.limit(100), "vec_id", "embedding",
       numCentroids = 4)

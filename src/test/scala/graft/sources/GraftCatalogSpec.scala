@@ -70,7 +70,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(!p.contains("o_orderdate"), s"unneeded column read:\n$p")
   }
 
-  test("hive-partition pruning over a writePartitioned layout") {
+  test("hive-partition pruning over a hive-layout write") {
     val df = spark.sql(
       s"SELECT doc_id FROM $cat.corpus.docs WHERE lang = 'en'")
     val p = df.queryExecution.executedPlan.toString

@@ -87,7 +87,7 @@ class MergeSpec extends SparkSpec {
     assert(e.getMessage.contains("merge key column(s) [k]"), e.getMessage)
   }
 
-  test("mergePartitioned schema guard: drift rejected by default, " +
+  test("hive-layout merge schema guard: drift rejected by default, " +
     "missing-column evolution allowed, added columns always rejected") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergeschema3").toString)
@@ -124,7 +124,7 @@ class MergeSpec extends SparkSpec {
       e2.getMessage)
   }
 
-  test("mergePartitioned rewrites only affected partitions — untouched " +
+  test("hive-layout merge rewrites only affected partitions — untouched " +
     "partition files stay byte-identical") {
     val dir = java.nio.file.Files.createTempDirectory("mergespec4")
     val repo = PqRepo(spark, dir.toString)
@@ -164,7 +164,7 @@ class MergeSpec extends SparkSpec {
       assert(java.util.Arrays.equals(bytes, files("day=d3")(p)), s"$p changed") }
   }
 
-  test("mergePartitioned survives partition values whose toString differs " +
+  test("hive-layout merge survives partition values whose toString differs " +
     "from the writer's path rendering (timestamp partitions)") {
     // java.sql.Timestamp.toString appends ".0" while Spark's writer does
     // not: a manifest keyed on re-rendered row values recorded hasNew =
@@ -187,8 +187,8 @@ class MergeSpec extends SparkSpec {
     assert(out == Set((1L, 99.0), (2L, 20.0), (3L, 30.0)))
   }
 
-  test("mergePartitioned stamps lastModified on rewritten partitions " +
-    "(the merge path keeps writePartitioned's metadata contract)") {
+  test("hive-layout merge stamps lastModified on rewritten partitions " +
+    "(the merge path keeps the hive-layout write's metadata contract)") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergespec6").toString)
     repo.write(Seq(("d1", 1L, 1.0)).toDF("day", "k", "v"),
@@ -247,7 +247,7 @@ class MergeSpec extends SparkSpec {
     assert(after == Set((1L, 99.0, "d1"), (2L, 88.0, "d2"), (3L, 77.0, "d3")))
   }
 
-  test("mergePartitioned bootstraps a missing destination and rejects " +
+  test("hive-layout merge bootstraps a missing destination and rejects " +
     "partition columns outside the key set") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("mergespec5").toString)

@@ -35,7 +35,7 @@ class PqRepoCrashSpec extends SparkSpec with CrashWalk {
     else rowsOf(repo.table("s", t)) ++ Seq(
       s"modified=${repo.lastModified("s", t)}",
       s"meta=${repo.readTableMeta("s", t).toSeq.sorted}",
-      s"partitions=${repo.partitionColsOf("s", t)}")
+      s"partitions=${ParquetBridge.partitionColumns(repo.table("s", t))}")
 
   /** The archived snapshots of `s/t`: name and rows of each. */
   private def archived(repo: PqRepo): Seq[String] =

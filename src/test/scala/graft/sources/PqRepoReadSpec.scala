@@ -214,7 +214,7 @@ class PqRepoReadSpec extends SparkSpec {
     val cents = (0 until nlist).map(c => c -> Seq(c.toDouble, 1.0))
     Similarity.writeIvfIndex(repo, Similarity.IvfIndex(cents, assigned), "ann", "j")
     repo.write(assigned, "s", "p64", partitionCols = Seq("cluster"), modified = Some("m"))
-    assert(repo.partitionColsOf("s", "p64") == Seq("cluster"))
+    assert(org.apache.spark.sql.graft.ParquetBridge.partitionColumns(repo.table("s", "p64")) == Seq("cluster"))
     assert(new java.io.File(repo.tablePath("s", "p64").toUri.getPath)
       .listFiles().count(_.getName.startsWith("cluster=")) == nlist)
 

@@ -82,13 +82,6 @@ class GraftConfigSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(graft.GraftConfig.resolveDataDir(Some("/x")) == "/x")
     assert(graft.GraftConfig.resolveDataDir(None).nonEmpty)
   }
-  test("engine default round-trips and validates") {
-    graft.GraftConfig.setDefaultEngine("JDBC")
-    assert(graft.GraftConfig.getDefaultEngine == "jdbc")
-    assertThrows[IllegalArgumentException] {
-      graft.GraftConfig.setDefaultEngine("  ")
-    }
-  }
 }
 
 class PartitionedRepoSpec extends graft.SparkSpec {
@@ -134,7 +127,7 @@ class PartitionedLayoutGuardSpec extends graft.SparkSpec {
 
   test("flat-rewrite ops refuse a hive-partitioned table instead of flattening it") {
     val (repo, _) = partRepo()
-    assert(repo.partitionColsOf("tpch", "orders_part") == Seq("o_year"))
+    assert(org.apache.spark.sql.graft.ParquetBridge.partitionColumns(repo.table("tpch", "orders_part")) == Seq("o_year"))
     val e1 = intercept[IllegalStateException] {
       repo.merge(repo.table("tpch", "orders_part").limit(5),
         "tpch", "orders_part", keys = Seq("o_orderkey"))
@@ -181,7 +174,7 @@ class PartitionedLayoutGuardSpec extends graft.SparkSpec {
 class WriteSizingSpec extends graft.SparkSpec {
   import org.apache.spark.sql.functions._
 
-  test("recoverWrite heals every crash point of the whole-table sidecar swap") {
+  test("recover heals every crash point of the whole-table sidecar swap") {
     val repo = PqRepo(spark,
       java.nio.file.Files.createTempDirectory("graft_repo_rw").toString)
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
