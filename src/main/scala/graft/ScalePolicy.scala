@@ -3,6 +3,7 @@ package graft
 import scala.util.DynamicVariable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** The one small-vs-scale regime policy of the dedup operators.
   *
@@ -56,6 +57,27 @@ private[graft] object ScalePolicy {
   /** The zero-job size estimate the byte gates key on. */
   def estimateBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
+
+  /** The number of partitions `df` is planned to run with, read without
+    * starting a job — the probe behind `Dedup.fanOut`, `Dedup.fanOutDense`
+    * and the clustering test of `PqRepo.mergeIntoPartitions`.
+    *
+    * An adaptive plan (AQE wraps every plan that holds an exchange or a
+    * subquery) counts as already spread: the answer is its pre-coalesce
+    * output partitioning, and the shuffle parallelism where that names no
+    * count (a union, a broadcast join streaming a scan). Asking its RDD
+    * instead would run every shuffle stage, and the caller's next Dataset
+    * would run them again. Any other plan keeps its RDD's split count:
+    * the RDD is cached on the QueryExecution, and building it runs no job
+    * for a plan without exchanges. The one exception is a read of a
+    * cached frame whose cache is not built yet: building that RDD runs
+    * the cached plan's exchanges. */
+  def plannedPartitions(df: DataFrame): Int = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec =>
+      val n = a.initialPlan.outputPartitioning.numPartitions
+      if (n > 0) n else df.sparkSession.sessionState.conf.numShufflePartitions
+    case _ => df.queryExecution.toRdd.getNumPartitions
+  }
 
   /** True when `df`'s estimated size is at or below `gateBytes`. */
   def isSmall(df: DataFrame, gateBytes: Long): Boolean =

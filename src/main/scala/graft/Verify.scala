@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. An optional
   * third argument restricts the run to a comma-separated query subset
@@ -11,6 +12,18 @@ object Verify {
   /** Subset names with no registered query — non-empty aborts the run. */
   private[graft] def unknownNames(names: Set[String]): Set[String] =
     names -- SparkEntry.queries.keySet
+
+  /** Runs `write` for each name in order. A non-fatal failure is printed
+    * as `[verify] <name> failed` and the run goes on to the next name; a
+    * fatal error (out of memory, an interrupt) propagates, so no
+    * complete-looking `oracle_sql.json` follows it. */
+  private[graft] def writeEach(names: Seq[String])(write: String => Unit): Unit =
+    names.foreach { name =>
+      try write(name)
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+    }
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
@@ -44,15 +57,11 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
+    val queries = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
+    writeEach(queries.keys.toSeq) { name =>
+      queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

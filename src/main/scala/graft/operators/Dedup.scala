@@ -177,16 +177,20 @@ object Dedup {
     }
   }
 
-  /** Fan a frame out to the session's shuffle parallelism ONLY when the
-    * scan provides fewer partitions (the single-file test-input case, where
-    * AQE would otherwise coalesce the CPU-heavy kernel onto one core). At
-    * real scale the input has thousands of splits, the branch is not taken,
-    * and the kernel runs inside the scan stage — document text never rides
-    * this (or any) exchange. */
+  /** Fan a frame out to the session's shuffle parallelism ONLY when it is
+    * planned to run on fewer partitions (the single-file test-input case,
+    * where AQE would otherwise coalesce the CPU-heavy kernel onto one
+    * core). At real scale the input has thousands of splits, the branch is
+    * not taken, and the kernel runs inside the scan stage — document text
+    * never rides this (or any) exchange.
+    *
+    * The probe is [[ScalePolicy.plannedPartitions]], which starts no job:
+    * a frame downstream of an exchange counts as already spread and comes
+    * back as it is, so its upstream stages run once, in the caller's
+    * plan. */
   private[graft] def fanOut(df: DataFrame, key: Column): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    // probe the executed plan's OWN RDD for the split count (cached on
-    // the Dataset's QueryExecution, no job runs) — `df.rdd` would wrap it
+    // the planned split count, not `df.rdd`'s, which would wrap the plan
     // in an extra row-deserializing stage planned purely for the probe
     // (r21 note, measured and deliberately NOT extended to text: the
     // split count can overstate effective parallelism for low-row-group
@@ -198,7 +202,7 @@ object Dedup {
     // wall as the extra kernel parallelism bought — minhash 1.85→2.23 s,
     // spans 5.96→6.58 s at 20× — so text keeps the cheap probe. On real
     // multi-file layouts the split count is honest.)
-    if (df.queryExecution.toRdd.getNumPartitions >= parts) df
+    if (ScalePolicy.plannedPartitions(df) >= parts) df
     else df.repartition(parts, key)
   }
 
@@ -213,14 +217,15 @@ object Dedup {
     * measured 10.3 → 2.2 s on the 100× quantized top-k (the text
     * pipelines measured the OPPOSITE; see [[fanOut]]'s note, which is
     * why this stays a separate entry point). The footer census is
-    * driver-side, bounded by `parts` files, zero jobs; frames already
-    * downstream of any exchange, non-parquet inputs, and multi-file
-    * layouts all fall through to [[fanOut]]'s behavior. */
+    * driver-side, bounded by `parts` files; like the partition probe
+    * ([[ScalePolicy.plannedPartitions]]) it starts no job. Frames
+    * already downstream of any exchange, non-parquet inputs, and
+    * multi-file layouts all fall through to [[fanOut]]'s behavior. */
   private[graft] def fanOutDense(df: DataFrame, key: Column): DataFrame = {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     // tiny inputs keep their exchange-free plan (ScalePolicy.DenseFanOutBytes)
     if (isSmall(df, ScalePolicy.DenseFanOutBytes)) return df
-    if (df.queryExecution.toRdd.getNumPartitions < parts)
+    if (ScalePolicy.plannedPartitions(df) < parts)
       return df.repartition(parts, key)
     import org.apache.spark.sql.catalyst.plans.logical._
     def mapOnly(p: LogicalPlan): Boolean = p match {
@@ -871,20 +876,38 @@ object Dedup {
     * exotic id types) run the distributed label-propagation loop
     * unchanged. String minima use unsigned UTF-8 byte order, matching
     * Spark's `min`/`least` on strings, so the driver labels are
-    * bit-identical to the loop's. */
+    * bit-identical to the loop's.
+    *
+    * `pairs` is evaluated once: one projection emits both directions of
+    * each pair, `(id_a, id_b)` and `(id_b, id_a)`, and the edge list is
+    * materialized before anything reads it. It is not a union of the two
+    * directions: Spark reuses no exchange across union branches above a
+    * join that AQE turns into a broadcast join at run time, and the
+    * candidate pipelines hold such joins, so each branch would run the
+    * band explode and the bucket pairing again. */
   def componentsWithStats(
       pairs: DataFrame,
       maxIters: Int = 10,
-      reliableCheckpoint: Boolean = false): (DataFrame, ComponentsStats) = {
+      reliableCheckpoint: Boolean = false): (DataFrame, ComponentsStats) =
+    componentsOfEdges(
+      pairs.select(inline(array(
+        struct(col("id_a").as("src"), col("id_b").as("dst")),
+        struct(col("id_b").as("src"), col("id_a").as("dst"))))),
+      maxIters, reliableCheckpoint)
+
+  /** [[componentsWithStats]] over a directed edge list `(src, dst)` that
+    * holds both directions of every pair. */
+  private[operators] def componentsOfEdges(
+      directed: DataFrame,
+      maxIters: Int,
+      reliableCheckpoint: Boolean): (DataFrame, ComponentsStats) = {
     def materialize(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint(eager = true)
       else df.localCheckpoint(true)
     // Materialize the edge list once: the iteration joins against it every
     // round and would otherwise re-execute the (expensive) upstream
     // pair-generation lineage per iteration.
-    val edges = materialize(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    val edges = materialize(directed)
 
     val idType = edges.schema("src").dataType
     val driverSolvable = idType match {

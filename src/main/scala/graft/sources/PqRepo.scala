@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions.{col, lit, max, min, when}
 import org.apache.spark.sql.graft.ParquetBridge
 import org.apache.spark.sql.types.MetadataBuilder
 
+import graft.ScalePolicy
 import graft.sync.Modified
 
 /** A managed Parquet repository: `<dataDir>/<schema>/<table>.parquet`.
@@ -641,10 +642,13 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     * partition values against the rewrite set. The layout is clustered
     * on the partition columns (the skew-safe AQE rebalance,
     * [[clusterOnPartitions]]) unless every row is an insert and the
-    * updates already sit in one task, which writes one file per
-    * partition without a shuffle. A reader racing the commit sees each
-    * partition old, new, or — for an insert the clustered write split
-    * into several files — old plus some of its new files.
+    * updates are planned to sit in one task, which writes one file per
+    * partition without a shuffle. That test reads the planned partition
+    * count ([[ScalePolicy.plannedPartitions]]) and starts no job;
+    * updates that hold an exchange count as spread and are clustered.
+    * A reader racing the commit sees each partition old, new, or — for
+    * an insert the clustered write split into several files — old plus
+    * some of its new files.
     *
     * The commit: after the tmp write, a `_merge_manifest.json` under the
     * table dir records every partition in flight — its presence certifies
@@ -703,7 +707,7 @@ final case class PqRepo(spark: SparkSession, dataDir: String) {
     // clustered as in [[write]] (r20/r21): an unclustered
     // dynamic-partition write fragments every touched directory into
     // per-task files that compound across micro-batch merges
-    val cluster = rewrite.nonEmpty || updates.queryExecution.toRdd.getNumPartitions > 1
+    val cluster = rewrite.nonEmpty || ScalePolicy.plannedPartitions(updates) > 1
     val tmp = clearTmp(f, schema, table)
     stampModified(if (cluster) clusterOnPartitions(merged, partitionCols) else merged,
         partitionCols :+ ModeCol, modified)

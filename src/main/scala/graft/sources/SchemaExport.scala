@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 import graft.plans.TablePlan
 
@@ -23,28 +24,34 @@ object SchemaExport {
     * threads concurrently, so the per-job planning / parquet-footer /
     * commit latency overlaps instead of accumulating serially — at a
     * 1000-table schema the difference between one night and one coffee.
-    * Failures propagate AND abort: the first exception interrupts the
-    * remaining in-flight exports (`shutdownNow` — a graceful shutdown
-    * would let them keep writing in background threads after the caller
-    * has already seen the failure), queued exports never start, and the
-    * exception carries the failing item's identity. */
-  private def inParallel[A, B](items: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
+    * Failures propagate AND abort: the first failure to complete
+    * interrupts the remaining in-flight exports (`shutdownNow` — a
+    * graceful shutdown would let them keep writing in background threads
+    * after the caller has already seen the failure), and queued exports
+    * never start. A non-fatal exception carries the failing item's
+    * identity; a fatal error (out of memory, an interrupt) propagates
+    * as it was thrown. */
+  private[sources] def inParallel[A, B](items: Seq[A], parallelism: Int)(f: A => B): Seq[B] =
     if (parallelism <= 1 || items.sizeIs <= 1) items.map(f)
     else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(parallelism, items.size))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val tagged = items.map(a => Future(
-        try f(a)
-        catch {
-          case e: Throwable =>
+      import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+      val pool = Executors.newFixedThreadPool(math.min(parallelism, items.size))
+      try {
+        val done = new ExecutorCompletionService[B](pool)
+        // a worker's exception, fatal or not, lands in its task and is
+        // rethrown here: nothing is lost with a dying pool thread
+        val tasks = items.map(a => done.submit { () =>
+          try f(a)
+          catch { case NonFatal(e) =>
             throw new RuntimeException(s"export of '$a' failed: ${e.getMessage}", e)
-        }))
-      try Await.result(Future.sequence(tagged), Duration.Inf)
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
-      finally pool.shutdown()
+          }
+        })
+        items.foreach { _ =>
+          try done.take().get()
+          catch { case e: ExecutionException => throw e.getCause }
+        }
+        tasks.map(_.get())
+      } finally pool.shutdownNow()
     }
 
   /** Export `tables` from a parquet directory into `repo/<schema>/`.

@@ -57,4 +57,23 @@ class ScalePolicySpec extends SparkSpec {
       ScalePolicy.isSmall(tiny, ScalePolicy.DigestBytes)))
     assert(!a && !b)
   }
+
+  test("plannedPartitions starts no job: an exchanged frame reads its " +
+    "pre-coalesce partitioning, a plain scan its split count") {
+    import org.apache.spark.sql.functions.col
+    val shuffle = spark.sessionState.conf.numShufflePartitions
+    val exchanged = spark.range(100).toDF().repartition(col("id"))
+    val explicit = spark.range(100).toDF().repartition(7, col("id"))
+    val aggregated = spark.range(100).toDF().groupBy(col("id") % 3).count()
+    val dir = java.nio.file.Files.createTempDirectory("planned").resolve("t").toString
+    spark.range(0, 30, 1, 3).write.parquet(dir)
+    val scan = spark.read.parquet(dir).filter(col("id") > 2)
+    val range = spark.range(0, 30, 1, 3).toDF()
+    for ((df, expected) <- Seq(exchanged -> shuffle, explicit -> 7,
+        aggregated -> shuffle, scan -> scan.rdd.getNumPartitions, range -> 3)) {
+      var planned = -1
+      assert(jobsOf { planned = ScalePolicy.plannedPartitions(df) } == 0, df.queryExecution)
+      assert(planned == expected, df.queryExecution)
+    }
+  }
 }

@@ -24,4 +24,20 @@ class VerifySubsetSpec extends AnyFunSuite {
       "closed_sessions")
     assert(Verify.unknownNames(headline).isEmpty)
   }
+
+  test("a non-fatal failure skips its query; a fatal error ends the run") {
+    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
+    Verify.writeEach(Seq("a", "b", "c")) { name =>
+      ran += name
+      if (name == "b") throw new IllegalStateException("planted")
+    }
+    assert(ran == Seq("a", "b", "c"))
+    ran.clear()
+    val fatal = intercept[OutOfMemoryError](Verify.writeEach(Seq("a", "b", "c")) { name =>
+      ran += name
+      if (name == "b") throw new OutOfMemoryError("planted")
+    })
+    assert(fatal.getMessage == "planted")
+    assert(ran == Seq("a", "b"))
+  }
 }

@@ -16,7 +16,9 @@ import graft.functions.{TextFunctions, VectorFunctions}
   *      byte-exact ones, with [[ScalePolicy.forcing]] both ways;
   *   3. [[Dedup.fanOutDense]] on against off, under the brute-force
   *      cosine top-k;
-  *   4. the BoundedTopK aggregate against the rank window it replaced. */
+  *   4. the BoundedTopK aggregate against the rank window it replaced;
+  *   5. [[Dedup.componentsWithStats]]' single-pass edges against the
+  *      union-built ones ([[ComponentsUnionPlan]]), in both regimes. */
 class EquivalenceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -123,5 +125,35 @@ class EquivalenceSpec extends SparkSpec {
         d.select("g", "id", "s", "rank").collect().map(_.toString).toSeq.sorted
       assert(canon(agg) == canon(window), (rows, k))
     }
+  }
+
+  /** Pairs over a dozen ids: repeats, self-pairs and null endpoints. */
+  private val edgePairs: Gen[Seq[(Option[Int], Option[Int])]] = {
+    val end = Gen.frequency(1 -> Gen.const(None), 8 -> Gen.choose(0, 11).map(Some(_)))
+    for {
+      n <- Gen.choose(0, 24)
+      ps <- Gen.listOfN(n, Gen.zip(end, end))
+      dups <- Gen.someOf(ps)
+    } yield ps ++ dups
+  }
+
+  test("componentsWithStats labels equal the union-built edges' in both " +
+    "regimes, for long, int and string ids") {
+    def ids[T](f: Int => T)(ps: Seq[(Option[Int], Option[Int])]) =
+      ps.map { case (a, b) => (a.map(f), b.map(f)) }
+    val typed: Seq[(String, Seq[(Option[Int], Option[Int])] => DataFrame)] = Seq(
+      "long" -> (ps => ids(_.toLong * 7919L)(ps).toDF("id_a", "id_b")),
+      "int" -> (ps => ps.toDF("id_a", "id_b")),
+      "string" -> (ps => ids(i => s"d$i")(ps).toDF("id_a", "id_b")))
+    for ((kind, frame) <- typed; small <- Seq(true, false))
+      forAll(edgePairs, seed = 11L) { ps =>
+        val pairs = frame(ps)
+        def canon(r: (DataFrame, Dedup.ComponentsStats)) =
+          (r._1.collect().map(_.toString).toSeq.sorted, r._2)
+        val (single, reference) = ScalePolicy.forcing(small)((
+          canon(Dedup.componentsWithStats(pairs, maxIters = 20)),
+          canon(ComponentsUnionPlan.componentsWithStats(pairs, maxIters = 20))))
+        assert(single == reference, (kind, small, ps))
+      }
   }
 }

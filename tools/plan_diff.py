@@ -14,7 +14,14 @@ normalized so that two dumps of the same code compare equal:
 - lambda variable names (`lambda y_28`, `x_27#6026`);
 - temp paths (`file:/tmp/...`);
 - AQE query-stage numbers (`ShuffleQueryStage 4`) and whole-stage-codegen
-  ids (`*(7)`).
+  ids (`*(7)`);
+- the group order of a distinct aggregate's Expand. Spark numbers the
+  distinct groups (`gid`) and lays out their columns in an order that
+  follows expression ids, so one more id allocated by an earlier query
+  reorders them. Each such plan is rewritten to one order: the group
+  columns sorted by name, the groups numbered in the sorted order of
+  their projections, and every `gid# = k` test and every list of the
+  group columns in the plan renamed to match.
 
 ExplainDump used to cut long lines at 157 characters and append `...`;
 the cut falls at a different place once ids are normalized, so when
@@ -62,6 +69,59 @@ def normalize_line(line):
     return line
 
 
+def _split_top(text):
+    """`text` split at the ", " separators outside any brackets."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(text):
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif depth == 0 and text.startswith(", ", i):
+            parts.append(text[start:i])
+            start = i + 2
+    parts.append(text[start:])
+    return parts
+
+
+_EXPAND = re.compile(r"^(.*\bExpand )\[(\[.*\])\], \[(.*)\]$")
+_GID_TEST = re.compile(r"\bgid# = (\d+)")
+
+
+def normalize_expand_order(lines):
+    """`lines` of one plan with each distinct-aggregate Expand (an output
+    column named `gid#`) put in one group order; see the module doc."""
+    lines = list(lines)
+    for n, line in enumerate(lines):
+        m = _EXPAND.match(line)
+        if not m:
+            continue
+        rows = [_split_top(r[1:-1]) for r in _split_top(m.group(2))]
+        out = _split_top(m.group(3))
+        if "gid#" not in out or any(len(r) != len(out) for r in rows):
+            continue
+        g = out.index("gid#")
+        cols = sorted(range(g), key=lambda i: out[i]) + list(range(g, len(out)))
+        rows = [[r[i] for i in cols] for r in rows]
+        # group 0 (the regular aggregates) stays first; the distinct
+        # groups are numbered in the sorted order of their projections
+        regular = [r for r in rows if r[g] == "0"]
+        groups = sorted((r for r in rows if r[g] != "0"),
+                        key=lambda r: r[:g] + r[g + 1:])
+        gid = {r[g]: str(k) for k, r in enumerate(groups, 1)}
+        rows = regular + [r[:g] + [gid[r[g]]] + r[g + 1:] for r in groups]
+        old_keys = ", ".join(out[:g])
+        new_keys = ", ".join(out[i] for i in cols[:g])
+        for k, other in enumerate(lines):
+            if k != n:
+                other = _GID_TEST.sub(
+                    lambda t: "gid# = " + gid.get(t.group(1), t.group(1)), other)
+                lines[k] = other.replace(old_keys, new_keys) if g > 1 else other
+        lines[n] = (m.group(1) + "[" + ", ".join("[" + ", ".join(r) + "]" for r in rows)
+                    + "], [" + ", ".join(out[i] for i in cols) + "]")
+    return lines
+
+
 def parse(text):
     """{query: [normalized line, ...]} of an ExplainDump markdown file."""
     plans = {}
@@ -75,7 +135,7 @@ def parse(text):
             if lines is None:
                 lines = []
             else:
-                plans[name] = lines
+                plans[name] = normalize_expand_order(lines)
                 name = None
                 lines = None
         elif lines is not None:
@@ -110,19 +170,6 @@ def align_cut_lines(a, b):
 _FIELDS_CUT = re.compile(r"(?:, )?\.\.\. (\d+) more fields")
 
 
-def _top_level_fields(text):
-    """Number of ", "-separated fields of `text` outside any brackets."""
-    depth, n = 0, 1
-    for i, ch in enumerate(text):
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif depth == 0 and text.startswith(", ", i):
-            n += 1
-    return n
-
-
 def _fields_cut_matches(cut, whole):
     """True when `whole` is `cut` with each `... N more fields` cut filled
     by N fields."""
@@ -131,7 +178,7 @@ def _fields_cut_matches(cut, whole):
     rx = "(?:, )?(.*?)".join(re.escape(t) for t in texts)
     m = re.fullmatch(rx, whole)
     return m is not None and all(
-        _top_level_fields(g) == n for g, n in zip(m.groups(), counts))
+        len(_split_top(g)) == n for g, n in zip(m.groups(), counts))
 
 
 def align_field_cuts(a, b):

@@ -65,6 +65,36 @@ ResultQueryStage 9
 ```
 """
 
+# a distinct aggregate as Spark plans it: three distinct groups (s, k, c)
+# numbered by `gid`, their columns laid out before it
+PROFILE = """## q_profile
+
+```
+*(3) HashAggregate(keys=[], functions=[first(count(1)#20L, true), count(k#11L), count(c#12L), count(s#10)], output=[n#30L, dk#31L, dc#32L, ds#33L])
++- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=7]
+   +- *(2) HashAggregate(keys=[], functions=[partial_first(count(1)#20L, true) FILTER (WHERE (gid#9 = 0)), partial_count(k#11L) FILTER (WHERE (gid#9 = 2)), partial_count(c#12L) FILTER (WHERE (gid#9 = 3)), partial_count(s#10) FILTER (WHERE (gid#9 = 1))], output=[first#40L, valueSet#41, count#42L, count#43L, count#44L])
+      +- *(2) HashAggregate(keys=[s#10, k#11L, c#12L, gid#9], functions=[count(1)], output=[s#10, k#11L, c#12L, gid#9, count(1)#20L])
+         +- Exchange hashpartitioning(s#10, k#11L, c#12L, gid#9, 4), ENSURE_REQUIREMENTS, [plan_id=5]
+            +- *(1) Expand [[null, null, null, 0, k#2L], [s#1, null, null, 1, null], [null, k#2L, null, 2, null], [null, null, c#3L, 3, null]], [s#10, k#11L, c#12L, gid#9, k#13L]
+               +- FileScan parquet [k#2L,c#3L,s#1] Batched: true, ReadSchema: struct<k:bigint,c:bigint,s:string>
+```
+"""
+
+# the same query after one more expression id was allocated upstream:
+# Spark numbers the groups and lays out their columns in another order
+PROFILE_SHIFTED = """## q_profile
+
+```
+*(3) HashAggregate(keys=[], functions=[first(count(1)#21L, true), count(k#12L), count(c#13L), count(s#11)], output=[n#31L, dk#32L, dc#33L, ds#34L])
++- Exchange SinglePartition, ENSURE_REQUIREMENTS, [plan_id=8]
+   +- *(2) HashAggregate(keys=[], functions=[partial_first(count(1)#21L, true) FILTER (WHERE (gid#10 = 0)), partial_count(k#12L) FILTER (WHERE (gid#10 = 1)), partial_count(c#13L) FILTER (WHERE (gid#10 = 2)), partial_count(s#11) FILTER (WHERE (gid#10 = 3))], output=[first#41L, valueSet#42, count#43L, count#44L, count#45L])
+      +- *(2) HashAggregate(keys=[k#12L, c#13L, s#11, gid#10], functions=[count(1)], output=[k#12L, c#13L, s#11, gid#10, count(1)#21L])
+         +- Exchange hashpartitioning(k#12L, c#13L, s#11, gid#10, 4), ENSURE_REQUIREMENTS, [plan_id=6]
+            +- *(1) Expand [[null, null, null, 0, k#3L], [k#3L, null, null, 1, null], [null, c#4L, null, 2, null], [null, null, s#2, 3, null]], [k#12L, c#13L, s#11, gid#10, k#14L]
+               +- FileScan parquet [k#3L,c#4L,s#2] Batched: true, ReadSchema: struct<k:bigint,c:bigint,s:string>
+```
+"""
+
 
 def run(parent_text, change_text):
     with tempfile.TemporaryDirectory() as d:
@@ -170,6 +200,23 @@ class PlanDiff(unittest.TestCase):
                         "## q\n\n```\n" + extra[0] + "\n```\n")
         self.assertEqual(code, 1)
         self.assertIn("1 of 1 queries differ", out)
+
+    def test_an_extra_upstream_id_leaves_q_profile_equal(self):
+        code, out = run(PROFILE, PROFILE_SHIFTED)
+        self.assertEqual(code, 0, out)
+        self.assertIn("0 of 1 queries differ", out)
+
+    def test_a_changed_distinct_aggregate_still_differs(self):
+        # count(c) now reads the group of s
+        wrong = PROFILE_SHIFTED.replace("partial_count(c#13L) FILTER (WHERE (gid#10 = 2))",
+                                        "partial_count(c#13L) FILTER (WHERE (gid#10 = 3))")
+        code, out = run(PROFILE, wrong)
+        self.assertEqual(code, 1)
+        self.assertIn("## q_profile", out)
+        # a group dropped from the Expand
+        dropped = PROFILE_SHIFTED.replace(", [null, null, s#2, 3, null]", "")
+        code, _ = run(PROFILE, dropped)
+        self.assertEqual(code, 1)
 
     def test_dates_in_table_names_are_kept(self):
         self.assertEqual(
